@@ -12,9 +12,9 @@ token-Jaccard, length ratio — is computed over Arrow batches:
 - Jaro-Winkler runs on a bounded prefix (text fingerprints, not whole
   documents) so per-pair cost is O(prefix²) worst case and tiny in
   practice,
-- token-Jaccard has both a Python-set form (inside the feature UDF)
-  and a pure-JVM form (``array_intersect``/``array_union``) used by
-  the dedup operators where DuckDB-oracle parity matters.
+- token-Jaccard is a Python-set form inside the feature UDF (the dedup
+  operators compute their own Jaccard in JVM expressions where
+  DuckDB-oracle parity matters).
 
 Pure-Python reference implementations live here too and are the test
 oracle — the same single-source-of-truth pattern as functions/normalize.py.
@@ -26,7 +26,6 @@ import zlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -360,22 +359,3 @@ def pair_features_udf(norm_a: pd.Series, norm_b: pd.Series) -> pd.DataFrame:
             "length_ratio": lr,
         }
     )
-
-
-# ---------------------------------------------------------------------------
-# Pure-JVM variants (used where DuckDB-oracle parity matters)
-# ---------------------------------------------------------------------------
-
-def jvm_token_jaccard(tokens_a: Column, tokens_b: Column) -> Column:
-    """Jaccard over token arrays entirely in JVM expressions."""
-    inter = F.size(F.array_intersect(tokens_a, tokens_b))
-    union = F.size(F.array_union(tokens_a, tokens_b))
-    return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-
-
-def jvm_levenshtein_sim(a: Column, b: Column) -> Column:
-    """Normalized builtin character Levenshtein (JVM, codegen)."""
-    denom = F.greatest(F.length(a), F.length(b))
-    return F.when(
-        denom > 0, 1.0 - F.levenshtein(a, b).cast("double") / denom
-    ).otherwise(F.lit(0.0))

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from ..config import BlockingConfig
 from ..functions import hashing as H
+from ..session import local_frame
 
 
 def uid_col(url=None) -> F.Column:
@@ -354,8 +355,8 @@ def candidate_pairs(
     if not parts:
         raise ValueError(f"no known blocking strategies in {cfg.strategies!r}")
     if stats is None:  # exact-only: empty split ledger, same schema
-        stats = normalized.sparkSession.createDataFrame(
-            [], "block_key long, block_size long, n_subblocks long"
+        stats = local_frame(
+            normalized.sparkSession, [], "block_key long, block_size long, n_subblocks long"
         )
     if len(parts) == 1:
         if "lsh" in cfg.strategies:

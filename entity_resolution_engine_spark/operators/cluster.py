@@ -1,5 +1,6 @@
-"""Stage 5 — transitive clustering: large-star / small-star connected
-components, entirely in DataFrame joins.
+"""Stage 5 — transitive clustering: connected components by a driver
+union-find for edge sets that fit on the driver, else by large-star /
+small-star rounds entirely in DataFrame joins.
 
 The reference never needs transitive closure — its two-source argmax
 guarantees 1:1 matches (SURVEY.md §7.2 step 6).  Web-scale dedup does:
@@ -20,6 +21,13 @@ analysis blows up), and every ``checkpoint_every`` rounds the edge set
 is committed to the snapshot catalog so a killed run resumes
 mid-clustering (north_rule checkpoint/resume).
 
+Every round and sync point also pays a fixed per-job latency.  An edge
+set of at most ``DRIVER_CC_MAX_EDGES`` surrogate pairs is therefore
+fetched in one bounded job and solved by a vectorized numpy union-find
+on the driver instead; it has no rounds, so only the star loop
+checkpoints mid-clustering.  Both paths hand the same child → root
+star forest to the one id-map join-back below.
+
 **Integer node surrogates**: the O(log n) iteration rounds run on
 ``xxhash64(url)`` longs, not url strings.  Every round shuffles the
 full edge set twice, so per-row width is the scale bill — 16 bytes of
@@ -38,10 +46,23 @@ composite before trusting a single hash).
 
 from __future__ import annotations
 
+import time
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import TableCatalog
+
+# Surrogate edge sets of at most this many pairs are solved by the
+# driver union-find; larger ones run the star loop.  Measured with
+# ``scripts/bench_cc.py --crossover`` (BASELINE.md, "CC crossover"):
+# on 4 cores and a 2g heap the driver path won at every size from 3k
+# to 1.6M edges, and at 3.2M neither path completes (the shared
+# join-back's broadcast runs out of heap), so the bound is the largest
+# size at which both were measured.
+DRIVER_CC_MAX_EDGES = 1_600_000
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -142,6 +163,101 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
     return int(row.n), int(row.h)
 
 
+def _min_root_forest(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Driver union-find over int64 edge arrays → (child, root) for every
+    non-root node, root = the component's min id: the same star forest
+    the large/small-star loop converges to.
+
+    Vectorized rounds over dense node indices (sorted, so min index =
+    min id): every root hooks onto the smallest root across its edges
+    (min-label hooking), then pointer jumping flattens the chains that
+    hooking made, until no edge spans two roots.  ``parent[x] <= x``
+    always holds, so the surviving root is the component minimum."""
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    a, b = inv[: len(src)], inv[len(src):]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        if not cross.any():
+            break
+        np.minimum.at(parent, np.maximum(ra, rb)[cross], np.minimum(ra, rb)[cross])
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+    child = np.flatnonzero(parent != np.arange(len(ids)))
+    return ids[child], ids[parent[child]]
+
+
+def _star_loop(
+    cur: DataFrame,
+    max_iterations: int,
+    rounds_per_check: int,
+    checkpoint,
+    stats_out: dict | None,
+) -> DataFrame:
+    """Large/small-star rounds to convergence; ``checkpoint(it, edges)``
+    commits the working edge set after each sync point."""
+    spark = cur.sparkSession
+    # Spark 4.1's union constraint rewrite crashes (`key not found:
+    # dst#N`) when checkpointing a plan whose union branches share
+    # source attribute ids (the candidate union built from one members
+    # frame).  Constraints only matter for filter inference/pushdown,
+    # which the tiny (src, dst) iteration plans don't benefit from —
+    # disable propagation for the duration of the loop and restore it
+    # after (the converged edge set is checkpoint-backed by then).
+    _CONF = "spark.sql.constraintPropagation.enabled"
+    prev_conf = spark.conf.get(_CONF, "true")
+    spark.conf.set(_CONF, "false")
+    try:
+        # lazy localCheckpoint: the signature aggregation after the
+        # first batch of star rounds is the materializing action, so
+        # each sync point costs ONE job (an eager checkpoint would add
+        # a second full pass — pure serial driver time multiplied by
+        # the iteration count).  No up-front signature of the INPUT
+        # either: real edge sets are never already-converged, so the
+        # baseline pass was a wasted sync — convergence compares
+        # consecutive post-round signatures instead.
+        cur = cur.localCheckpoint(eager=False)
+        prev_sig: tuple[int, int] | None = None
+        sig = (0, 0)
+        sync_walls: list[float] = []
+
+        for it in range(max_iterations):
+            nxt = cur
+            for _ in range(max(1, rounds_per_check)):
+                nxt = small_star(large_star(nxt))
+            nxt = nxt.localCheckpoint(eager=False)
+            t0 = time.monotonic()
+            sig = _signature(nxt)
+            sync_walls.append(time.monotonic() - t0)
+            checkpoint(it, nxt)
+            if sig == prev_sig:
+                cur = nxt
+                break
+            prev_sig = sig
+            cur = nxt
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iterations} iterations"
+            )
+        if stats_out is not None:
+            stats_out.update(
+                {
+                    "path": "star",
+                    "sync_points": len(sync_walls),
+                    "star_rounds": len(sync_walls) * max(1, rounds_per_check),
+                    "sync_wall_secs": [round(w, 3) for w in sync_walls],
+                    "final_edges": sig[0],
+                }
+            )
+    finally:
+        spark.conf.set(_CONF, prev_conf)
+    return cur
+
+
 def connected_components(
     edges: DataFrame,
     all_nodes: DataFrame | None = None,
@@ -156,10 +272,14 @@ def connected_components(
     """edges(src, dst) → assignments(url, cluster_id).
 
     ``all_nodes`` (url) adds singleton components for nodes with no
-    edges.  ``catalog`` persists the working edge set (and the
-    url↔surrogate map, ``<checkpoint_table>_idmap``) every
-    ``checkpoint_every`` rounds; if the checkpoint table already exists
-    the iteration RESUMES from it instead of the raw edges.
+    edges.  An edge set of at most ``DRIVER_CC_MAX_EDGES`` surrogate
+    pairs is fetched in one bounded job and solved by a driver
+    union-find; a larger one runs the star loop.  ``catalog`` persists
+    the star loop's working edge set (and the url↔surrogate map,
+    ``<checkpoint_table>_idmap``) every ``checkpoint_every`` rounds —
+    only that path checkpoints mid-clustering; if the checkpoint table
+    already exists the run RESUMES from it instead of the raw edges, on
+    whichever path its size picks.
 
     ``rounds_per_check`` composes that many large+small-star rounds
     into ONE job before the convergence signature runs: each signature
@@ -170,11 +290,11 @@ def connected_components(
     exchange for k× fewer sync points.
 
     ``stats_out`` (a dict, when given) receives the iteration ledger:
-    star rounds run, driver sync points paid, per-sync wall times, and
-    the final edge count — the Amdahl accounting for the scaling
-    analysis in BASELINE.md.
+    the path taken (``driver`` or ``star``), star rounds run, driver
+    sync points paid, per-sync wall times, and the final edge count —
+    the Amdahl accounting for the scaling analysis in BASELINE.md.  The
+    driver path reports its one fetch as one sync point and no rounds.
     """
-    import time as _time
     spark = edges.sparkSession
     idmap_table = checkpoint_table + "_idmap"
     # resume needs BOTH the edge checkpoint and its id-map sidecar — a
@@ -217,67 +337,45 @@ def connected_components(
                 f"{int(stats.d)} ids; widen the node surrogate to a "
                 "2x64-bit composite for this corpus"
             )
-    idmap_committed = resumed
 
-    # Spark 4.1's union constraint rewrite crashes (`key not found:
-    # dst#N`) when checkpointing a plan whose union branches share
-    # source attribute ids (the candidate union built from one members
-    # frame).  Constraints only matter for filter inference/pushdown,
-    # which the tiny (src, dst) iteration plans don't benefit from —
-    # disable propagation for the duration of the loop and restore it
-    # after (the converged edge set is checkpoint-backed by then).
-    _CONF = "spark.sql.constraintPropagation.enabled"
-    prev_conf = spark.conf.get(_CONF, "true")
-    spark.conf.set(_CONF, "false")
-    try:
-        # lazy localCheckpoint: the signature aggregation after the
-        # first batch of star rounds is the materializing action, so
-        # each sync point costs ONE job (an eager checkpoint would add
-        # a second full pass — pure serial driver time multiplied by
-        # the iteration count).  No up-front signature of the INPUT
-        # either: real edge sets are never already-converged, so the
-        # baseline pass was a wasted sync — convergence compares
-        # consecutive post-round signatures instead.
-        cur = cur.localCheckpoint(eager=False)
-        prev_sig: tuple[int, int] | None = None
-        sig = (0, 0)
-        sync_walls: list[float] = []
-
-        for it in range(max_iterations):
-            nxt = cur
-            for _ in range(max(1, rounds_per_check)):
-                nxt = small_star(large_star(nxt))
-            nxt = nxt.localCheckpoint(eager=False)
-            t0 = _time.monotonic()
-            sig = _signature(nxt)
-            sync_walls.append(_time.monotonic() - t0)
-            if catalog is not None and (it + 1) % checkpoint_every == 0:
-                if not idmap_committed:
-                    # written BEFORE the first edge commit so any edge
-                    # checkpoint on disk always has its id map beside it
-                    catalog.write(idmap_table, id_map, mode="overwrite")
-                    idmap_committed = True
-                catalog.write(checkpoint_table, nxt, mode="overwrite")
-            if sig == prev_sig:
-                cur = nxt
-                break
-            prev_sig = sig
-            cur = nxt
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iterations} iterations"
-            )
+    t0 = time.monotonic()
+    fetched = cur.limit(DRIVER_CC_MAX_EDGES + 1).toArrow()
+    if fetched.num_rows <= DRIVER_CC_MAX_EDGES:
+        child, root = _min_root_forest(
+            fetched.column("src").to_numpy(), fetched.column("dst").to_numpy()
+        )
+        # lazily checkpointed: the join-back references the forest four
+        # times, and as a bare LocalRelation it ran ~2 s slower at 190k
+        # edges on 4 cores; the checkpoint fills in the first join-back
+        # job, so it costs no job of its own
+        cur = spark.createDataFrame(
+            pa.table({"src": child, "dst": root})
+        ).localCheckpoint(eager=False)
         if stats_out is not None:
             stats_out.update(
                 {
-                    "sync_points": len(sync_walls),
-                    "star_rounds": len(sync_walls) * max(1, rounds_per_check),
-                    "sync_wall_secs": [round(w, 3) for w in sync_walls],
-                    "final_edges": sig[0],
+                    "path": "driver",
+                    "sync_points": 1,
+                    "star_rounds": 0,
+                    "sync_wall_secs": [round(time.monotonic() - t0, 3)],
+                    "final_edges": len(child),
                 }
             )
-    finally:
-        spark.conf.set(_CONF, prev_conf)
+    else:
+        idmap_committed = resumed
+
+        def checkpoint(it: int, nxt: DataFrame) -> None:
+            nonlocal idmap_committed
+            if catalog is None or (it + 1) % checkpoint_every:
+                return
+            if not idmap_committed:
+                # written BEFORE the first edge commit so any edge
+                # checkpoint on disk always has its id map beside it
+                catalog.write(idmap_table, id_map, mode="overwrite")
+                idmap_committed = True
+            catalog.write(checkpoint_table, nxt, mode="overwrite")
+
+        cur = _star_loop(cur, max_iterations, rounds_per_check, checkpoint, stats_out)
 
     # Converged edge set is a forest of stars (child → root) in id
     # space.  Any root appearing only as dst maps to itself; the url↔id

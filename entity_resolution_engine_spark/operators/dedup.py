@@ -108,7 +108,16 @@ def bounded_bucket_pairs(
     ``caches`` (when given) collects every frame persisted here so the
     caller can unpersist after materializing; without it the persist
     still happens (the membership is referenced by 3+ plan branches)
-    but lives until the caller clears the cache."""
+    but lives until the caller clears the cache.
+
+    ``count_matches`` needs the pair dedup (its counts ARE that
+    aggregation), so combining it with ``dedup_pairs=False`` raises
+    ``ValueError`` instead of silently deduping anyway."""
+    if count_matches and not dedup_pairs:
+        raise ValueError(
+            "bounded_bucket_pairs: count_matches=True counts buckets in the "
+            "pair dedup and cannot honor dedup_pairs=False"
+        )
     members = members.persist()
     if caches is not None:
         caches.append(members)

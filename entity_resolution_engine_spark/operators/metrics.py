@@ -3,22 +3,29 @@ detection over run history, and quality gates.
 
 Re-expresses the reference's observability tables and logic
 (/root/reference/entity_resolution_engine/db/ues_schema.sql:76-123;
-monitoring/anomaly_detector.py:19-130; qa/quality_gates.py:53-127) as
-DataFrame aggregations:
+monitoring/anomaly_detector.py:19-130; qa/quality_gates.py:53-127).
+Everything past the stage row counts works on a few rows per run, so it
+runs on the driver over rows the pipeline's observe stage already holds
+or fetches in one bounded job — a DataFrame plan per table cost a
+Spark job (and its fixed latency) per few rows:
 
-- stage metrics include per-shuffle-partition row counts
-  (``spark_partition_id()``) — the north_rule's per-partition lineage/
-  metrics, and the skew diagnostic the blocking stage reads back.
+- stage metrics include per-partition row counts — from snapshot file
+  footers (``stage_metrics_rows``), or one rollup scan
+  (``stage_metrics``) for catalogs that cannot answer from metadata —
+  the north_rule's per-partition lineage/metrics, and the skew
+  diagnostic the blocking stage reads back.
 - anomaly detection = current run's rates vs mean/stddev_samp of the
-  trailing ≤ lookback runs (dense_rank over run history — SURVEY.md
-  §2.5 W2/W3), z ≥ 2 → MEDIUM, ≥ 3 → HIGH.
-- quality gates = rate bounds evaluated with one ``when`` per gate
-  (reference quality_gates.yml:1-4 semantics).
+  trailing ≤ lookback runs (SURVEY.md §2.5 W2/W3), z ≥ 2 → MEDIUM,
+  ≥ 3 → HIGH.
+- quality gates = rate bounds, one row per gate (reference
+  quality_gates.yml:1-4 semantics).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import statistics
+
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from ..config import AnomalyConfig, QualityGateConfig
@@ -73,7 +80,7 @@ def stage_metrics_rows(
     Same schema as ``stage_metrics`` with ``partition_id`` = write-side
     file ordinal instead of read-side chunk id — a strictly better skew
     signal (each file is one write task's output) at zero scan cost.
-    ``RUN_METRICS_SCHEMA`` is the matching createDataFrame schema."""
+    ``RUN_METRICS_SCHEMA`` is the matching ``session.local_frame`` schema."""
     rows: list[tuple] = [(run_id, stage, "row_count", float(sum(counts)), None, seq)]
     rows += [
         (run_id, stage, "partition_row_count", float(c), i, seq)
@@ -82,141 +89,88 @@ def stage_metrics_rows(
     return rows
 
 
-def derive_run_rates(run_metrics: DataFrame) -> DataFrame:
-    """router counters → per-run rate metrics (gray_zone_rate,
-    approval_rate, rejection_rate) in wide form, one row per run."""
-    wide = (
-        run_metrics.filter(
-            (F.col("stage") == "router")
-            & F.col("metric").isin(
-                "total_pairs", "auto_approved", "auto_rejected", "gray_zone"
-            )
-        )
-        .groupBy("run_id")
-        .pivot(
-            "metric", ["total_pairs", "auto_approved", "auto_rejected", "gray_zone"]
-        )
-        .agg(F.first("value"))
-        .na.fill(0.0)
-    )
-    tot = F.greatest(F.col("total_pairs"), F.lit(1.0))
-    return wide.select(
-        "run_id",
-        (F.col("gray_zone") / tot).alias("gray_zone_rate"),
-        (F.col("auto_approved") / tot).alias("approval_rate"),
-        (F.col("auto_rejected") / tot).alias("rejection_rate"),
-        F.col("total_pairs"),
-    )
+RATE_COUNTERS = ("total_pairs", "auto_approved", "auto_rejected", "gray_zone")
+RATES = ("gray_zone_rate", "approval_rate", "rejection_rate")
+
+ANOMALY_EVENTS_SCHEMA = (
+    "run_id string, metric string, value double, baseline_mean double, "
+    "baseline_stddev double, z_score double, severity string"
+)
+QUALITY_GATE_RESULTS_SCHEMA = (
+    "run_id string, gate string, value double, bound double, passed boolean"
+)
+TRIAGE_REPORTS_SCHEMA = (
+    "run_id string, max_severity string, n_anomalies int, report string"
+)
+QUALITY_REPORTS_SCHEMA = "run_id string, report_json string"
+
+AnomalyEvent = Row(
+    "run_id", "metric", "value", "baseline_mean", "baseline_stddev", "z_score",
+    "severity",
+)
 
 
-def detect_anomalies(
-    run_rates: DataFrame,
-    run_order: DataFrame,
-    current_run_id: str,
-    cfg: AnomalyConfig,
-) -> DataFrame:
+def run_rates(counters: dict) -> dict[str, float]:
+    """One run's router counters (``RATE_COUNTERS`` → value; a missing
+    or null counter counts 0) → its ``RATES``."""
+    c = {k: float(counters.get(k) or 0.0) for k in RATE_COUNTERS}
+    tot = max(c["total_pairs"], 1.0)
+    return {
+        "gray_zone_rate": c["gray_zone"] / tot,
+        "approval_rate": c["auto_approved"] / tot,
+        "rejection_rate": c["auto_rejected"] / tot,
+    }
+
+
+def anomaly_rows(
+    runs: list[tuple[str, int, dict]], current_run_id: str, cfg: AnomalyConfig
+) -> list[tuple]:
     """Current run's rates vs the trailing-window baseline.
 
-    ``run_order``: (run_id, finished_seq) — monotone sequence the
-    pipeline maintains (the reference orders by finished_at,
-    anomaly_detector.py:44-57).  Returns ANOMALY_EVENTS rows (possibly
-    empty — needs ≥ cfg.min_baseline_runs history, reference parity).
-    """
-    ordered = run_rates.join(run_order, "run_id")
-    w = Window.orderBy(F.desc("finished_seq"))
-    recent = ordered.withColumn("rk", F.row_number().over(w)).filter(
-        (F.col("rk") <= cfg.lookback_runs + 1)
-    )
-    baseline = recent.filter(F.col("run_id") != current_run_id)
-    current = recent.filter(F.col("run_id") == current_run_id)
-
-    metrics = ["gray_zone_rate", "approval_rate", "rejection_rate"]
-    base_stats = baseline.agg(
-        F.count("*").alias("n_runs"),
-        *[F.avg(m).alias(f"{m}_mean") for m in metrics],
-        *[F.stddev_samp(m).alias(f"{m}_std") for m in metrics],
-    )
-    cur_long = current.selectExpr(
-        "run_id",
-        "stack(3, "
-        + ", ".join(f"'{m}', {m}" for m in metrics)
-        + ") as (metric, value)",
-    )
-    base_long = base_stats.selectExpr(
-        "n_runs",
-        "stack(3, "
-        + ", ".join(f"'{m}', {m}_mean, {m}_std" for m in metrics)
-        + ") as (metric, baseline_mean, baseline_stddev)",
-    )
-    z = (F.col("value") - F.col("baseline_mean")) / F.col("baseline_stddev")
-    return (
-        cur_long.join(base_long, "metric")
-        .filter(F.col("n_runs") >= cfg.min_baseline_runs)
-        .filter(F.col("baseline_stddev").isNotNull() & (F.col("baseline_stddev") > 0))
-        .withColumn("z_score", z)
-        .withColumn(
-            "severity",
-            F.when(F.abs(F.col("z_score")) >= cfg.z_high, F.lit("HIGH"))
-            .when(F.abs(F.col("z_score")) >= cfg.z_medium, F.lit("MEDIUM"))
-            .otherwise(F.lit("NONE")),
-        )
-        .filter(F.col("severity") != "NONE")
-        .select(
-            "run_id",
-            "metric",
-            "value",
-            "baseline_mean",
-            "baseline_stddev",
-            "z_score",
-            "severity",
-        )
-    )
-
-
-def triage_report(
-    anomalies: DataFrame,
-    reviews: DataFrame | None,
-    run_id: str,
-    max_samples: int = 20,
-) -> dict:
-    """O2 analog — the reference's anomaly triage report
-    (/root/reference/entity_resolution_engine/monitoring/llm_triage.py:52-135):
-    a driver-side textual summary over two SMALL collected frames (the
-    anomaly events and the top review samples).  The default path is the
-    reference's deterministic fallback formatter (llm_triage.py:32-49);
-    an LLM rewrite would plug in where the summary string is built.
-    """
-    # explicit severity rank — a lexicographic desc sort would put
-    # MEDIUM above HIGH ('M' > 'H') and misreport max_severity
-    sev_rank = (
-        F.when(F.col("severity") == "HIGH", 2)
-        .when(F.col("severity") == "MEDIUM", 1)
-        .otherwise(0)
-    )
-    anoms = (
-        anomalies.filter(F.col("run_id") == run_id)
-        .orderBy(sev_rank.desc(), F.desc(F.abs(F.col("z_score"))))
-        .collect()
-    )
-    samples = []
-    if reviews is not None:
-        samples = (
-            reviews.filter(F.col("run_id") == run_id)
-            .orderBy(F.desc("matcher_score"))
-            .limit(max_samples)
-            .collect()
-        )
-    return triage_report_rows(anoms, samples, run_id)
+    ``runs``: (run_id, finished_seq, rates) per run, at least the
+    ``cfg.lookback_runs + 1`` most recent; finished_seq is the monotone
+    sequence the pipeline maintains (the reference orders by
+    finished_at, anomaly_detector.py:44-57).  The baseline is the other
+    runs of that window: mean and sample stddev per rate.  Returns
+    ``AnomalyEvent`` rows (ANOMALY_EVENTS_SCHEMA order), z ≥ z_medium
+    → MEDIUM, ≥ z_high → HIGH — empty below ``cfg.min_baseline_runs`` baseline runs (reference
+    parity) or where the baseline stddev is 0 or undefined."""
+    recent = sorted(runs, key=lambda r: (r[1], r[0]), reverse=True)
+    recent = recent[: cfg.lookback_runs + 1]
+    baseline = [rates for rid, _, rates in recent if rid != current_run_id]
+    current = [rates for rid, _, rates in recent if rid == current_run_id]
+    if not current or len(baseline) < max(cfg.min_baseline_runs, 2):
+        return []
+    out = []
+    for m in RATES:
+        xs = [b[m] for b in baseline]
+        # exactly rounded: a constant baseline gives stddev 0, not a
+        # rounding residue that would turn every change into a HIGH
+        mean, std = statistics.fmean(xs), statistics.stdev(xs)
+        if std <= 0:
+            continue
+        value = current[0][m]
+        z = (value - mean) / std
+        if abs(z) >= cfg.z_high:
+            severity = "HIGH"
+        elif abs(z) >= cfg.z_medium:
+            severity = "MEDIUM"
+        else:
+            continue
+        out.append(AnomalyEvent(current_run_id, m, value, mean, std, z, severity))
+    return out
 
 
 def triage_report_rows(anoms: list, samples: list, run_id: str) -> dict:
-    """Row-list core of ``triage_report`` — used by the pipeline's
-    observe stage, which collects this run's (small) anomaly and review
-    slices ONCE and feeds every consumer from the same rows instead of
-    issuing a driver action per report (VERDICT r3 observe
-    consolidation).  ``anoms``/``samples`` are Rows or dicts already
-    scoped to ``run_id``; anomalies are (re-)sorted here so callers
-    don't need pre-sorted input."""
+    """O2 analog — the reference's anomaly triage report
+    (reference entity_resolution_engine/monitoring/llm_triage.py:52-135):
+    a textual summary of this run's anomalies and its top review
+    samples.  The default path is the reference's deterministic
+    fallback formatter (llm_triage.py:32-49); an LLM rewrite would plug
+    in where the summary string is built.  ``anoms``/``samples`` are
+    Rows or dicts already scoped to ``run_id``, samples in the order to
+    print; anomalies are (re-)sorted here, HIGH before MEDIUM, then by
+    |z|."""
     _sev = {"HIGH": 2, "MEDIUM": 1}
 
     def _get(r, k):
@@ -252,56 +206,16 @@ def triage_report_rows(anoms: list, samples: list, run_id: str) -> dict:
     }
 
 
-def build_quality_report(
-    run_metrics: DataFrame,
-    anomalies: DataFrame,
-    reviews: DataFrame | None,
-    run_id: str,
-) -> dict:
-    """O4 analog — the reference's combined quality report
-    (/root/reference/entity_resolution_engine/qa/quality_report.py:9-55):
-    one run-scoped snapshot joining pipeline metrics, anomaly events,
-    and review counts by status.
-
-    All three inputs are small observability tables; the per-run slices
-    collected here are O(stages + anomalies + statuses) rows — driver-
-    side assembly matches the reference's dict-shaped payload exactly.
-    The pipeline's observe stage persists the JSON form to the
-    ``quality_reports`` catalog table."""
-    metrics_rows = [
-        r.asDict()
-        for r in run_metrics.filter(
-            (F.col("run_id") == run_id) & F.col("partition_id").isNull()
-        )
-        .select("stage", "metric", "value")
-        .collect()
-    ]
-    anomaly_rows = [
-        r.asDict()
-        for r in anomalies.filter(F.col("run_id") == run_id)
-        .select("metric", "value", "baseline_mean", "baseline_stddev", "z_score", "severity")
-        .collect()
-    ]
-    review_counts: dict[str, int] = {}
-    if reviews is not None:
-        for r in (
-            reviews.filter(F.col("run_id") == run_id)
-            .groupBy("status")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        ):
-            review_counts[r.status] = int(r.n)
-    return build_quality_report_rows(metrics_rows, anomaly_rows, review_counts, run_id)
-
-
 def build_quality_report_rows(
     metrics_rows: list[dict],
     anomaly_rows: list[dict],
     review_counts: dict[str, int],
     run_id: str,
 ) -> dict:
-    """Row-list core of ``build_quality_report`` (see
-    ``triage_report_rows`` for the one-collect rationale).
+    """O4 analog — the reference's combined quality report
+    (reference entity_resolution_engine/qa/quality_report.py:9-55):
+    one run-scoped snapshot of pipeline metrics, anomaly events, and
+    review counts by status, in the reference's dict shape.
     ``metrics_rows``: [{stage, metric, value}] totals only;
     ``anomaly_rows``: this run's anomaly dicts."""
     return {
@@ -312,69 +226,34 @@ def build_quality_report_rows(
     }
 
 
-def evaluate_quality_gates(
-    run_rates_row: DataFrame,
-    anomalies: DataFrame,
+def quality_gate_rows(
     run_id: str,
+    rates: dict[str, float],
     cfg: QualityGateConfig,
+    high_anomaly_count: int,
     llm_stats: dict | None = None,
-    high_anomaly_count: int | None = None,
-) -> DataFrame:
+) -> list[tuple]:
     """One QUALITY_GATE_RESULTS row per gate for this run.
 
     Four gates — reference parity with
     /root/reference/entity_resolution_engine/config/quality_gates.yml:1-4
     and qa/quality_gates.py:99-109: max_gray_zone_rate,
     max_review_rate, no_high_severity_anomalies, max_llm_error_rate.
-    ``llm_stats`` is router.llm_run_stats' dict for the run (or None
-    when the LLM never ran — error rate 0.0, gate passes, matching the
-    reference's llm_call_count == 0 branch).  ``high_anomaly_count``,
-    when given, skips the anomaly count job — the pipeline derives it
-    from its one collected anomaly slice (``anomalies`` may then be
-    None)."""
-    if high_anomaly_count is not None:
-        high_count = int(high_anomaly_count)
-    else:
-        high_count = anomalies.filter(
-            (F.col("run_id") == run_id) & (F.col("severity") == "HIGH")
-        ).count()
+    ``rates`` is ``run_rates`` of the run.  ``llm_stats`` is
+    router.llm_run_stats' dict for the run (or None when the LLM never
+    ran — error rate 0.0, gate passes, matching the reference's
+    llm_call_count == 0 branch)."""
+    gray = rates["gray_zone_rate"]
     llm_error_rate = float((llm_stats or {}).get("llm_error_rate", 0.0))
-    rates = run_rates_row.filter(F.col("run_id") == run_id)
-
-    gates = rates.select(
-        F.lit(run_id).alias("run_id"),
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("max_gray_zone_rate").alias("gate"),
-                    F.col("gray_zone_rate").alias("value"),
-                    F.lit(cfg.max_gray_zone_rate).alias("bound"),
-                    (F.col("gray_zone_rate") <= cfg.max_gray_zone_rate).alias(
-                        "passed"
-                    ),
-                ),
-                F.struct(
-                    F.lit("max_review_rate").alias("gate"),
-                    F.col("gray_zone_rate").alias("value"),
-                    F.lit(cfg.max_review_rate).alias("bound"),
-                    (F.col("gray_zone_rate") <= cfg.max_review_rate).alias("passed"),
-                ),
-                F.struct(
-                    F.lit("no_high_severity_anomalies").alias("gate"),
-                    F.lit(float(high_count)).alias("value"),
-                    F.lit(0.0).alias("bound"),
-                    F.lit(
-                        (high_count == 0) or not cfg.fail_on_high_severity_anomalies
-                    ).alias("passed"),
-                ),
-                F.struct(
-                    F.lit("max_llm_error_rate").alias("gate"),
-                    F.lit(llm_error_rate).alias("value"),
-                    F.lit(cfg.max_error_rate).alias("bound"),
-                    # reference qa/quality_gates.py:108 fails on strict >
-                    F.lit(llm_error_rate <= cfg.max_error_rate).alias("passed"),
-                ),
-            )
-        ).alias("g"),
-    ).select("run_id", "g.gate", "g.value", "g.bound", "g.passed")
-    return gates
+    high = int(high_anomaly_count)
+    return [
+        (run_id, "max_gray_zone_rate", gray, cfg.max_gray_zone_rate,
+         gray <= cfg.max_gray_zone_rate),
+        (run_id, "max_review_rate", gray, cfg.max_review_rate,
+         gray <= cfg.max_review_rate),
+        (run_id, "no_high_severity_anomalies", float(high), 0.0,
+         high == 0 or not cfg.fail_on_high_severity_anomalies),
+        # reference qa/quality_gates.py:108 fails on strict >
+        (run_id, "max_llm_error_rate", llm_error_rate, cfg.max_error_rate,
+         llm_error_rate <= cfg.max_error_rate),
+    ]

@@ -384,7 +384,7 @@ def llm_run_stats(results: list[dict]) -> dict[str, float]:
     """Counters the reference derives from a validation sweep
     (validation/router.py:110-117): calls, errors, invalid-JSON
     retries.  Feeds the ``max_llm_error_rate`` quality gate
-    (metrics.evaluate_quality_gates) — llm_error_rate =
+    (metrics.quality_gate_rows) — llm_error_rate =
     errors / calls, 0.0 when the LLM never ran."""
     calls = len(results)
     errors = sum(

@@ -73,9 +73,10 @@ def resolve_documents(
         max_iterations=config.cc_max_iterations,
         checkpoint_every=config.cc_checkpoint_every,
     )
-    # CC's localCheckpoint rounds materialized the edge set, so the
-    # returned assignments no longer reference the blocking plans —
-    # those caches are safe to release here
+    # CC materialized the edge set (fetched to the driver, or through
+    # the star loop's localCheckpoint rounds), so the returned
+    # assignments no longer reference the blocking plans — those
+    # caches are safe to release here
     for c in caches:
         c.unpersist()
     # cluster sizes as a window count (round 6): the groupBy+join form

@@ -9,9 +9,19 @@ the cross-node boundaries listed in SURVEY.md §3.1):
 
 Resume: the run-state table records completed stages; a rerun with the
 same ``run_id`` skips committed stages and reads their snapshots (the
-north_rule's "resumable from checkpoint").  The connected-components
-stage additionally checkpoints its iteration state, so resume works
-mid-clustering.
+north_rule's "resumable from checkpoint").  When its edge set is too
+large for the driver union-find, the connected-components stage runs
+the star loop and additionally checkpoints its iteration state, so
+resume works mid-clustering; a driver-sized edge set clusters in one
+job and has no mid-clustering state to resume.
+
+Observe writes stage and router metrics, anomaly events, the triage
+report, the quality gates and the quality report.  Only the row counts
+(snapshot footers), the router counters, one bounded run-history
+query, the review samples and review counts, and the LLM verdicts come
+from Spark; the run rates, z-score anomalies, the four gates and both
+reports are computed on the driver from those rows, and every table
+enters Spark as an Arrow local frame (``session.local_frame``).
 """
 
 from __future__ import annotations
@@ -21,7 +31,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
@@ -38,6 +48,7 @@ from ..operators.router import (
     router_metrics,
 )
 from ..operators.scoring import score_pairs
+from ..session import local_frame
 from ..sources.catalog import ParquetSnapshotCatalog, TableCatalog
 
 STAGES = ("normalize", "block", "score", "route", "cluster", "merge", "observe")
@@ -172,7 +183,8 @@ class Pipeline:
                 ]
                 cat.write(
                     self._t(run_id, "llm_validations"),
-                    self.spark.createDataFrame(
+                    local_frame(
+                        self.spark,
                         rows,
                         "run_id string, url_a string, url_b string, "
                         "decision string, confidence double, "
@@ -211,7 +223,10 @@ class Pipeline:
         run_stage("merge", _merge)
 
         # -- observe: metrics, anomalies, gates --------------------------------
+        gate_rows: list[tuple] | None = None
+
         def _observe():
+            nonlocal gate_rows
             # metrics derive from the COMMITTED snapshots (not in-flight
             # DataFrames) so a resumed run reports complete metrics.
             # Stage row counts come from SNAPSHOT FILE METADATA
@@ -247,54 +262,48 @@ class Pipeline:
                         )
                     )
             # router counters: ONE aggregation job over the routed
-            # snapshot, collected once (5 rows) and reused for both the
-            # metrics write and the quality report below
+            # snapshot, collected once (5 rows) and reused for the
+            # metrics write, the rates and the quality report below
             router_rows = [
                 tuple(r)
                 for r in router_metrics(
                     cat.read(self._t(run_id, "routed")), run_id, seq_base + 5
                 ).collect()
             ]
-            all_metrics = self.spark.createDataFrame(
-                local_rows + router_rows, M.RUN_METRICS_SCHEMA
+            # run history for the anomaly BASELINE, read BEFORE this
+            # run's rows are appended: one bounded job returns the
+            # lookback window of past runs; this run joins it from the
+            # rows above (keeping its earlier finished_seq on a resume)
+            history = self._rate_history(run_id, self.cfg.anomaly.lookback_runs + 1)
+            rates = M.run_rates({r[2]: r[3] for r in router_rows})
+            first_seq = min([fs for rid, fs, _ in history if rid == run_id] + [seq_base])
+            runs = [h for h in history if h[0] != run_id] + [(run_id, first_seq, rates)]
+
+            all_metrics = local_frame(
+                self.spark, local_rows + router_rows, M.RUN_METRICS_SCHEMA
             )
             for fr in scan_frames:
                 all_metrics = all_metrics.unionByName(fr)
             cat.write("run_metrics", all_metrics, mode="append")
 
-            # run history is needed for the anomaly BASELINE (past runs'
-            # rates) — a small observability table; cached for the two
-            # plans that read it (rates + run_order)
-            history = cat.read("run_metrics").cache()
-            rates = M.derive_run_rates(history)
-            run_order = (
-                history.groupBy("run_id")
-                .agg(F.min("finished_seq").alias("fs"))
-                .withColumn("finished_seq", F.row_number().over(Window.orderBy("fs")))
-                .select("run_id", "finished_seq")
-            )
-            anomalies = M.detect_anomalies(rates, run_order, run_id, self.cfg.anomaly)
-            # ≤ 3 rows by construction (one per tracked rate) — collect
-            # ONCE; the event write, triage report, HIGH-severity gate,
-            # and quality report all feed from these rows instead of one
-            # driver action each
-            anoms_rows = anomalies.collect()
+            # ≤ 3 rows by construction (one per tracked rate); the event
+            # write, triage report, HIGH-severity gate, and quality
+            # report all feed from these rows
+            anoms_rows = M.anomaly_rows(runs, run_id, self.cfg.anomaly)
             cat.write(
                 "anomaly_events",
-                self.spark.createDataFrame(anoms_rows, anomalies.schema),
+                local_frame(self.spark, anoms_rows, M.ANOMALY_EVENTS_SCHEMA),
                 mode="append",
             )
-            reviews_df = cat.read(self._t(run_id, "reviews")).cache()
-            samples = (
-                reviews_df.filter(F.col("run_id") == run_id)
-                .orderBy(F.desc("matcher_score"))
-                .limit(20)
-                .collect()
+            reviews_df = cat.read(self._t(run_id, "reviews")).filter(
+                F.col("run_id") == run_id
             )
+            samples = reviews_df.orderBy(F.desc("matcher_score")).limit(20).collect()
             report = M.triage_report_rows(anoms_rows, samples, run_id)
             cat.write(
                 "anomaly_triage_reports",
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [
                         (
                             run_id,
@@ -303,7 +312,7 @@ class Pipeline:
                             report["report"],
                         )
                     ],
-                    "run_id string, max_severity string, n_anomalies int, report string",
+                    M.TRIAGE_REPORTS_SCHEMA,
                 ),
                 mode="append",
             )
@@ -318,17 +327,18 @@ class Pipeline:
                 llm_stats = llm_run_stats(
                     [r.asDict() for r in cat.read(llm_tbl).collect()]
                 )
-            gates = M.evaluate_quality_gates(
-                rates,
-                None,
+            gate_rows = M.quality_gate_rows(
                 run_id,
+                rates,
                 self.cfg.gates,
+                high_anomaly_count=sum(1 for a in anoms_rows if a.severity == "HIGH"),
                 llm_stats=llm_stats,
-                high_anomaly_count=sum(
-                    1 for a in anoms_rows if a.severity == "HIGH"
-                ),
             )
-            cat.write("quality_gate_results", gates, mode="append")
+            cat.write(
+                "quality_gate_results",
+                local_frame(self.spark, gate_rows, M.QUALITY_GATE_RESULTS_SCHEMA),
+                mode="append",
+            )
 
             # O4: the combined quality report (metrics + anomalies +
             # review counts) persisted as one run snapshot row —
@@ -347,17 +357,12 @@ class Pipeline:
                     .collect()
                 ]
             anomaly_dicts = [
-                {
-                    k: v
-                    for k, v in r.asDict().items()
-                    if k != "run_id"
-                }
-                for r in anoms_rows
+                {k: v for k, v in a.asDict().items() if k != "run_id"}
+                for a in anoms_rows
             ]
             review_counts = {
                 r.status: int(r.n)
-                for r in reviews_df.filter(F.col("run_id") == run_id)
-                .groupBy("status")
+                for r in reviews_df.groupBy("status")
                 .agg(F.count("*").alias("n"))
                 .collect()
             }
@@ -366,18 +371,20 @@ class Pipeline:
             )
             cat.write(
                 "quality_reports",
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [(run_id, json.dumps(qr, default=str))],
-                    "run_id string, report_json string",
+                    M.QUALITY_REPORTS_SCHEMA,
                 ),
                 mode="append",
             )
-            for c in (history, reviews_df):
-                c.unpersist()
 
         run_stage("observe", _observe)
 
-        if cat.exists("quality_gate_results"):
+        if gate_rows is not None:
+            res.gate_passed = all(g[4] for g in gate_rows)
+        elif cat.exists("quality_gate_results"):
+            # observe committed in an earlier call: read its verdicts back
             failed = (
                 cat.read("quality_gate_results")
                 .filter((F.col("run_id") == run_id) & (~F.col("passed")))
@@ -385,6 +392,35 @@ class Pipeline:
             )
             res.gate_passed = failed == 0
         return res
+
+    def _rate_history(self, run_id: str, n_runs: int) -> list[tuple[str, int, dict]]:
+        """(run_id, finished_seq, rates) from ``run_metrics`` for the
+        ``n_runs`` most recent runs that logged router counters, plus
+        ``run_id`` itself when it logged before (a resume): one bounded
+        job.  finished_seq is a run's first logged sequence."""
+        if not self.catalog.exists("run_metrics"):
+            return []
+        counter = (F.col("stage") == "router") & F.col("metric").isin(
+            *M.RATE_COUNTERS
+        )
+        this_run = F.col("run_id") == run_id
+        rows = (
+            self.catalog.read("run_metrics")
+            .groupBy("run_id")
+            .agg(
+                F.min("finished_seq").alias("fs"),
+                F.count(F.when(counter, 1)).alias("n_counters"),
+                *[
+                    F.max(F.when(counter & (F.col("metric") == m), F.col("value"))).alias(m)
+                    for m in M.RATE_COUNTERS
+                ],
+            )
+            .filter((F.col("n_counters") > 0) | this_run)
+            .orderBy(this_run.desc(), F.desc("fs"), F.desc("run_id"))
+            .limit(n_runs + 1)
+            .collect()
+        )
+        return [(r.run_id, int(r.fs), M.run_rates(r.asDict())) for r in rows]
 
     # convenience accessors -------------------------------------------------
     def table(self, run_id: str, name: str) -> DataFrame:

@@ -9,6 +9,19 @@ reporting wall, the per-sync iteration ledger (stats_out), and the
 shuffle-byte economics of integer surrogates vs url strings.
 
 Usage: python scripts/bench_cc.py [n_rows] — one JSON line to stdout.
+
+Crossover mode times the two CC paths — the driver union-find and the
+star loop (forced by setting ``cluster.DRIVER_CC_MAX_EDGES`` to 0) — on
+the SAME edge sets at several sizes, in one local[nproc] session with a
+2g heap, reps interleaved path by path, and prints the median walls and
+the smallest size at which the star loop was faster:
+
+    python scripts/bench_cc.py --crossover [edges ...] [--reps N]
+
+The edge sets are ER-shaped: planted clusters of 2-8 urls joined as
+cliques (about 12 edges per cluster), plus as many edgeless urls as
+clustered ones, written to parquet so each timed call reads its input
+from disk like the pipeline's cluster stage.
 """
 
 from __future__ import annotations
@@ -23,7 +36,8 @@ import tempfile
 if os.path.isdir("/dev/shm"):
     os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
 
-N_ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 1000000
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CROSSOVER_SIZES = (3_000, 15_000, 60_000, 190_000, 400_000, 800_000, 1_600_000)
 LEVELS = (8, 32)
 ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALE_ROUNDS", "2"))
 
@@ -106,10 +120,120 @@ spark.stop()
 """
 
 
+def _edge_set(spark, n_edges: int, d: str) -> tuple[str, str, int]:
+    """Writes an ER-shaped edge set of about ``n_edges`` pairs and its
+    node set under ``d``; returns (edges path, nodes path, edge count)."""
+    from pyspark.sql import functions as F
+
+    clusters = spark.range(max(1, n_edges // 12)).select(
+        F.col("id").alias("c"),
+        (F.pmod(F.xxhash64("id"), F.lit(7)) + 2).cast("int").alias("k"),
+    )
+
+    def url(c, m):
+        return F.format_string("https://d%d.org/p/%d-%d", c % 997, c, m)
+
+    members = clusters.select(
+        "c", F.explode(F.sequence(F.lit(0), F.col("k") - 1)).alias("m")
+    )
+    a, b = members.alias("a"), members.alias("b")
+    edges = a.join(b, (F.col("a.c") == F.col("b.c")) & (F.col("a.m") < F.col("b.m"))).select(
+        url(F.col("a.c"), F.col("a.m")).alias("src"),
+        url(F.col("b.c"), F.col("b.m")).alias("dst"),
+    )
+    singles = members.select(
+        F.format_string("https://solo.org/%d-%d", F.col("c"), F.col("m")).alias("url")
+    )
+    nodes = members.select(url(F.col("c"), F.col("m")).alias("url")).unionByName(singles)
+    e_path, n_path = f"{d}/edges_{n_edges}", f"{d}/nodes_{n_edges}"
+    edges.write.mode("overwrite").parquet(e_path)
+    nodes.write.mode("overwrite").parquet(n_path)
+    return e_path, n_path, spark.read.parquet(e_path).count()
+
+
+def crossover(sizes: list[int], reps: int) -> None:
+    import statistics
+    import time
+
+    sys.path.insert(0, ROOT)
+    from entity_resolution_engine_spark.operators import cluster
+    from entity_resolution_engine_spark.session import get_spark
+
+    cpus = os.cpu_count() or 4
+    spark = get_spark(
+        app_name="cc_crossover", master=f"local[{cpus}]", shuffle_partitions=cpus,
+        extra_conf={"spark.driver.memory": "2g"},
+    )
+    driver_max = cluster.DRIVER_CC_MAX_EDGES
+    d = tempfile.mkdtemp(prefix="er_cc_crossover_")
+
+    def timed(e_path, n_path, limit):
+        cluster.DRIVER_CC_MAX_EDGES = limit
+        stats: dict = {}
+        t0 = time.monotonic()
+        out = cluster.connected_components(
+            spark.read.parquet(e_path), all_nodes=spark.read.parquet(n_path),
+            stats_out=stats,
+        )
+        n_clusters = out.select("cluster_id").distinct().count()
+        return time.monotonic() - t0, n_clusters, stats["path"]
+
+    # each path's edge limit: the driver path takes every size measured
+    paths = {"driver": 2**31 - 2, "star": 0}  # limit() takes a JVM int
+    rows = []
+    try:
+        for n in sizes:
+            e_path, n_path, n_edges = _edge_set(spark, n, d)
+            walls: dict[str, list[float]] = {p: [] for p in paths}
+            answers = set()
+            for rep in range(reps + 1):  # rep 0 warms both paths up
+                for name, limit in paths.items():
+                    wall, n_clusters, took = timed(e_path, n_path, limit)
+                    if took != name:
+                        raise RuntimeError(f"asked for the {name} path, ran {took}")
+                    answers.add(n_clusters)
+                    if rep:
+                        walls[name].append(wall)
+            if len(answers) != 1:
+                raise RuntimeError(f"paths disagree at {n_edges} edges: {answers}")
+            med = {p: statistics.median(w) for p, w in walls.items()}
+            rows.append({
+                "edges": n_edges,
+                "clusters": answers.pop(),
+                **{f"{p}_median_s": round(m, 3) for p, m in med.items()},
+                **{f"{p}_walls_s": [round(w, 3) for w in ws] for p, ws in walls.items()},
+            })
+            sys.stderr.write(f"cc crossover: {rows[-1]}\n")
+    finally:
+        cluster.DRIVER_CC_MAX_EDGES = driver_max
+        shutil.rmtree(d, ignore_errors=True)
+        spark.stop()
+    star_wins = [r["edges"] for r in rows if r["star_median_s"] <= r["driver_median_s"]]
+    print(json.dumps({
+        "metric": "cc_path_crossover",
+        "unit": "edges",
+        "cpus": cpus,
+        "reps": reps,
+        "sizes": rows,
+        "star_faster_from": min(star_wins) if star_wins else None,
+        "driver_cc_max_edges": driver_max,
+    }))
+
+
 def main() -> None:
+    if len(sys.argv) > 1 and sys.argv[1] == "--crossover":
+        args = sys.argv[2:]
+        reps = 3
+        if "--reps" in args:
+            i = args.index("--reps")
+            reps = int(args[i + 1])
+            del args[i : i + 2]
+        crossover([int(a) for a in args] or list(CROSSOVER_SIZES), reps)
+        return
+    n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 1000000
     d = tempfile.mkdtemp(prefix="er_cc_bench_")
     gen = subprocess.run(
-        [sys.executable, "-c", _GEN, d, str(N_ROWS)],
+        [sys.executable, "-c", _GEN, d, str(n_rows)],
         capture_output=True, text=True, timeout=3000,
     )
     if gen.returncode != 0:
@@ -138,7 +262,7 @@ def main() -> None:
     print(json.dumps({
         "metric": "cc_stage_wall",
         "unit": "sec",
-        "n_rows_arg": N_ROWS,
+        "n_rows_arg": n_rows,
         "levels": results,
         "speedup": round(results[lo]["wall_sec"] / results[hi]["wall_sec"], 2),
         "all_runs": all_runs,

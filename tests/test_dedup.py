@@ -246,3 +246,11 @@ def test_dedup_cache_ledgers_release_storage(spark, docs):
         assert not leaked, (
             f"persistent RDDs leaked after unpersisting the ledger: {leaked}"
         )
+
+
+def test_count_matches_without_pair_dedup_raises(spark):
+    """count_matches counts buckets inside the pair dedup, so asking for
+    it with dedup_pairs=False is refused when the plan is built."""
+    members = spark.createDataFrame([(1, 10), (1, 11)], "bucket long, id long")
+    with pytest.raises(ValueError, match="dedup_pairs=False"):
+        DD.bounded_bucket_pairs(members, count_matches=True, dedup_pairs=False)

@@ -1,46 +1,46 @@
 """Observability: run rates, z-score anomaly detection, quality gates
-(reference monitoring/anomaly_detector.py + qa/quality_gates.py analog)."""
+(reference monitoring/anomaly_detector.py + qa/quality_gates.py analog),
+and the Arrow local frames the observe tables are written from."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Row
 
 from entity_resolution_engine_spark.config import AnomalyConfig, QualityGateConfig
 from entity_resolution_engine_spark.operators.metrics import (
-    derive_run_rates,
-    detect_anomalies,
-    evaluate_quality_gates,
+    anomaly_rows,
+    quality_gate_rows,
+    run_rates,
     stage_metrics,
+    triage_report_rows,
 )
+from entity_resolution_engine_spark.session import local_frame
 
 
-def _router_metrics_row(spark, run_id, total, approved, rejected, gray, seq):
-    rows = [
-        (run_id, "router", "total_pairs", float(total), None, seq),
-        (run_id, "router", "auto_approved", float(approved), None, seq),
-        (run_id, "router", "auto_rejected", float(rejected), None, seq),
-        (run_id, "router", "gray_zone", float(gray), None, seq),
+def _router_counters(total, approved, rejected, gray):
+    return {
+        "total_pairs": float(total),
+        "auto_approved": float(approved),
+        "auto_rejected": float(rejected),
+        "gray_zone": float(gray),
+    }
+
+
+def _history(gray_rates, current_gray):
+    """(run_id, finished_seq, rates) per run: baseline runs in order,
+    then the current run last."""
+    runs = [
+        (f"run{i}", i, run_rates(_router_counters(100, 100 - g, 0, g)))
+        for i, g in enumerate(gray_rates)
     ]
-    return spark.createDataFrame(
-        rows,
-        "run_id string, stage string, metric string, value double, "
-        "partition_id int, finished_seq long",
-    )
-
-
-def _history(spark, gray_rates, current_gray):
-    dfs = []
-    for i, g in enumerate(gray_rates):
-        dfs.append(_router_metrics_row(spark, f"run{i}", 100, 100 - g, 0, g, i))
-    dfs.append(
-        _router_metrics_row(
-            spark, "current", 100, 100 - current_gray, 0, current_gray, len(gray_rates)
+    runs.append(
+        (
+            "current",
+            len(gray_rates),
+            run_rates(_router_counters(100, 100 - current_gray, 0, current_gray)),
         )
     )
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+    return runs
 
 
 def test_stage_metrics_shapes(spark):
@@ -53,108 +53,115 @@ def test_stage_metrics_shapes(spark):
     assert sum(r.value for r in parts) == 100.0
 
 
-def test_derive_run_rates(spark):
-    h = _router_metrics_row(spark, "r1", 200, 120, 60, 20, 0)
-    r = derive_run_rates(h).collect()[0]
-    assert abs(r.gray_zone_rate - 0.1) < 1e-12
-    assert abs(r.approval_rate - 0.6) < 1e-12
-    assert abs(r.rejection_rate - 0.3) < 1e-12
+def test_derive_run_rates():
+    r = run_rates(_router_counters(200, 120, 60, 20))
+    assert abs(r["gray_zone_rate"] - 0.1) < 1e-12
+    assert abs(r["approval_rate"] - 0.6) < 1e-12
+    assert abs(r["rejection_rate"] - 0.3) < 1e-12
 
 
-def _run_order(spark, history):
-    from pyspark.sql import Window
-
-    return (
-        history.groupBy("run_id")
-        .agg(F.min("finished_seq").alias("fs"))
-        .withColumn("finished_seq", F.row_number().over(Window.orderBy("fs")))
-        .select("run_id", "finished_seq")
-    )
-
-
-def test_anomaly_detected_on_spike(spark):
+def test_anomaly_detected_on_spike():
     # baseline gray ≈ 10±1, current = 40 → huge z
-    h = _history(spark, [9, 10, 11, 10, 9, 11], 40)
-    rates = derive_run_rates(h)
-    anomalies = detect_anomalies(rates, _run_order(spark, h), "current", AnomalyConfig())
-    got = {r.metric: r for r in anomalies.collect()}
+    anomalies = anomaly_rows(_history([9, 10, 11, 10, 9, 11], 40), "current", AnomalyConfig())
+    got = {r.metric: r for r in anomalies}
     assert "gray_zone_rate" in got
     assert got["gray_zone_rate"].severity == "HIGH"
 
 
-def test_no_anomaly_without_baseline(spark):
-    h = _history(spark, [10], 40)  # only 1 baseline run < min_baseline_runs
-    rates = derive_run_rates(h)
-    anomalies = detect_anomalies(rates, _run_order(spark, h), "current", AnomalyConfig())
-    assert anomalies.count() == 0
+def test_no_anomaly_without_baseline():
+    h = _history([10], 40)  # only 1 baseline run < min_baseline_runs
+    assert anomaly_rows(h, "current", AnomalyConfig()) == []
 
 
-def test_quality_gates_pass_and_fail(spark):
-    h = _router_metrics_row(spark, "r1", 100, 60, 0, 40, 0)  # gray rate 0.4
-    rates = derive_run_rates(h)
-    empty_anoms = spark.createDataFrame([], "run_id string, severity string")
-    gates = {g.gate: g for g in evaluate_quality_gates(rates, empty_anoms, "r1", QualityGateConfig()).collect()}
-    assert gates["max_gray_zone_rate"].passed is False  # 0.4 > 0.35
-    assert gates["no_high_severity_anomalies"].passed is True
+def test_anomaly_window_and_constant_baseline():
+    # only the lookback window is the baseline: with 2 baseline runs the
+    # spike at run0 falls out and leaves (7, 7) — stddev 0, no z-score;
+    # with 3 it is back in and the current run is a HIGH outlier
+    h = _history([40, 7, 7], 90)
+    assert anomaly_rows(h, "current", AnomalyConfig(lookback_runs=2)) == []
+    got = {r.metric: r for r in anomaly_rows(h, "current", AnomalyConfig(lookback_runs=3))}
+    assert abs(got["gray_zone_rate"].baseline_mean - 0.18) < 1e-12
+    assert got["gray_zone_rate"].severity == "HIGH"
+    # 0.1 is not exact in binary: a naive mean/stddev of (0.1, 0.1, 0.1)
+    # leaves a ~1e-17 stddev that would turn any change into a HIGH
+    assert anomaly_rows(_history([10, 10, 10], 11), "current", AnomalyConfig()) == []
 
-    h2 = _router_metrics_row(spark, "r2", 100, 95, 0, 5, 0)
-    gates2 = {g.gate: g for g in evaluate_quality_gates(derive_run_rates(h2), empty_anoms, "r2", QualityGateConfig()).collect()}
-    assert gates2["max_gray_zone_rate"].passed is True
-    assert gates2["max_review_rate"].passed is True
+
+def test_quality_gates_pass_and_fail():
+    rates = run_rates(_router_counters(100, 60, 0, 40))  # gray rate 0.4
+    gates = {g[1]: g for g in quality_gate_rows("r1", rates, QualityGateConfig(), 0)}
+    assert gates["max_gray_zone_rate"][4] is False  # 0.4 > 0.35
+    assert gates["no_high_severity_anomalies"][4] is True
+
+    rates2 = run_rates(_router_counters(100, 95, 0, 5))
+    gates2 = {g[1]: g for g in quality_gate_rows("r2", rates2, QualityGateConfig(), 0)}
+    assert gates2["max_gray_zone_rate"][4] is True
+    assert gates2["max_review_rate"][4] is True
 
 
-def test_triage_report_fallback(spark):
-    from entity_resolution_engine_spark.operators.metrics import triage_report
-
-    h = _history(spark, [9, 10, 11, 10, 9, 11], 40)
-    rates = derive_run_rates(h)
-    anomalies = detect_anomalies(rates, _run_order(spark, h), "current", AnomalyConfig())
-    reviews = spark.createDataFrame(
-        [("current", "a1", "b1", 0.55, "PENDING", "{}"),
-         ("current", "a2", "b2", 0.61, "PENDING", "{}")],
-        "run_id string, url_a string, url_b string, matcher_score double, "
-        "status string, signals string",
-    )
-    rep = triage_report(anomalies, reviews, "current")
+def test_triage_report_fallback():
+    anomalies = anomaly_rows(_history([9, 10, 11, 10, 9, 11], 40), "current", AnomalyConfig())
+    # the observe stage's review query returns samples by score, descending
+    samples = [
+        Row(url_a="a2", url_b="b2", matcher_score=0.61),
+        Row(url_a="a1", url_b="b1", matcher_score=0.55),
+    ]
+    rep = triage_report_rows(anomalies, samples, "current")
     assert rep["max_severity"] == "HIGH"
     assert rep["n_review_samples"] == 2
     assert "gray_zone_rate" in rep["report"]
-    assert "a2 ~ b2" in rep["report"]  # highest score first
+    assert rep["report"].index("a2 ~ b2") < rep["report"].index("a1 ~ b1")
 
 
-def test_triage_report_no_anomalies(spark):
-    from entity_resolution_engine_spark.operators.metrics import triage_report
-
-    empty = spark.createDataFrame(
-        [], "run_id string, metric string, value double, baseline_mean double, "
-        "baseline_stddev double, z_score double, severity string")
-    rep = triage_report(empty, None, "r9")
+def test_triage_report_no_anomalies():
+    rep = triage_report_rows([], [], "r9")
     assert rep["max_severity"] == "NONE" and rep["n_anomalies"] == 0
     assert "No anomalies" in rep["report"]
 
 
-def test_quality_gates_four_rows_with_llm_gate(spark):
+def test_quality_gates_four_rows_with_llm_gate():
     # reference quality_gates.yml has FOUR gates; max_llm_error_rate
     # evaluates llm_errors/llm_calls (0.0 when the LLM never ran)
-    h = _router_metrics_row(spark, "r3", 100, 95, 0, 5, 0)
-    rates = derive_run_rates(h)
-    empty_anoms = spark.createDataFrame([], "run_id string, severity string")
-    gates = {
-        g.gate: g
-        for g in evaluate_quality_gates(
-            rates, empty_anoms, "r3", QualityGateConfig()
-        ).collect()
-    }
+    rates = run_rates(_router_counters(100, 95, 0, 5))
+    gates = {g[1]: g for g in quality_gate_rows("r3", rates, QualityGateConfig(), 0)}
     assert len(gates) == 4
-    assert gates["max_llm_error_rate"].passed is True
-    assert gates["max_llm_error_rate"].value == 0.0
+    assert gates["max_llm_error_rate"][4] is True
+    assert gates["max_llm_error_rate"][2] == 0.0
 
     failing = {
-        g.gate: g
-        for g in evaluate_quality_gates(
-            rates, empty_anoms, "r3", QualityGateConfig(),
-            llm_stats={"llm_error_rate": 0.5},
-        ).collect()
+        g[1]: g
+        for g in quality_gate_rows(
+            "r3", rates, QualityGateConfig(), 0, llm_stats={"llm_error_rate": 0.5}
+        )
     }
-    assert failing["max_llm_error_rate"].passed is False  # 0.5 > 0.05
-    assert failing["max_llm_error_rate"].value == 0.5
+    assert failing["max_llm_error_rate"][4] is False  # 0.5 > 0.05
+    assert failing["max_llm_error_rate"][2] == 0.5
+
+
+def test_high_anomaly_gate():
+    rates = run_rates(_router_counters(100, 95, 0, 5))
+    gates = {g[1]: g for g in quality_gate_rows("r4", rates, QualityGateConfig(), 2)}
+    assert gates["no_high_severity_anomalies"][2:] == (2.0, 0.0, False)
+    lenient = QualityGateConfig(fail_on_high_severity_anomalies=False)
+    gates = {g[1]: g for g in quality_gate_rows("r4", rates, lenient, 2)}
+    assert gates["no_high_severity_anomalies"][4] is True
+
+
+def test_local_frame_keeps_nulls(spark):
+    """Arrow local frames: None in int, bigint and double columns reads
+    back as null (never NaN), and the plan is a LocalRelation."""
+    schema = "name string, i int, l bigint, d double, ok boolean, tags array<string>"
+    rows = [
+        ("a", 1, 2**40, 0.5, True, ["x"]),
+        ("b", None, None, None, None, None),
+        (None, 3, 4, float("inf"), False, []),
+    ]
+    df = local_frame(spark, rows, schema)
+    assert df.schema.simpleString() == (
+        "struct<name:string,i:int,l:bigint,d:double,ok:boolean,tags:array<string>>"
+    )
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert [tuple(r) for r in df.collect()] == rows
+    assert df.filter("d is null").count() == 1
+    assert df.filter("isnan(d)").count() == 0
+    assert local_frame(spark, [], schema).count() == 0

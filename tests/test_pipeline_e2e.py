@@ -294,3 +294,74 @@ def test_llm_error_rate_fails_gate(spark, synth_corpus, tmp_path_factory):
     # every verdict degraded to an error row
     vals = pipe.table("llm2", "llm_validations").collect()
     assert vals and all(r.error is not None for r in vals)
+
+
+# anomaly_events and quality_gate_results of the 4-run history below, as
+# the DataFrame implementation of observe wrote them
+_GOLDEN_ANOMALIES = [
+    ("h2", "approval_rate", 0.35789473684210527, 0.8976190476190476,
+     0.09091372900969896, -5.936664535225069, "HIGH"),
+    ("h2", "gray_zone_rate", 0.6421052631578947, 0.10238095238095238,
+     0.09091372900969896, 5.936664535225069, "HIGH"),
+    ("h3", "approval_rate", 0.024096385542168676, 0.7177109440267335,
+     0.3181720136589216, -2.1799986444694515, "MEDIUM"),
+    ("h3", "gray_zone_rate", 0.9759036144578314, 0.2822890559732665,
+     0.31817201365892156, 2.179998644469452, "MEDIUM"),
+]
+_GOLDEN_GATES = [
+    ("h0", "max_gray_zone_rate", 0.0380952380952381, 0.35, True),
+    ("h0", "max_llm_error_rate", 0.0, 0.05, True),
+    ("h0", "max_review_rate", 0.0380952380952381, 0.15, True),
+    ("h0", "no_high_severity_anomalies", 0.0, 0.0, True),
+    ("h1", "max_gray_zone_rate", 0.16666666666666666, 0.35, True),
+    ("h1", "max_llm_error_rate", 0.0, 0.05, True),
+    ("h1", "max_review_rate", 0.16666666666666666, 0.15, False),
+    ("h1", "no_high_severity_anomalies", 0.0, 0.0, True),
+    ("h2", "max_gray_zone_rate", 0.6421052631578947, 0.35, False),
+    ("h2", "max_llm_error_rate", 0.0, 0.05, True),
+    ("h2", "max_review_rate", 0.6421052631578947, 0.15, False),
+    ("h2", "no_high_severity_anomalies", 2.0, 0.0, False),
+    ("h3", "max_gray_zone_rate", 0.9759036144578314, 0.35, False),
+    ("h3", "max_llm_error_rate", 0.0, 0.05, True),
+    ("h3", "max_review_rate", 0.9759036144578314, 0.15, False),
+    ("h3", "no_high_severity_anomalies", 0.0, 0.0, True),
+]
+
+
+def _same_rows(got, want):
+    assert len(got) == len(want), got
+    for g, w in zip(got, want):
+        assert len(g) == len(w)
+        for a, b in zip(g, w):
+            if isinstance(b, float):
+                assert abs(a - b) <= 1e-12, (g, w)
+            else:
+                assert a == b, (g, w)
+
+
+def test_observe_golden_history(spark, tmp_path_factory):
+    """Four runs into one catalog, each raising threshold_high so the
+    gray-zone rate climbs: run h2 is a HIGH outlier against two baseline
+    runs and h3 a MEDIUM one against three.  The anomaly events, the
+    gate rows and each run's gate verdict match the golden rows."""
+    from dataclasses import replace
+
+    from entity_resolution_engine_spark.config import DEFAULT_CONFIG
+    from entity_resolution_engine_spark.sources.synth import generate_web_pages
+
+    root = str(tmp_path_factory.mktemp("history"))
+    for i, th in enumerate([0.9, 0.93, 0.96, 0.99]):
+        cfg = replace(
+            DEFAULT_CONFIG, scoring=replace(DEFAULT_CONFIG.scoring, threshold_high=th)
+        )
+        pages, _ = generate_web_pages(spark, 120, seed=i + 1)
+        res = Pipeline(spark, root, config=cfg).run(pages, run_id=f"h{i}")
+        want_passed = all(g[4] for g in _GOLDEN_GATES if g[0] == f"h{i}")
+        assert res.gate_passed == want_passed
+    cat = Pipeline(spark, root).catalog
+    _same_rows(
+        sorted(tuple(r) for r in cat.read("anomaly_events").collect()), _GOLDEN_ANOMALIES
+    )
+    _same_rows(
+        sorted(tuple(r) for r in cat.read("quality_gate_results").collect()), _GOLDEN_GATES
+    )

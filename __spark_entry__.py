@@ -349,8 +349,7 @@ def q_minhash_near_dup(spark, sf):
     # oracle value-checks end-to-end (signature → band → bucket join →
     # verify).  At τ=0.8 with 48x4 banding LSH recall ≈ 1-1e-11, so
     # any row mismatch MEASURES a recall miss instead of hiding it.
-    # The band-estimate variant (no payload re-join) stays the scale
-    # path in DD.minhash_near_duplicates, pytest-covered.
+    # This verified join is the engine's only MinHash near-dup path.
     docs = _planted_dup_documents(spark, sf)
     return DD.minhash_verified_near_duplicates(docs, min_jaccard=0.8).select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")

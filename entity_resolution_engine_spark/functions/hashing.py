@@ -8,6 +8,14 @@ folding, the MinHash signature, and LSH banding are fused into one
 pandas UDF, fully vectorized in numpy (``shingle_flat`` +
 ``np.minimum.reduceat`` segment reductions) — no per-row Python loops.
 
+One MinHash kernel family: ``_band_keys`` (the cache-blocked
+``_chunked_min_fold`` signature, then the FNV ``_band_fold``) sits
+behind both MinHash UDF factories — ``make_minhash_band_udf`` (ER
+blocking: band keys) and ``make_minhash_band_gram_udf`` (the verified
+MinHash and n-gram near-dup joins: band keys plus each row's distinct
+shingle hashes).  ``make_md5_gram_bands_udf`` is the md5 reference
+path the DuckDB oracle reproduces, not part of that family.
+
 All hash parameters derive from fixed seeds so signatures are
 deterministic across executors, runs, and cluster sizes.
 """
@@ -113,32 +121,23 @@ def shingle_flat(
 _CHUNK_ELEMS = 1 << 15
 
 
-def _chunked_min_fold(
-    flat: np.ndarray,
-    offsets: np.ndarray,
-    ne_rows: np.ndarray,
-    a: np.ndarray,
-    b: np.ndarray,
-    out: np.ndarray,
-) -> None:
-    """Fill ``out[row, k] = min over row's segment of flat*a[k]+b[k]``
-    for the non-empty rows ``ne_rows``, cache-blocked: rows are taken
-    in runs whose flat segments fit ``_CHUNK_ELEMS``, and all
-    ``len(a)`` hash functions run over each resident chunk before
-    moving on.  One preallocated scratch buffer; no per-iteration
-    allocation beyond reduceat's (n_chunk_rows,) result."""
+def _chunk_runs(flat: np.ndarray, offsets: np.ndarray, ne_rows: np.ndarray, dtype):
+    """Cache-blocked runs over the non-empty rows ``ne_rows`` of a
+    ragged batch, shared by the MinHash and SimHash kernels.  Yields
+    ``(rows, seg, starts, w)``: consecutive rows whose flat segments fit
+    one scratch buffer of ``_CHUNK_ELEMS`` + the longest segment (a run
+    always admits at least one row), their flat slice ``seg``, each
+    row's start within it, and a ``dtype`` scratch view of seg's length.
+    The buffer is allocated once per batch."""
     if not flat.size or not ne_rows.size:
         return
-    num_hashes = len(a)
     seg_lens = offsets[ne_rows + 1] - offsets[ne_rows]
     buf = np.empty(
-        min(int(_CHUNK_ELEMS + seg_lens.max()), int(flat.size)), dtype=np.uint64
+        min(int(_CHUNK_ELEMS + seg_lens.max()), int(flat.size)), dtype=dtype
     )
     row_lo = 0
     while row_lo < ne_rows.size:
         start_elem = int(offsets[ne_rows[row_lo]])
-        # grow the run while it still fits the scratch buffer (always
-        # admit at least one row — buf is sized for the longest)
         row_hi = row_lo + 1
         while (
             row_hi < ne_rows.size
@@ -148,57 +147,27 @@ def _chunked_min_fold(
         rows = ne_rows[row_lo:row_hi]
         seg = flat[start_elem : int(offsets[rows[-1] + 1])]
         starts = (offsets[rows] - start_elem).astype(np.int64)
-        w = buf[: seg.size]
-        for k in range(num_hashes):
-            np.multiply(seg, a[k], out=w)  # uint64 wrap-around
-            w += b[k]
-            out[rows, k] = np.minimum.reduceat(w, starts)
+        yield rows, seg, starts, buf[: seg.size]
         row_lo = row_hi
 
 
-def _minhash_matrix_flat(
-    flat: np.ndarray, lengths: np.ndarray, num_hashes: int
-) -> np.ndarray:
-    """Batch MinHash core over a pre-flattened ragged batch:
-    (n, num_hashes) uint64 signature matrix (sentinel rows where
-    length == 0).
-
-    Cost O(num_hashes · total_shingles) in C, cache-blocked via
-    ``_chunked_min_fold`` so the per-hash passes stay L2-resident
-    instead of streaming DRAM (bit-identical to the un-blocked form —
-    asserted in scripts/bench_minhash_kernel.py and
-    tests/test_hashing.py)."""
-    n = len(lengths)
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    a, b = _minhash_params(num_hashes)
-    out = np.full((n, num_hashes), _EMPTY_SENTINEL, dtype=np.uint64)
-    ne_rows = np.nonzero(lengths > 0)[0]
-    _chunked_min_fold(flat, offsets, ne_rows, a, b, out)
-    return out
-
-
-def _minhash_matrix(
-    hash_arrays: pd.Series, num_hashes: int, shingle_size: int = 1
-) -> tuple[np.ndarray, np.ndarray]:
-    """list-of-token-hashes column form of ``_minhash_matrix_flat``;
-    ``shingle_size`` > 1 folds consecutive token hashes into word-
-    shingle hashes first (``shingle_flat``)."""
-    flat, _offsets, lengths = _flatten_ragged(hash_arrays)
-    if shingle_size > 1:
-        flat, lengths = shingle_flat(flat, lengths, shingle_size)
-    return _minhash_matrix_flat(flat, lengths, num_hashes), lengths
-
-
-def minhash_signatures(
-    hash_arrays: pd.Series, num_hashes: int, shingle_size: int = 1
-) -> list[list[int] | None]:
-    """Row-wise list form of ``_minhash_matrix`` (None for empty rows)."""
-    out, lengths = _minhash_matrix(hash_arrays, num_hashes, shingle_size)
-    out_i64 = out.view(np.int64)
-    return [
-        out_i64[i].tolist() if lengths[i] > 0 else None for i in range(len(lengths))
-    ]
+def _chunked_min_fold(
+    flat: np.ndarray,
+    offsets: np.ndarray,
+    ne_rows: np.ndarray,
+    a: np.ndarray,
+    b: np.ndarray,
+    out: np.ndarray,
+) -> None:
+    """Fill ``out[row, k] = min over row's segment of flat*a[k]+b[k]``
+    for the non-empty rows ``ne_rows``: all ``len(a)`` hash functions
+    run over each cache-resident ``_chunk_runs`` run before moving on.
+    No per-iteration allocation beyond reduceat's (n_run_rows,) result."""
+    for rows, seg, starts, w in _chunk_runs(flat, offsets, ne_rows, np.uint64):
+        for k in range(len(a)):
+            np.multiply(seg, a[k], out=w)  # uint64 wrap-around
+            w += b[k]
+            out[rows, k] = np.minimum.reduceat(w, starts)
 
 
 _FNV_OFFSET = np.uint64(1469598103934665603)
@@ -206,124 +175,67 @@ _FNV_PRIME = np.uint64(1099511628211)
 _BAND_MIX = np.uint64(0x9E3779B97F4A7C15)
 
 
-def minhash_band_keys(
-    hash_arrays: pd.Series, num_hashes: int, bands: int, shingle_size: int = 1
-) -> list[list[int] | None]:
-    """Fused signature + LSH banding: per row, ``bands`` int64 band keys
-    (FNV-1a fold over each band's signature rows, band index mixed in).
-
-    Fusing keeps the whole blocking computation in ONE pandas-UDF
-    evaluation — banding JVM-side would reference the signature column
-    ``bands`` times and Catalyst re-evaluates Python UDFs per reference
-    (measured 4-5x slowdown on the blocking stage)."""
-    sig, lengths = _minhash_matrix(hash_arrays, num_hashes, shingle_size)
-    n, rows = len(lengths), num_hashes // bands
-    h = _band_fold(sig, lengths, bands, rows)
-    h_i64 = h.view(np.int64)
-    return [
-        h_i64[i].tolist() if lengths[i] > 0 else None for i in range(n)
-    ]
-
-
-def make_minhash_band_udf(num_hashes: int, bands: int, shingle_size: int = 1):
-    """array<bigint> token hashes → array<bigint> of LSH band keys
-    (vectorized shingling + signature + banding fused in one UDF)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def band_udf(hashes: pd.Series) -> pd.Series:
-        return pd.Series(
-            minhash_band_keys(hashes, num_hashes, bands, shingle_size),
-            dtype="object",
-        )
-
-    return band_udf
-
-
-def make_minhash_udf(num_hashes: int, shingle_size: int = 1):
-    """array<bigint> token hashes → array<bigint> signature (with
-    optional in-UDF vectorized shingling)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(hashes: pd.Series) -> pd.Series:
-        return pd.Series(
-            minhash_signatures(hashes, num_hashes, shingle_size), dtype="object"
-        )
-
-    return minhash_udf
-
-
-def make_gram_bands_udf(n: int, num_bands: int):
-    """array<bigint> token hashes → struct(grams: array<bigint>,
-    bands: array<bigint>): the fused production kernel behind
-    ``ngram_jaccard_pairs_fast``.
-
-    Per Arrow batch, entirely in numpy: word-n-gram hashes via the
-    ``shingle_flat`` polynomial fold, per-row DEDUP of the gram set
-    (one lexsort over the flattened batch — no per-row loops), and
-    ``num_bands`` single-row MinHash band keys (one multiply-shift salt
-    per band, min over the distinct gram set, band index mixed in).  A
-    pair with Jaccard J agrees on one band with probability J — the
-    same blocking recall 1-(1-J)^num_bands as the md5-per-gram SQL-
-    parity path this replaces, whose interpreted per-gram HOF
-    expressions (md5 hex + concat_ws × num_bands salts) were the
-    dominant CPU cost of the parity query."""
-    a, b = _minhash_params(num_bands)
-    band_mix = np.arange(num_bands, dtype=np.uint64) * _BAND_MIX
-
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("grams", T.ArrayType(T.LongType())),
-                T.StructField("bands", T.ArrayType(T.LongType())),
-            ]
-        )
-    )
-    def gram_bands_udf(hashes: pd.Series) -> pd.DataFrame:
-        flat, _off, lengths = _flatten_ragged(hashes)
-        gflat, glens = shingle_flat(flat, lengths, n)
-        # distinct gram hashes per row: one lexsort over the flat batch
-        # (_dedup_ragged), vectorized across rows
-        dh, dlens, offs = _dedup_ragged(gflat, glens)
-        nrows = len(glens)
-        nonempty = glens > 0
-        bands_mat = np.zeros((nrows, num_bands), dtype=np.uint64)
-        _chunked_min_fold(
-            dh, offs, np.nonzero(nonempty)[0], a, b, bands_mat
-        )  # cache-blocked, bit-identical to the per-band full passes
-        bands_mat ^= band_mix
-        dh_i64 = dh.view(np.int64)
-        bm_i64 = bands_mat.view(np.int64)
-        grams_out: list[list[int] | None] = []
-        bands_out: list[list[int] | None] = []
-        for i in range(nrows):
-            if nonempty[i]:
-                grams_out.append(dh_i64[offs[i] : offs[i + 1]].tolist())
-                bands_out.append(bm_i64[i].tolist())
-            else:
-                grams_out.append(None)
-                bands_out.append(None)
-        return pd.DataFrame({"grams": grams_out, "bands": bands_out})
-
-    return gram_bands_udf
-
-
-def _band_fold(sig: np.ndarray, lengths: np.ndarray, bands: int, rows: int) -> np.ndarray:
+def _band_fold(sig: np.ndarray, bands: int) -> np.ndarray:
     """(n, bands·rows) signature matrix → (n, bands) FNV-1a band keys
-    with the band index mixed in — the shared fold behind
-    ``minhash_band_keys`` and ``make_minhash_band_gram_udf``."""
-    n = len(lengths)
-    m = sig.reshape(n, bands, rows)
+    with the band index mixed in."""
+    n = sig.shape[0]
+    m = sig.reshape(n, bands, sig.shape[1] // bands)
     h = np.full((n, bands), _FNV_OFFSET, dtype=np.uint64)
-    for r in range(rows):
+    for r in range(m.shape[2]):
         h = (h ^ m[:, :, r]) * _FNV_PRIME
     h ^= np.arange(bands, dtype=np.uint64) * _BAND_MIX
     return h
 
 
+def _band_keys(
+    flat: np.ndarray, offsets: np.ndarray, a: np.ndarray, b: np.ndarray, bands: int
+) -> np.ndarray:
+    """The one MinHash band-key core: ragged batch (flat uint64 hashes,
+    row offsets) → (n, bands) uint64 band keys.  The ``len(a)``-long
+    signature comes from ``_chunked_min_fold`` (sentinel for empty rows,
+    whose keys are meaningless — callers emit null for them), then
+    ``_band_fold`` folds each band's ``len(a) // bands`` rows."""
+    n = len(offsets) - 1
+    sig = np.full((n, len(a)), _EMPTY_SENTINEL, dtype=np.uint64)
+    _chunked_min_fold(flat, offsets, np.nonzero(np.diff(offsets))[0], a, b, sig)
+    return _band_fold(sig, bands)
+
+
+def _row_lists(mat: np.ndarray, nonempty: np.ndarray) -> list[list[int] | None]:
+    """(n, k) uint64 matrix → per-row int64 lists, None where empty."""
+    m = mat.view(np.int64)
+    return [m[i].tolist() if nonempty[i] else None for i in range(len(nonempty))]
+
+
+def make_minhash_band_udf(num_hashes: int, bands: int, shingle_size: int = 1):
+    """array<bigint> token hashes → array<bigint> of LSH band keys
+    (vectorized shingling + signature + banding fused in one UDF; null
+    for an empty row).
+
+    Fusing keeps the whole blocking computation in ONE pandas-UDF
+    evaluation — banding JVM-side would reference the signature column
+    ``bands`` times and Catalyst re-evaluates Python UDFs per reference
+    (measured 4-5x slowdown on the blocking stage).  The raw shingle
+    stream feeds ``_band_keys`` as is: minima ignore multiplicity, and
+    deduping first measured slower for the few repeated shingles of
+    blocking's corpora."""
+    a, b = _minhash_params(num_hashes)
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def band_udf(hashes: pd.Series) -> pd.Series:
+        flat, _off, lengths = _flatten_ragged(hashes)
+        flat, lengths = shingle_flat(flat, lengths, shingle_size)
+        offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+        np.cumsum(lengths, out=offsets[1:])
+        keys = _band_keys(flat, offsets, a, b, bands)
+        return pd.Series(_row_lists(keys, lengths > 0), dtype="object")
+
+    return band_udf
+
+
 def _dedup_ragged(gflat: np.ndarray, glens: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Ragged gram-hash stream → per-row DISTINCT hashes: one lexsort by
-    (row, hash) over the flat batch, keep first of each run (the
-    make_gram_bands_udf kernel, factored for reuse).  Returns
+    (row, hash) over the flat batch, keep first of each run.  Returns
     (distinct_flat, distinct_lengths, offsets)."""
     nrows = len(glens)
     if gflat.size:
@@ -345,22 +257,19 @@ def _dedup_ragged(gflat: np.ndarray, glens: np.ndarray) -> tuple[np.ndarray, np.
 def make_minhash_band_gram_udf(num_hashes: int, bands: int, shingle_size: int):
     """array<bigint> token hashes → struct(bands: array<bigint>,
     grams: array<bigint>): ONE fused kernel producing both the LSH band
-    keys (shingle fold → distinct → MinHash minima → FNV band fold) and
-    the row's DISTINCT shingle-hash set for an exact verify join
-    (round 6).
+    keys (shingle fold → distinct → ``_band_keys``) and the row's
+    DISTINCT shingle-hash set for an exact verify join.  Both fields
+    are null for an empty row.
 
-    The verify path previously re-tokenized the corpus and built
-    STRING word-shingles through interpreted slice/concat_ws HOF
-    expressions — the exact per-shingle string cost ``shingle_flat``
-    was written to kill — and the band path ran a second Python pass
-    plus a 48-way interpreted slice/concat over the signature column.
-    Shingling once and deriving both outputs makes the whole
-    candidates+verify pipeline one Arrow pass.  MinHash minima over the
-    DISTINCT stream equal minima over the raw stream (min ignores
-    multiplicity), so band keys are identical to
-    ``make_minhash_band_udf``'s."""
+    Behind both verified joins: the MinHash near-dup join (e.g. 48
+    bands × 4 rows) and the n-gram join (``bands == num_hashes``: one
+    row per band, so a pair with Jaccard J agrees on a band with
+    probability J).  Shingling once and deriving both outputs makes the
+    whole candidates+verify pipeline one Arrow pass — no string
+    shingles, no signature column.  MinHash minima over the DISTINCT
+    stream equal minima over the raw stream (min ignores multiplicity),
+    so band keys are identical to ``make_minhash_band_udf``'s."""
     a, b = _minhash_params(num_hashes)
-    rows = num_hashes // bands
 
     @F.pandas_udf(
         T.StructType(
@@ -374,23 +283,17 @@ def make_minhash_band_gram_udf(num_hashes: int, bands: int, shingle_size: int):
         flat, _off, lengths = _flatten_ragged(hashes)
         gflat, glens = shingle_flat(flat, lengths, shingle_size)
         dh, dlens, offs = _dedup_ragged(gflat, glens)
-        nrows = len(glens)
         nonempty = dlens > 0
-        sig = np.full((nrows, num_hashes), _EMPTY_SENTINEL, dtype=np.uint64)
-        _chunked_min_fold(dh, offs, np.nonzero(nonempty)[0], a, b, sig)
-        bk = _band_fold(sig, dlens, bands, rows)
         dh_i64 = dh.view(np.int64)
-        bk_i64 = bk.view(np.int64)
-        bands_out: list[list[int] | None] = []
-        grams_out: list[list[int] | None] = []
-        for i in range(nrows):
-            if nonempty[i]:
-                bands_out.append(bk_i64[i].tolist())
-                grams_out.append(dh_i64[offs[i] : offs[i + 1]].tolist())
-            else:
-                bands_out.append(None)
-                grams_out.append(None)
-        return pd.DataFrame({"bands": bands_out, "grams": grams_out})
+        return pd.DataFrame(
+            {
+                "bands": _row_lists(_band_keys(dh, offs, a, b, bands), nonempty),
+                "grams": [
+                    dh_i64[offs[i] : offs[i + 1]].tolist() if nonempty[i] else None
+                    for i in range(len(dlens))
+                ],
+            }
+        )
 
     return band_gram_udf
 
@@ -441,8 +344,9 @@ def make_md5_gram_bands_udf(n: int, num_bands: int):
                 grams = {" ".join(toks)}
             genc = [g.encode("utf-8") for g in grams]
             digs = [md5(ge).digest() for ge in genc]
+            # sorted: set order varies with PYTHONHASHSEED
             grams_out.append(
-                [int.from_bytes(d[:8], "big", signed=True) for d in digs]
+                sorted(int.from_bytes(d[:8], "big", signed=True) for d in digs)
             )
             bands_out.append(
                 [
@@ -458,40 +362,22 @@ def make_md5_gram_bands_udf(n: int, num_bands: int):
 def simhash64(hash_arrays: pd.Series) -> np.ndarray:
     """Batch 64-bit SimHash over per-row token-hash arrays: per bit
     position, sum ±1 contributions per row (``np.add.reduceat``), sign
-    gives the bit.  Cache-blocked like ``_chunked_min_fold`` — the
-    64 per-bit passes otherwise stream the whole flat batch through
-    DRAM (same contention pathology as the MinHash loop; same
+    gives the bit.  Cache-blocked by the same ``_chunk_runs`` as the
+    MinHash kernel — the 64 per-bit passes otherwise stream the whole
+    flat batch through DRAM (same contention pathology; same
     bit-identical fix)."""
     flat, offsets, lengths = _flatten_ragged(hash_arrays)
-    n = len(lengths)
-    sig = np.zeros(n, dtype=np.uint64)
+    sig = np.zeros(len(lengths), dtype=np.uint64)
     ne_rows = np.nonzero(lengths > 0)[0]
-    if flat.size and ne_rows.size:
-        seg_lens = offsets[ne_rows + 1] - offsets[ne_rows]
-        cap = min(int(_CHUNK_ELEMS + seg_lens.max()), int(flat.size))
-        buf = np.empty(cap, dtype=np.int64)
-        row_lo = 0
-        while row_lo < ne_rows.size:
-            start_elem = int(offsets[ne_rows[row_lo]])
-            row_hi = row_lo + 1
-            while (
-                row_hi < ne_rows.size
-                and offsets[ne_rows[row_hi] + 1] - start_elem <= cap
-            ):
-                row_hi += 1
-            rows = ne_rows[row_lo:row_hi]
-            seg = flat[start_elem : int(offsets[rows[-1] + 1])]
-            starts = (offsets[rows] - start_elem).astype(np.int64)
-            w = buf[: seg.size]
-            for bit in range(64):
-                np.right_shift(seg, np.uint64(bit), out=w.view(np.uint64))
-                wv = w.view(np.uint64)
-                wv &= np.uint64(1)
-                w *= 2
-                w -= 1
-                sums = np.add.reduceat(w, starts)
-                sig[rows] |= ((sums > 0).astype(np.uint64)) << np.uint64(bit)
-            row_lo = row_hi
+    for rows, seg, starts, w in _chunk_runs(flat, offsets, ne_rows, np.int64):
+        for bit in range(64):
+            np.right_shift(seg, np.uint64(bit), out=w.view(np.uint64))
+            wv = w.view(np.uint64)
+            wv &= np.uint64(1)
+            w *= 2
+            w -= 1
+            sums = np.add.reduceat(w, starts)
+            sig[rows] |= ((sums > 0).astype(np.uint64)) << np.uint64(bit)
     return sig.view(np.int64)
 
 
@@ -531,7 +417,7 @@ def winnow_fingerprint_udf(text: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# JVM-side shingling / banding helpers (no Python in these paths)
+# JVM-side tokenizing / base-hashing helpers (no Python in these paths)
 # ---------------------------------------------------------------------------
 
 def tokens_col(norm_text: Column) -> Column:
@@ -546,14 +432,3 @@ def token_hashes_col(tokens: Column) -> Column:
     vectorized inside the MinHash UDF, see ``shingle_flat``)."""
     return F.transform(tokens, lambda t: F.xxhash64(t))
 
-
-def lsh_band_hashes_col(signature: Column, bands: int, rows: int) -> Column:
-    """MinHash signature → array of ``bands`` band keys, each
-    xxhash64 over its row-slice (JVM). Band index is mixed into the
-    hash so identical slices in different bands don't collide."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(
-            b, F.concat_ws(",", F.transform(F.slice(signature, b * rows + 1, rows), lambda x: x.cast("string")))
-        ),
-    )

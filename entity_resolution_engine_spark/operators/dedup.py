@@ -5,15 +5,16 @@ Five dedup families over a ``documents``-shaped table
 exposed as a driver-contract query (__spark_entry__.py):
 
 - **exact**        — md5-groupBy; JVM only, one shuffle.
-- **MinHash+LSH**  — shingle → signature → band → bucket-join
-                     (shares functions/hashing.py with the ER pipeline).
+- **MinHash+LSH**  — shingle → band keys → bucket-join → exact verify
+                     (shares its band-key kernel in functions/hashing.py
+                     with the ER pipeline's blocking).
 - **SimHash**      — 64-bit signature; near-dups = identical signature
                      or Hamming ≤ k via the block-permutation trick
                      (split the 64 bits into k+1 blocks; duplicates
                      agree exactly on ≥1 block — pigeonhole).
-- **n-gram Jaccard** — token n-gram arrays + pure-JVM
-                     array_intersect/array_union similarity within
-                     length-bucketed blocks.
+- **n-gram Jaccard** — exact token-n-gram Jaccard over one-row
+                     MinHash band blocks (an md5 oracle-parity path and
+                     a fast path on the same kernel as MinHash+LSH).
 - **embedding cosine** — near-dup pairs by cosine ≥ τ, bucketed by
                      random-hyperplane signs (the scale path; the
                      brute-force baseline lives in operators/ann.py).
@@ -71,7 +72,6 @@ def bounded_bucket_pairs(
     members: DataFrame,
     max_bucket_size: int = 2000,
     stats_out: list | None = None,
-    count_matches: bool = False,
     caches: list | None = None,
     dedup_pairs: bool = True,
 ) -> DataFrame:
@@ -88,36 +88,21 @@ def bounded_bucket_pairs(
     sees cross-sub-bucket connectivity.  The hash assignment (vs the
     earlier per-bucket rank round-robin) means a pair co-occurring in
     MANY hot buckets lands in the same sub-index everywhere —
-    cross-bucket pair unions dedup to ~one bucket's worth, and
-    band-agreement counts (``count_matches``) aren't downward-biased
-    by re-slicing.  The bound is PROBABILISTIC, not hard (ADVICE r3):
-    hash assignment makes sub-bucket sizes binomial around k/n_sub, so
-    n_sub is sized with 0.8 headroom — the mean sits at 0.8·max and an
-    overshoot past max is a ≥4σ event for max ≥ 500 (σ = √(k/n_sub)),
-    negligible versus the old round-robin's exact-but-resliced cut.
+    cross-bucket pair unions dedup to ~one bucket's worth.  The bound
+    is PROBABILISTIC, not hard (ADVICE r3): hash assignment makes
+    sub-bucket sizes binomial around k/n_sub, so n_sub is sized with
+    0.8 headroom — the mean sits at 0.8·max and an overshoot past max
+    is a ≥4σ event for max ≥ 500 (σ = √(k/n_sub)), negligible versus
+    the old round-robin's exact-but-resliced cut.
     No sort anywhere: the long tail passes untouched, hot buckets pay
     two aggregations.  ``stats_out`` (a list, when given) receives the
     split ledger DataFrame (bucket, bucket_size, n_subbuckets) — the
     no-silent-caps record for callers that materialize it.
 
-    ``count_matches`` returns (id_a, id_b, n_buckets) where n_buckets
-    counts GENUINE shared buckets only — artificial rep-star links are
-    attached with ``n_buckets = NULL`` (a sentinel: connectivity-only
-    pairs with no measurable agreement), never mixed into the count.
-
     ``caches`` (when given) collects every frame persisted here so the
     caller can unpersist after materializing; without it the persist
     still happens (the membership is referenced by 3+ plan branches)
-    but lives until the caller clears the cache.
-
-    ``count_matches`` needs the pair dedup (its counts ARE that
-    aggregation), so combining it with ``dedup_pairs=False`` raises
-    ``ValueError`` instead of silently deduping anyway."""
-    if count_matches and not dedup_pairs:
-        raise ValueError(
-            "bounded_bucket_pairs: count_matches=True counts buckets in the "
-            "pair dedup and cannot honor dedup_pairs=False"
-        )
+    but lives until the caller clears the cache."""
     members = members.persist()
     if caches is not None:
         caches.append(members)
@@ -172,19 +157,6 @@ def bounded_bucket_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    if count_matches:
-        # (id_a, id_b, n_buckets): how many buckets the pair GENUINELY
-        # shares — the count falls out of the dedup shuffle the
-        # candidates already pay.  Rep-star links join anti against the
-        # counted set (reusing its (id_a, id_b) exchange) and attach
-        # with a NULL sentinel count.
-        counted = raw.groupBy("id_a", "id_b").agg(
-            F.count("*").cast("int").alias("n_buckets")
-        )
-        rep_only = rep_pairs.join(
-            counted.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-        ).withColumn("n_buckets", F.lit(None).cast("int"))
-        return counted.unionByName(rep_only)
     if not dedup_pairs:
         # round 6: callers that verify-filter the candidates down by
         # orders of magnitude (the ngram paths: 8.2M candidates → 2.5k
@@ -200,124 +172,6 @@ def bounded_bucket_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-def _minhash_signatures(
-    documents: DataFrame,
-    shingle_size: int,
-    num_hashes: int,
-    id_col: str,
-    text_col: str,
-    caches: list | None,
-) -> DataFrame:
-    """(id, sig) MinHash signatures, persisted (the band explode and
-    any signature re-join both reference this frame)."""
-    # single-row-group inputs otherwise run the signature UDF on one
-    # core (round 6; see readers.fan_out)
-    documents = fan_out(documents)
-    tokens = H.tokens_col(F.lower(F.col(text_col)))
-    th = H.token_hashes_col(tokens)
-    sig = (
-        documents.select(F.col(id_col).alias("id"), th.alias("th"))
-        .withColumn(
-            "sig", H.make_minhash_udf(num_hashes, shingle_size)(F.col("th"))
-        )
-        .filter(F.col("sig").isNotNull())
-        .select("id", "sig")
-        .persist()
-    )
-    if caches is not None:
-        caches.append(sig)
-    return sig
-
-
-def minhash_near_duplicates(
-    documents: DataFrame,
-    shingle_size: int = 2,
-    num_hashes: int = 192,
-    bands: int = 48,
-    min_jaccard: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket_size: int = 2000,
-    estimator: str = "bands",
-    caches: list | None = None,
-) -> DataFrame:
-    """(id_a, id_b, est_jaccard) for near-duplicate pairs.
-
-    Two estimators:
-
-    - ``"bands"`` (default — the 100 TB path): est_jaccard derives from
-      the number of agreeing LSH bands, k of b, via the band-collision
-      model P(band agrees) = J^rows ⇒ Ĵ = (k/b)^(1/rows).  The count
-      falls out of the dedup shuffle the candidates already pay, so NO
-      payload ever re-joins — round 1 shipped 2×num_hashes-long
-      signature arrays per pair here.  At J=0.8 with 48×4 banding the
-      estimate's σ ≈ 0.035, comparable to a 96-position signature
-      prefix.  Rep-star links from hot-bucket splitting surface with
-      ``est_jaccard = NULL`` (connectivity-only sentinel — they carry
-      no band-agreement signal and are deliberately NOT filtered, so
-      downstream clustering keeps cross-sub-bucket connectivity).
-    - ``"signature"``: the classic unbiased fraction-of-agreeing-
-      positions estimate (σ ≈ 0.029 at J=0.8, 192 hashes); costs two
-      joins shipping the signature arrays per pair.  Use when estimate
-      precision matters more than shuffle volume.
-
-    For an exact (oracle-checkable) similarity per pair, use
-    ``minhash_verified_near_duplicates``."""
-    rows = num_hashes // bands
-    sig = _minhash_signatures(
-        documents, shingle_size, num_hashes, id_col, text_col, caches
-    )
-    # Band join carries ONLY ids — the wide signature arrays stay out
-    # of the band-duplicate shuffle in both estimator modes.
-    bands_df = sig.select(
-        "id",
-        F.explode(H.lsh_band_hashes_col(F.col("sig"), bands, rows)).alias("bucket"),
-    )
-    if estimator == "bands":
-        pairs = bounded_bucket_pairs(
-            bands_df,
-            max_bucket_size=max_bucket_size,
-            count_matches=True,
-            caches=caches,
-        )
-        est = F.pow(
-            F.least(F.col("n_buckets"), F.lit(bands)).cast("double") / bands,
-            1.0 / rows,
-        )
-        return (
-            pairs.withColumn("est_jaccard", est)
-            .filter(
-                (F.col("est_jaccard") >= min_jaccard)
-                | F.col("n_buckets").isNull()
-            )
-            .select("id_a", "id_b", "est_jaccard")
-        )
-    if estimator != "signature":
-        raise ValueError(f"unknown estimator {estimator!r}")
-    pair_ids = bounded_bucket_pairs(
-        bands_df, max_bucket_size=max_bucket_size, caches=caches
-    )
-    pairs = pair_ids.join(
-        sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
-    ).join(
-        sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b"
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        ).cast("double")
-        / F.size("sig_a")
-    )
-    return (
-        pairs.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
 
 def minhash_verified_near_duplicates(
     documents: DataFrame,
@@ -375,15 +229,22 @@ def minhash_verified_near_duplicates(
     computes), cross-group pairs inherit the champion pair's jaccard
     (identical gram sets ⇒ identical value).  On a 50%-clone corpus
     this halves UDF and membership volume and collapses the 2×2
-    candidate variants per cross pair to one.  Because equal texts have
-    equal band ARRAYS, the expanded output is exactly the per-doc
-    banding's output whenever no group is large enough to trip the
-    hot-bucket splitter; the expansion therefore only runs when
-    max group size ≤ max_bucket_size/2 (driver-checked on the tiny
-    group ledger) — oversized-clone corpora keep the per-doc banding
-    whose bounded-bucket star semantics are the documented cap.
-    ``champion_expansion`` overrides the gate (True/False) — test hook
-    pinning branch equality (tests/test_dedup.py)."""
+    candidate variants per cross pair to one.  Equal texts have equal
+    band ARRAYS, so when no band bucket holds more than max_bucket_size
+    docs the expanded output equals the per-doc banding's.  Bucket
+    occupancy is counted in champions here, not docs: a bucket over the
+    cap in doc space but not in champion space is split by the per-doc
+    banding and kept whole by the expansion, which then verifies more
+    candidates — the output is a recall superset of the per-doc
+    banding's, not an exact copy (a bucket over the cap in both spaces
+    is split by different id hashes in each, so the two can differ
+    either way there).  Every emitted pair is still exactly verified.
+    The expansion only runs when max group size ≤ max_bucket_size/2
+    (driver-checked on the tiny group ledger) — oversized-clone corpora
+    keep the per-doc banding whose bounded-bucket star semantics are
+    the documented cap.  ``champion_expansion`` overrides the gate
+    (True/False) — test hook pinning branch equality on a corpus below
+    the cap (tests/test_dedup.py)."""
     documents = fan_out(documents)  # round 6: see readers.fan_out
     bg_udf = H.make_minhash_band_gram_udf(num_hashes, bands, shingle_size)
 
@@ -751,30 +612,30 @@ def ngram_jaccard_pairs_fast(
 ) -> DataFrame:
     """Production variant of ``ngram_jaccard_pairs`` — identical
     semantics (exact token-n-gram Jaccard within min-gram-hash blocks),
-    with all per-gram hashing fused into ONE Arrow-batched pandas UDF
-    (``make_gram_bands_udf``): token xxhash64 stays a flat JVM pass,
-    then gram folding + per-row dedup + ``num_bands`` salted band
-    minima run vectorized in numpy.  The SQL-parity path's interpreted
+    with all per-gram hashing fused into ONE Arrow-batched pandas UDF:
+    token xxhash64 stays a flat JVM pass, then the shared MinHash kernel
+    (``make_minhash_band_gram_udf`` with ``num_bands`` one-row bands)
+    folds grams, dedups them per row and takes ``num_bands`` salted
+    minima, vectorized in numpy.  The SQL-parity path's interpreted
     md5-per-gram HOF expressions (num_bands salts × every gram, hex
     strings) are the cost this removes; blocking recall is the same
     1-(1-J)^num_bands and the final Jaccard filter is exact either way
-    (array_intersect/array_union over the distinct gram-hash sets —
-    equal to string-gram Jaccard absent 64-bit collisions), so both
-    variants return the same pairs UP TO LSH BLOCKING RECALL: the two
-    paths use different band hash functions, so a borderline pair
-    (J barely above min_jaccard) can be blocked by one and missed by
-    the other with probability up to (1-J)^num_bands (~1.7% at J=0.4,
-    8 bands); on pairs well above the S-curve knee the outputs are
-    identical.  Pytest (and the `ngram_fast_parity_diff` contract
-    query) pin sf-scale equality on the test corpus, whose near-dup
-    pairs sit far above the knee; the md5 path remains the
-    DuckDB-oracle query."""
+    (set intersection over the distinct gram-hash sets — equal to
+    string-gram Jaccard absent 64-bit collisions), so both variants
+    return the same pairs UP TO LSH BLOCKING RECALL: the two paths use
+    different band hash functions, so a borderline pair (J barely above
+    min_jaccard) can be blocked by one and missed by the other with
+    probability up to (1-J)^num_bands (~1.7% at J=0.4, 8 bands); on
+    pairs well above the S-curve knee the outputs are identical.
+    Pytest (and the `ngram_fast_parity_diff` contract query) pin
+    sf-scale equality on the test corpus, whose near-dup pairs sit far
+    above the knee; the md5 path remains the DuckDB-oracle query."""
     documents = fan_out(documents)  # round 6: see readers.fan_out
     tokens = H.tokens_col(F.lower(F.col(text_col)))
     docs = documents.select(
         F.col(id_col).alias("id"), H.token_hashes_col(tokens).alias("th")
     ).filter(F.size("th") > 0)
-    gb_udf = H.make_gram_bands_udf(n, num_bands)
+    gb_udf = H.make_minhash_band_gram_udf(num_bands, num_bands, n)
     docs = docs.select("id", gb_udf("th").alias("gb")).select(
         "id",
         F.col("gb.grams").alias("grams"),
@@ -915,7 +776,7 @@ def embedding_near_duplicates(
     hyperplane-sign bits each (auto-sized from min_cosine via
     ``srp_band_params`` for ≥ target_recall at the threshold, unless
     given explicitly); a pair qualifies as a candidate if it shares ANY
-    band bucket, mirroring ``minhash_near_duplicates``.  Every
+    band bucket, mirroring ``minhash_verified_near_duplicates``.  Every
     candidate is then verified with the exact JVM cosine, so precision
     is 1.0 — the LSH only bounds recall, and the (r, b) choice bounds
     that at target_recall.  Candidate generation ships ids only; the

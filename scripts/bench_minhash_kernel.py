@@ -1,6 +1,7 @@
-"""Pure-numpy microbench for the MinHash signature kernel — no Spark.
+"""Pure-numpy microbench for the MinHash band-key kernel — no Spark.
 
-The fused band UDF's inner loop is 192 multiply-shift passes over the
+The band-key core behind both MinHash UDFs (functions/hashing.py::
+_band_keys) spends its time in 192 multiply-shift passes over the
 batch's flattened shingle array.  Un-blocked, each pass streams its
 input and temp through DRAM (~16 MB at Arrow batch size); under
 local[32] all workers contend for the same memory bus — the measured
@@ -8,8 +9,9 @@ local[32] all workers contend for the same memory bus — the measured
 (functions/hashing.py::_chunked_min_fold) cache-blocks the loop so the
 working set stays L2-resident, without changing a single output bit.
 
-This script keeps the OLD dense kernel as the reference: it asserts
-bit-identity against production and times both, alone and under
+This script keeps the OLD dense signature kernel as the reference
+(followed by the same 48-band fold): it asserts bit-identical band
+keys against production and times both, alone and under
 n_procs concurrent processes (the contention regime that matters at
 local[32]).  Measured on this host: 2.0x single-process, 4.4x at
 8 procs, 5.2x at 32 procs.
@@ -30,7 +32,8 @@ sys.path.insert(0, "/root/repo")
 
 from entity_resolution_engine_spark.functions.hashing import (  # noqa: E402
     _EMPTY_SENTINEL,
-    _minhash_matrix_flat,
+    _band_fold,
+    _band_keys,
     _minhash_params,
 )
 
@@ -38,6 +41,7 @@ N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000
 AVG_SH = int(sys.argv[2]) if len(sys.argv) > 2 else 200
 N_PROCS = int(sys.argv[3]) if len(sys.argv) > 3 else 8
 NUM_HASHES = 192
+BANDS = 48
 
 
 def make_batch(seed: int = 7) -> tuple[np.ndarray, np.ndarray]:
@@ -50,7 +54,7 @@ def make_batch(seed: int = 7) -> tuple[np.ndarray, np.ndarray]:
 def minhash_dense_reference(
     flat: np.ndarray, lengths: np.ndarray, num_hashes: int
 ) -> np.ndarray:
-    """The pre-round-5 un-blocked kernel, kept verbatim as the
+    """The pre-round-5 un-blocked signature kernel, kept verbatim as the
     bit-identity reference and DRAM-streaming baseline."""
     n = len(lengths)
     offsets = np.zeros(n + 1, dtype=np.int64)
@@ -66,6 +70,18 @@ def minhash_dense_reference(
     return out
 
 
+def dense_band_keys(flat: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    return _band_fold(minhash_dense_reference(flat, lengths, NUM_HASHES), BANDS)
+
+
+def chunked_band_keys(flat: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """The production core, timed with its per-batch offsets cumsum."""
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    a, b = _minhash_params(NUM_HASHES)
+    return _band_keys(flat, offsets, a, b, BANDS)
+
+
 def time_fn(fn, *args, reps: int = 3) -> float:
     best = float("inf")
     for _ in range(reps):
@@ -77,14 +93,10 @@ def time_fn(fn, *args, reps: int = 3) -> float:
 
 def _worker(kind: str, seed: int, q) -> None:
     flat, lengths = make_batch(seed)
-    fn = (
-        (lambda: minhash_dense_reference(flat, lengths, NUM_HASHES))
-        if kind == "dense"
-        else (lambda: _minhash_matrix_flat(flat, lengths, NUM_HASHES))
-    )
-    fn()  # warm
+    fn = dense_band_keys if kind == "dense" else chunked_band_keys
+    fn(flat, lengths)  # warm
     t0 = time.perf_counter()
-    fn()
+    fn(flat, lengths)
     q.put(time.perf_counter() - t0)
 
 
@@ -108,12 +120,12 @@ def main() -> None:
     flat, lengths = make_batch()
     mb = flat.size * 8 / 1e6
     print(f"batch: {N_DOCS} docs, {flat.size} shingles ({mb:.0f} MB flat)")
-    ref = minhash_dense_reference(flat, lengths, NUM_HASHES)
-    prod = _minhash_matrix_flat(flat, lengths, NUM_HASHES)
+    ref = dense_band_keys(flat, lengths)
+    prod = chunked_band_keys(flat, lengths)
     assert np.array_equal(ref, prod), "chunked production kernel differs!"
     print("bit-identity: OK")
-    t_dense = time_fn(minhash_dense_reference, flat, lengths, NUM_HASHES)
-    t_chunk = time_fn(_minhash_matrix_flat, flat, lengths, NUM_HASHES)
+    t_dense = time_fn(dense_band_keys, flat, lengths)
+    t_chunk = time_fn(chunked_band_keys, flat, lengths)
     print(f"single-proc: dense {t_dense:.3f}s  chunked {t_chunk:.3f}s  "
           f"ratio {t_dense / t_chunk:.2f}x")
     wd, md = contended("dense")

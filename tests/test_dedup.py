@@ -34,16 +34,6 @@ def test_exact_dedup_survivors(docs):
     assert kept == [1, 3, 4]
 
 
-def test_minhash_finds_planted_near_dups(docs):
-    pairs = DD.minhash_near_duplicates(
-        docs, shingle_size=2, num_hashes=128, bands=32, min_jaccard=0.5
-    )
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert (1, 2) in got and (1, 5) in got and (2, 5) in got  # exacts
-    assert (1, 3) in got  # near dup
-    assert not any(4 in p for p in got)  # unrelated doc never pairs
-
-
 def test_simhash_identical_zero_hamming(docs):
     pairs = {(r.id_a, r.id_b): r.hamming for r in DD.simhash_near_duplicates(docs, max_hamming=3).collect()}
     assert pairs[(1, 2)] == 0 and pairs[(1, 5)] == 0
@@ -222,9 +212,6 @@ def test_dedup_cache_ledgers_release_storage(spark, docs):
     # no NEW persistent RDDs survive, not that storage is globally empty
     baseline = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     ops = [
-        lambda c: DD.minhash_near_duplicates(
-            docs, num_hashes=64, bands=16, min_jaccard=0.5, caches=c
-        ),
         lambda c: DD.minhash_verified_near_duplicates(
             docs, num_hashes=64, bands=16, min_jaccard=0.5, caches=c
         ),
@@ -246,11 +233,3 @@ def test_dedup_cache_ledgers_release_storage(spark, docs):
         assert not leaked, (
             f"persistent RDDs leaked after unpersisting the ledger: {leaked}"
         )
-
-
-def test_count_matches_without_pair_dedup_raises(spark):
-    """count_matches counts buckets inside the pair dedup, so asking for
-    it with dedup_pairs=False is refused when the plan is built."""
-    members = spark.createDataFrame([(1, 10), (1, 11)], "bucket long, id long")
-    with pytest.raises(ValueError, match="dedup_pairs=False"):
-        DD.bounded_bucket_pairs(members, count_matches=True, dedup_pairs=False)

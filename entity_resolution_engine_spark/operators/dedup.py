@@ -734,9 +734,11 @@ def cosine_sim_col(a: F.Column, b: F.Column, dim: int | None = None) -> F.Column
     the same index order with the same 0.0 seed, so results are
     BIT-IDENTICAL to the fold (IEEE-754 addition in identical order) —
     pinned by the ann_bruteforce/ann_ivf/embedding_near_dup oracle hash
-    matches.  Callers must guarantee arrays have exactly ``dim``
-    elements (element_at past the end yields NULL → NULL cosine).
-    Without ``dim`` the original fold form is used."""
+    matches.  Both arrays must have exactly ``dim`` elements: a row
+    where either size differs raises (``raise_error``) instead of
+    truncating a longer array or reading past a shorter one.  A NULL
+    array gives 0.0, as in the fold form.  Without ``dim`` the original
+    fold form is used."""
     if dim is None:
         dot = F.aggregate(
             F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
@@ -755,7 +757,10 @@ def cosine_sim_col(a: F.Column, b: F.Column, dim: int | None = None) -> F.Column
         sb = sb + bi * bi
     na = F.sqrt(sa)
     nb = F.sqrt(sb)
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
+    return F.when(
+        (F.array_size(a) != dim) | (F.array_size(b) != dim),
+        F.raise_error(F.lit(f"cosine_sim_col: array size differs from dim={dim}")),
+    ).otherwise(F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0)))
 
 
 def embedding_near_duplicates(

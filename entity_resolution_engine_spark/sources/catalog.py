@@ -4,12 +4,16 @@ The north_rule requires Iceberg tables with snapshot checkpoints and
 resume.  This sandbox has no Iceberg jars (verified — SURVEY.md env
 facts), so the catalog is an interface with two implementations:
 
-- ``ParquetSnapshotCatalog`` — parquet files + a JSON manifest per
-  table (``manifest.json`` holding current snapshot id + history).
-  Every write is a new immutable snapshot directory; "commit" is an
-  atomic manifest rename.  This gives the same contract Iceberg does
-  at the granularity the pipeline needs: atomic overwrite, time-travel
-  by snapshot id, rollback, and stage-level resume.
+- ``ParquetSnapshotCatalog`` — parquet data directories plus a JSON
+  manifest per table.  Each commit writes one new immutable directory
+  and appends one history entry carrying the snapshot's schema, its
+  directory and, for an append, the snapshot it extends; "commit" is
+  an atomic manifest rename.  As in Iceberg, planning a read is
+  metadata-only (no schema inference, no Spark job) and an append is
+  a fast append: it adds files and rewrites none.  This gives the same
+  contract Iceberg does at the granularity the pipeline needs: atomic
+  overwrite and append, time-travel by snapshot id, rollback, and
+  stage-level resume.
 - ``IcebergCatalog`` — the same interface over ``writeTo(...)`` /
   ``spark.read.table(...)``; selected automatically when a Spark
   Iceberg catalog is configured (``spark.sql.catalog.<name>`` conf),
@@ -31,6 +35,8 @@ import uuid
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class TableCatalog(ABC):
@@ -65,17 +71,46 @@ class TableCatalog(ABC):
 
 
 class ParquetSnapshotCatalog(TableCatalog):
-    """parquet + JSON-manifest snapshots.
+    """Parquet data directories plus one JSON manifest per table.
 
     Layout::
 
-        root/<table>/snap-<id>/part-*.parquet
-        root/<table>/manifest.json   {"current": "<id>", "history": [...]}
+        root/<table>/snap-<id>/part-*.parquet    one directory per commit
+        root/<table>/manifest.json               {"current": "<id>", "history": [...]}
 
-    The manifest write is staged to a temp file then ``os.replace``d —
-    atomic on POSIX — so a crash mid-write never corrupts the table:
-    readers keep seeing the previous snapshot (this is the property
-    resume relies on).
+    Each history entry is one snapshot and records what Iceberg's
+    snapshot metadata does, so planning a read opens no data file:
+
+    - ``id``, ``ts`` and ``mode`` (``overwrite`` or ``append``);
+    - ``dir``: the snapshot's own data directory, ``snap-<id>``;
+    - ``schema``: the frame's schema at write time
+      (``df.schema.jsonValue()``);
+    - ``parent``: for an append, the id of the snapshot it extends;
+      ``None`` for an overwrite, or an append that started the table.
+
+    A snapshot's rows are the data directories of its chain: follow
+    ``parent`` back to the last overwrite, then read those directories
+    in commit order. Every entry is O(1) in size; none copies a file
+    list. ``read``, ``read_snapshot`` and ``file_row_counts`` run no
+    Spark job: the read takes its schema from the manifest instead of
+    inferring it from a footer.
+
+    ``write(mode="append")`` is a fast append: it writes only the new
+    rows into a new directory and never rewrites earlier ones. The
+    frame's columns are aligned to the table's schema by name; a
+    missing or extra column, or a changed type (nullability aside),
+    raises ``ValueError`` before anything is written. An append after
+    a rollback extends the rolled-back snapshot.
+
+    No compaction is done. Once a chain holds more than 32 directories
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``), Spark
+    lists their files in one job per read; the inferring read it
+    replaces ran one job on every call.
+
+    The manifest write is staged to a temp file then ``os.replace``d:
+    atomic on POSIX, and the only commit point. A crash mid-write never
+    corrupts the table: readers keep seeing the previous snapshot (the
+    property resume relies on).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -97,6 +132,12 @@ class ParquetSnapshotCatalog(TableCatalog):
         with open(p) as f:
             return json.load(f)
 
+    def _current_manifest(self, name: str) -> dict:
+        m = self._load_manifest(name)
+        if m is None or m["current"] is None:
+            raise FileNotFoundError(f"table {name!r} not in catalog {self.root}")
+        return m
+
     def _commit_manifest(self, name: str, manifest: dict) -> None:
         p = self._manifest_path(name)
         tmp = p + f".tmp-{uuid.uuid4().hex}"
@@ -104,37 +145,60 @@ class ParquetSnapshotCatalog(TableCatalog):
             json.dump(manifest, f, indent=1)
         os.replace(tmp, p)
 
+    @staticmethod
+    def _entry(name: str, manifest: dict | None, snapshot_id: str) -> dict:
+        for e in manifest["history"] if manifest else []:
+            if e["id"] == snapshot_id:
+                return e
+        raise KeyError(f"snapshot {snapshot_id} not found for {name}")
+
+    def _chain_dirs(
+        self, name: str, manifest: dict, snapshot_id: str
+    ) -> tuple[list[str], dict]:
+        """The data directories holding ``snapshot_id``'s rows, in
+        commit order (back along ``parent`` to the last overwrite), and
+        the snapshot's own entry."""
+        chain = [self._entry(name, manifest, snapshot_id)]
+        while chain[-1]["parent"] is not None:
+            chain.append(self._entry(name, manifest, chain[-1]["parent"]))
+        dirs = [os.path.join(self._tdir(name), e["dir"]) for e in reversed(chain)]
+        return dirs, chain[0]
+
+    def _scan(self, name: str, manifest: dict, snapshot_id: str) -> DataFrame:
+        dirs, entry = self._chain_dirs(name, manifest, snapshot_id)
+        schema = StructType.fromJson(entry["schema"])
+        return self.spark.read.schema(schema).parquet(*dirs)
+
     # -- TableCatalog -------------------------------------------------------
     def write(self, name: str, df: DataFrame, mode: str = "overwrite") -> None:
         if mode not in ("overwrite", "append"):
             raise ValueError(f"unsupported mode {mode!r}")
-        snap_id = uuid.uuid4().hex[:12]
-        snap_dir = os.path.join(self._tdir(name), f"snap-{snap_id}")
         manifest = self._load_manifest(name) or {"current": None, "history": []}
-        if mode == "append" and manifest["current"] is not None:
-            # append = union of previous snapshot and new data into a
-            # fresh immutable snapshot (copy-on-write, Iceberg-style)
-            prev = self.read(name)
-            df = prev.unionByName(df)
-        df.write.mode("overwrite").parquet(snap_dir)
+        parent = manifest["current"] if mode == "append" else None
+        if parent is not None:
+            df = _align(df, self._entry(name, manifest, parent)["schema"], name)
+        snap_id = uuid.uuid4().hex[:12]
+        snap_dir = f"snap-{snap_id}"
+        df.write.mode("overwrite").parquet(os.path.join(self._tdir(name), snap_dir))
         manifest["history"].append(
-            {"id": snap_id, "ts": time.time(), "mode": mode}
+            {
+                "id": snap_id,
+                "ts": time.time(),
+                "mode": mode,
+                "dir": snap_dir,
+                "schema": df.schema.jsonValue(),
+                "parent": parent,
+            }
         )
         manifest["current"] = snap_id
         self._commit_manifest(name, manifest)
 
     def read(self, name: str) -> DataFrame:
-        manifest = self._load_manifest(name)
-        if manifest is None or manifest["current"] is None:
-            raise FileNotFoundError(f"table {name!r} not in catalog {self.root}")
-        return self.spark.read.parquet(
-            os.path.join(self._tdir(name), f"snap-{manifest['current']}")
-        )
+        m = self._current_manifest(name)
+        return self._scan(name, m, m["current"])
 
     def read_snapshot(self, name: str, snapshot_id: str) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self._tdir(name), f"snap-{snapshot_id}")
-        )
+        return self._scan(name, self._current_manifest(name), snapshot_id)
 
     def exists(self, name: str) -> bool:
         m = self._load_manifest(name)
@@ -146,8 +210,7 @@ class ParquetSnapshotCatalog(TableCatalog):
 
     def rollback(self, name: str, snapshot_id: str) -> None:
         m = self._load_manifest(name)
-        if m is None or all(s["id"] != snapshot_id for s in m["history"]):
-            raise KeyError(f"snapshot {snapshot_id} not found for {name}")
+        self._entry(name, m, snapshot_id)
         m["current"] = snapshot_id
         self._commit_manifest(name, m)
 
@@ -155,20 +218,36 @@ class ParquetSnapshotCatalog(TableCatalog):
         shutil.rmtree(self._tdir(name), ignore_errors=True)
 
     def file_row_counts(self, name: str) -> list[int]:
-        """Parquet-footer row counts per part file (sorted by file name
-        so the partition ordinals are deterministic).  Footers are a
-        few KB regardless of file size — O(files) metadata I/O."""
-        m = self._load_manifest(name)
-        if m is None or m["current"] is None:
-            raise FileNotFoundError(f"table {name!r} not in catalog {self.root}")
+        """Parquet-footer row counts per part file: the current
+        snapshot's directories in commit order, each sorted by file name
+        so the partition ordinals are deterministic.  Footers are a few
+        KB regardless of file size — O(files) metadata I/O."""
         import pyarrow.parquet as pq
 
-        snap = os.path.join(self._tdir(name), f"snap-{m['current']}")
+        m = self._current_manifest(name)
+        dirs, _ = self._chain_dirs(name, m, m["current"])
         return [
-            pq.read_metadata(os.path.join(snap, fn)).num_rows
-            for fn in sorted(os.listdir(snap))
+            pq.read_metadata(os.path.join(d, fn)).num_rows
+            for d in dirs
+            for fn in sorted(os.listdir(d))
             if fn.startswith("part-") and fn.endswith(".parquet")
         ]
+
+
+def _align(df: DataFrame, schema_json: dict, name: str) -> DataFrame:
+    """``df`` with its columns in the order of the table's recorded
+    schema; ``ValueError`` unless the names match and each type matches
+    (nullability aside)."""
+    want = StructType.fromJson(schema_json)
+    have = {f.name: f.dataType.simpleString() for f in df.schema}
+    if sorted(df.columns) != sorted(want.names) or any(
+        have[f.name] != f.dataType.simpleString() for f in want
+    ):
+        raise ValueError(
+            f"append to {name!r}: {df.schema.simpleString()} does not match "
+            f"the table's {want.simpleString()}"
+        )
+    return df.select(*[F.col(f"`{n}`") for n in want.names])
 
 
 class IcebergCatalog(TableCatalog):

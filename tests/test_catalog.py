@@ -1,6 +1,22 @@
-"""Snapshot catalog: atomic commits, append as copy-on-write, rollback."""
+"""Snapshot catalog: atomic commits, metadata-only reads, fast append,
+time travel and rollback.
+
+``ParquetSnapshotCatalog`` keeps each snapshot's schema, data directory
+and parent in its manifest, so reads take no Spark job and an append
+writes only its new rows.  These tests pin both halves: reads equal
+Spark's own inference over the same directories, the metadata calls run
+no job, and appends leave earlier snapshots byte-unchanged.
+"""
 
 from __future__ import annotations
+
+import glob
+import hashlib
+import json
+import os
+import pathlib
+import time
+import uuid
 
 import pytest
 
@@ -10,6 +26,58 @@ from entity_resolution_engine_spark.sources.catalog import ParquetSnapshotCatalo
 @pytest.fixture()
 def cat(spark, tmp_path):
     return ParquetSnapshotCatalog(spark, str(tmp_path / "cat"))
+
+
+def _chain_dirs(cat, name):
+    """The current snapshot's data directories in commit order, followed
+    from the manifest fields ``snapshots`` returns."""
+    by_id = {s["id"]: s for s in cat.snapshots(name)}
+    with open(os.path.join(cat.root, name, "manifest.json")) as f:
+        snap = by_id[json.load(f)["current"]]
+    chain = [snap]
+    while chain[-1]["parent"] is not None:
+        chain.append(by_id[chain[-1]["parent"]])
+    return [os.path.join(cat.root, name, s["dir"]) for s in reversed(chain)]
+
+
+def _assert_read_matches_inference(spark, cat, name):
+    got = cat.read(name)
+    inferred = spark.read.parquet(*_chain_dirs(cat, name))
+    assert got.schema == inferred.schema, name
+    assert got.exceptAll(inferred).isEmpty(), name
+    assert inferred.exceptAll(got).isEmpty(), name
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs started by ``fn``, counted under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"catalog-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog calls under test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # status events arrive in order: once a later job is visible, every
+    # job fn started is too
+    sentinel = group + "-sentinel"
+    sc.setJobGroup(sentinel, "sentinel")
+    try:
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(sentinel)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def _part_hashes(snap_dir):
+    return {
+        fn: hashlib.sha256(pathlib.Path(fn).read_bytes()).hexdigest()
+        for fn in sorted(glob.glob(os.path.join(snap_dir, "part-*.parquet")))
+    }
 
 
 def test_write_read_roundtrip(spark, cat):
@@ -25,14 +93,69 @@ def test_missing_table_raises(cat):
         cat.read("nope")
 
 
-def test_append_is_copy_on_write_snapshot(spark, cat):
+def test_append_is_fast_append_snapshot(spark, cat):
     cat.write("t", spark.range(5))
-    cat.write("t", spark.range(3), mode="append")
+    first_dir = os.path.join(cat.root, "t", cat.snapshots("t")[0]["dir"])
+    before = _part_hashes(first_dir)
+    cat.write("t", spark.range(100, 103), mode="append")
     assert cat.read("t").count() == 8
     snaps = cat.snapshots("t")
     assert len(snaps) == 2
     # previous snapshot still readable (immutability)
     assert cat.read_snapshot("t", snaps[0]["id"]).count() == 5
+    # the append wrote only its own rows and left the first snapshot's
+    # files as they were
+    assert snaps[1]["mode"] == "append" and snaps[1]["parent"] == snaps[0]["id"]
+    own = spark.read.parquet(os.path.join(cat.root, "t", snaps[1]["dir"]))
+    assert sorted(r.id for r in own.collect()) == [100, 101, 102]
+    assert _part_hashes(first_dir) == before
+    assert sum(cat.file_row_counts("t")) == 8
+
+
+def test_append_after_rollback_extends_rolled_back_snapshot(spark, cat):
+    cat.write("t", spark.range(5))
+    first = cat.snapshots("t")[0]["id"]
+    cat.write("t", spark.range(3), mode="append")
+    cat.rollback("t", first)
+    cat.write("t", spark.range(10, 12), mode="append")
+    assert cat.read("t").count() == 7
+    assert cat.snapshots("t")[-1]["parent"] == first
+    assert sum(cat.file_row_counts("t")) == 7
+
+
+def test_append_aligns_columns_by_name(spark, cat):
+    cat.write("t", spark.createDataFrame([(1, "a")], "k long, v string"))
+    cat.write("t", spark.createDataFrame([("b", 2)], "v string, k long"), mode="append")
+    out = cat.read("t")
+    assert out.columns == ["k", "v"]
+    assert sorted(tuple(r) for r in out.collect()) == [(1, "a"), (2, "b")]
+
+
+@pytest.mark.parametrize(
+    "ddl, row",
+    [
+        ("k long", (2,)),  # missing column
+        ("k long, v string, w string", (2, "b", "x")),  # extra column
+        ("k int, v string", (2, "b")),  # changed type
+    ],
+)
+def test_append_schema_mismatch_raises_and_leaves_table(spark, cat, ddl, row):
+    cat.write("t", spark.createDataFrame([(1, "a")], "k long, v string"))
+    snaps = cat.snapshots("t")
+    entries = sorted(os.listdir(os.path.join(cat.root, "t")))
+    with pytest.raises(ValueError, match="does not match"):
+        cat.write("t", spark.createDataFrame([row], ddl), mode="append")
+    assert cat.snapshots("t") == snaps
+    assert sorted(os.listdir(os.path.join(cat.root, "t"))) == entries
+    assert [tuple(r) for r in cat.read("t").collect()] == [(1, "a")]
+
+
+def test_append_ignores_nullability(spark, cat):
+    from pyspark.sql import functions as F
+
+    cat.write("t", spark.range(2))  # id is non-nullable
+    cat.write("t", spark.range(1).select(F.when(F.lit(True), F.col("id")).alias("id")), mode="append")
+    assert cat.read("t").count() == 3
 
 
 def test_rollback(spark, cat):
@@ -67,6 +190,65 @@ def test_file_row_counts_from_footers(spark, cat):
     assert sum(cat.file_row_counts("t")) == 20
     with pytest.raises(FileNotFoundError):
         cat.file_row_counts("nope")
+
+
+def test_metadata_calls_run_no_spark_job(spark, cat):
+    cat.write("t", spark.range(20).repartition(2))
+    first = cat.snapshots("t")[0]["id"]
+    cat.write("t", spark.range(4), mode="append")
+
+    def calls():
+        assert cat.exists("t") and not cat.exists("nope")
+        assert len(cat.snapshots("t")) == 2
+        assert sum(cat.file_row_counts("t")) == 24
+        cat.read("t")
+        cat.read_snapshot("t", first)
+
+    assert _jobs_run_by(spark, calls) == 0
+    # control: Spark's own schema inference over the same dirs is a job
+    assert _jobs_run_by(spark, lambda: spark.read.parquet(*_chain_dirs(cat, "t"))) >= 1
+
+
+def test_pipeline_tables_read_as_inferred(spark, tmp_path):
+    """Every table of a fresh run plus a resume of cluster, merge and
+    observe (whose five tables are appended twice) reads back with the
+    schema and rows Spark infers from the same directories."""
+    from entity_resolution_engine_spark.plans.pipeline import Pipeline, RunState
+    from entity_resolution_engine_spark.sources.synth import generate_web_pages
+
+    root = str(tmp_path / "pipe")
+    pages, _ = generate_web_pages(spark, 200, seed=5)
+    pipe = Pipeline(spark, root)
+    pipe.run(pages, run_id="r")
+    state = RunState(root, "r")
+    with open(state.path, "w") as f:
+        json.dump({"run_id": "r", "completed": ["block", "normalize", "route", "score"]}, f)
+    assert pipe.run(pages, run_id="r").stages_run == ["cluster", "merge", "observe"]
+    tables = sorted(
+        t for t in os.listdir(root) if os.path.exists(os.path.join(root, t, "manifest.json"))
+    )
+    assert "run_r_clusters" in tables and "run_metrics" in tables
+    assert len(_chain_dirs(pipe.catalog, "run_metrics")) == 2
+    for t in tables:
+        _assert_read_matches_inference(spark, pipe.catalog, t)
+
+
+def test_stream_tables_read_as_inferred(spark, cat):
+    from pyspark.sql import functions as F
+
+    from entity_resolution_engine_spark.sources.synth import generate_web_pages
+    from entity_resolution_engine_spark.streaming.incremental import (
+        ENTITY_STORE,
+        STREAM_LINEAGE,
+        resolve_batch,
+    )
+
+    pages, _ = generate_web_pages(spark, 100, seed=7)
+    resolve_batch(pages.filter(F.xxhash64("url") % 2 == 0), cat)
+    resolve_batch(pages, cat)
+    for t in (ENTITY_STORE, STREAM_LINEAGE):
+        assert len(_chain_dirs(cat, t)) == 2
+        _assert_read_matches_inference(spark, cat, t)
 
 
 # ---------------------------------------------------------------------------

@@ -98,6 +98,27 @@ def test_embedding_near_duplicates(spark):
     assert all(p == (1, 2) for p in pairs)
 
 
+@pytest.mark.parametrize("b", [[1.0, 2.0, 3.0, 100.0], [1.0, 2.0]])
+def test_cosine_sim_col_dim_mismatch_raises(spark, b):
+    """With ``dim`` given, an array longer than dim (which the unrolled
+    chain would truncate, giving cosine 1.0 here) or shorter than dim
+    fails the query instead of scoring."""
+    df = spark.createDataFrame([([1.0, 2.0, 3.0], b)], "a array<double>, b array<double>")
+    with pytest.raises(Exception, match="array size differs from dim=3"):
+        df.select(DD.cosine_sim_col(F.col("a"), F.col("b"), dim=3)).collect()
+    with pytest.raises(Exception, match="array size differs from dim=3"):
+        df.select(DD.cosine_sim_col(F.col("b"), F.col("a"), dim=3)).collect()
+
+
+def test_cosine_sim_col_dim_exact_and_null(spark):
+    df = spark.createDataFrame(
+        [([1.0, 2.0, 3.0], [1.0, 2.0, 3.0]), ([1.0, 0.0, 0.0], None)],
+        "a array<double>, b array<double>",
+    )
+    got = [r.c for r in df.select(DD.cosine_sim_col(F.col("a"), F.col("b"), dim=3).alias("c")).collect()]
+    assert got[0] == pytest.approx(1.0) and got[1] == 0.0
+
+
 def test_srp_band_params_recall_math():
     import numpy as np
 

@@ -34,11 +34,13 @@ class BlockingConfig:
     num_hashes: int = 192           # MinHash signature length
     lsh_bands: int = 48
     lsh_rows: int = 4               # bands * rows == num_hashes
-    # Hot-key salting is realized as deterministic round-robin
-    # sub-block splitting (blocking.split_oversized_blocks): blocks
-    # above max_block_size are salted into exactly-bounded sub-blocks
-    # re-linked through representatives, so connectivity survives while
-    # per-block pair count stays O(max_block_size²).
+    # Hot-key salting is realized as deterministic sub-block splitting
+    # (blocking.split_oversized_blocks): a block above max_block_size is
+    # split into ceil(size/max_block_size) sub-blocks by pmod(uid,
+    # n_sub) and re-linked through a star of sub-block representatives,
+    # so connectivity survives while per-block pair count stays
+    # O(max_block_size²) (sub-block sizes scatter around the bound; it
+    # is not exact).
     max_block_size: int = 64
     # Composite key mode (north_star: "domain + MinHash-LSH"): prefix
     # every LSH band key with the url's domain, confining candidates to
@@ -76,13 +78,6 @@ class ScoringConfig:
     w_length_ratio: float = 0.10
     logistic_scale: float = 8.0     # steepness of the logistic squash
     logistic_midpoint: float = 0.55
-    # exact-strategy pairs are byte-identical on norm_text, so their
-    # features are 1.0 by construction; True skips the Arrow transfer +
-    # Python kernels for them (scoring.score_pairs).  Semantics-free:
-    # final exact-pair score is forced to 1.0 either way (pytest-pinned
-    # in test_scoring.py); the switch exists so the win is measurable
-    # (scripts/bench_champion_skip.py).
-    exact_skip_features: bool = True
     threshold_low: float = 0.45     # below → auto-reject
     threshold_high: float = 0.62    # at/above (no conflicts) → auto-approve
     fallback_mode: str = "auto_approve"  # gray-zone fallback when LLM disabled

@@ -33,13 +33,15 @@ share), so every column crossing an exchange here is sized for bytes:
 - exact blocks group on ``unhex(text_md5)`` (16 B binary) instead of
   the 32-char hex string.
 
-Skew handling ("no silent caps"): blocks larger than
-``max_block_size`` are *split* deterministically by uid into
-sub-blocks (all-pairs within each) and re-linked through their
+Skew handling ("no silent caps"): ``bounded_block_pairs`` is the one
+hot-bucket self-join in the engine — ER blocking here and all five
+LSH-style dedup joins (``operators/dedup.py``) run on it.  Blocks
+larger than ``max_block_size`` are *split* deterministically by uid
+into sub-blocks (all-pairs within each) and re-linked through their
 per-sub-block representatives — connectivity is preserved for
 clustering while per-block pair count stays bounded.  The split is
-logged via an accumulator-free metrics DataFrame the pipeline persists
-(stage metrics, north_rule's per-partition lineage/metrics).
+reported as a ledger DataFrame (key, size, n_subblocks) next to the
+pairs.
 """
 
 from __future__ import annotations
@@ -74,13 +76,13 @@ def attach_urls(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def _pairs_within_blocks(members: DataFrame, strategy: str) -> DataFrame:
+def _pairs_within_blocks(members: DataFrame) -> DataFrame:
     """All-pairs self-join within (bounded-size) blocks.
 
     ``members``: (block_key: long, sub: int, uid: long).  Emits
-    (uid_a < uid_b, block_key, strategy).  The join shuffles both
-    sides on (block_key, sub) once — 12 bytes of key — and AQE splits
-    any residual skew.
+    (uid_a < uid_b, block_key).  The join shuffles both sides on
+    (block_key, sub) once — 12 bytes of key — and AQE splits any
+    residual skew.
     """
     a = members.select("block_key", "sub", F.col("uid").alias("uid_a"))
     b = members.select("block_key", "sub", F.col("uid").alias("uid_b"))
@@ -95,7 +97,6 @@ def _pairs_within_blocks(members: DataFrame, strategy: str) -> DataFrame:
             F.col("uid_a").alias("uid_a"),
             F.col("uid_b").alias("uid_b"),
             F.col("block_key").alias("block_key"),
-            F.lit(strategy).alias("strategy"),
         )
     )
 
@@ -210,10 +211,10 @@ def lsh_blocks(
 
 
 def split_oversized_blocks(
-    members: DataFrame, cfg: BlockingConfig
+    members: DataFrame, max_block_size: int
 ) -> tuple[DataFrame, DataFrame]:
     """Bound block sizes: blocks ≤ max_block_size pass through with
-    ``sub = -1``; larger blocks are split by uid-hash into
+    ``sub = -1``; larger blocks are split by uid into
     ceil(size/max) sub-blocks numbered 0..n_sub-1 in a separate int
     column (keys stay longs — no string concat).  Connectivity across
     the pieces is restored by ``rep_star_edges`` over the bounded
@@ -239,32 +240,27 @@ def split_oversized_blocks(
     sub-index everywhere, so the cross-band pair union dedups to ~one
     band's worth instead of re-slicing per band (the earlier rank
     round-robin emitted ~88% of all-pairs across bands for a 600-doc
-    family).  The per-sub-block size bound is probabilistic (Poisson
-    around max_block_size) — AQE's skew split absorbs the tail.
+    family).  The per-sub-block size bound is probabilistic, not hard:
+    sub-block sizes scatter around size/n_sub ≤ max_block_size — AQE's
+    skew split absorbs the tail.
     """
+    n_sub = F.ceil(F.col("block_size") / max_block_size).cast("long")
     hot = F.broadcast(
         members.groupBy("block_key")
         .agg(F.count("*").alias("block_size"))
-        .filter(F.col("block_size") > cfg.max_block_size)
+        .filter(F.col("block_size") > max_block_size)
     )
     tagged = members.join(hot, "block_key", "left")
 
     small = tagged.filter(F.col("block_size").isNull()).select(
         "block_key", F.lit(-1).alias("sub"), "uid"
     )
-    n_sub = F.ceil(F.col("block_size") / cfg.max_block_size).cast("long")
     sub_members = tagged.filter(F.col("block_size").isNotNull()).select(
         "block_key",
         F.pmod(F.col("uid"), n_sub).cast("int").alias("sub"),
         "uid",
     )
-    stats = hot.select(
-        "block_key",
-        "block_size",
-        F.ceil(F.col("block_size") / cfg.max_block_size).cast("long").alias(
-            "n_subblocks"
-        ),
-    )
+    stats = hot.select("block_key", "block_size", n_sub.alias("n_subblocks"))
     return small.unionByName(sub_members), stats
 
 
@@ -290,9 +286,39 @@ def rep_star_edges(bounded_members: DataFrame) -> DataFrame:
             F.col("root").alias("uid_a"),  # root is the min rep: a < b holds
             F.col("rep").alias("uid_b"),
             F.col("block_key").alias("block_key"),
-            F.lit("lsh").alias("strategy"),
         )
     )
+
+
+def bounded_block_pairs(
+    members: DataFrame, max_block_size: int, caches: list | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """(block_key long, uid long) membership → ((uid_a < uid_b,
+    block_key) pairs, split ledger): the bucket self-join with hot
+    buckets split and star-linked (``split_oversized_blocks`` +
+    ``_pairs_within_blocks`` + ``rep_star_edges``).
+
+    The pairs are NOT deduped: a pair sharing k blocks appears k times.
+    Callers dedup where it is cheapest — before a verify join that
+    ships per-doc payloads, or after a verify filter that keeps a tiny
+    share of the candidates.
+
+    The bounded membership is persisted once: the self-join and the
+    star aggregations reference it four times, and without the cache
+    each reference would re-run the explode, the size count and the
+    broadcast join that build it.  It is small relative to the corpus
+    (16 B: long key + int sub + long uid).  ``caches`` (when given)
+    collects it so the caller can unpersist once the pairs are
+    materialized — otherwise the cache outlives the stage and
+    pressures executor storage across runs."""
+    bounded, stats = split_oversized_blocks(members, max_block_size)
+    bounded = bounded.persist()
+    if caches is not None:
+        caches.append(bounded)
+    pairs = _pairs_within_blocks(bounded).unionByName(
+        rep_star_edges(bounded)  # reads the cache — tiny split-only aggs
+    )
+    return pairs, stats
 
 
 def lsh_candidates(
@@ -301,29 +327,15 @@ def lsh_candidates(
     caches: list | None = None,
     champions: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """MinHash-LSH candidate pairs + block-split stats.
-
-    Both the size-count join and the pair self-join reference their
-    input twice; without materialization Catalyst would re-run the
-    whole signature UDF once per branch (4x the Python cost).  The band
-    membership is tiny relative to the corpus (16 B: long key + int
-    sub + long uid), so persisting it is the cheap side of that trade —
-    the cluster-scale pipeline additionally snapshots candidates to the
-    catalog between stages.  ``caches`` (when given) collects every
-    frame persisted here so the caller can unpersist once candidates
-    are materialized — otherwise the caches outlive the blocking stage
-    and pressure executor storage across pipeline runs."""
+    """MinHash-LSH candidate pairs (uid_a, uid_b, block_key, strategy)
+    + block-split stats, pairs not yet deduped.  ``caches`` collects
+    the band-array cache of ``lsh_blocks`` and the bounded membership
+    of ``bounded_block_pairs``."""
     blocks = lsh_blocks(
         normalized, cfg, caches, champions=champions
     )  # persists pre-explode internally
-    members, stats = split_oversized_blocks(blocks, cfg)
-    members = members.persist()
-    if caches is not None:
-        caches.append(members)
-    pairs = _pairs_within_blocks(members, "lsh").unionByName(
-        rep_star_edges(members)  # reads the cache — tiny split-only aggs
-    )
-    return pairs, stats
+    pairs, stats = bounded_block_pairs(blocks, cfg.max_block_size, caches)
+    return pairs.withColumn("strategy", F.lit("lsh")), stats
 
 
 def candidate_pairs(

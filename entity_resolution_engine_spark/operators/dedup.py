@@ -19,8 +19,13 @@ exposed as a driver-contract query (__spark_entry__.py):
                      random-hyperplane signs (the scale path; the
                      brute-force baseline lives in operators/ann.py).
 
-All blocking follows the same scale discipline as the ER pipeline:
-never an unblocked self-join; pairs always satisfy id_a < id_b.
+The four LSH-style families (MinHash, SimHash, both n-gram paths,
+embedding) generate candidates with the ER pipeline's bucket self-join,
+``blocking.bounded_block_pairs``: hot buckets are split into
+ceil(size/max_bucket_size) sub-buckets and star-linked, so there is
+never an unblocked self-join and never an unbounded bucket; pairs
+always satisfy id_a < id_b.  Ids must be integral (the sub-bucket
+assignment is ``pmod(id, n_sub)``).
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from pyspark.sql import Window
 
 from ..functions import hashing as H
 from ..sources.readers import fan_out
+from .blocking import bounded_block_pairs
 
 # ---------------------------------------------------------------------------
 # exact
@@ -65,108 +71,22 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# bounded bucket self-join (shared by the LSH-style candidate paths)
+# bucket self-join (blocking.bounded_block_pairs, in dedup's column names)
 # ---------------------------------------------------------------------------
 
-def bounded_bucket_pairs(
-    members: DataFrame,
-    max_bucket_size: int = 2000,
-    stats_out: list | None = None,
-    caches: list | None = None,
-    dedup_pairs: bool = True,
+def _bucket_pairs(
+    members: DataFrame, max_bucket_size: int, caches: list | None
 ) -> DataFrame:
-    """(bucket, id) membership → deduped candidate (id_a < id_b) pairs,
-    with hot buckets split into bounded sub-buckets.
-
-    Same scale discipline as blocking.split_oversized_blocks: a hot
-    bucket (e.g. thousands of identical boilerplate docs sharing every
-    band, or a degenerate shingle) would otherwise produce O(k²) pairs.
-    Buckets ≤ max_bucket_size self-join directly; larger buckets are
-    split by an id-GLOBAL hash (``xxhash64(id) % n_sub``) into
-    ceil(k/(0.8·max)) sub-buckets (all-pairs within each) and the
-    sub-bucket minima are star-linked so downstream clustering still
-    sees cross-sub-bucket connectivity.  The hash assignment (vs the
-    earlier per-bucket rank round-robin) means a pair co-occurring in
-    MANY hot buckets lands in the same sub-index everywhere —
-    cross-bucket pair unions dedup to ~one bucket's worth.  The bound
-    is PROBABILISTIC, not hard (ADVICE r3): hash assignment makes
-    sub-bucket sizes binomial around k/n_sub, so n_sub is sized with
-    0.8 headroom — the mean sits at 0.8·max and an overshoot past max
-    is a ≥4σ event for max ≥ 500 (σ = √(k/n_sub)), negligible versus
-    the old round-robin's exact-but-resliced cut.
-    No sort anywhere: the long tail passes untouched, hot buckets pay
-    two aggregations.  ``stats_out`` (a list, when given) receives the
-    split ledger DataFrame (bucket, bucket_size, n_subbuckets) — the
-    no-silent-caps record for callers that materialize it.
-
-    ``caches`` (when given) collects every frame persisted here so the
-    caller can unpersist after materializing; without it the persist
-    still happens (the membership is referenced by 3+ plan branches)
-    but lives until the caller clears the cache."""
-    members = members.persist()
-    if caches is not None:
-        caches.append(members)
-    hot = F.broadcast(
-        members.groupBy("bucket")
-        .agg(F.count("*").alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket_size)
+    """(bucket long, id) membership → (id_a < id_b) candidate pairs,
+    hot buckets split and star-linked by ``bounded_block_pairs``.  NOT
+    deduped: a pair sharing k buckets appears k times, so each caller
+    dedups before or after its verify (the split ledger is not used)."""
+    pairs, _ = bounded_block_pairs(
+        members.select(F.col("bucket").alias("block_key"), F.col("id").alias("uid")),
+        max_bucket_size,
+        caches,
     )
-    tagged = members.join(hot, "bucket", "left")
-    small = tagged.filter(F.col("bucket_size").isNull()).select(
-        F.col("bucket").cast("string").alias("bucket"), "id"
-    )
-    big = tagged.filter(F.col("bucket_size").isNotNull())
-    # 0.8 headroom: see the probabilistic-bound note in the docstring
-    n_sub = F.ceil(F.col("bucket_size") / (0.8 * max_bucket_size)).cast("long")
-    sub_tagged = big.select(
-        F.col("bucket").cast("string").alias("base"),
-        F.concat_ws(
-            "#",
-            F.col("bucket").cast("string"),
-            F.pmod(F.xxhash64(F.col("id")), n_sub),
-        ).alias("bucket"),
-        "id",
-    )
-    sub = sub_tagged.select("bucket", "id")
-    # star links: each sub-bucket's min id points at the base bucket's
-    # global min (min of sub-mins) — n_sub−1 edges per hot bucket
-    reps = sub_tagged.groupBy("base", "bucket").agg(F.min("id").alias("rep"))
-    roots = big.groupBy(
-        F.col("bucket").cast("string").alias("base")
-    ).agg(F.min("id").alias("root"))
-    rep_pairs = (
-        reps.join(roots, "base")
-        .filter(F.col("rep") != F.col("root"))
-        .select(F.col("root").alias("id_a"), F.col("rep").alias("id_b"))
-    )
-    if stats_out is not None:
-        stats_out.append(
-            hot.select(
-                F.col("bucket").cast("string").alias("bucket"),
-                "bucket_size",
-                F.ceil(F.col("bucket_size") / (0.8 * max_bucket_size))
-                .cast("long")
-                .alias("n_subbuckets"),
-            )
-        )
-    bounded = small.unionByName(sub)
-    a = bounded.select("bucket", F.col("id").alias("id_a"))
-    b = bounded.select("bucket", F.col("id").alias("id_b"))
-    raw = (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    if not dedup_pairs:
-        # round 6: callers that verify-filter the candidates down by
-        # orders of magnitude (the ngram paths: 8.2M candidates → 2.5k
-        # survivors at sf1.0) skip the full-width pair-dedup exchange
-        # here and dedup AFTER their filter instead — a pair surfacing
-        # from k shared buckets costs k cheap verify evaluations in
-        # place of one corpus-scale (id_a, id_b) shuffle.  Callers MUST
-        # dedup downstream; k is bounded by the band count.
-        return raw.unionByName(rep_pairs)
-    return raw.unionByName(rep_pairs).dropDuplicates(["id_a", "id_b"])
+    return pairs.select(F.col("uid_a").alias("id_a"), F.col("uid_b").alias("id_b"))
 
 
 # ---------------------------------------------------------------------------
@@ -237,7 +157,8 @@ def minhash_verified_near_duplicates(
     banding and kept whole by the expansion, which then verifies more
     candidates — the output is a recall superset of the per-doc
     banding's, not an exact copy (a bucket over the cap in both spaces
-    is split by different id hashes in each, so the two can differ
+    is split into a different number of sub-buckets in each — the
+    count is ceil(occupancy/max_bucket_size) — so the two can differ
     either way there).  Every emitted pair is still exactly verified.
     The expansion only runs when max group size ≤ max_bucket_size/2
     (driver-checked on the tiny group ledger) — oversized-clone corpora
@@ -290,8 +211,8 @@ def minhash_verified_near_duplicates(
     if caches is not None:
         caches.append(docs)
     bands_df = docs.select("id", F.explode("bands").alias("bucket"))
-    pair_ids = bounded_bucket_pairs(
-        bands_df, max_bucket_size=max_bucket_size, caches=caches
+    pair_ids = _bucket_pairs(bands_df, max_bucket_size, caches).dropDuplicates(
+        ["id_a", "id_b"]
     )
     verified = _verified_jaccard_pairs(pair_ids, docs, min_jaccard)
     if not champion_expansion:
@@ -433,16 +354,17 @@ def simhash_near_duplicates(
     )
     # ids-only through the candidate shuffle (bounded buckets), then
     # re-attach the two 64-bit signatures for the Hamming verify
+    # (block_idx, block_val) folds to one long bucket key: a 2^-64
+    # xxhash64 collision only merges two buckets' candidate lists, and
+    # the exact Hamming filter below still decides every pair
     exploded = sigs.select(
         "id", F.explode(blocks).alias("b")
     ).select(
-        F.concat_ws(
-            "|", F.col("b.block_idx").cast("string"), F.col("b.block_val").cast("string")
-        ).alias("bucket"),
+        F.xxhash64(F.col("b.block_idx"), F.col("b.block_val")).alias("bucket"),
         "id",
     )
-    pair_ids = bounded_bucket_pairs(
-        exploded, max_bucket_size=max_bucket_size, caches=caches
+    pair_ids = _bucket_pairs(exploded, max_bucket_size, caches).dropDuplicates(
+        ["id_a", "id_b"]
     )
     pairs = pair_ids.join(
         sigs.select(F.col("id").alias("id_a"), F.col("simhash").alias("sim_a")), "id_a"
@@ -465,7 +387,6 @@ def _verified_jaccard_pairs(
     pair_ids: DataFrame,
     docs: DataFrame,
     min_jaccard: float,
-    dedup_out: bool = False,
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs → (id_a, id_b, jaccard ≥ τ), exact.
 
@@ -507,19 +428,11 @@ def _verified_jaccard_pairs(
         "id_a", "id_b", inter.alias("i"), "na", "nb"
     )
     jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-    out = (
+    return (
         scored.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b", "jaccard")
     )
-    if dedup_out:
-        # partner of bounded_bucket_pairs(dedup_pairs=False): the
-        # candidate stream carries one row per shared bucket, and
-        # jaccard is a pure function of the pair, so deduping the
-        # (tiny) SURVIVOR set here yields exactly the pair-deduped
-        # result at a fraction of the shuffle width
-        out = out.dropDuplicates(["id_a", "id_b"])
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -583,21 +496,21 @@ def ngram_jaccard_pairs(
     # buckets' candidate lists, which the exact verify then filters; an
     # output change additionally needs the spurious pair to clear the
     # jaccard threshold — the same negligible-collision standard as the
-    # gram hashes).  Pair dedup is deferred past the verify filter
-    # (dedup_pairs=False / dedup_out=True): candidates outnumber
-    # survivors ~3000:1 here, so the wide (id_a, id_b) exchange moves
-    # to the 2.5k-row survivor set.
+    # gram hashes).  Pair dedup runs after the verify filter:
+    # candidates outnumber survivors ~3000:1 here, so the wide
+    # (id_a, id_b) exchange moves to the 2.5k-row survivor set.  The
+    # result equals deduping first, because jaccard is a pure function
+    # of the pair.
     exploded = docs.select(
         "id",
         F.explode(
             F.transform("bands", lambda b: F.xxhash64(b))
         ).alias("bucket"),
     )
-    pair_ids = bounded_bucket_pairs(
-        exploded, max_bucket_size=max_bucket_size, caches=caches,
-        dedup_pairs=False,
+    pair_ids = _bucket_pairs(exploded, max_bucket_size, caches)
+    return _verified_jaccard_pairs(pair_ids, docs, min_jaccard).dropDuplicates(
+        ["id_a", "id_b"]
     )
-    return _verified_jaccard_pairs(pair_ids, docs, min_jaccard, dedup_out=True)
 
 
 def ngram_jaccard_pairs_fast(
@@ -648,15 +561,13 @@ def ngram_jaccard_pairs_fast(
     if caches is not None:
         caches.append(docs)
     exploded = docs.select("id", F.explode("bands").alias("bucket"))
-    # round-6 verify economies (size-ratio prefilter, union-by-sizes,
-    # deferred pair dedup past the verify filter): see
-    # _verified_jaccard_pairs — grams here are already distinct int64
+    # same verify economies and post-verify pair dedup as
+    # ngram_jaccard_pairs — grams here are already distinct int64
     # hashes, so jaccard values are unchanged
-    pair_ids = bounded_bucket_pairs(
-        exploded, max_bucket_size=max_bucket_size, caches=caches,
-        dedup_pairs=False,
+    pair_ids = _bucket_pairs(exploded, max_bucket_size, caches)
+    return _verified_jaccard_pairs(pair_ids, docs, min_jaccard).dropDuplicates(
+        ["id_a", "id_b"]
     )
-    return _verified_jaccard_pairs(pair_ids, docs, min_jaccard, dedup_out=True)
 
 
 # ---------------------------------------------------------------------------
@@ -796,11 +707,9 @@ def embedding_near_duplicates(
     ).withColumn("buckets", srp(F.col("v"))).persist()
     if caches is not None:
         caches.append(vecs)
-    members = vecs.select("id", F.explode("buckets").alias("bucket")).select(
-        "bucket", "id"
-    )
-    pair_ids = bounded_bucket_pairs(
-        members, max_bucket_size=max_bucket_size, caches=caches
+    members = vecs.select("id", F.explode("buckets").alias("bucket"))
+    pair_ids = _bucket_pairs(members, max_bucket_size, caches).dropDuplicates(
+        ["id_a", "id_b"]
     )
     pairs = pair_ids.join(
         vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a"

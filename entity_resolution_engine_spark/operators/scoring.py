@@ -78,17 +78,14 @@ def score_pairs(
     # exact-strategy pairs are byte-identical on norm_text by
     # construction, so every feature is 1.0 — don't pay the Arrow
     # transfer + Python compute for a known answer.  Measured magnitude
-    # (scripts/bench_champion_skip.py, BASELINE.md round 5): ~1.15x
-    # block+score at 50%-exact-dup composition (common-crawl-style
-    # mirrors), a no-op at the default synth corpus's 3% share — free
-    # and semantics-free either way (pytest-pinned).  Nulling the UDF
-    # inputs keeps the plan single-pass (no candidates re-scan per
-    # strategy branch); the UDF sees "" for those rows and the features
-    # are overridden by the constant below.
-    # cfg.exact_skip_features=False routes exact pairs through the UDF
-    # anyway (measurement mode — scripts/bench_champion_skip.py); the
-    # final exact-pair score stays a forced 1.0 in both modes.
-    is_exact = (F.col("strategy") == "exact") & F.lit(cfg.exact_skip_features)
+    # (BASELINE.md round 5): ~1.15x block+score at 50%-exact-dup
+    # composition (common-crawl-style mirrors), a no-op at the default
+    # synth corpus's 3% share — and semantics-free (pytest-pinned:
+    # the UDF returns 1.0 for all four features on exact pairs).
+    # Nulling the UDF inputs keeps the plan single-pass (no candidates
+    # re-scan per strategy branch); the UDF sees "" for those rows and
+    # the features are overridden by the constant below.
+    is_exact = F.col("strategy") == "exact"
     norm_a_in = F.when(~is_exact, F.col("norm_a"))
     norm_b_in = F.when(~is_exact, F.col("norm_b"))
 

@@ -12,19 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -51,12 +38,3 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= t:
         return df
     return df.repartition(t)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TPCH_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -16,6 +16,7 @@ from entity_resolution_engine_spark.operators.blocking import (
     candidate_pairs,
     exact_candidates,
     split_oversized_blocks,
+    uid_col,
 )
 from entity_resolution_engine_spark.operators.normalize_stage import normalize_pages
 
@@ -62,7 +63,7 @@ def test_split_bounds_block_size(spark):
         [(1001, i) for i in range(50)] + [(2002, 900), (2002, 901)],
         "block_key long, uid long",
     )
-    bounded, stats = split_oversized_blocks(members, cfg)
+    bounded, stats = split_oversized_blocks(members, cfg.max_block_size)
     sizes = {
         (r.block_key, r.sub): r["count"]
         for r in bounded.groupBy("block_key", "sub").count().collect()
@@ -256,28 +257,31 @@ def test_lsh_only_strategy_keeps_exact_clones_connected(spark):
     normalized.unpersist()
 
 
-def test_exact_skip_features_is_semantics_free(normalized):
-    """cfg.exact_skip_features only bypasses the Arrow/Python feature
-    kernels for exact-strategy pairs (their features are 1.0 by
-    construction); routing-relevant outputs must be identical with the
-    skip disabled (the measurement mode of
-    scripts/bench_champion_skip.py)."""
-    import dataclasses
-
+def test_exact_pairs_score_one(normalized):
+    """score_pairs skips the feature UDF for exact-strategy pairs and
+    reports 1.0 for their four features and score.  That shortcut is
+    semantics-free: exact pairs are byte-identical on norm_text, so the
+    UDF itself returns 1.0 for all four features on their match keys."""
     from entity_resolution_engine_spark.config import ScoringConfig
+    from entity_resolution_engine_spark.functions.similarity import pair_features_udf
     from entity_resolution_engine_spark.operators.scoring import score_pairs
 
+    cfg = ScoringConfig()
+    feats = ["jaro_winkler", "token_jaccard", "levenshtein_sim", "length_ratio"]
     pairs, _ = candidate_pairs(normalized, BlockingConfig())
-    cfg_on = ScoringConfig()
-    cfg_off = dataclasses.replace(cfg_on, exact_skip_features=False)
-    cols = ["url_a", "url_b", "strategy", "score"]
-    on = score_pairs(pairs, normalized, cfg_on).select(*cols)
-    off = score_pairs(pairs, normalized, cfg_off).select(*cols)
-    assert on.count() == off.count()
-    assert on.exceptAll(off).count() == 0
-    # exact pairs exist in the corpus and score a forced 1.0 both ways
-    n_exact = on.filter(
-        (F.col("strategy") == "exact") & (F.col("score") == 1.0)
-    ).count()
-    assert n_exact > 0
-    assert on.filter((F.col("strategy") == "exact") & (F.col("score") != 1.0)).count() == 0
+    exact = pairs.filter(F.col("strategy") == "exact")
+    key = normalized.select(
+        uid_col().alias("uid"),
+        F.substring("norm_text", 1, cfg.match_key_chars).alias("mk"),
+    )
+    keyed = exact.join(
+        key.select(F.col("uid").alias("uid_a"), F.col("mk").alias("mk_a")), "uid_a"
+    ).join(key.select(F.col("uid").alias("uid_b"), F.col("mk").alias("mk_b")), "uid_b")
+    udf_rows = keyed.select(pair_features_udf("mk_a", "mk_b").alias("f")).select("f.*").collect()
+    assert udf_rows, "corpus has no exact pairs — fixture regressed"
+    assert all(r[c] == 1.0 for r in udf_rows for c in feats)
+
+    scored = score_pairs(pairs, normalized, cfg).filter(F.col("strategy") == "exact")
+    rows = scored.select(*feats, "score").collect()
+    assert len(rows) == len(udf_rows)
+    assert all(r[c] == 1.0 for r in rows for c in feats + ["score"])

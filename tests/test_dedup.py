@@ -254,3 +254,74 @@ def test_dedup_cache_ledgers_release_storage(spark, docs):
         assert not leaked, (
             f"persistent RDDs leaked after unpersisting the ledger: {leaked}"
         )
+
+
+def _hot_family_docs(spark):
+    # 60 near-identical docs (one shared 40-word body plus a unique
+    # tail token each): every LSH family puts most of them in the same
+    # buckets, far over a max_bucket_size of 8
+    body = " ".join(f"w{i % 23}x{i}" for i in range(40))
+    rows = [(1000 + 7 * i, f"{body} tail{i}") for i in range(60)]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def _hot_family_embeddings(spark):
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    base = rng.standard_normal(16)
+    rows = [
+        (1000 + 7 * i, (base + 0.01 * rng.standard_normal(16)).tolist())
+        for i in range(60)
+    ]
+    return spark.createDataFrame(rows, ["vec_id", "embedding"])
+
+
+_HOT_BUCKET_OPS = {
+    "minhash": (_hot_family_docs, lambda d, m, c: DD.minhash_verified_near_duplicates(
+        d, min_jaccard=0.8, max_bucket_size=m, caches=c)),
+    "simhash": (_hot_family_docs, lambda d, m, c: DD.simhash_near_duplicates(
+        d, max_hamming=3, max_bucket_size=m, caches=c)),
+    "ngram": (_hot_family_docs, lambda d, m, c: DD.ngram_jaccard_pairs(
+        d, n=3, min_jaccard=0.4, max_bucket_size=m, caches=c)),
+    "ngram_fast": (_hot_family_docs, lambda d, m, c: DD.ngram_jaccard_pairs_fast(
+        d, n=3, min_jaccard=0.4, max_bucket_size=m, caches=c)),
+    "embedding": (_hot_family_embeddings, lambda d, m, c: DD.embedding_near_duplicates(
+        d, dim=16, min_cosine=0.95, max_bucket_size=m, caches=c)),
+}
+
+
+@pytest.mark.parametrize("name", list(_HOT_BUCKET_OPS))
+def test_hot_bucket_split_output_is_bounded_subset(spark, name):
+    """Hot buckets (over max_bucket_size) are split into sub-buckets and
+    star-linked: the output keeps id_a < id_b, holds no pair twice, and
+    is a subset of the unsplit output with equal values — the split
+    only drops candidates, it never invents or re-scores a pair."""
+    frame, op = _HOT_BUCKET_OPS[name]
+    data = frame(spark)
+    value = {"simhash": "hamming", "embedding": "cosine"}.get(name, "jaccard")
+
+    def run(max_bucket_size):
+        caches: list = []
+        rows = [
+            (r.id_a, r.id_b, r[value])
+            for r in op(data, max_bucket_size, caches).collect()
+        ]
+        # the bounded membership (the cached frame with a `sub` column)
+        # marks split rows with sub >= 0
+        n_split = sum(
+            c.filter(F.col("sub") >= 0).count() for c in caches if "sub" in c.columns
+        )
+        for c in caches:
+            c.unpersist()
+        return rows, n_split
+
+    whole, whole_split = run(2000)
+    whole = {(a, b): v for a, b, v in whole}
+    split, n_split = run(8)
+    assert whole_split == 0 and n_split > 0, f"{name}: split did not engage"
+    keys = [(a, b) for a, b, _ in split]
+    assert split, f"{name}: no pairs under the split"
+    assert len(keys) == len(set(keys)), f"{name}: duplicate pairs"
+    assert all(a < b for a, b in keys)
+    assert all(whole.get((a, b)) == v for a, b, v in split), f"{name}: not a subset"

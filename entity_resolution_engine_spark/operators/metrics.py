@@ -9,11 +9,11 @@ runs on the driver over rows the pipeline's observe stage already holds
 or fetches in one bounded job — a DataFrame plan per table cost a
 Spark job (and its fixed latency) per few rows:
 
-- stage metrics include per-partition row counts — from snapshot file
-  footers (``stage_metrics_rows``), or one rollup scan
-  (``stage_metrics``) for catalogs that cannot answer from metadata —
-  the north_rule's per-partition lineage/metrics, and the skew
-  diagnostic the blocking stage reads back.
+- stage metrics include per-partition row counts, built on the driver
+  from snapshot file metadata (``stage_metrics_rows`` over
+  ``TableCatalog.file_row_counts``) with no data scan — the
+  north_rule's per-partition lineage/metrics, and the skew diagnostic
+  the blocking stage reads back.
 - anomaly detection = current run's rates vs mean/stddev_samp of the
   trailing ≤ lookback runs (SURVEY.md §2.5 W2/W3), z ≥ 2 → MEDIUM,
   ≥ 3 → HIGH.
@@ -25,44 +25,9 @@ from __future__ import annotations
 
 import statistics
 
-from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
+from pyspark.sql import Row
 
 from ..config import AnomalyConfig, QualityGateConfig
-
-
-def stage_metrics(
-    df: DataFrame, run_id: str, stage: str, seq: int, per_partition: bool = True
-) -> DataFrame:
-    """Row counts (total + per shuffle partition) for one stage output.
-
-    ONE rollup aggregation produces both granularities (the null
-    partition_id row is the grand total) — the earlier two-pass form
-    (count + groupBy) doubled the scan per observed stage."""
-    if not per_partition:
-        return df.agg(F.count("*").alias("value")).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.lit("row_count").alias("metric"),
-            F.col("value").cast("double"),
-            F.lit(None).cast("int").alias("partition_id"),
-            F.lit(seq).alias("finished_seq"),
-        )
-    return (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .rollup("partition_id")
-        .agg(F.count("*").cast("double").alias("value"))
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.when(F.col("partition_id").isNull(), F.lit("row_count"))
-            .otherwise(F.lit("partition_row_count"))
-            .alias("metric"),
-            "value",
-            "partition_id",
-            F.lit(seq).alias("finished_seq"),
-        )
-    )
 
 
 RUN_METRICS_SCHEMA = (
@@ -74,12 +39,12 @@ RUN_METRICS_SCHEMA = (
 def stage_metrics_rows(
     counts: list[int], run_id: str, stage: str, seq: int
 ) -> list[tuple]:
-    """Driver-side ``stage_metrics`` rows from per-FILE row counts
-    (``TableCatalog.file_row_counts`` — parquet/Iceberg footers).
-
-    Same schema as ``stage_metrics`` with ``partition_id`` = write-side
-    file ordinal instead of read-side chunk id — a strictly better skew
-    signal (each file is one write task's output) at zero scan cost.
+    """One stage's ``run_metrics`` rows from per-FILE row counts
+    (``TableCatalog.file_row_counts`` — parquet/Iceberg footers): the
+    ``row_count`` total (null ``partition_id``), then one
+    ``partition_row_count`` row per file, ``partition_id`` = the file's
+    ordinal.  Each file is one write task's output, so the rows are the
+    stage's output-skew profile at zero scan cost.
     ``RUN_METRICS_SCHEMA`` is the matching ``session.local_frame`` schema."""
     rows: list[tuple] = [(run_id, stage, "row_count", float(sum(counts)), None, seq)]
     rows += [

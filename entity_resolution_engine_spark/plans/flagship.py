@@ -2,11 +2,13 @@
 
 The driver's smoke entry (``__spark_entry__.py:entry``) and the
 rows-only correctness query both resolve the testdata ``documents``
-table end-to-end: adapt to the web_pages schema → normalize → block
+table end-to-end: adapt to the web_pages schema, then run the
+pipeline's resolve chain (``pipeline.resolve``: normalize → block
 (exact + MinHash-LSH) → score (Arrow-batched features + logistic) →
-route → large-star/small-star connected components → cluster
-assignments.  Same operator chain as plans/pipeline.py minus the
-snapshot-catalog writes (the driver wants one DataFrame back).
+route → connected components) with no snapshot catalog, and return the
+cluster assignments with their sizes (the entry wants one DataFrame
+back).  Its ``keep`` caches the normalized side and passes every other
+stage's table through unevaluated.
 
 Reference analog: cli/run_mapping.py:37-188's match→route→merge sweep
 (/root/reference), collapsed to the single-source self-resolution case.
@@ -18,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators.blocking import candidate_pairs
-from ..operators.cluster import connected_components
-from ..operators.normalize_stage import normalize_pages
-from ..operators.router import route_pairs
-from ..operators.scoring import score_pairs
+from .pipeline import STAGE_TABLE, resolve
 
 
 def documents_as_pages(documents: DataFrame) -> DataFrame:
@@ -48,30 +46,25 @@ def resolve_documents(
     config: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Full ER sweep; returns (url, cluster_id, n_members) assignments."""
-    pages = documents_as_pages(documents)
-    normalized = normalize_pages(pages)
-    # tiny corpora (sf0.001) still need the UDF-bearing plan to be
-    # evaluated twice (blocking + scoring) — cache the normalized side.
-    # canonical_text is dropped BEFORE the cache (round 6): no stage of
-    # the resolve (blocking keys, scoring match keys, CC urls) reads
-    # it, and it is the widest column in the frame — the projection
-    # halves the cache-fill bytes while norm_text is still computed
-    # from it inside the one fused ArrowEvalPython pass
-    normalized = normalized.drop("canonical_text").cache()
-    # NOTE: normalized itself stays cached — the returned assignments
-    # still reference it lazily (the all_nodes singleton branch)
     caches: list = []
-    pairs, _split_stats = candidate_pairs(normalized, config.blocking, caches=caches)
-    scored = score_pairs(pairs, normalized, config.scoring)
-    routed = route_pairs(scored, config.scoring, run_id="flagship")
-    edges = routed.filter(F.col("routed_status") == "approved").select(
-        F.col("url_a").alias("src"), F.col("url_b").alias("dst")
-    )
-    assignments = connected_components(
-        edges,
-        all_nodes=normalized.select("url"),
-        max_iterations=config.cc_max_iterations,
-        checkpoint_every=config.cc_checkpoint_every,
+
+    def keep(stage: str, build) -> DataFrame:
+        table = build()[STAGE_TABLE[stage]]
+        if stage != "normalize":
+            return table
+        # tiny corpora (sf0.001) still need the UDF-bearing plan to be
+        # evaluated twice (blocking + scoring) — cache the normalized
+        # side.  canonical_text is dropped BEFORE the cache (round 6): no
+        # stage of the resolve (blocking keys, scoring match keys, CC
+        # urls) reads it, and it is the widest column in the frame — the
+        # projection halves the cache-fill bytes while norm_text is
+        # still computed from it inside the one fused ArrowEvalPython
+        # pass.  It stays cached: the returned assignments still
+        # reference it lazily (the all_nodes singleton branch)
+        return table.drop("canonical_text").cache()
+
+    _, _, assignments = resolve(
+        documents_as_pages(documents), config, "flagship", keep, caches
     )
     # CC materialized the edge set (fetched to the driver, or through
     # the star loop's localCheckpoint rounds), so the returned

@@ -7,6 +7,13 @@ the cross-node boundaries listed in SURVEY.md §3.1):
 
     normalize → block → score → route → cluster → merge → observe
 
+The first five are ``resolve``, the one resolve chain, which the
+in-memory flagship (``plans/flagship.py``) runs too.  Each caller makes
+the stages real through a ``keep(stage, build)`` seam: here ``keep``
+commits each stage's tables as snapshots (the route stage then runs
+the optional LLM gray-zone sample) and returns the committed table
+read back.  Merge and observe run after the chain, here only.
+
 Resume: the run-state table records completed stages; a rerun with the
 same ``run_id`` skips committed stages and reads their snapshots (the
 north_rule's "resumable from checkpoint").  When its edge set is too
@@ -52,6 +59,65 @@ from ..session import local_frame
 from ..sources.catalog import ParquetSnapshotCatalog, TableCatalog
 
 STAGES = ("normalize", "block", "score", "route", "cluster", "merge", "observe")
+# the table each stage of the resolve chain hands to the next one
+STAGE_TABLE = {
+    "normalize": "normalized",
+    "block": "candidates",
+    "score": "scored",
+    "route": "routed",
+    "cluster": "clusters",
+}
+
+
+def resolve(
+    pages: DataFrame,
+    cfg: PipelineConfig,
+    run_id: str,
+    keep,
+    caches: list,
+    **cc,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """normalize → block → score → route → cluster over web_pages;
+    returns (normalized, routed, clusters).
+
+    ``keep(stage, build)`` makes one stage real: ``build()`` returns the
+    stage's tables by name, and ``keep`` returns ``STAGE_TABLE[stage]``
+    for the next stage (it may skip ``build``: a resumed stage).
+    Blocking appends its persisted frames to ``caches`` for the caller
+    to release; ``cc`` goes to the connected-components call."""
+    normalized = keep("normalize", lambda: {"normalized": normalize_pages(pages)})
+
+    def block():
+        pairs, splits = candidate_pairs(normalized, cfg.blocking, caches=caches)
+        return {"candidates": pairs, "block_splits": splits}
+
+    candidates = keep("block", block)
+    scored = keep(
+        "score", lambda: {"scored": score_pairs(candidates, normalized, cfg.scoring)}
+    )
+
+    def route():
+        routed = route_pairs(scored, cfg.scoring, run_id)
+        return {"routed": routed, "reviews": review_items(routed, run_id)}
+
+    routed = keep("route", route)
+
+    def cluster():
+        edges = routed.filter(F.col("routed_status") == "approved").select(
+            F.col("url_a").alias("src"), F.col("url_b").alias("dst")
+        )
+        # looked up in this module at call time, so it can be wrapped
+        # from outside (erbench collects CC stats that way)
+        clusters = connected_components(
+            edges,
+            all_nodes=normalized.select("url"),
+            max_iterations=cfg.cc_max_iterations,
+            checkpoint_every=cfg.cc_checkpoint_every,
+            **cc,
+        )
+        return {"clusters": clusters}
+
+    return normalized, routed, keep("cluster", cluster)
 
 
 @dataclass
@@ -107,10 +173,8 @@ class Pipeline:
         state = RunState(self.root, run_id)
         done = state.completed()
         res = PipelineResult(run_id=run_id)
-        seq = 0
 
         def run_stage(name: str, fn) -> None:
-            nonlocal seq
             if name in done:
                 res.stages_skipped.append(name)
                 return
@@ -119,100 +183,33 @@ class Pipeline:
             res.timings[name] = time.monotonic() - t0
             state.mark(name)
             res.stages_run.append(name)
-            seq += 1
 
-        # -- normalize ------------------------------------------------------
-        def _normalize():
-            normalized = normalize_pages(web_pages)
-            cat.write(self._t(run_id, "normalized"), normalized)
+        caches: list = []
 
-        run_stage("normalize", _normalize)
-        normalized = cat.read(self._t(run_id, "normalized"))
+        def keep(stage: str, build) -> DataFrame:
+            def commit():
+                for name, df in build().items():
+                    cat.write(self._t(run_id, name), df)
+                # the snapshots are committed — the blocking caches are
+                # dead weight from here on (ADVICE: persist hygiene)
+                for c in caches:
+                    c.unpersist()
+                caches.clear()
+                if stage == "route":
+                    self._validate_gray_zone(run_id)
 
-        # -- block ------------------------------------------------------------
-        def _block():
-            caches: list = []
-            pairs, split_stats = candidate_pairs(
-                normalized, self.cfg.blocking, caches=caches
-            )
-            cat.write(self._t(run_id, "candidates"), pairs)
-            cat.write(self._t(run_id, "block_splits"), split_stats)
-            # the candidates snapshot is committed — the blocking caches
-            # are dead weight from here on (ADVICE: persist hygiene)
-            for c in caches:
-                c.unpersist()
+            run_stage(stage, commit)
+            return cat.read(self._t(run_id, STAGE_TABLE[stage]))
 
-        run_stage("block", _block)
-        candidates = cat.read(self._t(run_id, "candidates"))
-
-        # -- score ------------------------------------------------------------
-        def _score():
-            scored = score_pairs(candidates, normalized, self.cfg.scoring)
-            cat.write(self._t(run_id, "scored"), scored)
-
-        run_stage("score", _score)
-        scored = cat.read(self._t(run_id, "scored"))
-
-        # -- route ------------------------------------------------------------
-        def _route():
-            routed = route_pairs(scored, self.cfg.scoring, run_id)
-            cat.write(self._t(run_id, "routed"), routed)
-            routed_r = cat.read(self._t(run_id, "routed"))
-            cat.write(self._t(run_id, "reviews"), review_items(routed_r, run_id))
-            # optional LLM validation of the gray zone (reference
-            # validation/router.py:97-256): bounded sample, budget +
-            # circuit breaker inside llm_validate_sample.  Verdicts are
-            # COMMITTED as a snapshot so the observe stage (and a
-            # resumed run) derives llm stats from the same rows.
-            if self.cfg.scoring.llm_enabled and self.cfg.llm_transport is not None:
-                results = llm_validate_sample(
-                    routed_r, self.cfg.scoring, transport=self.cfg.llm_transport
-                )
-                rows = [
-                    (
-                        run_id,
-                        r.get("url_a"),
-                        r.get("url_b"),
-                        r.get("decision") or r.get("status"),
-                        float(r["confidence"]) if r.get("confidence") is not None else None,
-                        list(r.get("reasons") or []),
-                        list(r.get("risk_flags") or []),
-                        r.get("error"),
-                    )
-                    for r in results
-                ]
-                cat.write(
-                    self._t(run_id, "llm_validations"),
-                    local_frame(
-                        self.spark,
-                        rows,
-                        "run_id string, url_a string, url_b string, "
-                        "decision string, confidence double, "
-                        "reasons array<string>, risk_flags array<string>, "
-                        "error string",
-                    ),
-                )
-
-        run_stage("route", _route)
-        routed = cat.read(self._t(run_id, "routed"))
-
-        # -- cluster ----------------------------------------------------------
-        def _cluster():
-            edges = routed.filter(F.col("routed_status") == "approved").select(
-                F.col("url_a").alias("src"), F.col("url_b").alias("dst")
-            )
-            assignments = connected_components(
-                edges,
-                all_nodes=normalized.select("url"),
-                max_iterations=self.cfg.cc_max_iterations,
-                checkpoint_every=self.cfg.cc_checkpoint_every,
-                catalog=cat,
-                checkpoint_table=self._t(run_id, "cc_state"),
-            )
-            cat.write(self._t(run_id, "clusters"), assignments)
-
-        run_stage("cluster", _cluster)
-        clusters = cat.read(self._t(run_id, "clusters"))
+        normalized, routed, clusters = resolve(
+            web_pages,
+            self.cfg,
+            run_id,
+            keep,
+            caches,
+            catalog=cat,
+            checkpoint_table=self._t(run_id, "cc_state"),
+        )
 
         # -- merge ------------------------------------------------------------
         def _merge():
@@ -248,19 +245,10 @@ class Pipeline:
             # orders by finished_at, anomaly_detector.py:44-57)
             seq_base = int(time.time() * 1000)
             local_rows: list[tuple] = []
-            scan_frames = []  # catalogs that can't answer from metadata
             for i, (stage, tbl) in enumerate(stage_tables):
-                counts = cat.file_row_counts(self._t(run_id, tbl))
-                if counts is not None:
-                    local_rows += M.stage_metrics_rows(
-                        counts, run_id, stage, seq_base + i
-                    )
-                else:
-                    scan_frames.append(
-                        M.stage_metrics(
-                            cat.read(self._t(run_id, tbl)), run_id, stage, seq_base + i
-                        )
-                    )
+                local_rows += M.stage_metrics_rows(
+                    cat.file_row_counts(self._t(run_id, tbl)), run_id, stage, seq_base + i
+                )
             # router counters: ONE aggregation job over the routed
             # snapshot, collected once (5 rows) and reused for the
             # metrics write, the rates and the quality report below
@@ -279,12 +267,11 @@ class Pipeline:
             first_seq = min([fs for rid, fs, _ in history if rid == run_id] + [seq_base])
             runs = [h for h in history if h[0] != run_id] + [(run_id, first_seq, rates)]
 
-            all_metrics = local_frame(
-                self.spark, local_rows + router_rows, M.RUN_METRICS_SCHEMA
+            cat.write(
+                "run_metrics",
+                local_frame(self.spark, local_rows + router_rows, M.RUN_METRICS_SCHEMA),
+                mode="append",
             )
-            for fr in scan_frames:
-                all_metrics = all_metrics.unionByName(fr)
-            cat.write("run_metrics", all_metrics, mode="append")
 
             # ≤ 3 rows by construction (one per tracked rate); the event
             # write, triage report, HIGH-severity gate, and quality
@@ -349,13 +336,6 @@ class Pipeline:
                 for r in local_rows + router_rows
                 if r[4] is None
             ]
-            for fr in scan_frames:
-                metrics_totals += [
-                    r.asDict()
-                    for r in fr.filter(F.col("partition_id").isNull())
-                    .select("stage", "metric", "value")
-                    .collect()
-                ]
             anomaly_dicts = [
                 {k: v for k, v in a.asDict().items() if k != "run_id"}
                 for a in anoms_rows
@@ -392,6 +372,43 @@ class Pipeline:
             )
             res.gate_passed = failed == 0
         return res
+
+    def _validate_gray_zone(self, run_id: str) -> None:
+        """Optional LLM validation of the committed gray zone (reference
+        validation/router.py:97-256): bounded sample, budget + circuit
+        breaker inside ``llm_validate_sample``.  Verdicts are committed
+        as a snapshot for observe's gate; they never change routing."""
+        if not (self.cfg.scoring.llm_enabled and self.cfg.llm_transport is not None):
+            return
+        results = llm_validate_sample(
+            self.table(run_id, "routed"),
+            self.cfg.scoring,
+            transport=self.cfg.llm_transport,
+        )
+        rows = [
+            (
+                run_id,
+                r.get("url_a"),
+                r.get("url_b"),
+                r.get("decision") or r.get("status"),
+                float(r["confidence"]) if r.get("confidence") is not None else None,
+                list(r.get("reasons") or []),
+                list(r.get("risk_flags") or []),
+                r.get("error"),
+            )
+            for r in results
+        ]
+        self.catalog.write(
+            self._t(run_id, "llm_validations"),
+            local_frame(
+                self.spark,
+                rows,
+                "run_id string, url_a string, url_b string, "
+                "decision string, confidence double, "
+                "reasons array<string>, risk_flags array<string>, "
+                "error string",
+            ),
+        )
 
     def _rate_history(self, run_id: str, n_runs: int) -> list[tuple[str, int, dict]]:
         """(run_id, finished_seq, rates) from ``run_metrics`` for the

@@ -58,16 +58,15 @@ class TableCatalog(ABC):
     @abstractmethod
     def drop(self, name: str) -> None: ...
 
-    def file_row_counts(self, name: str) -> list[int] | None:
+    @abstractmethod
+    def file_row_counts(self, name: str) -> list[int]:
         """Per-data-file row counts of the CURRENT snapshot, from file
         metadata only — no data scan.  This is the 100 TB-friendly
         source for per-partition stage metrics: each write-side file is
         one task's output, so the counts ARE the stage's output-skew
         profile, at O(files) footer reads instead of a full re-scan of
         the snapshot (the observe stage's former cost, VERDICT r3).
-        Returns None when the backend can't answer from metadata —
-        callers fall back to a scan."""
-        return None
+        Every backend answers it; observe has no scan to fall back to."""
 
 
 class ParquetSnapshotCatalog(TableCatalog):

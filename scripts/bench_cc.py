@@ -41,9 +41,10 @@ CROSSOVER_SIZES = (3_000, 15_000, 60_000, 190_000, 400_000, 800_000, 1_600_000)
 LEVELS = (8, 32)
 ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALE_ROUNDS", "2"))
 
-_GEN = r"""
-import sys
-sys.path.insert(0, "/root/repo")
+# the child programs run with `python -c`; this checkout goes first on their path
+_ON_PATH = f"import sys\nsys.path.insert(0, {ROOT!r})\n"
+
+_GEN = _ON_PATH + r"""
 from pyspark.sql import functions as F
 from entity_resolution_engine_spark.session import get_spark
 from entity_resolution_engine_spark.config import DEFAULT_CONFIG
@@ -69,9 +70,8 @@ normalized.select("url").write.mode("overwrite").parquet(out_dir + "/nodes")
 spark.stop()
 """
 
-_CHILD = r"""
+_CHILD = _ON_PATH + r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 from entity_resolution_engine_spark.session import get_spark
 from entity_resolution_engine_spark.operators.cluster import connected_components

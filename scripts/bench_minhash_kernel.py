@@ -23,12 +23,13 @@ Usage: python scripts/bench_minhash_kernel.py [n_docs] [avg_shingles]
 from __future__ import annotations
 
 import multiprocessing as mp
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from entity_resolution_engine_spark.functions.hashing import (  # noqa: E402
     _EMPTY_SENTINEL,

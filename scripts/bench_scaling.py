@@ -56,9 +56,12 @@ CHILD_TIMEOUT = int(os.environ.get("SPARK_GRAFT_SCALE_TIMEOUT", "3000"))
 # reuse a pre-generated corpus dir (skips generation; dir is kept)
 CORPUS_REUSE = os.environ.get("SPARK_GRAFT_SCALE_CORPUS", "")
 
-_GEN = r"""
-import sys
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# the child programs run with `python -c`; this checkout goes first on their path
+_ON_PATH = f"import sys\nsys.path.insert(0, {ROOT!r})\n"
+
+_GEN = _ON_PATH + r"""
 from entity_resolution_engine_spark.session import get_spark
 from entity_resolution_engine_spark.sources.synth import generate_web_pages
 out_dir, n_rows = sys.argv[1], int(sys.argv[2])
@@ -70,9 +73,8 @@ pages.limit(5000).write.mode("overwrite").parquet(out_dir + "/warmup")
 spark.stop()
 """
 
-_CHILD = r"""
+_CHILD = _ON_PATH + r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 from entity_resolution_engine_spark.session import get_spark
 from entity_resolution_engine_spark.config import DEFAULT_CONFIG

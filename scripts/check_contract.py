@@ -3,10 +3,11 @@ queries()[name] on Spark and oracle_sql()[name] on DuckDB at sf0.01,
 compare row count, sorted column names, and the order-insensitive
 multiset of values."""
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

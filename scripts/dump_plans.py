@@ -4,9 +4,11 @@ Python stays out of the hot paths (run after code changes)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from entity_resolution_engine_spark.session import get_spark
 
@@ -86,7 +88,7 @@ def main() -> None:
     out.append(
         f"\n## connected_components star round (large_star ∘ small_star)\n\n```\n{plan.strip()}\n```\n"
     )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

@@ -1,10 +1,11 @@
 """End-to-end smoke: synth corpus → pipeline → pairwise F1 vs planted labels."""
 import shutil
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from entity_resolution_engine_spark.session import get_spark
 from entity_resolution_engine_spark.sources.synth import generate_web_pages

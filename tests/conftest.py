@@ -10,7 +10,7 @@ if os.path.isdir("/dev/shm"):
     # serialize on it (session.py reads this env var — opt-in there)
     os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from entity_resolution_engine_spark.session import get_spark
 

@@ -8,10 +8,11 @@ from pyspark.sql import Row
 
 from entity_resolution_engine_spark.config import AnomalyConfig, QualityGateConfig
 from entity_resolution_engine_spark.operators.metrics import (
+    RUN_METRICS_SCHEMA,
     anomaly_rows,
     quality_gate_rows,
     run_rates,
-    stage_metrics,
+    stage_metrics_rows,
     triage_report_rows,
 )
 from entity_resolution_engine_spark.session import local_frame
@@ -43,14 +44,19 @@ def _history(gray_rates, current_gray):
     return runs
 
 
-def test_stage_metrics_shapes(spark):
-    df = spark.range(100)
-    m = stage_metrics(df, "r", "stage1", 7)
-    rows = m.collect()
-    total = [r for r in rows if r.metric == "row_count"]
-    parts = [r for r in rows if r.metric == "partition_row_count"]
-    assert len(total) == 1 and total[0].value == 100.0
-    assert sum(r.value for r in parts) == 100.0
+def test_stage_metrics_shapes():
+    rows = stage_metrics_rows([40, 0, 60], "r", "stage1", 7)
+    fields = [f.split()[0] for f in RUN_METRICS_SCHEMA.split(", ")]
+    assert all(len(r) == len(fields) for r in rows)
+    cols = [dict(zip(fields, r)) for r in rows]
+    assert {(c["run_id"], c["stage"], c["finished_seq"]) for c in cols} == {("r", "stage1", 7)}
+    total = [c for c in cols if c["metric"] == "row_count"]
+    parts = [c for c in cols if c["metric"] == "partition_row_count"]
+    assert all(isinstance(c["value"], float) for c in cols)
+    assert len(total) == 1 and total[0]["value"] == 100.0
+    assert total[0]["partition_id"] is None
+    assert [c["partition_id"] for c in parts] == [0, 1, 2]
+    assert sum(c["value"] for c in parts) == total[0]["value"]
 
 
 def test_derive_run_rates():

@@ -22,11 +22,13 @@ is committed to the snapshot catalog so a killed run resumes
 mid-clustering (north_rule checkpoint/resume).
 
 Every round and sync point also pays a fixed per-job latency.  An edge
-set of at most ``DRIVER_CC_MAX_EDGES`` surrogate pairs is therefore
-fetched in one bounded job and solved by a vectorized numpy union-find
-on the driver instead; it has no rounds, so only the star loop
-checkpoints mid-clustering.  Both paths hand the same child → root
-star forest to the one id-map join-back below.
+set of at most ``DRIVER_CC_MAX_EDGES`` surrogate pairs, whose node map
+holds at most ``DRIVER_CC_MAX_NODES`` urls, is therefore fetched to the
+driver (edges, then the url↔id map: two bounded jobs) and solved there:
+a vectorized numpy union-find over nodes numbered in url order, whose
+min-label roots are the components' min(url), returned as one
+Arrow-backed ``(url, cluster_id)`` frame with no join-back.  It has no
+rounds, so only the star loop checkpoints mid-clustering.
 
 **Integer node surrogates**: the O(log n) iteration rounds run on
 ``xxhash64(url)`` longs, not url strings.  Every round shuffles the
@@ -34,14 +36,16 @@ full edge set twice, so per-row width is the scale bill — 16 bytes of
 longs vs ~40–120 bytes of url text cuts CC shuffle volume ~5x, and the
 groupBy/min comparisons become integer compares instead of string
 collation.  The url↔id map is built ONCE (from ``all_nodes`` when
-given, else from the edge endpoints) and re-joined ONCE after
-convergence to recover ``cluster_id = min(url)`` per component — the
+given, else from the edge endpoints).  The star loop re-joins it ONCE
+after convergence to recover ``cluster_id = min(url)`` per component;
+the driver path looks the ids up in it on the driver.  Both give the
 same deterministic root as the string-keyed formulation, so cluster
 assignments are byte-identical.  Hash collisions (two urls → one id)
-would silently merge components; ``check_id_collisions`` pins that
-with one aggregate over the node map (expected collisions ≈ n²/2⁶⁵ —
-~0.03 even at 10⁹ nodes; above that, widen the surrogate to a 2×64-bit
-composite before trusting a single hash).
+would silently merge components; ``check_id_collisions`` pins that by
+counting distinct ids over the node map — on the driver when the map
+was fetched, else with one Spark aggregate (expected collisions ≈
+n²/2⁶⁵ — ~0.03 even at 10⁹ nodes; above that, widen the surrogate to a
+2×64-bit composite before trusting a single hash).
 """
 
 from __future__ import annotations
@@ -50,19 +54,22 @@ import time
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import TableCatalog
 
-# Surrogate edge sets of at most this many pairs are solved by the
-# driver union-find; larger ones run the star loop.  Measured with
-# ``scripts/bench_cc.py --crossover`` (BASELINE.md, "CC crossover"):
-# on 4 cores and a 2g heap the driver path won at every size from 3k
-# to 1.6M edges, and at 3.2M neither path completes (the shared
-# join-back's broadcast runs out of heap), so the bound is the largest
-# size at which both were measured.
-DRIVER_CC_MAX_EDGES = 1_600_000
+# Surrogate edge sets of at most this many pairs, whose node map holds
+# at most DRIVER_CC_MAX_NODES urls, are solved by the driver union-find;
+# larger ones run the star loop (a node map over its bound costs the
+# fetch of that many rows first).  Measured with ``scripts/bench_cc.py
+# --crossover`` (BASELINE.md, "CC crossover"): on 4 cores and a 2g heap
+# the driver path won at every size from 3k to 6.4M edges (5.3M nodes),
+# 25.7 s against 67.9 s at the largest; both bounds sit just under that
+# largest measured point.
+DRIVER_CC_MAX_EDGES = 6_000_000
+DRIVER_CC_MAX_NODES = 5_000_000
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -163,19 +170,16 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
     return int(row.n), int(row.h)
 
 
-def _min_root_forest(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Driver union-find over int64 edge arrays → (child, root) for every
-    non-root node, root = the component's min id: the same star forest
-    the large/small-star loop converges to.
+def _min_label_roots(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Driver union-find over dense node indices: nodes ``0..n-1``,
+    edges ``(a[i], b[i])`` → each node's component minimum index.
 
-    Vectorized rounds over dense node indices (sorted, so min index =
-    min id): every root hooks onto the smallest root across its edges
-    (min-label hooking), then pointer jumping flattens the chains that
-    hooking made, until no edge spans two roots.  ``parent[x] <= x``
-    always holds, so the surviving root is the component minimum."""
-    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    a, b = inv[: len(src)], inv[len(src):]
-    parent = np.arange(len(ids))
+    Vectorized rounds: every root hooks onto the smallest root across
+    its edges (min-label hooking), then pointer jumping flattens the
+    chains that hooking made, until no edge spans two roots.
+    ``parent[x] <= x`` always holds, so the surviving root is the
+    component minimum."""
+    parent = np.arange(n)
     while True:
         ra, rb = parent[a], parent[b]
         cross = ra != rb
@@ -187,8 +191,52 @@ def _min_root_forest(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.n
             if np.array_equal(grand, parent):
                 break
             parent = grand
-    child = np.flatnonzero(parent != np.arange(len(ids)))
-    return ids[child], ids[parent[child]]
+    return parent
+
+
+def _driver_assignments(
+    edges: pa.Table, nodes: pa.Table, check_id_collisions: bool
+) -> tuple[pa.Table, int]:
+    """Surrogate edges (src, dst) and the node map (url, id), both
+    fetched → ((url, cluster_id) for every node, star-forest size).
+
+    Nodes are numbered in url order, so the min-label root of each
+    component IS its min(url): pyarrow sorts strings by their UTF-8
+    bytes, the order Spark's ``min`` compares them in (Java's UTF-16
+    order differs above U+FFFF).  Rows sharing an id (a duplicate url,
+    or a collision when the check is off) share the first one's node,
+    as they do in the star loop's join-back."""
+    nodes = nodes.take(pc.sort_indices(nodes, [("url", "ascending")]))
+    urls = nodes.column("url").combine_chunks()
+    ids = nodes.column("id").to_numpy()
+    n = len(ids)
+    by_id = np.argsort(ids, kind="stable")
+    sorted_ids = ids[by_id]
+    first = np.ones(n, bool)
+    first[1:] = sorted_ids[1:] != sorted_ids[:-1]
+    if check_id_collisions and not first.all():
+        raise RuntimeError(
+            f"xxhash64 surrogate collision: {n} urls → {int(first.sum())} ids;"
+            " widen the node surrogate to a 2x64-bit composite for this corpus"
+        )
+    # node of each url-ordered row: the first row of its id group
+    rep = np.empty(n, np.int64)
+    rep[by_id] = by_id[first][np.cumsum(first) - 1]
+
+    ends = np.concatenate(
+        [edges.column("src").to_numpy(), edges.column("dst").to_numpy()]
+    )
+    missing = ends[~np.isin(ends, sorted_ids)]
+    if len(missing):
+        raise ValueError(
+            f"connected_components: edge endpoint id {missing[0]} is not"
+            " covered by all_nodes — pass all_nodes covering every edge"
+            " endpoint, or None to derive the node set from the edges"
+        )
+    ends = rep[by_id[np.searchsorted(sorted_ids, ends)]]
+    root = _min_label_roots(ends[: edges.num_rows], ends[edges.num_rows :], n)
+    out = pa.table({"url": urls, "cluster_id": urls.take(root[rep])})
+    return out, int(np.count_nonzero(root != np.arange(n)))
 
 
 def _star_loop(
@@ -273,13 +321,17 @@ def connected_components(
 
     ``all_nodes`` (url) adds singleton components for nodes with no
     edges.  An edge set of at most ``DRIVER_CC_MAX_EDGES`` surrogate
-    pairs is fetched in one bounded job and solved by a driver
-    union-find; a larger one runs the star loop.  ``catalog`` persists
-    the star loop's working edge set (and the url↔surrogate map,
-    ``<checkpoint_table>_idmap``) every ``checkpoint_every`` rounds —
-    only that path checkpoints mid-clustering; if the checkpoint table
-    already exists the run RESUMES from it instead of the raw edges, on
-    whichever path its size picks.
+    pairs is fetched in one bounded job; when its node map of at most
+    ``DRIVER_CC_MAX_NODES`` urls follows in a second one, a driver
+    union-find solves it and the assignments come back as one
+    Arrow-backed frame, already computed.  Anything larger runs the
+    star loop and joins its forest back through the id map in Spark.
+    ``catalog`` persists the star loop's working edge set (and the
+    url↔surrogate map, ``<checkpoint_table>_idmap``) every
+    ``checkpoint_every`` rounds — only that path checkpoints
+    mid-clustering; if the checkpoint table already exists the run
+    RESUMES from it instead of the raw edges, on whichever path its
+    size picks.
 
     ``rounds_per_check`` composes that many large+small-star rounds
     into ONE job before the convergence signature runs: each signature
@@ -293,7 +345,9 @@ def connected_components(
     the path taken (``driver`` or ``star``), star rounds run, driver
     sync points paid, per-sync wall times, and the final edge count —
     the Amdahl accounting for the scaling analysis in BASELINE.md.  The
-    driver path reports its one fetch as one sync point and no rounds.
+    driver path reports its fetch and solve as one sync point and no
+    rounds, and the size of the star forest it solved as the final
+    edge count.
     """
     spark = edges.sparkSession
     idmap_table = checkpoint_table + "_idmap"
@@ -327,6 +381,32 @@ def connected_components(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
+
+    t0 = time.monotonic()
+    fetched = cur.limit(DRIVER_CC_MAX_EDGES + 1).toArrow()
+    nodes = None
+    if fetched.num_rows <= DRIVER_CC_MAX_EDGES:
+        nodes = id_map.limit(DRIVER_CC_MAX_NODES + 1).toArrow()
+    if nodes is not None and nodes.num_rows <= DRIVER_CC_MAX_NODES:
+        table, final_edges = _driver_assignments(fetched, nodes, check_id_collisions)
+        if stats_out is not None:
+            stats_out.update(
+                {
+                    "path": "driver",
+                    "sync_points": 1,
+                    "star_rounds": 0,
+                    "sync_wall_secs": [round(time.monotonic() - t0, 3)],
+                    "final_edges": final_edges,
+                }
+            )
+        if catalog is not None:
+            for t in (checkpoint_table, idmap_table):
+                if catalog.exists(t):
+                    catalog.drop(t)
+        # an output, not a join input: no checkpoint needed (BASELINE.md
+        # "CC crossover")
+        return spark.createDataFrame(table)
+
     if check_id_collisions:
         stats = id_map.agg(
             F.count("*").alias("n"), F.count_distinct("id").alias("d")
@@ -337,50 +417,28 @@ def connected_components(
                 f"{int(stats.d)} ids; widen the node surrogate to a "
                 "2x64-bit composite for this corpus"
             )
+    idmap_committed = resumed
 
-    t0 = time.monotonic()
-    fetched = cur.limit(DRIVER_CC_MAX_EDGES + 1).toArrow()
-    if fetched.num_rows <= DRIVER_CC_MAX_EDGES:
-        child, root = _min_root_forest(
-            fetched.column("src").to_numpy(), fetched.column("dst").to_numpy()
-        )
-        # lazily checkpointed: the join-back references the forest four
-        # times, and as a bare LocalRelation it ran ~2 s slower at 190k
-        # edges on 4 cores; the checkpoint fills in the first join-back
-        # job, so it costs no job of its own
-        cur = spark.createDataFrame(
-            pa.table({"src": child, "dst": root})
-        ).localCheckpoint(eager=False)
-        if stats_out is not None:
-            stats_out.update(
-                {
-                    "path": "driver",
-                    "sync_points": 1,
-                    "star_rounds": 0,
-                    "sync_wall_secs": [round(time.monotonic() - t0, 3)],
-                    "final_edges": len(child),
-                }
-            )
-    else:
-        idmap_committed = resumed
+    def checkpoint(it: int, nxt: DataFrame) -> None:
+        nonlocal idmap_committed
+        if catalog is None or (it + 1) % checkpoint_every:
+            return
+        if not idmap_committed:
+            # written BEFORE the first edge commit so any edge
+            # checkpoint on disk always has its id map beside it
+            catalog.write(idmap_table, id_map, mode="overwrite")
+            idmap_committed = True
+        catalog.write(checkpoint_table, nxt, mode="overwrite")
 
-        def checkpoint(it: int, nxt: DataFrame) -> None:
-            nonlocal idmap_committed
-            if catalog is None or (it + 1) % checkpoint_every:
-                return
-            if not idmap_committed:
-                # written BEFORE the first edge commit so any edge
-                # checkpoint on disk always has its id map beside it
-                catalog.write(idmap_table, id_map, mode="overwrite")
-                idmap_committed = True
-            catalog.write(checkpoint_table, nxt, mode="overwrite")
-
-        cur = _star_loop(cur, max_iterations, rounds_per_check, checkpoint, stats_out)
+    cur = _star_loop(cur, max_iterations, rounds_per_check, checkpoint, stats_out)
 
     # Converged edge set is a forest of stars (child → root) in id
     # space.  Any root appearing only as dst maps to itself; the url↔id
     # map joins back ONCE, and cluster_id = min(url) per component is
     # recovered with one groupBy — the only place url strings shuffle.
+    # Both joins that read the id map are hinted to sort-merge: a node
+    # map this size must never be broadcast (at 3.2M edges on a 2g heap
+    # the broadcast ran out of heap).
     child = cur.select(F.col("src").alias("id"), F.col("dst").alias("root"))
     roots = cur.select(F.col("dst").alias("id")).distinct()
     root_self = roots.join(
@@ -394,7 +452,7 @@ def connected_components(
     # drop the node from the output (ADVICE r3).  The guard is a
     # codegen'd null check on a column every downstream consumer reads,
     # so Catalyst cannot prune it and it costs no extra shuffle or job.
-    assigned = assign_ids.join(id_map, "id", "left").withColumn(
+    assigned = assign_ids.join(id_map.hint("merge"), "id", "left").withColumn(
         "url",
         F.when(
             F.col("url").isNull(),
@@ -417,9 +475,9 @@ def connected_components(
     out = assigned.join(cluster_roots, "root").select("url", "cluster_id")
 
     # nodes with no surviving edge (singletons, incl. self-loop-only)
-    singles = id_map.join(assign_ids.select("id"), "id", "left_anti").select(
-        "url", F.col("url").alias("cluster_id")
-    )
+    singles = id_map.join(
+        assign_ids.select("id").hint("merge"), "id", "left_anti"
+    ).select("url", F.col("url").alias("cluster_id"))
     out = out.unionByName(singles)
 
     if catalog is not None:

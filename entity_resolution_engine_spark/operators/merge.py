@@ -8,8 +8,12 @@ writer.py:39-43 — lineage explosion into source_lineage rows).
 
 Survivorship rule for web pages: the canonical record is the member
 with the earliest warc_ts (ties broken by url) — "first crawl wins",
-the analog of the reference's alpha-preferred coalesce.  One window
-pass computes the canonical pick, member stats, and confidence.
+the analog of the reference's alpha-preferred coalesce.  The member
+rows and the approved-edge rows are unioned, joined to the cluster
+assignments once, and reduced by one ``groupBy(cluster_id)``: the
+canonical pick is the min of a ``(warc_ts, url, …)`` struct, and the
+confidence is a mean summed as a decimal, so no output depends on how
+the inputs are partitioned.
 
 Lineage stays a typed struct column through the plan and serializes
 with ``to_json`` only at the sink boundary (SURVEY.md §1.2 JSONB rule);
@@ -20,7 +24,7 @@ the count says what was dropped).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _LINEAGE_SAMPLE = 32  # max source urls embedded per entity's lineage JSON
@@ -41,43 +45,63 @@ def merge_entities(
 ) -> DataFrame:
     """(url, cluster_id) ⨝ normalized pages → one canonical entity row
     per cluster (schemas.ENTITIES)."""
-    members = clusters.join(
-        normalized.select("url", "canonical_text", "lang", "warc_ts"), "url"
-    )
-    w = Window.partitionBy("cluster_id").orderBy(F.asc("warc_ts"), F.asc("url"))
-    ranked = members.withColumn("rk", F.row_number().over(w))
-
-    # mean approved-edge score per cluster = merge confidence
-    conf = (
-        routed.filter(F.col("routed_status") == "approved")
-        .join(
-            clusters.select(
-                F.col("url").alias("url_a"), F.col("cluster_id")
-            ),
-            "url_a",
-        )
-        .groupBy("cluster_id")
-        .agg(F.avg("score").alias("merge_confidence"))
-    )
-
-    stats = ranked.groupBy("cluster_id").agg(
-        F.count("*").cast("int").alias("member_count"),
-        F.min("warc_ts").alias("first_seen_ts"),
-        F.max("warc_ts").alias("last_seen_ts"),
-        F.slice(F.sort_array(F.collect_list("url")), 1, _LINEAGE_SAMPLE).alias(
-            "source_urls"
-        ),
-    )
-    canonical = ranked.filter(F.col("rk") == 1).select(
-        "cluster_id",
-        F.col("url").alias("canonical_url"),
+    members = normalized.select(
+        "url",
         "canonical_text",
         "lang",
+        "warc_ts",
+        F.lit(None).alias("score"),
+        F.lit(False).alias("is_edge"),
     )
+    # approved edges keyed by url_a: their scores give the confidence
+    approved = routed.filter(F.col("routed_status") == "approved").select(
+        F.col("url_a").alias("url"),
+        *(F.lit(None).alias(c) for c in ("canonical_text", "lang", "warc_ts")),
+        "score",
+        F.lit(True).alias("is_edge"),
+    )
+    member = ~F.col("is_edge")
     entities = (
-        canonical.join(stats, "cluster_id")
-        .join(conf, "cluster_id", "left")
-        .withColumn("merge_confidence", F.coalesce("merge_confidence", F.lit(1.0)))
+        members.unionByName(approved)
+        .join(clusters.select("url", "cluster_id"), "url")
+        .groupBy("cluster_id")
+        .agg(
+            F.count(F.when(member, 1)).cast("int").alias("member_count"),
+            F.min("warc_ts").alias("first_seen_ts"),
+            F.max("warc_ts").alias("last_seen_ts"),
+            F.slice(
+                F.sort_array(F.collect_list(F.when(member, F.col("url")))),
+                1,
+                _LINEAGE_SAMPLE,
+            ).alias("source_urls"),
+            # first crawl wins: a struct compares field by field, and a
+            # null warc_ts sorts first, as an ascending sort puts it
+            F.min(
+                F.when(
+                    member,
+                    F.struct("warc_ts", "url", "canonical_text", "lang"),
+                )
+            ).alias("canonical"),
+            # mean approved-edge score, summed as a decimal (exact, so
+            # order-free): a double sum depends on the order partitions
+            # arrive in
+            F.avg(F.col("score").cast("decimal(38,18)"))
+            .cast("double")
+            .alias("merge_confidence"),
+        )
+        # a cluster none of whose urls is a normalized page has no entity
+        .filter(F.col("member_count") > 0)
+        .select(
+            "cluster_id",
+            F.col("canonical.url").alias("canonical_url"),
+            "canonical.canonical_text",
+            "canonical.lang",
+            "first_seen_ts",
+            "last_seen_ts",
+            "member_count",
+            "source_urls",
+            F.coalesce("merge_confidence", F.lit(1.0)).alias("merge_confidence"),
+        )
         .withColumn("ues_entity_id", ues_id(F.col("cluster_id")))
         .withColumn(
             "lineage",

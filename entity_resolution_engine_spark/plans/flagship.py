@@ -59,8 +59,10 @@ def resolve_documents(
         # urls) reads it, and it is the widest column in the frame — the
         # projection halves the cache-fill bytes while norm_text is
         # still computed from it inside the one fused ArrowEvalPython
-        # pass.  It stays cached: the returned assignments still
-        # reference it lazily (the all_nodes singleton branch)
+        # pass.  It stays cached: above the driver CC bound the returned
+        # assignments still reference it lazily (the star path's
+        # all_nodes singleton branch); under it they are a computed
+        # Arrow frame that no longer reads it
         return table.drop("canonical_text").cache()
 
     _, _, assignments = resolve(

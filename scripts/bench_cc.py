@@ -10,8 +10,10 @@ shuffle-byte economics of integer surrogates vs url strings.
 
 Usage: python scripts/bench_cc.py [n_rows] — one JSON line to stdout.
 
-Crossover mode times the two CC paths — the driver union-find and the
-star loop (forced by setting ``cluster.DRIVER_CC_MAX_EDGES`` to 0) — on
+Crossover mode times the two CC paths — the driver union-find (forced
+by raising ``cluster.DRIVER_CC_MAX_EDGES`` and ``DRIVER_CC_MAX_NODES``
+past every size) and the star loop (forced by setting
+``DRIVER_CC_MAX_EDGES`` to 0) — on
 the SAME edge sets at several sizes, in one local[nproc] session with a
 2g heap, reps interleaved path by path, and prints the median walls and
 the smallest size at which the star loop was faster:
@@ -120,9 +122,10 @@ spark.stop()
 """
 
 
-def _edge_set(spark, n_edges: int, d: str) -> tuple[str, str, int]:
+def _edge_set(spark, n_edges: int, d: str) -> tuple[str, str, int, int]:
     """Writes an ER-shaped edge set of about ``n_edges`` pairs and its
-    node set under ``d``; returns (edges path, nodes path, edge count)."""
+    node set under ``d``; returns (edges path, nodes path, edge count,
+    node count)."""
     from pyspark.sql import functions as F
 
     clusters = spark.range(max(1, n_edges // 12)).select(
@@ -148,7 +151,9 @@ def _edge_set(spark, n_edges: int, d: str) -> tuple[str, str, int]:
     e_path, n_path = f"{d}/edges_{n_edges}", f"{d}/nodes_{n_edges}"
     edges.write.mode("overwrite").parquet(e_path)
     nodes.write.mode("overwrite").parquet(n_path)
-    return e_path, n_path, spark.read.parquet(e_path).count()
+    return (
+        e_path, n_path, spark.read.parquet(e_path).count(), spark.read.parquet(n_path).count()
+    )
 
 
 def crossover(sizes: list[int], reps: int) -> None:
@@ -164,11 +169,11 @@ def crossover(sizes: list[int], reps: int) -> None:
         app_name="cc_crossover", master=f"local[{cpus}]", shuffle_partitions=cpus,
         extra_conf={"spark.driver.memory": "2g"},
     )
-    driver_max = cluster.DRIVER_CC_MAX_EDGES
+    driver_max = cluster.DRIVER_CC_MAX_EDGES, cluster.DRIVER_CC_MAX_NODES
     d = tempfile.mkdtemp(prefix="er_cc_crossover_")
 
     def timed(e_path, n_path, limit):
-        cluster.DRIVER_CC_MAX_EDGES = limit
+        cluster.DRIVER_CC_MAX_EDGES = cluster.DRIVER_CC_MAX_NODES = limit
         stats: dict = {}
         t0 = time.monotonic()
         out = cluster.connected_components(
@@ -183,7 +188,7 @@ def crossover(sizes: list[int], reps: int) -> None:
     rows = []
     try:
         for n in sizes:
-            e_path, n_path, n_edges = _edge_set(spark, n, d)
+            e_path, n_path, n_edges, n_nodes = _edge_set(spark, n, d)
             walls: dict[str, list[float]] = {p: [] for p in paths}
             answers = set()
             for rep in range(reps + 1):  # rep 0 warms both paths up
@@ -199,13 +204,14 @@ def crossover(sizes: list[int], reps: int) -> None:
             med = {p: statistics.median(w) for p, w in walls.items()}
             rows.append({
                 "edges": n_edges,
+                "nodes": n_nodes,
                 "clusters": answers.pop(),
                 **{f"{p}_median_s": round(m, 3) for p, m in med.items()},
                 **{f"{p}_walls_s": [round(w, 3) for w in ws] for p, ws in walls.items()},
             })
             sys.stderr.write(f"cc crossover: {rows[-1]}\n")
     finally:
-        cluster.DRIVER_CC_MAX_EDGES = driver_max
+        cluster.DRIVER_CC_MAX_EDGES, cluster.DRIVER_CC_MAX_NODES = driver_max
         shutil.rmtree(d, ignore_errors=True)
         spark.stop()
     star_wins = [r["edges"] for r in rows if r["star_median_s"] <= r["driver_median_s"]]
@@ -216,7 +222,8 @@ def crossover(sizes: list[int], reps: int) -> None:
         "reps": reps,
         "sizes": rows,
         "star_faster_from": min(star_wins) if star_wins else None,
-        "driver_cc_max_edges": driver_max,
+        "driver_cc_max_edges": driver_max[0],
+        "driver_cc_max_nodes": driver_max[1],
     }))
 
 

@@ -274,21 +274,72 @@ def test_driver_union_find_equals_star_loop(spark, monkeypatch):
     assert driver_stats["final_edges"] == star_stats["final_edges"]
 
 
-def test_min_root_forest_unit():
-    """Union-find on raw int64 ids: every non-root node points at its
-    component's min id; self-loops and roots are absent."""
+def test_min_label_roots_unit():
+    """Union-find on dense node indices: every node maps to its
+    component's min index; self-loops and untouched nodes map to
+    themselves."""
     import numpy as np
 
-    from entity_resolution_engine_spark.operators.cluster import _min_root_forest
+    from entity_resolution_engine_spark.operators.cluster import _min_label_roots
 
-    src = np.array([9, 7, 5, 5, 100, -3], dtype=np.int64)
-    dst = np.array([8, 9, 8, 5, 200, 100], dtype=np.int64)
-    child, root = _min_root_forest(src, dst)
-    assert dict(zip(child.tolist(), root.tolist())) == {
-        7: 5, 8: 5, 9: 5, 100: -3, 200: -3
+    # nodes 0..7; 7 has no edge, (1, 1) is a self-loop
+    a = np.array([4, 2, 1, 1, 5, 0])
+    b = np.array([3, 4, 3, 1, 6, 5])
+    assert _min_label_roots(a, b, 8).tolist() == [0, 1, 1, 1, 1, 0, 0, 7]
+    empty = np.array([], np.int64)
+    assert _min_label_roots(empty, empty, 3).tolist() == [0, 1, 2]
+    assert len(_min_label_roots(empty, empty, 0)) == 0
+
+
+def test_driver_path_orders_urls_by_utf8_bytes(spark, monkeypatch):
+    """cluster_id = min(url) in Spark's order, UTF-8 bytes: U+FF21 'Ａ'
+    sorts below a supplementary character like U+1F600 in it, above it
+    in Java's UTF-16 order.  The driver path, the forced star loop and
+    a Spark ``min(url)`` per component agree."""
+    from pyspark.sql import functions as F
+
+    from entity_resolution_engine_spark.operators import cluster
+
+    comps = [
+        ["b", "B", "a", "\uff21"],  # ASCII below U+FF21
+        ["\U0001f600", "\uff21x"],  # U+FF21 < U+1F600 in UTF-8 only
+        ["z\U0001f600", "z\uff21", "zé", "zZ"],
+    ]
+    edges = [(c[i], c[i + 1]) for c in comps for i in range(len(c) - 1)]
+    e = spark.createDataFrame(edges, ["src", "dst"])
+    n = spark.createDataFrame([(u,) for c in comps for u in c] + [("solo",)], ["url"])
+
+    def run():
+        stats: dict = {}
+        rows = connected_components(e, all_nodes=n, stats_out=stats).collect()
+        return {r.url: r.cluster_id for r in rows}, stats["path"]
+
+    driver, driver_path = run()
+    monkeypatch.setattr(cluster, "DRIVER_CC_MAX_EDGES", 0)
+    star, star_path = run()
+    comp_of = spark.createDataFrame(
+        [(u, k) for k, c in enumerate(comps) for u in c], ["url", "comp"]
+    )
+    spark_min = {
+        r.url: r.m
+        for r in comp_of.join(
+            comp_of.groupBy("comp").agg(F.min("url").alias("m")), "comp"
+        ).collect()
     }
-    child, root = _min_root_forest(np.array([], np.int64), np.array([], np.int64))
-    assert len(child) == len(root) == 0
+    assert (driver_path, star_path) == ("driver", "star")
+    assert driver == star
+    assert {u: driver[u] for u in spark_min} == spark_min
+    assert driver["a"] == "B" and driver["\U0001f600"] == "\uff21x"
+    assert driver["zZ"] == "zZ" and driver["solo"] == "solo"
+
+
+def test_driver_path_fails_before_returning(spark):
+    """An edge endpoint missing from all_nodes raises inside the driver
+    path's call itself, before any output frame exists."""
+    e = spark.createDataFrame([("a", "b"), ("b", "zzz_not_in_nodes")], ["src", "dst"])
+    n = spark.createDataFrame([("a",), ("b",)], ["url"])
+    with pytest.raises(ValueError, match="not covered by all_nodes"):
+        connected_components(e, all_nodes=n)
 
 
 class TestStarLoopPath:

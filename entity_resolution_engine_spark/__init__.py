@@ -10,7 +10,9 @@ as distributed DataFrame operators designed for 100 TB-scale inputs.
 Layout
 ------
 - ``session``    : SparkSession factory (AQE, Arrow, skew-join on).
-- ``schemas``    : explicit StructTypes for every table (no inference).
+- ``schemas``    : the ``web_pages`` input StructType; every written
+                   table's schema is recorded in its catalog manifest
+                   (no inference anywhere).
 - ``config``     : thresholds / weights / blocking parameters.
 - ``sources``    : deterministic synthetic web_pages generator, the
                    snapshot catalog (parquet+manifest, Iceberg-ready),

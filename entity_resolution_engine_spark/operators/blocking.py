@@ -56,8 +56,9 @@ from ..session import local_frame
 
 def uid_col(url=None) -> F.Column:
     """The 8-byte document surrogate: xxhash64(url) — pure function,
-    identical on every executor, no dictionary join to create it
-    (mirrors cluster.edges_to_ids)."""
+    identical on every executor, no dictionary join to create it.  The
+    one definition: blocking, ``scoring.score_pairs`` and the cluster
+    id map and edges all build their ids with it."""
     return F.xxhash64(F.col("url") if url is None else url)
 
 
@@ -245,12 +246,14 @@ def split_oversized_blocks(
     skew split absorbs the tail.
     """
     n_sub = F.ceil(F.col("block_size") / max_block_size).cast("long")
-    hot = F.broadcast(
+    hot = (
         members.groupBy("block_key")
         .agg(F.count("*").alias("block_size"))
         .filter(F.col("block_size") > max_block_size)
     )
-    tagged = members.join(hot, "block_key", "left")
+    # the hint goes on the join, not on ``hot``: the ledger below reads
+    # ``hot`` too, and a hint outside a join is logged as an error
+    tagged = members.join(F.broadcast(hot), "block_key", "left")
 
     small = tagged.filter(F.col("block_size").isNull()).select(
         "block_key", F.lit(-1).alias("sub"), "uid"

@@ -41,11 +41,17 @@ after convergence to recover ``cluster_id = min(url)`` per component;
 the driver path looks the ids up in it on the driver.  Both give the
 same deterministic root as the string-keyed formulation, so cluster
 assignments are byte-identical.  Hash collisions (two urls → one id)
-would silently merge components; ``check_id_collisions`` pins that by
-counting distinct ids over the node map — on the driver when the map
-was fetched, else with one Spark aggregate (expected collisions ≈
-n²/2⁶⁵ — ~0.03 even at 10⁹ nodes; above that, widen the surrogate to a
-2×64-bit composite before trusting a single hash).
+would silently merge components, so every call checks that the node
+map holds as many distinct ids as distinct urls — on the driver when
+the map was fetched, else with one Spark aggregate.  A url that repeats
+(a re-crawl) is not a collision: its rows share one id and one cluster.
+Expected collisions ≈ n²/2⁶⁵ — ~0.03 even at 10⁹ nodes; above that,
+widen the surrogate to a 2×64-bit composite before trusting a single
+hash.
+
+The surrogate edges enter both paths as they are, with no ``distinct``
+first: the union-find ignores self-loops and repeated edges, and the
+star loop's first ``large_star`` drops self-loops and ends in one.
 """
 
 from __future__ import annotations
@@ -59,6 +65,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import TableCatalog
+from .blocking import uid_col
 
 # Surrogate edge sets of at most this many pairs, whose node map holds
 # at most DRIVER_CC_MAX_NODES urls, are solved by the driver union-find;
@@ -151,15 +158,13 @@ def node_id_map(edges: DataFrame, all_nodes: DataFrame | None = None) -> DataFra
             .unionByName(edges.select(F.col("dst").alias("url")))
             .distinct()
         )
-    return urls.select("url", F.xxhash64("url").alias("id"))
+    return urls.select("url", uid_col().alias("id"))
 
 
 def edges_to_ids(edges: DataFrame) -> DataFrame:
-    """String edges → long surrogate edges (xxhash64 is a pure
+    """String edges → long surrogate edges (``uid_col`` is a pure
     function, so no dictionary join is needed on the edge set)."""
-    return edges.select(
-        F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
-    )
+    return edges.select(uid_col("src").alias("src"), uid_col("dst").alias("dst"))
 
 
 def _signature(edges: DataFrame) -> tuple[int, int]:
@@ -194,18 +199,23 @@ def _min_label_roots(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
     return parent
 
 
-def _driver_assignments(
-    edges: pa.Table, nodes: pa.Table, check_id_collisions: bool
-) -> tuple[pa.Table, int]:
+def _collision_error(n_urls: int, n_ids: int) -> RuntimeError:
+    return RuntimeError(
+        f"xxhash64 surrogate collision: {n_urls} distinct urls → {n_ids} ids;"
+        " widen the node surrogate to a 2x64-bit composite for this corpus"
+    )
+
+
+def _driver_assignments(edges: pa.Table, nodes: pa.Table) -> tuple[pa.Table, int]:
     """Surrogate edges (src, dst) and the node map (url, id), both
     fetched → ((url, cluster_id) for every node, star-forest size).
 
     Nodes are numbered in url order, so the min-label root of each
     component IS its min(url): pyarrow sorts strings by their UTF-8
     bytes, the order Spark's ``min`` compares them in (Java's UTF-16
-    order differs above U+FFFF).  Rows sharing an id (a duplicate url,
-    or a collision when the check is off) share the first one's node,
-    as they do in the star loop's join-back."""
+    order differs above U+FFFF).  Rows of a repeated url share its id
+    and so the first row's node, as they do in the star loop's
+    join-back; two distinct urls on one id raise."""
     nodes = nodes.take(pc.sort_indices(nodes, [("url", "ascending")]))
     urls = nodes.column("url").combine_chunks()
     ids = nodes.column("id").to_numpy()
@@ -214,11 +224,9 @@ def _driver_assignments(
     sorted_ids = ids[by_id]
     first = np.ones(n, bool)
     first[1:] = sorted_ids[1:] != sorted_ids[:-1]
-    if check_id_collisions and not first.all():
-        raise RuntimeError(
-            f"xxhash64 surrogate collision: {n} urls → {int(first.sum())} ids;"
-            " widen the node surrogate to a 2x64-bit composite for this corpus"
-        )
+    n_urls, n_ids = pc.count_distinct(urls).as_py(), int(first.sum())
+    if n_urls != n_ids:
+        raise _collision_error(n_urls, n_ids)
     # node of each url-ordered row: the first row of its id group
     rep = np.empty(n, np.int64)
     rep[by_id] = by_id[first][np.cumsum(first) - 1]
@@ -314,18 +322,22 @@ def connected_components(
     catalog: TableCatalog | None = None,
     checkpoint_table: str = "_cc_edges",
     rounds_per_check: int = 2,
-    check_id_collisions: bool = True,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """edges(src, dst) → assignments(url, cluster_id).
 
     ``all_nodes`` (url) adds singleton components for nodes with no
-    edges.  An edge set of at most ``DRIVER_CC_MAX_EDGES`` surrogate
-    pairs is fetched in one bounded job; when its node map of at most
-    ``DRIVER_CC_MAX_NODES`` urls follows in a second one, a driver
-    union-find solves it and the assignments come back as one
-    Arrow-backed frame, already computed.  Anything larger runs the
-    star loop and joins its forest back through the id map in Spark.
+    edges.  Duplicate and self-loop edges are taken as they are; no
+    ``distinct`` runs before either path.  An edge set of at most
+    ``DRIVER_CC_MAX_EDGES`` surrogate pairs is fetched in one bounded
+    job; when its node map of at most ``DRIVER_CC_MAX_NODES`` urls
+    follows in a second one, a driver union-find solves it and the
+    assignments come back as one Arrow-backed frame, already computed.
+    Anything larger runs the star loop and joins its forest back
+    through the id map in Spark.  Both paths always check the node map
+    for surrogate collisions (distinct urls against distinct ids) and
+    raise ``RuntimeError`` on one; a repeated url in ``all_nodes`` is
+    not a collision, and each of its rows gets the url's cluster.
     ``catalog`` persists the star loop's working edge set (and the
     url↔surrogate map, ``<checkpoint_table>_idmap``) every
     ``checkpoint_every`` rounds — only that path checkpoints
@@ -376,11 +388,7 @@ def connected_components(
             # mismatched state (ADVICE r4)
             catalog.drop(checkpoint_table)
         id_map = node_id_map(edges, all_nodes)
-        cur = (
-            edges_to_ids(edges.select("src", "dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+        cur = edges_to_ids(edges)
 
     t0 = time.monotonic()
     fetched = cur.limit(DRIVER_CC_MAX_EDGES + 1).toArrow()
@@ -388,7 +396,7 @@ def connected_components(
     if fetched.num_rows <= DRIVER_CC_MAX_EDGES:
         nodes = id_map.limit(DRIVER_CC_MAX_NODES + 1).toArrow()
     if nodes is not None and nodes.num_rows <= DRIVER_CC_MAX_NODES:
-        table, final_edges = _driver_assignments(fetched, nodes, check_id_collisions)
+        table, final_edges = _driver_assignments(fetched, nodes)
         if stats_out is not None:
             stats_out.update(
                 {
@@ -407,16 +415,11 @@ def connected_components(
         # "CC crossover")
         return spark.createDataFrame(table)
 
-    if check_id_collisions:
-        stats = id_map.agg(
-            F.count("*").alias("n"), F.count_distinct("id").alias("d")
-        ).collect()[0]
-        if int(stats.n) != int(stats.d):
-            raise RuntimeError(
-                f"xxhash64 surrogate collision: {int(stats.n)} urls → "
-                f"{int(stats.d)} ids; widen the node surrogate to a "
-                "2x64-bit composite for this corpus"
-            )
+    stats = id_map.agg(
+        F.count_distinct("url").alias("n"), F.count_distinct("id").alias("d")
+    ).collect()[0]
+    if stats.n != stats.d:
+        raise _collision_error(stats.n, stats.d)
     idmap_committed = resumed
 
     def checkpoint(it: int, nxt: DataFrame) -> None:

@@ -44,7 +44,7 @@ def merge_entities(
     clusters: DataFrame, normalized: DataFrame, routed: DataFrame
 ) -> DataFrame:
     """(url, cluster_id) ⨝ normalized pages → one canonical entity row
-    per cluster (schemas.ENTITIES)."""
+    per cluster, with the columns of the final select below."""
     members = normalized.select(
         "url",
         "canonical_text",

@@ -20,7 +20,9 @@ from ..sources.readers import fan_out
 
 
 def normalize_pages(web_pages: DataFrame) -> DataFrame:
-    """Returns a DataFrame in schemas.NORMALIZED_PAGES shape."""
+    """web_pages → (url, domain, warc_ts, lang, canonical_text,
+    norm_text, text_md5, n_tokens): the normalized pages, one row per
+    input row, as the select below lays them out."""
     # fan_out: single-row-group inputs otherwise pin the two normalize
     # pandas UDFs — and, through the cache + downstream broadcast
     # joins, the whole block/score chain — to one core (round 6)

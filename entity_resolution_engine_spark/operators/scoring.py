@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..config import ScoringConfig
 from ..functions.similarity import pair_features_udf
+from .blocking import uid_col
 
 
 def logistic_score(raw: F.Column, cfg: ScoringConfig) -> F.Column:
@@ -34,11 +35,12 @@ def logistic_score(raw: F.Column, cfg: ScoringConfig) -> F.Column:
 def score_pairs(
     candidates: DataFrame, normalized: DataFrame, cfg: ScoringConfig
 ) -> DataFrame:
-    """(uid_a, uid_b, …) → schemas.SCORED_PAIRS (+ lang_a/lang_b
-    carried for the router's conflict flags).  Output carries url_a/
-    url_b (re-attached here from ``normalized`` via the uid join —
-    the first point in the pipeline where pair rows pay string
-    bytes)."""
+    """(uid_a, uid_b, block_key, strategy) → (url_a, url_b, strategy,
+    lang_a, lang_b, ts_a, ts_b, the four features, score): the select
+    and the ``score`` column below (langs and timestamps carried for
+    the router's conflict flags).  url_a/url_b re-attach here from
+    ``normalized`` via the uid join — the first point in the pipeline
+    where pair rows pay string bytes."""
     # The pairwise features run on a BOUNDED match key, not the full
     # document: the reference scores normalized NAMES (short keys —
     # players_matcher.py:19-23), and full-document similarity is
@@ -55,7 +57,7 @@ def score_pairs(
     # match_key_chars — exactly the long-document cases the
     # length_mismatch conflict flag exists for (round-2 ADVICE)
     side = normalized.select(
-        F.xxhash64("url").alias("uid"), "url", key.alias("mk"),
+        uid_col().alias("uid"), "url", key.alias("mk"),
         F.length("norm_text").alias("nlen"), "lang", "warc_ts"
     )
     a = side.select(

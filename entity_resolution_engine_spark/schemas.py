@@ -1,20 +1,20 @@
-"""Explicit StructTypes for every engine table.
+"""The input contract: the explicit StructType of ``web_pages``.
 
-The reference declares storage schemas as SQL DDL
-(/root/reference/entity_resolution_engine/db/alpha_schema.sql,
-ues_schema.sql) but lets pandas re-infer them on load; here every
-DataFrame boundary carries an explicit StructType — inference is never
-used (SURVEY.md §1.3).
+Inference is never used (SURVEY.md §1.3).  Only the input needs a
+schema declared here: a file stream cannot infer one, so
+``streaming/incremental.py`` reads ``web_pages`` with this one.  Every
+table the engine writes gets its schema from the operator that
+produces it, and the snapshot catalog's manifest records that schema
+(``df.schema.jsonValue()``) with each snapshot and reads the table back
+with it (``sources/catalog.py``).  The manifest is the one record of a
+written table's schema; a second copy here would drift from it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# ---------------------------------------------------------------------------
-# Primary input (BASELINE.json input_hint)
-# ---------------------------------------------------------------------------
-
+# primary input (BASELINE.json input_hint)
 WEB_PAGES = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -22,151 +22,5 @@ WEB_PAGES = T.StructType(
         T.StructField("html", T.BinaryType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-# Hidden ground truth emitted by the synthetic generator (kept in a
-# separate table, never visible to the pipeline) — analog of the
-# reference's implicit shared-entity ground truth
-# (synthetic/generate_beta_data.py:19-26).
-TRUE_LABELS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("true_cluster_id", T.LongType(), False),
-    ]
-)
-
-LABELED_PAIRS = T.StructType(
-    [
-        T.StructField("url_a", T.StringType(), False),
-        T.StructField("url_b", T.StringType(), False),
-        T.StructField("is_match", T.BooleanType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Pipeline intermediates
-# ---------------------------------------------------------------------------
-
-NORMALIZED_PAGES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("domain", T.StringType(), True),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("canonical_text", T.StringType(), True),
-        T.StructField("norm_text", T.StringType(), True),
-        T.StructField("text_md5", T.StringType(), True),
-        T.StructField("n_tokens", T.IntegerType(), True),
-    ]
-)
-
-CANDIDATE_PAIRS = T.StructType(
-    [
-        # integer surrogates (xxhash64(url)) — pair generation never
-        # ships url strings; urls re-attach in score_pairs' enrichment
-        # join (operators/blocking.py round-5 byte-diet note)
-        T.StructField("uid_a", T.LongType(), False),
-        T.StructField("uid_b", T.LongType(), False),
-        T.StructField("block_key", T.LongType(), True),
-        T.StructField("strategy", T.StringType(), True),  # exact | lsh
-    ]
-)
-
-SCORED_PAIRS = T.StructType(
-    [
-        T.StructField("url_a", T.StringType(), False),
-        T.StructField("url_b", T.StringType(), False),
-        T.StructField("jaro_winkler", T.DoubleType(), True),
-        T.StructField("token_jaccard", T.DoubleType(), True),
-        T.StructField("levenshtein_sim", T.DoubleType(), True),
-        T.StructField("length_ratio", T.DoubleType(), True),
-        T.StructField("score", T.DoubleType(), True),
-    ]
-)
-
-ROUTED_PAIRS = T.StructType(
-    SCORED_PAIRS.fields
-    + [
-        T.StructField("decision", T.StringType(), False),  # approved|rejected|gray
-        T.StructField("routed_status", T.StringType(), False),
-    ]
-)
-
-CLUSTERS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("cluster_id", T.StringType(), False),
-    ]
-)
-
-ENTITIES = T.StructType(
-    [
-        T.StructField("ues_entity_id", T.StringType(), False),
-        T.StructField("cluster_id", T.StringType(), False),
-        T.StructField("canonical_url", T.StringType(), False),
-        T.StructField("canonical_text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("first_seen_ts", T.TimestampType(), True),
-        T.StructField("last_seen_ts", T.TimestampType(), True),
-        T.StructField("member_count", T.IntegerType(), False),
-        T.StructField("merge_confidence", T.DoubleType(), True),
-        T.StructField("lineage", T.StringType(), True),  # JSON at the sink boundary
-    ]
-)
-
-SOURCE_LINEAGE = T.StructType(
-    [
-        T.StructField("ues_entity_id", T.StringType(), False),
-        T.StructField("source_system", T.StringType(), False),
-        T.StructField("source_id", T.StringType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Observability tables (reference ues_schema.sql:76-123)
-# ---------------------------------------------------------------------------
-
-RUN_METRICS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("finished_seq", T.LongType(), False),
-    ]
-)
-
-ANOMALY_EVENTS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("baseline_mean", T.DoubleType(), True),
-        T.StructField("baseline_stddev", T.DoubleType(), True),
-        T.StructField("z_score", T.DoubleType(), True),
-        T.StructField("severity", T.StringType(), False),
-    ]
-)
-
-QUALITY_GATE_RESULTS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("gate", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("bound", T.DoubleType(), True),
-        T.StructField("passed", T.BooleanType(), False),
-    ]
-)
-
-REVIEW_ITEMS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("url_a", T.StringType(), False),
-        T.StructField("url_b", T.StringType(), False),
-        T.StructField("matcher_score", T.DoubleType(), True),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("signals", T.StringType(), True),  # JSON
     ]
 )

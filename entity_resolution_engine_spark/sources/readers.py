@@ -17,7 +17,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition UP TO the session's default parallelism
     when the input has fewer partitions; never shrinks (round 6).
 
@@ -33,8 +33,7 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     compute it unlocks — and is a no-op whenever the scan is already at
     least as wide as the session (any real multi-file table at scale),
     so it cannot shrink cluster-scale parallelism."""
-    sc = df.sparkSession.sparkContext
-    t = target or sc.defaultParallelism
+    t = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= t:
         return df
     return df.repartition(t)

@@ -46,8 +46,9 @@ def generate_web_pages(
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (web_pages, true_labels).
 
-    web_pages matches schemas.WEB_PAGES; true_labels carries the hidden
-    ``true_cluster_id`` per url for F1 evaluation.
+    web_pages matches schemas.WEB_PAGES; true_labels is (url,
+    true_cluster_id): the hidden ground truth per url for F1
+    evaluation, never shown to the pipeline.
     """
     n_clusters = max(1, int(n_rows / _AVG_CLUSTER))
     vocab = F.lit(_VOCAB)

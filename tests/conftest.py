@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -37,3 +39,34 @@ def synth_corpus(spark):
     labels = labels.cache()
     pages.count(), labels.count()
     return pages, labels
+
+
+@pytest.fixture()
+def jobs_run_by(spark):
+    """``jobs_run_by(fn)``: the Spark jobs ``fn`` starts, counted under
+    a fresh job group with ``statusTracker``."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "calls under test")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # status events arrive in order: once a later job is visible,
+        # every job fn started is too
+        sentinel = group + "-sentinel"
+        sc.setJobGroup(sentinel, "sentinel")
+        try:
+            sc.parallelize([1], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup(sentinel)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return count

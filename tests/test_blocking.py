@@ -89,6 +89,24 @@ def test_split_bounds_block_size(spark):
     assert all(e.uid_a < e.uid_b for e in reps)
 
 
+def test_split_ledger_carries_no_hint(spark):
+    """The broadcast hint sits on the join, not on the hot-block frame:
+    the split ledger (written as ``block_splits``) has no hint in its
+    analyzed plan, and the bounded membership and the ledger rows are
+    the uid-hash split of the one hot block."""
+    members = spark.createDataFrame(
+        [(1001, i) for i in range(50)] + [(2002, 900), (2002, 901)],
+        "block_key long, uid long",
+    )
+    bounded, stats = split_oversized_blocks(members, 8)
+    assert "ResolvedHint" not in stats._jdf.queryExecution().analyzed().toString()
+    assert "ResolvedHint" in bounded._jdf.queryExecution().analyzed().toString()
+    assert [tuple(r) for r in stats.collect()] == [(1001, 50, 7)]
+    assert sorted(tuple(r) for r in bounded.collect()) == sorted(
+        [(1001, i % 7, i) for i in range(50)] + [(2002, -1, 900), (2002, -1, 901)]
+    )
+
+
 def test_blocking_recall_on_planted_clusters(spark, synth_corpus, normalized):
     """Candidate connectivity must cover ≥99% of intra-cluster pairs
     (BASELINE.json F1 target is downstream-capped by this).  Measured

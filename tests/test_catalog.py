@@ -15,8 +15,6 @@ import hashlib
 import json
 import os
 import pathlib
-import time
-import uuid
 
 import pytest
 
@@ -46,31 +44,6 @@ def _assert_read_matches_inference(spark, cat, name):
     assert got.schema == inferred.schema, name
     assert got.exceptAll(inferred).isEmpty(), name
     assert inferred.exceptAll(got).isEmpty(), name
-
-
-def _jobs_run_by(spark, fn) -> int:
-    """Spark jobs started by ``fn``, counted under a fresh job group."""
-    sc = spark.sparkContext
-    group = f"catalog-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "catalog calls under test")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # status events arrive in order: once a later job is visible, every
-    # job fn started is too
-    sentinel = group + "-sentinel"
-    sc.setJobGroup(sentinel, "sentinel")
-    try:
-        sc.parallelize([1], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert tracker.getJobIdsForGroup(sentinel)
-    return len(tracker.getJobIdsForGroup(group))
 
 
 def _part_hashes(snap_dir):
@@ -192,7 +165,7 @@ def test_file_row_counts_from_footers(spark, cat):
         cat.file_row_counts("nope")
 
 
-def test_metadata_calls_run_no_spark_job(spark, cat):
+def test_metadata_calls_run_no_spark_job(spark, cat, jobs_run_by):
     cat.write("t", spark.range(20).repartition(2))
     first = cat.snapshots("t")[0]["id"]
     cat.write("t", spark.range(4), mode="append")
@@ -204,9 +177,9 @@ def test_metadata_calls_run_no_spark_job(spark, cat):
         cat.read("t")
         cat.read_snapshot("t", first)
 
-    assert _jobs_run_by(spark, calls) == 0
+    assert jobs_run_by(calls) == 0
     # control: Spark's own schema inference over the same dirs is a job
-    assert _jobs_run_by(spark, lambda: spark.read.parquet(*_chain_dirs(cat, "t"))) >= 1
+    assert jobs_run_by(lambda: spark.read.parquet(*_chain_dirs(cat, "t"))) >= 1
 
 
 def test_pipeline_tables_read_as_inferred(spark, tmp_path):

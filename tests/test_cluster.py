@@ -342,6 +342,77 @@ def test_driver_path_fails_before_returning(spark):
         connected_components(e, all_nodes=n)
 
 
+# a repeated edge (b, a) and a self-loop on d, which has no other edge
+_DUP_LOOP_EDGES = [("b", "a"), ("c", "b"), ("b", "a"), ("d", "d"), ("f", "e")]
+
+
+def test_duplicate_and_self_loop_edges(spark):
+    """A repeated edge and a self-loop enter CC as they are: the
+    components come out as without them, and a node with only a
+    self-loop is a singleton."""
+    a = _assign(spark, _DUP_LOOP_EDGES, nodes=list("abcdef"))
+    assert a == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "e", "f": "e"}
+
+
+def test_repeated_url_is_not_a_collision(spark):
+    """A url that appears twice in all_nodes (a re-crawl) shares one
+    surrogate id: no collision error, and every row of it gets the
+    cluster it gets without the repeat."""
+    edges = [("b", "a"), ("c", "b"), ("e", "d")]
+    e = spark.createDataFrame(edges, ["src", "dst"])
+    nodes = ["a", "b", "c", "d", "e", "solo"]
+
+    def rows(urls):
+        n = spark.createDataFrame([(u,) for u in urls], ["url"])
+        out = connected_components(e, all_nodes=n).collect()
+        return sorted((r.url, r.cluster_id) for r in out)
+
+    once = rows(nodes)
+    twice = rows(nodes + ["c", "solo"])
+    assert twice == sorted(once + [("c", "a"), ("solo", "solo")])
+
+
+def test_driver_assignments_raise_on_collision():
+    """Two distinct urls on one id are a collision: the driver path
+    raises instead of merging their components."""
+    import pyarrow as pa
+
+    from entity_resolution_engine_spark.operators.cluster import _driver_assignments
+
+    edges = pa.table({"src": pa.array([1], pa.int64()), "dst": pa.array([2], pa.int64())})
+    nodes = pa.table({"url": ["a", "b", "c"], "id": pa.array([1, 2, 1], pa.int64())})
+    with pytest.raises(RuntimeError, match="3 distinct urls → 2 ids"):
+        _driver_assignments(edges, nodes)
+
+
+def test_star_loop_raises_on_collision(spark, monkeypatch):
+    """The star path runs the same check as one Spark aggregate before
+    its first round."""
+    from entity_resolution_engine_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(
+        cluster,
+        "node_id_map",
+        lambda edges, all_nodes=None: spark.createDataFrame(
+            [("a", 7), ("b", 7), ("b", 7)], "url string, id long"
+        ),
+    )
+    e = spark.createDataFrame([("a", "b")], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="2 distinct urls → 1 ids"):
+        connected_components(e)
+
+
+def test_driver_path_runs_two_jobs(spark, jobs_run_by):
+    """Under the driver bound CC runs exactly two Spark jobs, the edge
+    fetch and the node fetch: no shuffle dedups the edges first."""
+    e = spark.createDataFrame(_DUP_LOOP_EDGES, ["src", "dst"])
+    n = spark.createDataFrame([(u,) for u in "abcdef"], ["url"])
+    stats: dict = {}
+    assert jobs_run_by(lambda: connected_components(e, all_nodes=n, stats_out=stats)) == 2
+    assert stats["path"] == "driver"
+
+
 class TestStarLoopPath:
     """Every case above again with the driver path switched off, so the
     at-scale star loop (and its mid-clustering checkpoints) stays
@@ -367,4 +438,8 @@ class TestStarLoopPath:
     )
     test_property_random_graphs_vs_union_find = staticmethod(
         test_property_random_graphs_vs_union_find
+    )
+    test_duplicate_and_self_loop_edges = staticmethod(test_duplicate_and_self_loop_edges)
+    test_repeated_url_is_not_a_collision = staticmethod(
+        test_repeated_url_is_not_a_collision
     )

@@ -35,13 +35,16 @@ share), so every column crossing an exchange here is sized for bytes:
 
 Skew handling ("no silent caps"): ``bounded_block_pairs`` is the one
 hot-bucket self-join in the engine — ER blocking here and all five
-LSH-style dedup joins (``operators/dedup.py``) run on it.  Blocks
-larger than ``max_block_size`` are *split* deterministically by uid
-into sub-blocks (all-pairs within each) and re-linked through their
-per-sub-block representatives — connectivity is preserved for
-clustering while per-block pair count stays bounded.  The split is
-reported as a ledger DataFrame (key, size, n_subblocks) next to the
-pairs.
+LSH-style dedup joins (``operators/dedup.py``) run on it.  It first
+collects the split ledger (key, size, n_subblocks) of the blocks
+larger than ``max_block_size`` to the driver, in one eager collect,
+and builds only what that ledger names.  With no block over the cap, the
+pairs are one equi-join on the block key.  Otherwise the oversized
+blocks are *split* deterministically by uid into sub-blocks (all-pairs
+within each) and re-linked through their per-sub-block representatives
+— connectivity is preserved for clustering while per-block pair count
+stays bounded.  The ledger is returned as a local DataFrame next to the
+pairs.  A cap below 1 raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -211,6 +214,46 @@ def lsh_blocks(
     return exploded.select(key.alias("block_key"), "uid")
 
 
+_LEDGER_SCHEMA = "block_key long, block_size long, n_subblocks long"
+
+
+def _split(
+    members: DataFrame, max_block_size: int
+) -> tuple[DataFrame, DataFrame, bool]:
+    """(bounded_members, split ledger, any block split?) — the body of
+    ``split_oversized_blocks``; ``bounded_block_pairs`` reads the flag
+    to skip the split machinery when nothing is over the cap."""
+    if max_block_size < 1:
+        raise ValueError(f"max_block_size must be >= 1, got {max_block_size!r}")
+    hot = (
+        members.groupBy("block_key")
+        .agg(F.count("*").alias("block_size"))
+        .filter(F.col("block_size") > max_block_size)
+        .collect()
+    )
+    rows = sorted(
+        (r.block_key, r.block_size, -(-r.block_size // max_block_size)) for r in hot
+    )
+    stats = local_frame(members.sparkSession, rows, _LEDGER_SCHEMA)
+    if not rows:
+        return members.select("block_key", F.lit(-1).alias("sub"), "uid"), stats, False
+    # the hint goes on the join, not on ``stats``: the ledger is also
+    # written as ``block_splits``, and a hint outside a join is logged
+    # as an error
+    tagged = members.join(
+        F.broadcast(stats.select("block_key", "n_subblocks")), "block_key", "left"
+    )
+    small = tagged.filter(F.col("n_subblocks").isNull()).select(
+        "block_key", F.lit(-1).alias("sub"), "uid"
+    )
+    sub_members = tagged.filter(F.col("n_subblocks").isNotNull()).select(
+        "block_key",
+        F.pmod(F.col("uid"), F.col("n_subblocks")).cast("int").alias("sub"),
+        "uid",
+    )
+    return small.unionByName(sub_members), stats, True
+
+
 def split_oversized_blocks(
     members: DataFrame, max_block_size: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -231,51 +274,46 @@ def split_oversized_blocks(
     - block_stats reports every split block (key, size, n_subblocks) —
       the no-silent-caps ledger.
 
-    Skew-aware plan: block sizes come from a partial-aggregated
-    groupBy; only OVERSIZED keys (a tiny set — the Zipf head) are
-    broadcast back, so the overwhelming singleton/small majority of
-    members passes through with NO sort and NO wide join.  Sub-block
-    assignment is ``pmod(uid, n_sub)`` — uid-global, windowless: a
-    pair of uids that co-occurs in MANY oversized buckets (48 LSH
-    bands all hot for the same page family) lands in the same
-    sub-index everywhere, so the cross-band pair union dedups to ~one
-    band's worth instead of re-slicing per band (the earlier rank
-    round-robin emitted ~88% of all-pairs across bands for a 600-doc
-    family).  The per-sub-block size bound is probabilistic, not hard:
-    sub-block sizes scatter around size/n_sub ≤ max_block_size — AQE's
-    skew split absorbs the tail.
+    The ledger is computed FIRST and EAGERLY, at call time: one
+    partial-aggregated ``groupBy(block_key).count()`` filtered to the
+    oversized keys (a tiny set — the Zipf head) is collected to the
+    driver, and comes back as a ``session.local_frame`` with
+    ``n_subblocks = ceil(size/max)`` in integer arithmetic.  These are
+    the rows a broadcast of the hot keys ships through the driver
+    anyway, so the scale assumption is the same, and readers of the
+    ledger (``Pipeline.run``'s ``block_splits``) never re-run the size
+    aggregation.  ``members`` is read twice (the collect, then the
+    membership), so it should come from a persisted frame, as it does
+    for every caller.  With an empty ledger the bounded membership is
+    ``members`` with ``sub = -1`` — no join at all.  Otherwise only the
+    ledger's keys are broadcast back, so the overwhelming
+    singleton/small majority of members passes through with NO sort
+    and NO wide join.  Sub-block assignment is ``pmod(uid, n_sub)`` —
+    uid-global, windowless: a pair of uids that co-occurs in MANY
+    oversized buckets (48 LSH bands all hot for the same page family)
+    lands in the same sub-index everywhere, so the cross-band pair
+    union dedups to ~one band's worth instead of re-slicing per band
+    (the earlier rank round-robin emitted ~88% of all-pairs across
+    bands for a 600-doc family).  The per-sub-block size bound is
+    probabilistic, not hard: sub-block sizes scatter around
+    size/n_sub ≤ max_block_size — AQE's skew split absorbs the tail.
+    A ``max_block_size`` below 1 raises ``ValueError`` before any
+    Spark job runs.
     """
-    n_sub = F.ceil(F.col("block_size") / max_block_size).cast("long")
-    hot = (
-        members.groupBy("block_key")
-        .agg(F.count("*").alias("block_size"))
-        .filter(F.col("block_size") > max_block_size)
-    )
-    # the hint goes on the join, not on ``hot``: the ledger below reads
-    # ``hot`` too, and a hint outside a join is logged as an error
-    tagged = members.join(F.broadcast(hot), "block_key", "left")
-
-    small = tagged.filter(F.col("block_size").isNull()).select(
-        "block_key", F.lit(-1).alias("sub"), "uid"
-    )
-    sub_members = tagged.filter(F.col("block_size").isNotNull()).select(
-        "block_key",
-        F.pmod(F.col("uid"), n_sub).cast("int").alias("sub"),
-        "uid",
-    )
-    stats = hot.select("block_key", "block_size", n_sub.alias("n_subblocks"))
-    return small.unionByName(sub_members), stats
+    bounded, stats, _ = _split(members, max_block_size)
+    return bounded, stats
 
 
 def rep_star_edges(bounded_members: DataFrame) -> DataFrame:
     """Star edges re-linking a split block's sub-blocks through their
     representatives: for each split base key, every sub-block's min uid
     points at the global min.  Computed FROM the bounded membership
-    (which the caller has persisted) — split rows carry ``sub >= 0``,
-    so two small aggregations over the (rare) split rows suffice.  An
-    earlier formulation derived these from the pre-split frame and
-    recomputed the whole 10M-row explode + hot-count shuffle twice per
-    action — measured 30s for zero output rows at 250k pages."""
+    (which ``bounded_block_pairs`` persists whenever a block splits) —
+    split rows carry ``sub >= 0``, so two small aggregations over the
+    (rare) split rows suffice.  An earlier formulation derived these
+    from the pre-split frame and recomputed the whole 10M-row explode +
+    hot-count shuffle twice per action — measured 30s for zero output
+    rows at 250k pages."""
     split = bounded_members.filter(F.col("sub") >= 0)
     reps = split.groupBy("block_key", "sub").agg(F.min("uid").alias("rep"))
     # roots from the membership directly (min of sub-mins == block min);
@@ -306,15 +344,29 @@ def bounded_block_pairs(
     ships per-doc payloads, or after a verify filter that keeps a tiny
     share of the candidates.
 
-    The bounded membership is persisted once: the self-join and the
-    star aggregations reference it four times, and without the cache
-    each reference would re-run the explode, the size count and the
-    broadcast join that build it.  It is small relative to the corpus
-    (16 B: long key + int sub + long uid).  ``caches`` (when given)
-    collects it so the caller can unpersist once the pairs are
-    materialized — otherwise the cache outlives the stage and
-    pressures executor storage across runs."""
-    bounded, stats = split_oversized_blocks(members, max_block_size)
+    One eager collect runs at call time: the split ledger's (see
+    ``split_oversized_blocks``; two Spark jobs under AQE, the
+    aggregate's map stage and its result).  That is safe because every caller
+    explodes ``members`` from a frame it has persisted (``lsh_blocks``'
+    band arrays, dedup's ``docs``, ``sigs`` and ``vecs``), so the
+    collect fills that cache and the pairs read it again instead of
+    re-running its UDF.  Only what the ledger names is built:
+
+    - empty ledger (no block over the cap — the common case): the pairs
+      are one self-join of ``members`` with ``sub = -1``; no broadcast,
+      no persisted membership, no rep star, no union, and nothing is
+      added to ``caches``.
+    - hot keys: the bounded membership is persisted, because the
+      self-join and the star aggregations reference it four times and
+      without the cache each reference would re-run the explode and the
+      broadcast join that build it.  It is small relative to the corpus
+      (16 B: long key + int sub + long uid).  ``caches`` (when given)
+      collects it so the caller can unpersist once the pairs are
+      materialized — otherwise the cache outlives the stage and
+      pressures executor storage across runs."""
+    bounded, stats, split = _split(members, max_block_size)
+    if not split:
+        return _pairs_within_blocks(bounded), stats
     bounded = bounded.persist()
     if caches is not None:
         caches.append(bounded)
@@ -332,8 +384,8 @@ def lsh_candidates(
 ) -> tuple[DataFrame, DataFrame]:
     """MinHash-LSH candidate pairs (uid_a, uid_b, block_key, strategy)
     + block-split stats, pairs not yet deduped.  ``caches`` collects
-    the band-array cache of ``lsh_blocks`` and the bounded membership
-    of ``bounded_block_pairs``."""
+    the band-array cache of ``lsh_blocks`` and, when a block splits,
+    the bounded membership of ``bounded_block_pairs``."""
     blocks = lsh_blocks(
         normalized, cfg, caches, champions=champions
     )  # persists pre-explode internally
@@ -370,9 +422,7 @@ def candidate_pairs(
     if not parts:
         raise ValueError(f"no known blocking strategies in {cfg.strategies!r}")
     if stats is None:  # exact-only: empty split ledger, same schema
-        stats = local_frame(
-            normalized.sparkSession, [], "block_key long, block_size long, n_subblocks long"
-        )
+        stats = local_frame(normalized.sparkSession, [], _LEDGER_SCHEMA)
     if len(parts) == 1:
         if "lsh" in cfg.strategies:
             # a pair can surface from several band buckets — dedup it

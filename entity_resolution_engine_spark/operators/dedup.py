@@ -80,7 +80,15 @@ def _bucket_pairs(
     """(bucket long, id) membership → (id_a < id_b) candidate pairs,
     hot buckets split and star-linked by ``bounded_block_pairs``.  NOT
     deduped: a pair sharing k buckets appears k times, so each caller
-    dedups before or after its verify (the split ledger is not used)."""
+    dedups before or after its verify (the split ledger is not used).
+
+    Runs one eager collect at call time, the split ledger's, so
+    ``members`` must be exploded from a persisted frame (every caller
+    explodes its persisted ``docs``, ``sigs`` or ``vecs``).  With no
+    bucket over ``max_bucket_size`` the pairs are one equi-join and
+    nothing is added to ``caches``; a hot bucket adds the persisted
+    bounded membership.  ``max_bucket_size`` below 1 raises
+    ``ValueError``."""
     pairs, _ = bounded_block_pairs(
         members.select(F.col("bucket").alias("block_key"), F.col("id").alias("uid")),
         max_bucket_size,

@@ -7,12 +7,18 @@ they assert on url identities or feed CC."""
 
 from __future__ import annotations
 
+import random
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from entity_resolution_engine_spark.config import BlockingConfig
+from entity_resolution_engine_spark.operators import dedup as DD
 from entity_resolution_engine_spark.operators.blocking import (
+    _pairs_within_blocks,
     attach_urls,
+    bounded_block_pairs,
     candidate_pairs,
     exact_candidates,
     split_oversized_blocks,
@@ -105,6 +111,164 @@ def test_split_ledger_carries_no_hint(spark):
     assert sorted(tuple(r) for r in bounded.collect()) == sorted(
         [(1001, i % 7, i) for i in range(50)] + [(2002, -1, 900), (2002, -1, 901)]
     )
+
+
+# --- the lazy splitter the ledger-first one replaced, kept as the
+# reference: every call built the size aggregate, the broadcast join,
+# the persisted membership and the rep star, hot keys or not
+
+
+def _ref_split_oversized_blocks(members, max_block_size):
+    n_sub = F.ceil(F.col("block_size") / max_block_size).cast("long")
+    hot = (
+        members.groupBy("block_key")
+        .agg(F.count("*").alias("block_size"))
+        .filter(F.col("block_size") > max_block_size)
+    )
+    tagged = members.join(F.broadcast(hot), "block_key", "left")
+    small = tagged.filter(F.col("block_size").isNull()).select(
+        "block_key", F.lit(-1).alias("sub"), "uid"
+    )
+    sub_members = tagged.filter(F.col("block_size").isNotNull()).select(
+        "block_key",
+        F.pmod(F.col("uid"), n_sub).cast("int").alias("sub"),
+        "uid",
+    )
+    stats = hot.select("block_key", "block_size", n_sub.alias("n_subblocks"))
+    return small.unionByName(sub_members), stats
+
+
+def _ref_rep_star_edges(bounded_members):
+    split = bounded_members.filter(F.col("sub") >= 0)
+    reps = split.groupBy("block_key", "sub").agg(F.min("uid").alias("rep"))
+    roots = split.groupBy("block_key").agg(F.min("uid").alias("root"))
+    return (
+        reps.join(roots, "block_key")
+        .filter(F.col("rep") != F.col("root"))
+        .select(
+            F.col("root").alias("uid_a"),
+            F.col("rep").alias("uid_b"),
+            F.col("block_key").alias("block_key"),
+        )
+    )
+
+
+def _ref_bounded_block_pairs(members, max_block_size, caches):
+    bounded, stats = _ref_split_oversized_blocks(members, max_block_size)
+    bounded = bounded.persist()
+    caches.append(bounded)
+    pairs = _pairs_within_blocks(bounded).unionByName(_ref_rep_star_edges(bounded))
+    return pairs, stats
+
+
+def _random_members(spark, seed, sizes):
+    """One block per entry of ``sizes``, members drawn from a shared
+    pool of signed 64-bit uids, so a uid sits in several blocks (as a
+    document does across LSH bands) and ``pmod`` sees negative uids."""
+    rng = random.Random(seed)
+    pool = [rng.randint(-(2**62), 2**62) for _ in range(3 * max(sizes))]
+    keys = rng.sample(range(-(10**6), 10**6), len(sizes))
+    rows = [(k, u) for k, n in zip(keys, sizes) for u in rng.sample(pool, n)]
+    return spark.createDataFrame(rows, "block_key long, uid long"), keys
+
+
+_CAP = 8
+_SPLIT_CASES = {
+    # every case holds a block of exactly the cap, which is not split
+    "no_hot": [1, 2, 3, _CAP, 5, 7, _CAP, 1],
+    "one_hot": [3, _CAP, 4 * _CAP + 3, 2, 6],
+    "several_hot": [_CAP + 1, _CAP, 2 * _CAP, 7 * _CAP + 5, 3, 3 * _CAP - 1, 1],
+}
+
+
+@pytest.mark.parametrize("case", list(_SPLIT_CASES))
+@pytest.mark.parametrize("seed", [11, 12])
+def test_splitter_matches_lazy_reference(spark, case, seed):
+    """The ledger-first splitter emits the reference's pair multiset
+    (uid_a, uid_b, block_key) and ledger rows, with and without hot
+    keys."""
+    sizes = _SPLIT_CASES[case]
+    members, keys = _random_members(spark, seed, sizes)
+    caches: list = []
+    want_pairs, want_stats = _ref_bounded_block_pairs(members, _CAP, caches)
+    got_pairs, got_stats = bounded_block_pairs(members, _CAP, caches)
+    want = Counter(tuple(r) for r in want_pairs.collect())
+    got = Counter(tuple(r) for r in got_pairs.collect())
+    want_ledger = sorted(tuple(r) for r in want_stats.collect())
+    got_ledger = sorted(tuple(r) for r in got_stats.collect())
+    for c in caches:
+        c.unpersist()
+    assert got == want
+    assert got_ledger == want_ledger
+    hot = {k for k, n in zip(keys, sizes) if n > _CAP}
+    assert {r[0] for r in got_ledger} == hot
+    assert len(caches) == (2 if hot else 1)  # the reference always persists
+    # the bounded membership agrees too (split_oversized_blocks itself)
+    bounded, stats = split_oversized_blocks(members, _CAP)
+    ref_bounded, _ = _ref_split_oversized_blocks(members, _CAP)
+    assert Counter(map(tuple, bounded.collect())) == Counter(map(tuple, ref_bounded.collect()))
+    assert sorted(tuple(r) for r in stats.collect()) == want_ledger
+
+
+def test_unsplit_pairs_are_one_equi_join(spark, jobs_run_by):
+    """With no block over the cap the pairs are one self-join: nothing
+    persisted, no union, and no broadcast.  Auto-broadcast is off here
+    so that any BroadcastExchange left in the plan is the splitter's own
+    hint.  Building runs the ledger's collect (2 jobs: the aggregate's
+    shuffle map stage and its result); materializing runs the join
+    (2 jobs).  The lazy splitter built with 0 jobs and materialized
+    with 11."""
+    members = spark.createDataFrame(
+        [(k % 40, k) for k in range(200)], "block_key long, uid long"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    caches: list = []
+    built: list = []
+    rows: list = []
+    try:
+        n_build = jobs_run_by(lambda: built.extend(bounded_block_pairs(members, 8, caches)))
+        pairs, stats = built
+        n_materialize = jobs_run_by(lambda: rows.extend(pairs.collect()))
+    finally:
+        spark.conf.set(key, prev)
+    assert (n_build, n_materialize) == (2, 2)
+    assert caches == []
+    assert len(rows) == 40 * 10  # C(5, 2) pairs in each 5-member block
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    for node in ("BroadcastExchange", "InMemoryRelation", "Union"):
+        assert node not in plan, node
+    ledger_plan = stats._jdf.queryExecution().optimizedPlan()
+    assert ledger_plan.getClass().getSimpleName() == "LocalRelation"
+    assert stats.collect() == []
+
+
+@pytest.mark.parametrize("cap", [0, -1])
+def test_cap_below_one_raises_before_any_job(spark, jobs_run_by, cap):
+    """A cap below 1 has no meaning (0 divides by zero, a negative one
+    used to drop pairs silently): both splitter entry points and the
+    dedup joins that pass ``max_bucket_size`` through raise at once."""
+    members = spark.createDataFrame(
+        [(1, i) for i in range(6)], "block_key long, uid long"
+    )
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "alpha beta delta")], ["doc_id", "text"]
+    )
+    caches: list = []
+    calls = [
+        lambda: split_oversized_blocks(members, cap),
+        lambda: bounded_block_pairs(members, cap),
+        lambda: DD.simhash_near_duplicates(docs, max_bucket_size=cap, caches=caches),
+    ]
+    for call in calls:
+        def run():
+            with pytest.raises(ValueError, match="max_block_size must be >= 1"):
+                call()
+
+        assert jobs_run_by(run) == 0
+    for c in caches:  # the signatures, persisted before the join is built
+        c.unpersist()
 
 
 def test_blocking_recall_on_planted_clusters(spark, synth_corpus, normalized):

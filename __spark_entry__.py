@@ -428,8 +428,6 @@ def q_ann_bruteforce(spark, sf):
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # dim=64 unrolls the cosine into codegen'd expressions (round 6) —
-    # bit-identical values (same fold order), same oracle hash
     out = ANN.brute_force_topk(emb, queries, k=5, dim=64)
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "rank"

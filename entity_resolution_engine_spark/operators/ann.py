@@ -27,19 +27,18 @@ from .dedup import cosine_sim_col
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    dim: int,
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank) — exact top-k by cosine.
 
     ``queries`` must be broadcast-small (it is sent to every executor);
     the corpus side streams — total work O(|corpus|·|queries|·dim), no
-    shuffle until the final top-k.  Pass ``dim`` (round 6) to unroll
-    the cosine into codegen'd expressions instead of interpreted HOF
-    folds — bit-identical values, ~an order less CPU per pair (see
+    shuffle until the final top-k.  Every vector must have ``dim``
+    elements; a row of another size raises (see
     dedup.cosine_sim_col)."""
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
@@ -54,7 +53,7 @@ def brute_force_topk(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv"),
     )
     scored = c.crossJoin(F.broadcast(q)).withColumn(
-        "cosine", cosine_sim_col(F.col("qv"), F.col("cv"), dim=dim)
+        "cosine", cosine_sim_col(F.col("qv"), F.col("cv"), dim)
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
@@ -175,7 +174,7 @@ def ivf_topk(
     return (
         c.join(q, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_sim_col(F.col("qv"), F.col("cv"), dim=dim))
+        .withColumn("cosine", cosine_sim_col(F.col("qv"), F.col("cv"), dim))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")

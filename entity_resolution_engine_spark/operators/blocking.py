@@ -217,14 +217,21 @@ def lsh_blocks(
 _LEDGER_SCHEMA = "block_key long, block_size long, n_subblocks long"
 
 
+def check_block_cap(max_block_size: int) -> None:
+    """Raise ``ValueError`` for a block cap below 1 — the one check
+    shared by the splitter and dedup's joins, which call it before
+    they persist anything or start a job."""
+    if max_block_size < 1:
+        raise ValueError(f"max_block_size must be >= 1, got {max_block_size!r}")
+
+
 def _split(
     members: DataFrame, max_block_size: int
 ) -> tuple[DataFrame, DataFrame, bool]:
     """(bounded_members, split ledger, any block split?) — the body of
     ``split_oversized_blocks``; ``bounded_block_pairs`` reads the flag
     to skip the split machinery when nothing is over the cap."""
-    if max_block_size < 1:
-        raise ValueError(f"max_block_size must be >= 1, got {max_block_size!r}")
+    check_block_cap(max_block_size)
     hot = (
         members.groupBy("block_key")
         .agg(F.count("*").alias("block_size"))
@@ -348,7 +355,7 @@ def bounded_block_pairs(
     ``split_oversized_blocks``; two Spark jobs under AQE, the
     aggregate's map stage and its result).  That is safe because every caller
     explodes ``members`` from a frame it has persisted (``lsh_blocks``'
-    band arrays, dedup's ``docs``, ``sigs`` and ``vecs``), so the
+    band arrays, the rows of dedup's ``_bucket_pairs``), so the
     collect fills that cache and the pairs read it again instead of
     re-running its UDF.  Only what the ledger names is built:
 

@@ -22,7 +22,8 @@ Reference parity: the reference engine has no decontamination surface
 (its scope is entity resolution over sports tables); these extend the
 graft's training-data families (SURVEY.md §2.12) alongside
 operators/dedup.py.  Gram/tokenization semantics are shared with
-ngram_jaccard_pairs (dedup.py:489) so one tokenizer pins all gram
+``dedup.ngram_jaccard_pairs`` (both tokenize with
+``functions.hashing.tokens_col``), so one tokenizer pins all gram
 operators.
 
 Scale notes (100 TB):

@@ -19,13 +19,19 @@ exposed as a driver-contract query (__spark_entry__.py):
                      random-hyperplane signs (the scale path; the
                      brute-force baseline lives in operators/ann.py).
 
-The four LSH-style families (MinHash, SimHash, both n-gram paths,
-embedding) generate candidates with the ER pipeline's bucket self-join,
+The five LSH-style joins (MinHash, SimHash, both n-gram paths,
+embedding) share one candidate phase and one join-back.  Each family's
+signature UDF emits (id, buckets array<long>, payload…) rows, and
+``_bucket_pairs`` checks the cap, persists those rows, explodes the
+buckets and runs the ER pipeline's bucket self-join,
 ``blocking.bounded_block_pairs``: hot buckets are split into
 ceil(size/max_bucket_size) sub-buckets and star-linked, so there is
 never an unblocked self-join and never an unbounded bucket; pairs
-always satisfy id_a < id_b.  Ids must be integral (the sub-bucket
-assignment is ``pmod(id, n_sub)``).
+always satisfy id_a < id_b.  ``_attach`` joins the payload columns back
+onto both sides as ``<col>_a``/``<col>_b``, and the family's exact
+predicate decides each pair.  What differs per family is the signature
+UDF, the predicate and where the candidates are deduped.  Ids must be
+integral (the sub-bucket assignment is ``pmod(id, n_sub)``).
 """
 
 from __future__ import annotations
@@ -39,7 +45,7 @@ from pyspark.sql import Window
 
 from ..functions import hashing as H
 from ..sources.readers import fan_out
-from .blocking import bounded_block_pairs
+from .blocking import bounded_block_pairs, check_block_cap
 
 # ---------------------------------------------------------------------------
 # exact
@@ -71,30 +77,82 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# bucket self-join (blocking.bounded_block_pairs, in dedup's column names)
+# candidate phase, join-back and Jaccard verify (the five LSH-style joins)
 # ---------------------------------------------------------------------------
 
 def _bucket_pairs(
-    members: DataFrame, max_bucket_size: int, caches: list | None
+    rows: DataFrame, max_bucket_size: int, caches: list | None
 ) -> DataFrame:
-    """(bucket long, id) membership → (id_a < id_b) candidate pairs,
-    hot buckets split and star-linked by ``bounded_block_pairs``.  NOT
-    deduped: a pair sharing k buckets appears k times, so each caller
-    dedups before or after its verify (the split ledger is not used).
+    """(id, buckets array<long>, payload…) rows → (id_a < id_b)
+    candidate pairs, hot buckets split and star-linked by
+    ``bounded_block_pairs``.  NOT deduped: a pair sharing k buckets
+    appears k times, so each caller dedups before or after its verify
+    (the split ledger is not used).
 
-    Runs one eager collect at call time, the split ledger's, so
-    ``members`` must be exploded from a persisted frame (every caller
-    explodes its persisted ``docs``, ``sigs`` or ``vecs``).  With no
-    bucket over ``max_bucket_size`` the pairs are one equi-join and
-    nothing is added to ``caches``; a hot bucket adds the persisted
-    bounded membership.  ``max_bucket_size`` below 1 raises
-    ``ValueError``."""
-    pairs, _ = bounded_block_pairs(
-        members.select(F.col("bucket").alias("block_key"), F.col("id").alias("uid")),
-        max_bucket_size,
-        caches,
+    A ``max_bucket_size`` below 1 raises ``ValueError`` before anything
+    is persisted or any job runs.  Otherwise ``rows`` is persisted in
+    place and appended to ``caches``: the split ledger's eager collect
+    fills the cache, and the bucket explode and both ``_attach`` joins
+    read it instead of re-running the family's UDF.  With no bucket
+    over the cap the pairs are one equi-join; a hot bucket also adds
+    the persisted bounded membership to ``caches``."""
+    check_block_cap(max_bucket_size)
+    rows.persist()  # returns ``rows`` itself: the caller's frame is cached
+    if caches is not None:
+        caches.append(rows)
+    members = rows.select(
+        F.explode("buckets").alias("block_key"), F.col("id").alias("uid")
     )
+    pairs, _ = bounded_block_pairs(members, max_bucket_size, caches)
     return pairs.select(F.col("uid_a").alias("id_a"), F.col("uid_b").alias("id_b"))
+
+
+def _attach(pairs: DataFrame, rows: DataFrame) -> DataFrame:
+    """(id_a, id_b, …) pairs with the payload of ``_bucket_pairs``' rows
+    joined back on both sides: every column but ``id`` and ``buckets``
+    arrives as ``<col>_a`` and ``<col>_b``."""
+    payload = [c for c in rows.columns if c not in ("id", "buckets")]
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            rows.select(
+                F.col("id").alias(f"id_{side}"),
+                *[F.col(c).alias(f"{c}_{side}") for c in payload],
+            ),
+            f"id_{side}",
+        )
+    return pairs
+
+
+def _jaccard_at_least(pairs: DataFrame, min_jaccard: float) -> DataFrame:
+    """Attached pairs → (id_a, id_b, jaccard ≥ τ), exact.
+
+    ``pairs`` carries ``grams_a``/``grams_b`` (array<long> DISTINCT gram
+    hashes) and ``ng_a``/``ng_b`` (their sizes, ≥ 1).  Three round-6
+    verify economies, all value-preserving:
+
+    - size-ratio prefilter: i ≤ min(|A|,|B|) and u ≥ max(|A|,|B|), so
+      J ≤ min/max — pairs failing min ≥ τ·max can never reach τ and
+      skip the intersect entirely.  The threshold carries a 1e-9
+      relative slack so double rounding can only ADMIT borderline
+      pairs (the exact filter below still decides them), never drop
+      one.
+    - union by sizes: |A∪B| = |A|+|B|−|A∩B| for distinct-element
+      arrays — no array_union build per pair.
+    - int64 gram hashes instead of gram strings: integer set intersect,
+      and the pair join ships 8 B per gram."""
+    ratio_ok = F.least("ng_a", "ng_b").cast("double") >= (
+        F.lit(min_jaccard) * F.greatest("ng_a", "ng_b").cast("double") * (1.0 - 1e-9)
+    )
+    inter = F.size(F.array_intersect("grams_a", "grams_b"))
+    scored = pairs.filter(ratio_ok).select(
+        "id_a", "id_b", inter.alias("i"), "ng_a", "ng_b"
+    )
+    jac = F.col("i") / (F.col("ng_a") + F.col("ng_b") - F.col("i"))
+    return (
+        scored.withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= min_jaccard)
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -116,7 +174,7 @@ def minhash_verified_near_duplicates(
     """(id_a, id_b, jaccard) near-duplicate pairs with EXACT shingle
     Jaccard: MinHash-LSH generates the candidates (ids only through the
     band shuffle), then the distinct word-shingle sets join back and
-    ``array_intersect``/``array_union`` compute the true Jaccard — pure
+    ``array_intersect`` and the set sizes give the true Jaccard — pure
     JVM, no estimate.
 
     Precision is 1.0 by construction (every emitted pair is exactly
@@ -142,7 +200,7 @@ def minhash_verified_near_duplicates(
     only move LSH recall within the same 1-(1-J^rows)^bands bound the
     docstring above pins (≈1e-11 miss at τ=0.8), exactly like the
     fast-ngram path's documented equivalence.  The verify join ships
-    int64 shingle hashes and applies the _verified_jaccard_pairs
+    int64 shingle hashes and applies the _jaccard_at_least
     economies (size-ratio prefilter, union-by-sizes); hashed-shingle
     jaccard equals string-shingle jaccard absent 64-bit fold
     collisions.
@@ -173,7 +231,9 @@ def minhash_verified_near_duplicates(
     keep the per-doc banding whose bounded-bucket star semantics are
     the documented cap.  ``champion_expansion`` overrides the gate
     (True/False) — test hook pinning branch equality on a corpus below
-    the cap (tests/test_dedup.py)."""
+    the cap (tests/test_dedup.py).  A ``max_bucket_size`` below 1 raises
+    ``ValueError`` before ``groups`` is persisted or the gate runs."""
+    check_block_cap(max_bucket_size)
     documents = fan_out(documents)  # round 6: see readers.fan_out
     bg_udf = H.make_minhash_band_gram_udf(num_hashes, bands, shingle_size)
 
@@ -209,20 +269,14 @@ def minhash_verified_near_duplicates(
     )
     docs = docs.select("id", bg_udf("th").alias("bg")).select(
         "id",
-        F.col("bg.bands").alias("bands"),
+        F.col("bg.bands").alias("buckets"),
         F.col("bg.grams").alias("grams"),
         F.size("bg.grams").alias("ng"),
     )
-    # referenced 3x (band explode + both verify joins) — persist or the
-    # Python UDF re-evaluates per reference
-    docs = docs.persist()
-    if caches is not None:
-        caches.append(docs)
-    bands_df = docs.select("id", F.explode("bands").alias("bucket"))
-    pair_ids = _bucket_pairs(bands_df, max_bucket_size, caches).dropDuplicates(
+    pair_ids = _bucket_pairs(docs, max_bucket_size, caches).dropDuplicates(
         ["id_a", "id_b"]
     )
-    verified = _verified_jaccard_pairs(pair_ids, docs, min_jaccard)
+    verified = _jaccard_at_least(_attach(pair_ids, docs), min_jaccard)
     if not champion_expansion:
         return verified
 
@@ -332,12 +386,7 @@ def simhash_near_duplicates(
     4×15-bit blocks at the default max_hamming) — the driver's DuckDB
     oracle reproduces it bit-for-bit; ``xxhash64`` stays the
     production path."""
-    # the block self-join references the signature frame on BOTH sides —
-    # without persist Catalyst evaluates the simhash pandas UDF twice
-    # (same pitfall as lsh_blocks; caller/bench clears the cache)
-    sigs = simhash_signatures(documents, id_col, text_col, hash_mode).persist()
-    if caches is not None:
-        caches.append(sigs)
+    sigs = simhash_signatures(documents, id_col, text_col, hash_mode)
     nblocks = max_hamming + 1
     nbits = 60 if hash_mode == "md5_60" else 64
     width = nbits // nblocks
@@ -349,97 +398,30 @@ def simhash_near_duplicates(
     # defensive for other max_hamming values)
     def _block_width(i: int) -> int:
         return width if i < nblocks - 1 else nbits - (nblocks - 1) * width
-    blocks = F.array(
+    # (block_idx, block_val) folds to one long bucket key: a 2^-64
+    # xxhash64 collision only merges two buckets' candidate lists, and
+    # the exact Hamming filter below still decides every pair
+    buckets = F.array(
         *[
-            F.struct(
-                F.lit(i).alias("block_idx"),
+            F.xxhash64(
+                F.lit(i),
                 F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(
                     F.lit((1 << _block_width(i)) - 1)
-                ).alias("block_val"),
+                ),
             )
             for i in range(nblocks)
         ]
     )
-    # ids-only through the candidate shuffle (bounded buckets), then
-    # re-attach the two 64-bit signatures for the Hamming verify
-    # (block_idx, block_val) folds to one long bucket key: a 2^-64
-    # xxhash64 collision only merges two buckets' candidate lists, and
-    # the exact Hamming filter below still decides every pair
-    exploded = sigs.select(
-        "id", F.explode(blocks).alias("b")
-    ).select(
-        F.xxhash64(F.col("b.block_idx"), F.col("b.block_val")).alias("bucket"),
-        "id",
-    )
-    pair_ids = _bucket_pairs(exploded, max_bucket_size, caches).dropDuplicates(
+    rows = sigs.select("id", buckets.alias("buckets"), "simhash")
+    pair_ids = _bucket_pairs(rows, max_bucket_size, caches).dropDuplicates(
         ["id_a", "id_b"]
     )
-    pairs = pair_ids.join(
-        sigs.select(F.col("id").alias("id_a"), F.col("simhash").alias("sim_a")), "id_a"
-    ).join(
-        sigs.select(F.col("id").alias("id_b"), F.col("simhash").alias("sim_b")), "id_b"
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        pairs.withColumn("hamming", hamming)
+        _attach(pair_ids, rows)
+        .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-
-
-# ---------------------------------------------------------------------------
-# shared exact-Jaccard verify over distinct gram-hash sets
-# ---------------------------------------------------------------------------
-
-def _verified_jaccard_pairs(
-    pair_ids: DataFrame,
-    docs: DataFrame,
-    min_jaccard: float,
-) -> DataFrame:
-    """Candidate (id_a, id_b) pairs → (id_a, id_b, jaccard ≥ τ), exact.
-
-    ``docs`` carries (id, grams: array<long> DISTINCT gram hashes,
-    ng: |grams| ≥ 1).  Three round-6 verify economies, all
-    value-preserving:
-
-    - size-ratio prefilter: i ≤ min(|A|,|B|) and u ≥ max(|A|,|B|), so
-      J ≤ min/max — pairs failing min ≥ τ·max can never reach τ and
-      skip the intersect entirely (the dominant verify cost when LSH
-      candidates outnumber survivors 1000:1).  The threshold carries a
-      1e-9 relative slack so double rounding can only ADMIT borderline
-      pairs (the exact filter below still decides them), never drop
-      one.
-    - union by sizes: |A∪B| = |A|+|B|−|A∩B| for distinct-element
-      arrays — no array_union build per pair.
-    - int64 gram hashes instead of gram strings: integer set intersect,
-      and the pair join ships 8 B per gram."""
-    pairs = pair_ids.join(
-        docs.select(
-            F.col("id").alias("id_a"),
-            F.col("grams").alias("grams_a"),
-            F.col("ng").alias("na"),
-        ),
-        "id_a",
-    ).join(
-        docs.select(
-            F.col("id").alias("id_b"),
-            F.col("grams").alias("grams_b"),
-            F.col("ng").alias("nb"),
-        ),
-        "id_b",
-    )
-    ratio_ok = F.least("na", "nb").cast("double") >= (
-        F.lit(min_jaccard) * F.greatest("na", "nb").cast("double") * (1.0 - 1e-9)
-    )
-    inter = F.size(F.array_intersect("grams_a", "grams_b"))
-    scored = pairs.filter(ratio_ok).select(
-        "id_a", "id_b", inter.alias("i"), "na", "nb"
-    )
-    jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-    return (
-        scored.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -487,36 +469,30 @@ def ngram_jaccard_pairs(
         F.size("toks") > 0
     )
     gb_udf = H.make_md5_gram_bands_udf(n, num_bands)
-    docs = docs.select("id", gb_udf("toks").alias("gb")).select(
-        "id",
-        F.col("gb.grams").alias("grams"),
-        F.size("gb.grams").alias("ng"),
-        F.col("gb.bands").alias("bands"),
-    )
-    # referenced 3x (band explode + both pair joins) — persist or
-    # Catalyst re-evaluates the Python UDF per reference
-    docs = docs.persist()
-    if caches is not None:
-        caches.append(docs)
     # bucket byte diet: the band STRING ("b|<32 hex>", ~35 B) only needs
     # its equality classes for the self-join — xxhash64 folds it to an
     # 8 B long (a 2^-64 bucket-string collision merely merges two
     # buckets' candidate lists, which the exact verify then filters; an
     # output change additionally needs the spurious pair to clear the
     # jaccard threshold — the same negligible-collision standard as the
-    # gram hashes).  Pair dedup runs after the verify filter:
-    # candidates outnumber survivors ~3000:1 here, so the wide
-    # (id_a, id_b) exchange moves to the 2.5k-row survivor set.  The
-    # result equals deduping first, because jaccard is a pure function
-    # of the pair.
-    exploded = docs.select(
+    # gram hashes).
+    docs = docs.select("id", gb_udf("toks").alias("gb")).select(
         "id",
-        F.explode(
-            F.transform("bands", lambda b: F.xxhash64(b))
-        ).alias("bucket"),
+        F.transform("gb.bands", lambda b: F.xxhash64(b)).alias("buckets"),
+        F.col("gb.grams").alias("grams"),
+        F.size("gb.grams").alias("ng"),
     )
-    pair_ids = _bucket_pairs(exploded, max_bucket_size, caches)
-    return _verified_jaccard_pairs(pair_ids, docs, min_jaccard).dropDuplicates(
+    # Pair dedup runs after the verify filter.  The result equals
+    # deduping first, because jaccard is a pure function of the pair;
+    # which placement is cheaper depends on how many candidates
+    # survive.  Medians of 5 interleaved pairs on a 4-core host: this
+    # path at sf0.1 (86k raw candidates, 256 survivors) took 2.27 s,
+    # and 2.69 s with dedup first; ngram_jaccard_pairs_fast on the
+    # erbench near_dup seed-1 corpus (109k raw candidates, 17k
+    # distinct, 17k survivors) took 2.38 s, and 2.26 s with dedup
+    # first.  Both n-gram paths keep dedup-after-verify.
+    pair_ids = _bucket_pairs(docs, max_bucket_size, caches)
+    return _jaccard_at_least(_attach(pair_ids, docs), min_jaccard).dropDuplicates(
         ["id_a", "id_b"]
     )
 
@@ -559,21 +535,15 @@ def ngram_jaccard_pairs_fast(
     gb_udf = H.make_minhash_band_gram_udf(num_bands, num_bands, n)
     docs = docs.select("id", gb_udf("th").alias("gb")).select(
         "id",
+        F.col("gb.bands").alias("buckets"),
         F.col("gb.grams").alias("grams"),
         F.size("gb.grams").alias("ng"),
-        F.col("gb.bands").alias("bands"),
     )
-    # the UDF output is referenced 3x (band explode + both pair joins)
-    # — persist or Catalyst re-evaluates the Python UDF per reference
-    docs = docs.persist()
-    if caches is not None:
-        caches.append(docs)
-    exploded = docs.select("id", F.explode("bands").alias("bucket"))
     # same verify economies and post-verify pair dedup as
-    # ngram_jaccard_pairs — grams here are already distinct int64
-    # hashes, so jaccard values are unchanged
-    pair_ids = _bucket_pairs(exploded, max_bucket_size, caches)
-    return _verified_jaccard_pairs(pair_ids, docs, min_jaccard).dropDuplicates(
+    # ngram_jaccard_pairs (see the measurement there) — grams here are
+    # already distinct int64 hashes, so jaccard values are unchanged
+    pair_ids = _bucket_pairs(docs, max_bucket_size, caches)
+    return _jaccard_at_least(_attach(pair_ids, docs), min_jaccard).dropDuplicates(
         ["id_a", "id_b"]
     )
 
@@ -641,41 +611,25 @@ def make_srp_bands_udf(dim: int, planes_per_band: int, n_bands: int):
     return srp_bands_udf
 
 
-def cosine_sim_col(a: F.Column, b: F.Column, dim: int | None = None) -> F.Column:
-    """Cosine similarity over two array<double> columns — pure JVM, no
-    Python.
+def cosine_sim_col(a: F.Column, b: F.Column, dim: int) -> F.Column:
+    """Cosine similarity over two array<double> columns of exactly
+    ``dim`` elements — pure JVM, no Python.
 
-    With ``dim`` given (round 6), the fold is UNROLLED into a flat
-    left-associated chain of element_at multiply-adds — whole-stage
-    codegen'd, unlike the interpreted higher-order ``aggregate`` /
-    ``zip_with`` lambdas (measured ~18µs per 64-dim cosine interpreted;
-    the unrolled form is ~an order cheaper).  The chain adds terms in
-    the same index order with the same 0.0 seed, so results are
-    BIT-IDENTICAL to the fold (IEEE-754 addition in identical order) —
-    pinned by the ann_bruteforce/ann_ivf/embedding_near_dup oracle hash
-    matches.  Both arrays must have exactly ``dim`` elements: a row
-    where either size differs raises (``raise_error``) instead of
-    truncating a longer array or reading past a shorter one.  A NULL
-    array gives 0.0, as in the fold form.  Without ``dim`` the original
-    fold form is used."""
-    if dim is None:
-        dot = F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-        )
-        na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-        nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-        return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
-    dot = F.lit(0.0)
-    sa = F.lit(0.0)
-    sb = F.lit(0.0)
-    for i in range(1, dim + 1):
-        ai = F.element_at(a, i)
-        bi = F.element_at(b, i)
-        dot = dot + ai * bi
-        sa = sa + ai * ai
-        sb = sb + bi * bi
-    na = F.sqrt(sa)
-    nb = F.sqrt(sb)
+    The dot product and both norms are ``aggregate`` folds from a 0.0
+    seed in index order.  Those higher-order lambdas run interpreted,
+    but an unrolled chain of ``dim`` element_at multiply-adds is slower:
+    at dim=64 its generated code passes 64 KB, whole-stage codegen
+    fails and the plan falls back (sf0.1 brute-force top-5 over 10
+    queries, medians of 5 interleaved runs on a 4-core host: fold
+    0.60 s, unrolled 2.77 s, identical rows).  A row where either
+    array's size differs from ``dim`` raises (``raise_error``) instead
+    of truncating a longer array or reading past a shorter one.  A
+    NULL array gives 0.0."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+    )
+    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
     return F.when(
         (F.array_size(a) != dim) | (F.array_size(b) != dim),
         F.raise_error(F.lit(f"cosine_sim_col: array size differs from dim={dim}")),
@@ -712,18 +666,13 @@ def embedding_near_duplicates(
     vecs = embeddings.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn("buckets", srp(F.col("v"))).persist()
-    if caches is not None:
-        caches.append(vecs)
-    members = vecs.select("id", F.explode("buckets").alias("bucket"))
-    pair_ids = _bucket_pairs(members, max_bucket_size, caches).dropDuplicates(
+    ).withColumn("buckets", srp(F.col("v")))
+    pair_ids = _bucket_pairs(vecs, max_bucket_size, caches).dropDuplicates(
         ["id_a", "id_b"]
     )
-    pairs = pair_ids.join(
-        vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a"
-    ).join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")), "id_b")
     return (
-        pairs.withColumn("cosine", cosine_sim_col(F.col("v_a"), F.col("v_b"), dim=dim))
+        _attach(pair_ids, vecs)
+        .withColumn("cosine", cosine_sim_col(F.col("v_a"), F.col("v_b"), dim))
         .filter(F.col("cosine") >= min_cosine)
         .select("id_a", "id_b", "cosine")
     )

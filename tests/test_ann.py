@@ -38,7 +38,7 @@ def test_brute_force_matches_numpy(spark, vectors):
     queries = df.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    got = brute_force_topk(df, queries, k=10)
+    got = brute_force_topk(df, queries, DIM, k=10)
     by_q = {}
     for r in got.collect():
         by_q.setdefault(r.query_id, []).append((r.rank, r.neighbor_id))
@@ -53,7 +53,7 @@ def test_ivf_recall_vs_brute_force(spark, vectors):
     queries = df.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    bf = brute_force_topk(df, queries, k=10)
+    bf = brute_force_topk(df, queries, DIM, k=10)
     ivf = ivf_topk(df, queries, dim=DIM, k=10, nlist=8, nprobe=4)
     bf_set = {(r.query_id, r.neighbor_id) for r in bf.collect()}
     ivf_set = {(r.query_id, r.neighbor_id) for r in ivf.collect()}
@@ -78,7 +78,7 @@ def test_ivf_recall_at_5_on_clustered_data(spark):
     queries = df.filter(F.col("vec_id") % 40 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    bf = brute_force_topk(df, queries, k=5)
+    bf = brute_force_topk(df, queries, dim, k=5)
     ivf = ivf_topk(df, queries, dim=dim, k=5, nlist=8, nprobe=4)
     bf_set = {(r.query_id, r.neighbor_id) for r in bf.collect()}
     ivf_set = {(r.query_id, r.neighbor_id) for r in ivf.collect()}
@@ -111,7 +111,7 @@ def test_ivf_exhaustive_probe_equals_brute_force(spark, vectors):
     )
     bf = {
         (r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 9))
-        for r in brute_force_topk(df, queries, k=8).collect()
+        for r in brute_force_topk(df, queries, DIM, k=8).collect()
     }
     ivf = {
         (r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 9))

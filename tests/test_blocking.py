@@ -247,28 +247,43 @@ def test_unsplit_pairs_are_one_equi_join(spark, jobs_run_by):
 @pytest.mark.parametrize("cap", [0, -1])
 def test_cap_below_one_raises_before_any_job(spark, jobs_run_by, cap):
     """A cap below 1 has no meaning (0 divides by zero, a negative one
-    used to drop pairs silently): both splitter entry points and the
-    dedup joins that pass ``max_bucket_size`` through raise at once."""
+    used to drop pairs silently): both splitter entry points and all
+    five dedup joins that pass ``max_bucket_size`` through raise at
+    once — no Spark job, nothing added to ``caches``, no new
+    persistent RDD."""
     members = spark.createDataFrame(
         [(1, i) for i in range(6)], "block_key long, uid long"
     )
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "alpha beta delta")], ["doc_id", "text"]
     )
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.1])], ["vec_id", "embedding"]
+    )
     caches: list = []
     calls = [
         lambda: split_oversized_blocks(members, cap),
-        lambda: bounded_block_pairs(members, cap),
+        lambda: bounded_block_pairs(members, cap, caches),
+        lambda: DD.minhash_verified_near_duplicates(
+            docs, max_bucket_size=cap, caches=caches
+        ),
         lambda: DD.simhash_near_duplicates(docs, max_bucket_size=cap, caches=caches),
+        lambda: DD.ngram_jaccard_pairs(docs, max_bucket_size=cap, caches=caches),
+        lambda: DD.ngram_jaccard_pairs_fast(docs, max_bucket_size=cap, caches=caches),
+        lambda: DD.embedding_near_duplicates(
+            emb, dim=2, max_bucket_size=cap, caches=caches
+        ),
     ]
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
     for call in calls:
         def run():
             with pytest.raises(ValueError, match="max_block_size must be >= 1"):
                 call()
 
+        before = set(persistent().keySet())
         assert jobs_run_by(run) == 0
-    for c in caches:  # the signatures, persisted before the join is built
-        c.unpersist()
+        assert caches == []
+        assert set(persistent().keySet()) == before
 
 
 def test_blocking_recall_on_planted_clusters(spark, synth_corpus, normalized):

@@ -100,9 +100,8 @@ def test_embedding_near_duplicates(spark):
 
 @pytest.mark.parametrize("b", [[1.0, 2.0, 3.0, 100.0], [1.0, 2.0]])
 def test_cosine_sim_col_dim_mismatch_raises(spark, b):
-    """With ``dim`` given, an array longer than dim (which the unrolled
-    chain would truncate, giving cosine 1.0 here) or shorter than dim
-    fails the query instead of scoring."""
+    """An array longer than dim (which a truncating cosine would score
+    1.0 here) or shorter than dim fails the query instead of scoring."""
     df = spark.createDataFrame([([1.0, 2.0, 3.0], b)], "a array<double>, b array<double>")
     with pytest.raises(Exception, match="array size differs from dim=3"):
         df.select(DD.cosine_sim_col(F.col("a"), F.col("b"), dim=3)).collect()
@@ -117,6 +116,38 @@ def test_cosine_sim_col_dim_exact_and_null(spark):
     )
     got = [r.c for r in df.select(DD.cosine_sim_col(F.col("a"), F.col("b"), dim=3).alias("c")).collect()]
     assert got[0] == pytest.approx(1.0) and got[1] == 0.0
+
+
+def test_jaccard_at_least_equals_exact_jaccard(spark):
+    """The shared Jaccard verify keeps exactly the pairs whose set
+    Jaccard reaches τ, with the exact value.  The first pair sits at
+    J == τ == 0.28 with sizes 25 and 7, where a size-ratio prefilter
+    without its slack would drop it (7.0 >= 0.28 * 25.0 is False in
+    doubles)."""
+    import random
+
+    rng = random.Random(9)
+    rows = [(0, 1, list(range(25)), list(range(7)))]
+    for i in range(2, 200):
+        a = rng.sample(range(30), rng.randint(1, 20))
+        b = rng.sample(range(30), rng.randint(1, 20))
+        rows.append((i, i + 1000, a, b))
+    pairs = spark.createDataFrame(
+        rows, "id_a long, id_b long, grams_a array<long>, grams_b array<long>"
+    ).select("*", F.size("grams_a").alias("ng_a"), F.size("grams_b").alias("ng_b"))
+    assert not 7.0 >= 0.28 * 25.0
+    for tau in (0.5, 0.28):
+        want = {}
+        for ia, ib, a, b in rows:
+            j = len(set(a) & set(b)) / len(set(a) | set(b))
+            if j >= tau:
+                want[(ia, ib)] = j
+        got = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in DD._jaccard_at_least(pairs, tau).collect()
+        }
+        assert got == want
+    assert (0, 1) in got
 
 
 def test_srp_band_params_recall_math():
@@ -238,6 +269,7 @@ def test_dedup_cache_ledgers_release_storage(spark, docs):
         ),
         lambda c: DD.simhash_near_duplicates(docs, caches=c),
         lambda c: DD.ngram_jaccard_pairs(docs, caches=c),
+        lambda c: DD.ngram_jaccard_pairs_fast(docs, caches=c),
         lambda c: DD.embedding_near_duplicates(
             emb, dim=8, min_cosine=0.9, caches=c
         ),

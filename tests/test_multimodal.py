@@ -73,5 +73,5 @@ def test_features_feed_ann(spark, media):
     queries = feats.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = brute_force_topk(feats, queries, k=3)
+    out = brute_force_topk(feats, queries, MM.FEATURE_DIM, k=3)
     assert out.count() == 9

@@ -663,8 +663,7 @@ def q_tfidf_top_terms(spark, sf):
 
 
 def q_doc_fingerprints(spark, sf):
-    # md5-mode winnowing (textstats.document_fingerprints_md5): same
-    # window-min selection as the production xxhash UDF, but with an
+    # winnowing (textstats.document_fingerprints_md5) with an
     # md5-derived gram hash DuckDB reproduces — the oracle value-checks
     # every selected fingerprint, not just counts (round-2 verdict
     # item 5; the ngram_jaccard md5-parity pattern)
@@ -718,7 +717,7 @@ def q_country_map_normalize(spark, sf):
     return _t(spark, sf, "nation").select(
         "n_nationkey",
         F.coalesce(
-            mapping.getItem(F.lower(F.col("n_name"))), F.col("n_name")
+            mapping[F.lower(F.col("n_name"))], F.col("n_name")
         ).alias("canonical_name"),
     )
 

@@ -1,4 +1,5 @@
-"""MinHash / SimHash / winnowing fingerprints, Arrow-batched.
+"""MinHash band keys and SimHash signatures as Arrow-batched pandas
+UDFs, plus the JVM-side tokenizer every token-based operator shares.
 
 The blocking design (SURVEY.md §2.3, §4.1): token base-hashing runs
 JVM-side (ONE flat ``F.transform`` + ``xxhash64`` pass — per-shingle
@@ -15,6 +16,14 @@ blocking: band keys) and ``make_minhash_band_gram_udf`` (the verified
 MinHash and n-gram near-dup joins: band keys plus each row's distinct
 shingle hashes).  ``make_md5_gram_bands_udf`` is the md5 reference
 path the DuckDB oracle reproduces, not part of that family.
+
+``simhash_udf`` packs the per-bit sign sums of each row's token hashes
+into one 64-bit SimHash.  ``tokens_col`` (text split on single
+spaces, empties dropped; callers pass normalized or lower-cased text)
+is the one tokenizer: blocking, the near-duplicate joins, normalize's
+token count, decontam, terms and textstats all use it.  Winnowing
+fingerprints are pure JVM expressions in
+``textstats.document_fingerprints_md5``.
 
 All hash parameters derive from fixed seeds so signatures are
 deterministic across executors, runs, and cluster sizes.
@@ -384,36 +393,6 @@ def simhash64(hash_arrays: pd.Series) -> np.ndarray:
 @F.pandas_udf(T.LongType())
 def simhash_udf(hashes: pd.Series) -> pd.Series:
     return pd.Series(simhash64(hashes))
-
-
-def winnow_fingerprint(
-    text: str | None, k: int = 8, window: int = 16
-) -> list[int] | None:
-    """Winnowing document fingerprint (Schleimer et al., SIGMOD'03 —
-    public algorithm): rolling hashes of char k-grams, keep the min of
-    every sliding window, dedupe consecutive picks."""
-    if not text or len(text) < k:
-        return None
-    data = np.frombuffer(text.encode("utf-8", errors="replace"), dtype=np.uint8)
-    m = len(data) - k + 1
-    if m <= 0:
-        return None
-    base = np.uint64(1099511628211)
-    h = np.zeros(m, dtype=np.uint64)
-    # polynomial hash of each k-gram, vectorized across positions
-    for j in range(k):
-        h = h * base + data[j : j + m].astype(np.uint64)
-    if m <= window:
-        return [int(h.min().view(np.int64))]
-    w = np.lib.stride_tricks.sliding_window_view(h, window)
-    mins = w.min(axis=1)
-    picks = np.unique(mins)
-    return picks.view(np.int64).tolist()
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def winnow_fingerprint_udf(text: pd.Series) -> pd.Series:
-    return pd.Series([winnow_fingerprint(t) for t in text], dtype="object")
 
 
 # ---------------------------------------------------------------------------

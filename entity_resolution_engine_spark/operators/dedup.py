@@ -169,7 +169,6 @@ def minhash_verified_near_duplicates(
     text_col: str = "text",
     max_bucket_size: int = 2000,
     caches: list | None = None,
-    champion_expansion: bool | None = None,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) near-duplicate pairs with EXACT shingle
     Jaccard: MinHash-LSH generates the candidates (ids only through the
@@ -229,10 +228,9 @@ def minhash_verified_near_duplicates(
     The expansion only runs when max group size ≤ max_bucket_size/2
     (driver-checked on the tiny group ledger) — oversized-clone corpora
     keep the per-doc banding whose bounded-bucket star semantics are
-    the documented cap.  ``champion_expansion`` overrides the gate
-    (True/False) — test hook pinning branch equality on a corpus below
-    the cap (tests/test_dedup.py).  A ``max_bucket_size`` below 1 raises
-    ``ValueError`` before ``groups`` is persisted or the gate runs."""
+    the documented cap.  The gate's collect also fills the ``groups``
+    cache.  A ``max_bucket_size`` below 1 raises ``ValueError`` before
+    ``groups`` is persisted or the gate runs."""
     check_block_cap(max_bucket_size)
     documents = fan_out(documents)  # round 6: see readers.fan_out
     bg_udf = H.make_minhash_band_gram_udf(num_hashes, bands, shingle_size)
@@ -252,16 +250,12 @@ def minhash_verified_near_duplicates(
     )
     if caches is not None:
         caches.append(groups)
-    if champion_expansion is None:
-        gmax = groups.agg(F.max("gsz")).collect()[0][0] or 0
-        champion_expansion = gmax <= max_bucket_size // 2
-
-    if not champion_expansion:
-        # clone groups big enough to interact with the hot-bucket
-        # splitter: keep per-doc banding (bounded-bucket semantics)
-        side = d0
-    else:
-        side = groups.select(F.col("cid").alias("id"), "lt")
+    gmax = groups.agg(F.max("gsz")).collect()[0][0] or 0
+    expand = gmax <= max_bucket_size // 2
+    # one champion per distinct text, unless a clone group is big enough
+    # to interact with the hot-bucket splitter: then per-doc banding
+    # (bounded-bucket semantics)
+    side = groups.select(F.col("cid").alias("id"), "lt") if expand else d0
 
     tokens = H.tokens_col(F.col("lt"))
     docs = side.select("id", H.token_hashes_col(tokens).alias("th")).filter(
@@ -277,17 +271,14 @@ def minhash_verified_near_duplicates(
         ["id_a", "id_b"]
     )
     verified = _jaccard_at_least(_attach(pair_ids, docs), min_jaccard)
-    if not champion_expansion:
+    if not expand:
         return verified
 
     # --- expand champion-level pairs back to member pairs ---------------
-    # non-empty groups: those whose champion survived the th filter
-    gne = groups.join(
-        docs.select(F.col("id").alias("cid")), "cid"
-    )
-    # intra-group: all (i < j) member pairs at exact jaccard 1.0; ids
-    # are sorted, so slicing after each position keeps id_a < id_b —
-    # a narrow array expression, no join
+    # intra-group: all (i < j) member pairs at exact jaccard 1.0 in the
+    # groups whose champion has tokens (the ``docs`` filter above); ids
+    # are sorted, so slicing after each position keeps id_a < id_b — a
+    # narrow array expression, no join
     pairs_arr = F.flatten(
         F.transform(
             "ids",
@@ -298,7 +289,7 @@ def minhash_verified_near_duplicates(
         )
     )
     intra = (
-        gne.filter(F.col("gsz") > 1)
+        groups.filter((F.col("gsz") > 1) & (F.size(tokens) > 0))
         .select(F.explode(pairs_arr).alias("p"))
         .select(
             F.col("p.id_a").alias("id_a"),
@@ -309,11 +300,9 @@ def minhash_verified_near_duplicates(
     # cross-group: each champion pair expands over both member lists;
     # member ids interleave across groups, so re-orient with
     # least/greatest (groups are disjoint — no x == y)
-    ga = groups.select(F.col("cid").alias("id_a"), F.col("ids").alias("ids_a"))
-    gb = groups.select(F.col("cid").alias("id_b"), F.col("ids").alias("ids_b"))
+    members = groups.select(F.col("cid").alias("id"), "ids")
     cross = (
-        verified.join(ga, "id_a")
-        .join(gb, "id_b")
+        _attach(verified, members)
         .select(F.explode("ids_a").alias("xa"), "ids_b", "jaccard")
         .select("xa", F.explode("ids_b").alias("xb"), "jaccard")
         .select(

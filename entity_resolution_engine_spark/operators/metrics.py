@@ -133,61 +133,31 @@ def triage_report_rows(anoms: list, samples: list, run_id: str) -> dict:
     samples.  The default path is the reference's deterministic
     fallback formatter (llm_triage.py:32-49); an LLM rewrite would plug
     in where the summary string is built.  ``anoms``/``samples`` are
-    Rows or dicts already scoped to ``run_id``, samples in the order to
-    print; anomalies are (re-)sorted here, HIGH before MEDIUM, then by
-    |z|."""
+    Rows already scoped to ``run_id``, samples in the order to print;
+    anomalies are (re-)sorted here, HIGH before MEDIUM, then by |z|."""
     _sev = {"HIGH": 2, "MEDIUM": 1}
-
-    def _get(r, k):
-        return r[k] if isinstance(r, dict) else getattr(r, k)
-
     anoms = sorted(
-        anoms,
-        key=lambda a: (_sev.get(_get(a, "severity"), 0), abs(_get(a, "z_score"))),
-        reverse=True,
+        anoms, key=lambda a: (_sev.get(a.severity, 0), abs(a.z_score)), reverse=True
     )
     lines = [f"Triage report for run {run_id}"]
     if not anoms:
         lines.append("No anomalies detected against the trailing baseline.")
     for a in anoms:
         lines.append(
-            f"[{_get(a, 'severity')}] {_get(a, 'metric')}={_get(a, 'value'):.4f}"
-            f" vs baseline {_get(a, 'baseline_mean'):.4f}"
-            f"±{_get(a, 'baseline_stddev'):.4f} (z={_get(a, 'z_score'):+.2f})"
+            f"[{a.severity}] {a.metric}={a.value:.4f}"
+            f" vs baseline {a.baseline_mean:.4f}"
+            f"±{a.baseline_stddev:.4f} (z={a.z_score:+.2f})"
         )
     if samples:
         lines.append(f"Top {len(samples)} pending review pairs by score:")
         for s in samples:
-            lines.append(
-                f"  {_get(s, 'url_a')} ~ {_get(s, 'url_b')}"
-                f" score={_get(s, 'matcher_score'):.3f}"
-            )
+            lines.append(f"  {s.url_a} ~ {s.url_b} score={s.matcher_score:.3f}")
     return {
         "run_id": run_id,
         "n_anomalies": len(anoms),
         "n_review_samples": len(samples),
-        "max_severity": _get(anoms[0], "severity") if anoms else "NONE",
+        "max_severity": anoms[0].severity if anoms else "NONE",
         "report": "\n".join(lines),
-    }
-
-
-def build_quality_report_rows(
-    metrics_rows: list[dict],
-    anomaly_rows: list[dict],
-    review_counts: dict[str, int],
-    run_id: str,
-) -> dict:
-    """O4 analog — the reference's combined quality report
-    (reference entity_resolution_engine/qa/quality_report.py:9-55):
-    one run-scoped snapshot of pipeline metrics, anomaly events, and
-    review counts by status, in the reference's dict shape.
-    ``metrics_rows``: [{stage, metric, value}] totals only;
-    ``anomaly_rows``: this run's anomaly dicts."""
-    return {
-        "run_id": run_id,
-        "metrics": metrics_rows,
-        "anomalies": anomaly_rows,
-        "review_counts": review_counts,
     }
 
 

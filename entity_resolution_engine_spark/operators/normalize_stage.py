@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import tokens_col
 from ..functions.normalize import canonical_text_udf, domain_col, normalize_text_udf
 from ..sources.readers import fan_out
 
@@ -34,10 +35,7 @@ def normalize_pages(web_pages: DataFrame) -> DataFrame:
         .withColumn("norm_text", normalize_text_udf(F.col("canonical_text")))
         .withColumn("domain", domain_col(F.col("url")))
         .withColumn("text_md5", F.md5(F.col("norm_text")))
-        .withColumn(
-            "n_tokens",
-            F.size(F.filter(F.split(F.col("norm_text"), " "), lambda t: t != "")),
-        )
+        .withColumn("n_tokens", F.size(tokens_col(F.col("norm_text"))))
         .select(
             "url",
             "domain",

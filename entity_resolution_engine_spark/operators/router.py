@@ -315,26 +315,21 @@ def llm_validate_pair(pair: dict, transport, max_json_retries: int = 1) -> dict:
 
 
 def llm_validate_sample(
-    routed: DataFrame, cfg: ScoringConfig, validate_fn=None, transport=None
+    routed: DataFrame, cfg: ScoringConfig, transport=None
 ) -> list[dict]:
     """Optional LLM validation hook for gray-zone pairs — preserved as a
     bounded driver-side loop because the reference's circuit breaker is
     order-dependent sequential state (router.py:121-160).  Disabled by
     default (cfg.llm_enabled=False), mirroring llm_validation.yml:1.
 
-    ``validate_fn(pair_dict) -> dict`` is injected in tests; no network
-    code lives in the engine.  Alternatively pass ``transport`` (the
-    raw text-in/text-out hook) to get the full reference semantics —
-    schema'd payload, invalid-JSON retry, error → REVIEW — via
-    ``llm_validate_pair``; a schema-invalid or errored verdict counts
-    as a failure toward the circuit breaker."""
-    if transport is not None and validate_fn is None:
-        def validate_fn(row):  # noqa: F811 — deliberate binding
-            verdict = llm_validate_pair(row, transport)
-            if "llm_error" in verdict.get("risk_flags", []):
-                raise RuntimeError("llm_error")  # breaker counts a failure
-            return verdict
-    if not cfg.llm_enabled or validate_fn is None:
+    ``transport(system_prompt, user_prompt) -> str`` is the one
+    injection point; no network code lives in the engine.  Each pair
+    goes through ``llm_validate_pair`` (schema'd payload, invalid-JSON
+    retry, error → REVIEW): a verdict flagged ``llm_error`` (the
+    transport raised, or its text stayed invalid or off-schema) counts
+    as a failure toward the circuit breaker and becomes a
+    ``status=REVIEW`` row; any other verdict is the pair's row."""
+    if not cfg.llm_enabled or transport is None:
         return []
     sample = (
         routed.filter(F.col("decision") == "gray")
@@ -362,21 +357,22 @@ def llm_validate_sample(
             ):
                 break  # breaker open → remaining pairs take the fallback path
             window.pop(0)
-        try:
-            verdict = validate_fn(row.asDict())
-            invalid_retry = "llm_invalid_json_retry" in verdict.get("risk_flags", [])
-            window.append((True, invalid_retry))
-            out.append({"url_a": row.url_a, "url_b": row.url_b, **verdict})
-        except Exception as exc:  # error → REVIEW, matches reference llm_validator.py:34-66
+        verdict = llm_validate_pair(row.asDict(), transport)
+        if "llm_error" in verdict["risk_flags"]:
+            # error → REVIEW, matches reference llm_validator.py:34-66
             window.append((False, False))
             out.append(
                 {
                     "url_a": row.url_a,
                     "url_b": row.url_b,
                     "status": "REVIEW",
-                    "error": json.dumps(str(exc)),
+                    "error": json.dumps("llm_error"),
                 }
             )
+        else:
+            invalid_retry = "llm_invalid_json_retry" in verdict["risk_flags"]
+            window.append((True, invalid_retry))
+            out.append({"url_a": row.url_a, "url_b": row.url_b, **verdict})
     return out
 
 

@@ -1,15 +1,15 @@
 """Text analysis for training-data pipelines: language-ID, quality
 scoring, token counting, document fingerprinting.
 
-Everything except the winnowing fingerprint is pure-JVM column
-expressions (codegen, pushdown-friendly) with exact ANSI-SQL
-equivalents — these operators are in the DuckDB-oracle correctness
-gate, so each formula is written to be reproducible verbatim in SQL
-(__spark_entry__.py keeps the SQL side-by-side).
+Everything is pure-JVM column expressions (codegen, pushdown-friendly)
+with exact ANSI-SQL equivalents — these operators are in the
+DuckDB-oracle correctness gate, so each formula is written to be
+reproducible verbatim in SQL (__spark_entry__.py keeps the SQL
+side-by-side).
 
 Tokenization contract shared by all of them: lower(text) split on
-single spaces, empties dropped — matching the corpus shape and
-trivially expressible in both engines.
+single spaces, empties dropped (``hashing.tokens_col``) — matching the
+corpus shape and trivially expressible in both engines.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import winnow_fingerprint_udf
+from ..functions.hashing import tokens_col
 
 # Deterministic per-language marker-token profiles (tiny stopword
 # lists).  The n-gram/stopword heuristic is standard public technique;
@@ -35,7 +35,7 @@ ENGLISH_STOPWORDS = LANG_MARKERS["en"]
 
 
 def tokens_expr(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), " "), lambda t: t != "")
+    return tokens_col(F.lower(text))
 
 
 def token_count(text: Column) -> Column:
@@ -131,14 +131,6 @@ def document_profile(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def document_fingerprints(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, fingerprints array<long>) — winnowing rolling-hash
-    fingerprints (functions/hashing.py), for copy-detection joins."""
-    return documents.select(
-        "doc_id", winnow_fingerprint_udf(F.col(text_col)).alias("fingerprints")
-    )
-
-
 def document_fingerprints_md5(
     documents: DataFrame,
     k: int = 8,
@@ -147,20 +139,14 @@ def document_fingerprints_md5(
     caches: list | None = None,
 ) -> DataFrame:
     """(doc_id, fingerprint) — winnowing (Schleimer et al., SIGMOD'03)
-    with an md5-derived k-gram hash, pure JVM expressions.
-
-    Same selection semantics as ``winnow_fingerprint`` (min of every
-    sliding ``window`` of k-gram hashes, distinct values; one global
-    min when fewer than ``window`` grams; no rows when len < k), but
-    the per-gram hash is the first 15 hex chars of md5 read as a
-    60-bit integer instead of the numpy polynomial hash — DuckDB
-    reproduces md5 byte-for-byte, so the driver oracle value-checks
-    the whole gram→window-min→distinct pipeline
-    (__spark_entry__.py ``doc_fingerprints``).  The xxhash winnowing
-    UDF remains the production path (one numpy pass per Arrow batch vs
-    O(len) interpreted md5 calls per doc here); this variant is the
-    SQL-parity twin, the same pattern as ngram_jaccard's md5 bands.
-    Emits one row per distinct (doc_id, fingerprint)."""
+    for copy detection, pure JVM expressions: the min of every sliding
+    ``window`` of char k-gram hashes, distinct values; one global min
+    when there are fewer than ``window`` grams; no rows when
+    len < k.  The per-gram hash is the first 15 hex chars of md5 read
+    as a 60-bit integer, which DuckDB reproduces byte-for-byte, so the
+    driver oracle value-checks the whole gram→window-min→distinct
+    pipeline (__spark_entry__.py ``doc_fingerprints``).  Emits one row
+    per distinct (doc_id, fingerprint)."""
     t = F.col(text_col)
     n = F.length(t)
     gram_hashes = F.transform(

@@ -24,11 +24,12 @@ job and has no mid-clustering state to resume.
 
 Observe writes stage and router metrics, anomaly events, the triage
 report, the quality gates and the quality report.  Only the row counts
-(snapshot footers), the router counters, one bounded run-history
-query, the review samples and review counts, and the LLM verdicts come
-from Spark; the run rates, z-score anomalies, the four gates and both
-reports are computed on the driver from those rows, and every table
-enters Spark as an Arrow local frame (``session.local_frame``).
+(snapshot footers), the router counters (which also give the review
+counts), one bounded run-history query, the review samples and the LLM
+verdicts come from Spark; the run rates, z-score anomalies, the four
+gates and both reports are computed on the driver from those rows, and
+every table enters Spark as an Arrow local frame
+(``session.local_frame``).
 """
 
 from __future__ import annotations
@@ -263,7 +264,8 @@ class Pipeline:
             # lookback window of past runs; this run joins it from the
             # rows above (keeping its earlier finished_seq on a resume)
             history = self._rate_history(run_id, self.cfg.anomaly.lookback_runs + 1)
-            rates = M.run_rates({r[2]: r[3] for r in router_rows})
+            counters = {r[2]: r[3] for r in router_rows}
+            rates = M.run_rates(counters)
             first_seq = min([fs for rid, fs, _ in history if rid == run_id] + [seq_base])
             runs = [h for h in history if h[0] != run_id] + [(run_id, first_seq, rates)]
 
@@ -282,10 +284,14 @@ class Pipeline:
                 local_frame(self.spark, anoms_rows, M.ANOMALY_EVENTS_SCHEMA),
                 mode="append",
             )
-            reviews_df = cat.read(self._t(run_id, "reviews")).filter(
-                F.col("run_id") == run_id
+            # reviews_query's order: ties on score break by url, so the
+            # report does not depend on partitioning
+            samples = (
+                cat.read(self._t(run_id, "reviews"))
+                .orderBy(F.desc("matcher_score"), "url_a", "url_b")
+                .limit(20)
+                .collect()
             )
-            samples = reviews_df.orderBy(F.desc("matcher_score")).limit(20).collect()
             report = M.triage_report_rows(anoms_rows, samples, run_id)
             cat.write(
                 "anomaly_triage_reports",
@@ -327,28 +333,26 @@ class Pipeline:
                 mode="append",
             )
 
-            # O4: the combined quality report (metrics + anomalies +
-            # review counts) persisted as one run snapshot row —
-            # assembled from the rows already on the driver plus one
-            # review status-count job
-            metrics_totals = [
-                {"stage": r[1], "metric": r[2], "value": r[3]}
-                for r in local_rows + router_rows
-                if r[4] is None
-            ]
-            anomaly_dicts = [
-                {k: v for k, v in a.asDict().items() if k != "run_id"}
-                for a in anoms_rows
-            ]
-            review_counts = {
-                r.status: int(r.n)
-                for r in reviews_df.groupBy("status")
-                .agg(F.count("*").alias("n"))
-                .collect()
+            # O4: the combined quality report (reference
+            # qa/quality_report.py:9-55 shape) as one run snapshot row,
+            # assembled from the rows already on the driver.  Review
+            # counts by status come from the router counters:
+            # review_items writes exactly the gray rows, all PENDING.
+            # (a null counter is an empty routed table: no reviews)
+            n_gray = int(counters["gray_zone"] or 0)
+            qr = {
+                "run_id": run_id,
+                "metrics": [
+                    {"stage": r[1], "metric": r[2], "value": r[3]}
+                    for r in local_rows + router_rows
+                    if r[4] is None
+                ],
+                "anomalies": [
+                    {k: v for k, v in a.asDict().items() if k != "run_id"}
+                    for a in anoms_rows
+                ],
+                "review_counts": {"PENDING": n_gray} if n_gray else {},
             }
-            qr = M.build_quality_report_rows(
-                metrics_totals, anomaly_dicts, review_counts, run_id
-            )
             cat.write(
                 "quality_reports",
                 local_frame(

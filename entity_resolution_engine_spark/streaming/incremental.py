@@ -52,13 +52,13 @@ def resolve_batch(batch: DataFrame, catalog: TableCatalog) -> None:
     normalized = normalize_pages(batch).select(
         "url", "text_md5", "canonical_text", "lang", "warc_ts"
     )
-    # de-dup within the batch: first url per md5 is the batch champion
+    # de-dup within the batch: the min-url page per md5 is the batch
+    # champion, and its text and lang come from that same page (pages
+    # sharing a norm_text can differ in case, punctuation and lang)
     champions = normalized.groupBy("text_md5").agg(
-        F.min("url").alias("url"),
-        F.first("canonical_text").alias("canonical_text"),
-        F.first("lang").alias("lang"),
+        F.min(F.struct("url", "canonical_text", "lang")).alias("c"),
         F.min("warc_ts").alias("first_seen_ts"),
-    )
+    ).select("text_md5", "c.url", "c.canonical_text", "c.lang", "first_seen_ts")
     if catalog.exists(ENTITY_STORE):
         store = catalog.read(ENTITY_STORE)
         known_urls = catalog.read(STREAM_LINEAGE).select("source_id")

@@ -57,6 +57,11 @@ for name, fn in qs.items():
         print(f"FAIL {name}: spark error {type(exc).__name__}: {exc}")
         fails.append(name)
         continue
+    finally:
+        # the dedup queries persist frames and pass no `caches`: release
+        # them, or a later query that rebuilds the same plan (the n-gram
+        # parity diff) finds them still cached
+        spark.catalog.clearCache()
     dt = time.monotonic() - t0
     if name not in oracles:
         print(f"ok   {name}: rows-only, {len(srows)} rows ({dt:.1f}s)")

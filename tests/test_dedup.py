@@ -216,9 +216,10 @@ def test_minhash_verified_champion_expansion_matches_legacy(spark):
     """Round-6 champion factoring: the expansion branch (one champion
     per distinct lower(text), member pairs re-expanded) must emit
     exactly the per-doc-banding branch's pairs, compared pair-for-pair
-    and value-for-value via the champion_expansion override (both
-    branches at the same max_bucket_size, so the hot-bucket splitter
-    is engaged for neither)."""
+    and value-for-value.  The max-group-size gate picks the branch from
+    ``max_bucket_size``: the 3-clone group takes per-doc banding at 5
+    (3 > 5 // 2) and the expansion at 6 (3 <= 6 // 2).  Neither cap
+    splits a bucket here, so the splitter is engaged for neither."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     near = base.replace("theta", "sigma")
     rows = [
@@ -229,17 +230,29 @@ def test_minhash_verified_champion_expansion_matches_legacy(spark):
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     kw = dict(shingle_size=2, num_hashes=128, bands=32, min_jaccard=0.5)
-    expanded = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in DD.minhash_verified_near_duplicates(docs, **kw).collect()
-    }
-    legacy = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in DD.minhash_verified_near_duplicates(
-            docs, champion_expansion=False, **kw
-        ).collect()
-    }
-    assert expanded == legacy
+
+    def run(max_bucket_size):
+        caches = []
+        pairs = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in DD.minhash_verified_near_duplicates(
+                docs, max_bucket_size=max_bucket_size, caches=caches, **kw
+            ).collect()
+        }
+        # [groups, banded docs]: a split bucket would add its bounded
+        # membership; the banded frame has one row per non-empty doc on
+        # the per-doc path and one per distinct non-empty text when
+        # expanding
+        assert len(caches) == 2
+        n_banded = caches[1].count()
+        for c in caches:
+            c.unpersist()
+        return pairs, n_banded
+
+    per_doc, n_per_doc = run(5)
+    expanded, n_expanded = run(6)
+    assert (n_per_doc, n_expanded) == (6, 3)
+    assert expanded == per_doc
     # intra-group clones at exact 1.0, full cross-product across the
     # two near groups, empty doc absent
     assert expanded[(1, 2)] == 1.0 and expanded[(1, 7)] == 1.0

@@ -9,7 +9,9 @@ from entity_resolution_engine_spark.functions.hashing import (
     make_minhash_band_gram_udf,
     make_minhash_band_udf,
     simhash64,
-    winnow_fingerprint,
+)
+from entity_resolution_engine_spark.operators.textstats import (
+    document_fingerprints_md5,
 )
 
 
@@ -174,13 +176,24 @@ def test_simhash_similar_docs_close():
     assert d_sim < d_diff
 
 
-def test_winnow_deterministic_and_shift_invariant_overlap():
+def test_winnow_deterministic_and_shift_invariant_overlap(spark):
     t = "the quick brown fox jumps over the lazy dog " * 4
-    f1 = winnow_fingerprint(t)
-    f2 = winnow_fingerprint(t)
+
+    def fingerprints(text):
+        df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        caches = []
+        out = sorted(
+            r.fingerprint for r in document_fingerprints_md5(df, caches=caches).collect()
+        )
+        for c in caches:
+            c.unpersist()
+        return out
+
+    f1 = fingerprints(t)
+    f2 = fingerprints(t)
     assert f1 == f2 and len(f1) > 0
     # a document containing the same long substring shares fingerprints
-    f3 = winnow_fingerprint("PREFIX " + t + " SUFFIX")
+    f3 = fingerprints("PREFIX " + t + " SUFFIX")
     assert len(set(f1) & set(f3)) > 0
-    assert winnow_fingerprint("") is None
-    assert winnow_fingerprint("short", k=8) is None
+    assert fingerprints("") == []
+    assert fingerprints("short") == []  # shorter than k=8

@@ -4,6 +4,7 @@ analog — the breaker is sequential driver-side state by design)."""
 
 from __future__ import annotations
 
+import json
 from dataclasses import replace
 
 from pyspark.sql import functions as F
@@ -32,9 +33,24 @@ def _routed(spark, n_gray=30):
     return route_pairs(df, CFG, "r1")
 
 
+_MATCH = json.dumps({"decision": "MATCH", "confidence": 0.9})
+
+
+def _url_a(user_prompt):
+    """The pair's left url from ``llm_validate_pair``'s first prompt."""
+    return json.loads(user_prompt)["left"]["url"]
+
+
 def test_disabled_by_default(spark):
     routed = _routed(spark)
-    assert llm_validate_sample(routed, CFG, validate_fn=lambda p: {"status": "OK"}) == []
+    calls = []
+
+    def transport(system, user):
+        calls.append(user)
+        return _MATCH
+
+    assert llm_validate_sample(routed, CFG, transport=transport) == []
+    assert calls == []
 
 
 def test_call_budget_caps_sample(spark):
@@ -42,13 +58,13 @@ def test_call_budget_caps_sample(spark):
     routed = _routed(spark, n_gray=30)
     calls = []
 
-    def fn(pair):
-        calls.append(pair["url_a"])
-        return {"status": "APPROVE"}
+    def transport(system, user):
+        calls.append(_url_a(user))
+        return _MATCH
 
-    out = llm_validate_sample(routed, cfg, validate_fn=fn)
+    out = llm_validate_sample(routed, cfg, transport=transport)
     assert len(calls) == 10  # budget, not all 30 gray pairs
-    assert all(o["status"] == "APPROVE" for o in out)
+    assert len(out) == 10 and all(o["decision"] == "MATCH" for o in out)
 
 
 def test_circuit_breaker_opens_after_full_window(spark):
@@ -58,10 +74,10 @@ def test_circuit_breaker_opens_after_full_window(spark):
     cfg = replace(CFG, llm_enabled=True, max_llm_calls_per_run=100)
     routed = _routed(spark, n_gray=100)
 
-    def fn(pair):
+    def transport(system, user):
         raise RuntimeError("llm down")
 
-    out = llm_validate_sample(routed, cfg, validate_fn=fn)
+    out = llm_validate_sample(routed, cfg, transport=transport)
     assert len(out) == 50  # breaker opens exactly when the window fills
     assert all(o["status"] == "REVIEW" for o in out)
 
@@ -71,29 +87,33 @@ def test_circuit_breaker_stays_closed_on_low_fail_rate(spark):
     routed = _routed(spark, n_gray=80)
     n = {"i": 0}
 
-    def fn(pair):
+    def transport(system, user):
         n["i"] += 1
         if n["i"] % 10 == 0:  # 10% failures < 20% threshold
             raise RuntimeError("transient")
-        return {"status": "APPROVE"}
+        return _MATCH
 
-    out = llm_validate_sample(routed, cfg, validate_fn=fn)
+    out = llm_validate_sample(routed, cfg, transport=transport)
     assert len(out) == 80  # never tripped
+    assert sum(1 for o in out if o.get("status") == "REVIEW") == 8
 
 
 def test_errors_become_review_rows(spark):
     cfg = replace(CFG, llm_enabled=True, max_llm_calls_per_run=5)
     routed = _routed(spark, n_gray=5)
 
-    def fn(pair):
-        if pair["url_a"].endswith("0"):
+    def transport(system, user):
+        if _url_a(user) == "a0":
             raise ValueError("bad json")
-        return {"status": "APPROVE"}
+        return _MATCH
 
-    out = llm_validate_sample(routed, cfg, validate_fn=fn)
-    statuses = {o["url_a"]: o["status"] for o in out}
-    assert statuses["a0"] == "REVIEW"
-    assert sum(1 for s in statuses.values() if s == "APPROVE") == 4
+    out = llm_validate_sample(routed, cfg, transport=transport)
+    assert {o["url_a"] for o in out} == {f"a{i}" for i in range(5)}
+    errored = [o for o in out if o["url_a"] == "a0"]
+    assert errored == [
+        {"url_a": "a0", "url_b": "b0", "status": "REVIEW", "error": '"llm_error"'}
+    ]
+    assert sum(1 for o in out if o.get("decision") == "MATCH") == 4
 
 
 # ---------------------------------------------------------------------------
@@ -113,15 +133,14 @@ def _pair():
 
 def test_llm_validate_pair_valid_response():
     from entity_resolution_engine_spark.operators.router import llm_validate_pair
-    import json as _json
 
     prompts = []
 
     def transport(system, user):
         prompts.append(user)
-        payload = _json.loads(user)
+        payload = json.loads(user)
         assert payload["response_schema"]["decision"] == "MATCH|NO_MATCH|REVIEW"
-        return _json.dumps({"decision": "MATCH", "confidence": 0.93, "reasons": ["same title"]})
+        return json.dumps({"decision": "MATCH", "confidence": 0.93, "reasons": ["same title"]})
 
     out = llm_validate_pair(_pair(), transport)
     assert out == {"decision": "MATCH", "confidence": 0.93,
@@ -157,7 +176,6 @@ def test_llm_validate_pair_persistent_garbage_degrades_to_review():
 
 def test_llm_validate_pair_schema_violations_degrade_to_review():
     from entity_resolution_engine_spark.operators.router import llm_validate_pair
-    import json as _json
 
     for bad in (
         {"decision": "MAYBE", "confidence": 0.5},
@@ -165,18 +183,16 @@ def test_llm_validate_pair_schema_violations_degrade_to_review():
         {"decision": "MATCH", "confidence": 0.5, "reasons": "not-a-list"},
         ["not", "an", "object"],
     ):
-        out = llm_validate_pair(_pair(), lambda s, u, b=bad: _json.dumps(b))
+        out = llm_validate_pair(_pair(), lambda s, u, b=bad: json.dumps(b))
         assert out["decision"] == "REVIEW" and out["risk_flags"] == ["llm_error"], bad
 
 
 def test_transport_plugs_into_sample_loop(spark):
-    import json as _json
-
     cfg = replace(CFG, llm_enabled=True, max_llm_calls_per_run=5)
     routed = _routed(spark, n_gray=5)
 
     def transport(system, user):
-        return _json.dumps({"decision": "MATCH", "confidence": 0.9})
+        return json.dumps({"decision": "MATCH", "confidence": 0.9})
 
     out = llm_validate_sample(routed, cfg, transport=transport)
     assert len(out) == 5
@@ -189,17 +205,20 @@ def test_circuit_breaker_opens_on_invalid_json_rate_alone(spark):
     # (the retried responses parse on the second attempt)
     cfg = replace(CFG, llm_enabled=True, max_llm_calls_per_run=100)
     routed = _routed(spark, n_gray=100)
-    n = {"i": 0}
+    n = {"pairs": 0}
 
-    def fn(pair):
-        n["i"] += 1
-        flags = ["llm_invalid_json_retry"] if n["i"] % 5 == 0 else []
-        # 20% invalid-retry rate >= 0.1 threshold, 0% fail rate
-        return {"status": "APPROVE", "risk_flags": flags}
+    def transport(system, user):
+        if user.startswith("Return valid JSON only."):
+            return _MATCH  # the retry parses
+        n["pairs"] += 1
+        # garbage once for every 5th pair: a 20% invalid-retry rate
+        # >= 0.1 threshold, 0% fail rate
+        return "garbage" if n["pairs"] % 5 == 0 else _MATCH
 
-    out = llm_validate_sample(routed, cfg, validate_fn=fn)
+    out = llm_validate_sample(routed, cfg, transport=transport)
     assert len(out) == 50  # opens exactly when the window fills
-    assert all(o["status"] == "APPROVE" for o in out)  # no failures
+    assert all(o["decision"] == "MATCH" for o in out)  # no failures
+    assert sum(1 for o in out if "llm_invalid_json_retry" in o["risk_flags"]) == 10
 
 
 def test_llm_run_stats_counts():

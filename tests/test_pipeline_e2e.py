@@ -157,21 +157,77 @@ def test_review_mode_pipeline(spark, synth_corpus, tmp_path_factory):
     from entity_resolution_engine_spark.config import DEFAULT_CONFIG
 
     pages, labels = synth_corpus
+    # threshold_high 0.99 puts pairs in the gray zone: at the default
+    # threshold this corpus has none, and there would be no review rows
     cfg = replace(
-        DEFAULT_CONFIG, scoring=replace(DEFAULT_CONFIG.scoring, fallback_mode="review")
+        DEFAULT_CONFIG,
+        scoring=replace(
+            DEFAULT_CONFIG.scoring, fallback_mode="review", threshold_high=0.99
+        ),
     )
     pipe = Pipeline(spark, str(tmp_path_factory.mktemp("review")), config=cfg)
     res = pipe.run(pages, run_id="rv")
     assert res.stages_run == list(STAGES)
     routed = pipe.table("rv", "routed")
     n_gray = routed.filter(F.col("decision") == "gray").count()
+    assert n_gray > 0
     n_pending = routed.filter(F.col("routed_status") == "pending").count()
     assert n_gray == n_pending
     reviews = pipe.table("rv", "reviews")
     assert reviews.count() == n_gray
+    # observe takes the review counts from the router's gray counter
+    report = json.loads(
+        pipe.catalog.read("quality_reports").filter(F.col("run_id") == "rv").first().report_json
+    )
+    assert report["review_counts"] == {"PENDING": reviews.count()}
     # precision must not drop below auto-approve mode (fewer edges only)
     m = pairwise_f1(pipe.table("rv", "clusters"), labels)
     assert m["precision"] >= 0.99
+
+
+def test_triage_samples_ignore_partitioning(spark, tmp_path_factory):
+    """30 gray pairs tied at one score, more than the report's top 20:
+    the triage report picks the same pairs, by url, whether the
+    committed reviews were written from 1 or 7 shuffle partitions."""
+    from entity_resolution_engine_spark.operators.router import review_items
+
+    routed_rows = [
+        (f"https://a.org/{i:02d}", f"https://b.org/{i:02d}", 0.5, "gray")
+        for i in range(30)
+    ] + [("https://a.org/x", "https://b.org/x", 0.9, "approved")]
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    reports = []
+    try:
+        for n in (1, 7):
+            spark.conf.set(key, str(n))
+            pipe = Pipeline(spark, str(tmp_path_factory.mktemp(f"triage{n}")))
+            routed = spark.createDataFrame(
+                routed_rows, "url_a string, url_b string, score double, decision string"
+            ).select(
+                "*",
+                *[F.lit(0.5).alias(c) for c in (
+                    "jaro_winkler", "token_jaccard", "levenshtein_sim", "length_ratio"
+                )],
+                F.lit(None).cast("string").alias("conflicts"),
+            ).repartition(n, "url_b")
+            for name in ("normalized", "candidates", "scored", "clusters", "entities"):
+                pipe.catalog.write(pipe._t("t", name), routed.select("url_a"))
+            pipe.catalog.write(pipe._t("t", "routed"), routed)
+            pipe.catalog.write(pipe._t("t", "reviews"), review_items(routed, "t"))
+            state = RunState(pipe.root, "t")
+            for stage in STAGES[:-1]:
+                state.mark(stage)
+            # every stage before observe is committed: no input is read
+            assert pipe.run(None, run_id="t").stages_run == ["observe"]
+            reports.append(
+                pipe.catalog.read("anomaly_triage_reports").first().report
+            )
+    finally:
+        spark.conf.set(key, prev)
+    assert reports[0] == reports[1]
+    assert "https://a.org/19 ~ https://b.org/19" in reports[0]
+    assert "https://a.org/20" not in reports[0]
 
 
 def test_quality_report_table(finished):

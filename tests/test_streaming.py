@@ -43,6 +43,46 @@ def test_resolve_batch_idempotent_on_redelivery(spark, cat):
     assert cat.read(STREAM_LINEAGE).count() == n_lineage
 
 
+def test_batch_entity_is_min_url_page(spark, tmp_path):
+    """Pages sharing a norm_text but not their case, punctuation or
+    lang: the entity's text and lang come from its canonical (min-url)
+    page, whatever the partitioning or the input order."""
+    import datetime
+
+    from entity_resolution_engine_spark.operators.normalize_stage import (
+        normalize_pages,
+    )
+    from entity_resolution_engine_spark.schemas import WEB_PAGES
+
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        ("http://b.org/2", ts, None, "hello world!", "de"),
+        ("http://a.org/1", ts, None, "Hello World", "en"),
+    ]
+    want = (
+        normalize_pages(spark.createDataFrame(rows, WEB_PAGES))
+        .filter(F.col("url") == "http://a.org/1")
+        .select(
+            F.col("url").alias("canonical_url"), "canonical_text", "lang"
+        )
+        .first()
+    )
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        for n in (1, 7):
+            spark.conf.set(key, str(n))
+            for i, order in enumerate((rows, rows[::-1])):
+                cat = ParquetSnapshotCatalog(spark, str(tmp_path / f"cat{n}_{i}"))
+                resolve_batch(spark.createDataFrame(order, WEB_PAGES), cat)
+                got = cat.read(ENTITY_STORE).select(
+                    "canonical_url", "canonical_text", "lang"
+                ).collect()
+                assert got == [want], (n, order[0][0])
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_incremental_matches_existing_entities(spark, cat):
     pages, _ = generate_web_pages(spark, 100, seed=7)
     b1 = pages.filter(F.xxhash64("url") % 2 == 0)

@@ -4,7 +4,9 @@ The reference scores candidates with rapidfuzz string ratios inside a
 Python nested loop (/root/reference/entity_resolution_engine/matchers/
 players_matcher.py:19-23,65-69; normalizers/name_normalizer.py:29-38).
 Here the same feature family — Jaro-Winkler, Levenshtein similarity,
-token-Jaccard, length ratio — is computed over Arrow batches:
+token-Jaccard — is computed over Arrow batches (the fourth feature,
+length ratio, is a JVM expression over the full document lengths in
+operators/scoring.py::score_pairs):
 
 - token-level Levenshtein runs as a **batch-vectorized numpy DP**
   (one O(max_len) Python loop per Arrow batch, each step a vectorized
@@ -318,7 +320,7 @@ def batch_jaro_winkler(
 
 
 # ---------------------------------------------------------------------------
-# The feature UDF: one Arrow batch in, four feature columns out
+# The feature UDF: one Arrow batch in, three feature columns out
 # ---------------------------------------------------------------------------
 
 PAIR_FEATURES_TYPE = T.StructType(
@@ -326,7 +328,6 @@ PAIR_FEATURES_TYPE = T.StructType(
         T.StructField("jaro_winkler", T.DoubleType()),
         T.StructField("token_jaccard", T.DoubleType()),
         T.StructField("levenshtein_sim", T.DoubleType()),
-        T.StructField("length_ratio", T.DoubleType()),
     ]
 )
 
@@ -342,20 +343,17 @@ def pair_features_udf(norm_a: pd.Series, norm_b: pd.Series) -> pd.DataFrame:
     jw = batch_jaro_winkler(a_vals, b_vals)
 
     jac = np.empty(len(a_vals), dtype=np.float64)
-    lr = np.empty(len(a_vals), dtype=np.float64)
-    for i, (a, b) in enumerate(zip(a_vals, b_vals)):
-        sa, sb = set(toks_a[i]), set(toks_b[i])
+    for i, (ta, tb) in enumerate(zip(toks_a, toks_b)):
+        sa, sb = set(ta), set(tb)
         if sa and sb:
             inter = len(sa & sb)
             jac[i] = inter / (len(sa) + len(sb) - inter)
         else:
             jac[i] = 0.0
-        lr[i] = length_ratio(a, b)
     return pd.DataFrame(
         {
             "jaro_winkler": jw,
             "token_jaccard": jac,
             "levenshtein_sim": lev,
-            "length_ratio": lr,
         }
     )

@@ -30,8 +30,11 @@ never an unblocked self-join and never an unbounded bucket; pairs
 always satisfy id_a < id_b.  ``_attach`` joins the payload columns back
 onto both sides as ``<col>_a``/``<col>_b``, and the family's exact
 predicate decides each pair.  What differs per family is the signature
-UDF, the predicate and where the candidates are deduped.  Ids must be
-integral (the sub-bucket assignment is ``pmod(id, n_sub)``).
+UDF, the predicate and where the candidates are deduped.  MinHash and
+the fast n-gram path share one signature phase too, ``_minhash_rows``
+(the fused MinHash kernel over every non-empty document), and differ
+only in their band shape and dedup placement.  Ids must be integral
+(the sub-bucket assignment is ``pmod(id, n_sub)``).
 """
 
 from __future__ import annotations
@@ -159,6 +162,33 @@ def _jaccard_at_least(pairs: DataFrame, min_jaccard: float) -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
+def _minhash_rows(
+    documents: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_size: int,
+) -> DataFrame:
+    """``_bucket_pairs`` rows for the two joins on the shared MinHash
+    kernel: (id, buckets, grams, ng) per document with at least one
+    token.  ``lower(text)`` is tokenized and hashed in the JVM, then ONE
+    fused Arrow pass (``make_minhash_band_gram_udf``) emits the band
+    keys and the DISTINCT shingle-hash set (``ng`` is its size)."""
+    documents = fan_out(documents)  # round 6: see readers.fan_out
+    tokens = H.tokens_col(F.lower(F.col(text_col)))
+    docs = documents.select(
+        F.col(id_col).alias("id"), H.token_hashes_col(tokens).alias("th")
+    ).filter(F.size("th") > 0)
+    bg_udf = H.make_minhash_band_gram_udf(num_hashes, bands, shingle_size)
+    return docs.select("id", bg_udf("th").alias("bg")).select(
+        "id",
+        F.col("bg.bands").alias("buckets"),
+        F.col("bg.grams").alias("grams"),
+        F.size("bg.grams").alias("ng"),
+    )
+
+
 def minhash_verified_near_duplicates(
     documents: DataFrame,
     shingle_size: int = 2,
@@ -204,114 +234,21 @@ def minhash_verified_near_duplicates(
     jaccard equals string-shingle jaccard absent 64-bit fold
     collisions.
 
-    Champion-per-distinct-text factoring (round 6, exact-duplicate-
-    heavy corpora — the common-crawl mirror shape the planted bench
-    corpus models): docs sharing ``lower(text)`` have IDENTICAL gram
-    sets and band arrays, so one champion per distinct text carries the
-    group through the UDF, the band self-join, and the verify, and the
-    group's members re-expand afterwards — intra-group pairs at exact
-    jaccard 1.0 (i = |A| = |B| ⇒ 1.0, the same double the verify
-    computes), cross-group pairs inherit the champion pair's jaccard
-    (identical gram sets ⇒ identical value).  On a 50%-clone corpus
-    this halves UDF and membership volume and collapses the 2×2
-    candidate variants per cross pair to one.  Equal texts have equal
-    band ARRAYS, so when no band bucket holds more than max_bucket_size
-    docs the expanded output equals the per-doc banding's.  Bucket
-    occupancy is counted in champions here, not docs: a bucket over the
-    cap in doc space but not in champion space is split by the per-doc
-    banding and kept whole by the expansion, which then verifies more
-    candidates — the output is a recall superset of the per-doc
-    banding's, not an exact copy (a bucket over the cap in both spaces
-    is split into a different number of sub-buckets in each — the
-    count is ceil(occupancy/max_bucket_size) — so the two can differ
-    either way there).  Every emitted pair is still exactly verified.
-    The expansion only runs when max group size ≤ max_bucket_size/2
-    (driver-checked on the tiny group ledger) — oversized-clone corpora
-    keep the per-doc banding whose bounded-bucket star semantics are
-    the documented cap.  The gate's collect also fills the ``groups``
-    cache.  A ``max_bucket_size`` below 1 raises ``ValueError`` before
-    ``groups`` is persisted or the gate runs."""
-    check_block_cap(max_bucket_size)
-    documents = fan_out(documents)  # round 6: see readers.fan_out
-    bg_udf = H.make_minhash_band_gram_udf(num_hashes, bands, shingle_size)
-
-    d0 = documents.select(
-        F.col(id_col).alias("id"), F.lower(F.col(text_col)).alias("lt")
-    )
-    groups = (
-        d0.groupBy(F.md5("lt").alias("gk"))
-        .agg(
-            F.min("id").alias("cid"),
-            F.first("lt").alias("lt"),  # identical within the group
-            F.array_sort(F.collect_list("id")).alias("ids"),
-            F.count("*").alias("gsz"),
-        )
-        .persist()
-    )
-    if caches is not None:
-        caches.append(groups)
-    gmax = groups.agg(F.max("gsz")).collect()[0][0] or 0
-    expand = gmax <= max_bucket_size // 2
-    # one champion per distinct text, unless a clone group is big enough
-    # to interact with the hot-bucket splitter: then per-doc banding
-    # (bounded-bucket semantics)
-    side = groups.select(F.col("cid").alias("id"), "lt") if expand else d0
-
-    tokens = H.tokens_col(F.col("lt"))
-    docs = side.select("id", H.token_hashes_col(tokens).alias("th")).filter(
-        F.size("th") > 0
-    )
-    docs = docs.select("id", bg_udf("th").alias("bg")).select(
-        "id",
-        F.col("bg.bands").alias("buckets"),
-        F.col("bg.grams").alias("grams"),
-        F.size("bg.grams").alias("ng"),
-    )
+    Every non-empty document is banded on its own, exact clones
+    included, so a hot bucket is split by the same bounded-bucket rule
+    as in every other family, counted in documents.  Candidates are
+    deduped before the verify.  Banding one champion per distinct text
+    and re-expanding its clones afterwards costs more than it saves:
+    on the erbench ``near_dup`` seed-1 corpus (7 082 docs, half exact
+    clones) that form ran 14 Spark jobs to this one's 8, for equal
+    output rows (BASELINE.md, "Per-doc MinHash banding, parent vs
+    change").  A ``max_bucket_size`` below 1 raises ``ValueError``
+    before anything is persisted or any job runs."""
+    docs = _minhash_rows(documents, id_col, text_col, num_hashes, bands, shingle_size)
     pair_ids = _bucket_pairs(docs, max_bucket_size, caches).dropDuplicates(
         ["id_a", "id_b"]
     )
-    verified = _jaccard_at_least(_attach(pair_ids, docs), min_jaccard)
-    if not expand:
-        return verified
-
-    # --- expand champion-level pairs back to member pairs ---------------
-    # intra-group: all (i < j) member pairs at exact jaccard 1.0 in the
-    # groups whose champion has tokens (the ``docs`` filter above); ids
-    # are sorted, so slicing after each position keeps id_a < id_b — a
-    # narrow array expression, no join
-    pairs_arr = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice("ids", i + 2, F.size("ids")),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    intra = (
-        groups.filter((F.col("gsz") > 1) & (F.size(tokens) > 0))
-        .select(F.explode(pairs_arr).alias("p"))
-        .select(
-            F.col("p.id_a").alias("id_a"),
-            F.col("p.id_b").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    # cross-group: each champion pair expands over both member lists;
-    # member ids interleave across groups, so re-orient with
-    # least/greatest (groups are disjoint — no x == y)
-    members = groups.select(F.col("cid").alias("id"), "ids")
-    cross = (
-        _attach(verified, members)
-        .select(F.explode("ids_a").alias("xa"), "ids_b", "jaccard")
-        .select("xa", F.explode("ids_b").alias("xb"), "jaccard")
-        .select(
-            F.least("xa", "xb").alias("id_a"),
-            F.greatest("xa", "xb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    return intra.unionByName(cross)
+    return _jaccard_at_least(_attach(pair_ids, docs), min_jaccard)
 
 
 # ---------------------------------------------------------------------------
@@ -515,19 +452,13 @@ def ngram_jaccard_pairs_fast(
     pairs well above the S-curve knee the outputs are identical.
     Pytest (and the `ngram_fast_parity_diff` contract query) pin
     sf-scale equality on the test corpus, whose near-dup pairs sit far
-    above the knee; the md5 path remains the DuckDB-oracle query."""
-    documents = fan_out(documents)  # round 6: see readers.fan_out
-    tokens = H.tokens_col(F.lower(F.col(text_col)))
-    docs = documents.select(
-        F.col(id_col).alias("id"), H.token_hashes_col(tokens).alias("th")
-    ).filter(F.size("th") > 0)
-    gb_udf = H.make_minhash_band_gram_udf(num_bands, num_bands, n)
-    docs = docs.select("id", gb_udf("th").alias("gb")).select(
-        "id",
-        F.col("gb.bands").alias("buckets"),
-        F.col("gb.grams").alias("grams"),
-        F.size("gb.grams").alias("ng"),
-    )
+    above the knee; the md5 path remains the DuckDB-oracle query.
+
+    The rows come from ``_minhash_rows``, the signature phase
+    ``minhash_verified_near_duplicates`` uses, with ``num_bands``
+    one-row bands; this path differs from MinHash only in that shape
+    and in deduping its pairs after the verify, not before."""
+    docs = _minhash_rows(documents, id_col, text_col, num_bands, num_bands, n)
     # same verify economies and post-verify pair dedup as
     # ngram_jaccard_pairs (see the measurement there) — grams here are
     # already distinct int64 hashes, so jaccard values are unchanged

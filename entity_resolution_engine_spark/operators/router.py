@@ -333,7 +333,7 @@ def llm_validate_sample(
         return []
     sample = (
         routed.filter(F.col("decision") == "gray")
-        .orderBy(F.desc("score"))
+        .orderBy(F.desc("score"), "url_a", "url_b")
         .limit(cfg.max_llm_calls_per_run)
         .collect()
     )

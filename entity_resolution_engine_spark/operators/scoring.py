@@ -3,10 +3,11 @@
 Analog of the reference's weighted matcher score
 (/root/reference/entity_resolution_engine/matchers/players_matcher.py:19-23,65-69),
 re-expressed as: candidate pairs ⨝ normalized pages (twice, to fetch
-both sides' match keys) → ONE Arrow-batched feature UDF producing all
-four similarity features → logistic match score as a pure-JVM column
-expression.  No per-row Python anywhere: the UDF is numpy-vectorized
-over each Arrow batch (functions/similarity.py).
+both sides' match keys) → ONE Arrow-batched feature UDF producing
+three similarity features, plus the full-length ratio as a JVM column
+→ logistic match score as a pure-JVM column expression.  No per-row
+Python anywhere: the UDF is numpy-vectorized over each Arrow batch
+(functions/similarity.py).
 
 Scale notes: the two enrichment joins shuffle on the 8-byte uid
 surrogate — the same key the blocking stage already grouped by, so
@@ -52,10 +53,10 @@ def score_pairs(
     # the Python, is the bill.
     key = F.substring(F.col("norm_text"), 1, cfg.match_key_chars)
     # full-document length travels as a cheap JVM long next to the
-    # truncated key: length_ratio computed inside the UDF from the
-    # truncated inputs saturates at 1.0 whenever both docs exceed
-    # match_key_chars — exactly the long-document cases the
-    # length_mismatch conflict flag exists for (round-2 ADVICE)
+    # truncated key: a length_ratio taken from the truncated inputs
+    # would saturate at 1.0 whenever both docs exceed match_key_chars —
+    # exactly the long-document cases the length_mismatch conflict flag
+    # exists for (round-2 ADVICE)
     side = normalized.select(
         uid_col().alias("uid"), "url", key.alias("mk"),
         F.length("norm_text").alias("nlen"), "lang", "warc_ts"
@@ -83,7 +84,7 @@ def score_pairs(
     # (BASELINE.md round 5): ~1.15x block+score at 50%-exact-dup
     # composition (common-crawl-style mirrors), a no-op at the default
     # synth corpus's 3% share — and semantics-free (pytest-pinned:
-    # the UDF returns 1.0 for all four features on exact pairs).
+    # the UDF returns 1.0 for all three of its features on exact pairs).
     # Nulling the UDF inputs keeps the plan single-pass (no candidates
     # re-scan per strategy branch); the UDF sees "" for those rows and
     # the features are overridden by the constant below.

@@ -458,13 +458,15 @@ def test_exact_pairs_score_one(normalized):
     """score_pairs skips the feature UDF for exact-strategy pairs and
     reports 1.0 for their four features and score.  That shortcut is
     semantics-free: exact pairs are byte-identical on norm_text, so the
-    UDF itself returns 1.0 for all four features on their match keys."""
+    UDF itself returns 1.0 for its three features on their match keys
+    (the fourth, length_ratio, is a JVM column over the full lengths)."""
     from entity_resolution_engine_spark.config import ScoringConfig
     from entity_resolution_engine_spark.functions.similarity import pair_features_udf
     from entity_resolution_engine_spark.operators.scoring import score_pairs
 
     cfg = ScoringConfig()
-    feats = ["jaro_winkler", "token_jaccard", "levenshtein_sim", "length_ratio"]
+    udf_feats = ["jaro_winkler", "token_jaccard", "levenshtein_sim"]
+    feats = udf_feats + ["length_ratio"]
     pairs, _ = candidate_pairs(normalized, BlockingConfig())
     exact = pairs.filter(F.col("strategy") == "exact")
     key = normalized.select(
@@ -476,9 +478,43 @@ def test_exact_pairs_score_one(normalized):
     ).join(key.select(F.col("uid").alias("uid_b"), F.col("mk").alias("mk_b")), "uid_b")
     udf_rows = keyed.select(pair_features_udf("mk_a", "mk_b").alias("f")).select("f.*").collect()
     assert udf_rows, "corpus has no exact pairs — fixture regressed"
-    assert all(r[c] == 1.0 for r in udf_rows for c in feats)
+    assert all(r[c] == 1.0 for r in udf_rows for c in udf_feats)
 
     scored = score_pairs(pairs, normalized, cfg).filter(F.col("strategy") == "exact")
     rows = scored.select(*feats, "score").collect()
     assert len(rows) == len(udf_rows)
     assert all(r[c] == 1.0 for r in rows for c in feats + ["score"])
+
+
+def test_length_ratio_uses_full_norm_text(spark):
+    """score_pairs' length_ratio is similarity.length_ratio over the
+    FULL norm_text, not over the match key: two pages longer than
+    match_key_chars, of different lengths, get their true ratio, where
+    the truncated keys would give 1.0."""
+    from entity_resolution_engine_spark.config import ScoringConfig
+    from entity_resolution_engine_spark.functions.similarity import length_ratio
+    from entity_resolution_engine_spark.operators.scoring import score_pairs
+
+    cfg = ScoringConfig()
+    body = " ".join(f"word{i}" for i in range(200))
+    rows = [("https://a.org/p", body), ("https://b.org/p", body + " " + body)]
+    pages = spark.createDataFrame(rows, ["url", "text"]).select(
+        "url",
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        "text",
+        F.lit("en").alias("lang"),
+    )
+    normalized = normalize_pages(pages)
+    norm = {r.url: r.norm_text for r in normalized.select("url", "norm_text").collect()}
+    a, b = norm["https://a.org/p"], norm["https://b.org/p"]
+    assert min(len(a), len(b)) > cfg.match_key_chars and len(a) != len(b)
+    candidates = spark.range(1).select(
+        uid_col(F.lit("https://a.org/p")).alias("uid_a"),
+        uid_col(F.lit("https://b.org/p")).alias("uid_b"),
+        F.lit(0).cast("long").alias("block_key"),
+        F.lit("lsh").alias("strategy"),
+    )
+    (row,) = score_pairs(candidates, normalized, cfg).select("length_ratio").collect()
+    assert row.length_ratio == length_ratio(a, b)
+    assert row.length_ratio < 1.0

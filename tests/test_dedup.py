@@ -212,14 +212,10 @@ def test_minhash_verified_exact_jaccard(docs):
     assert not any(4 in p for p in pairs)
 
 
-def test_minhash_verified_champion_expansion_matches_legacy(spark):
-    """Round-6 champion factoring: the expansion branch (one champion
-    per distinct lower(text), member pairs re-expanded) must emit
-    exactly the per-doc-banding branch's pairs, compared pair-for-pair
-    and value-for-value.  The max-group-size gate picks the branch from
-    ``max_bucket_size``: the 3-clone group takes per-doc banding at 5
-    (3 > 5 // 2) and the expansion at 6 (3 <= 6 // 2).  Neither cap
-    splits a bucket here, so the splitter is engaged for neither."""
+def test_minhash_verified_bands_every_doc(spark):
+    """Every non-empty doc is banded on its own (one banded row per
+    doc, clones included) and the exact verify gives clone pairs 1.0
+    and every cross pair between two clone groups the same value."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     near = base.replace("theta", "sigma")
     rows = [
@@ -229,38 +225,29 @@ def test_minhash_verified_champion_expansion_matches_legacy(spark):
         (5, "   "),                              # empty-token doc: excluded
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    kw = dict(shingle_size=2, num_hashes=128, bands=32, min_jaccard=0.5)
-
-    def run(max_bucket_size):
-        caches = []
-        pairs = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in DD.minhash_verified_near_duplicates(
-                docs, max_bucket_size=max_bucket_size, caches=caches, **kw
-            ).collect()
-        }
-        # [groups, banded docs]: a split bucket would add its bounded
-        # membership; the banded frame has one row per non-empty doc on
-        # the per-doc path and one per distinct non-empty text when
-        # expanding
-        assert len(caches) == 2
-        n_banded = caches[1].count()
-        for c in caches:
-            c.unpersist()
-        return pairs, n_banded
-
-    per_doc, n_per_doc = run(5)
-    expanded, n_expanded = run(6)
-    assert (n_per_doc, n_expanded) == (6, 3)
-    assert expanded == per_doc
+    caches: list = []
+    pairs = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in DD.minhash_verified_near_duplicates(
+            docs, shingle_size=2, num_hashes=128, bands=32, min_jaccard=0.5,
+            max_bucket_size=6, caches=caches,
+        ).collect()
+    }
+    # the banded frame alone: no bucket over the cap, so no split
+    # membership joins it
+    assert len(caches) == 1
+    n_banded = caches[0].count()
+    for c in caches:
+        c.unpersist()
+    assert n_banded == 6
     # intra-group clones at exact 1.0, full cross-product across the
     # two near groups, empty doc absent
-    assert expanded[(1, 2)] == 1.0 and expanded[(1, 7)] == 1.0
-    assert expanded[(2, 7)] == 1.0 and expanded[(3, 9)] == 1.0
+    assert pairs[(1, 2)] == 1.0 and pairs[(1, 7)] == 1.0
+    assert pairs[(2, 7)] == 1.0 and pairs[(3, 9)] == 1.0
     cross = {(1, 3), (1, 9), (2, 3), (2, 9), (3, 7), (7, 9)}
-    assert cross <= set(expanded)
-    assert len({expanded[p] for p in cross}) == 1  # inherited value
-    assert not any(5 in p for p in expanded)
+    assert cross <= set(pairs)
+    assert len({pairs[p] for p in cross}) == 1  # one value per text pair
+    assert not any(5 in p for p in pairs)
 
 
 def test_dedup_cache_ledgers_release_storage(spark, docs):
@@ -301,13 +288,20 @@ def test_dedup_cache_ledgers_release_storage(spark, docs):
         )
 
 
-def _hot_family_docs(spark):
+def _hot_family_docs(spark, tails=range(60)):
     # 60 near-identical docs (one shared 40-word body plus a unique
     # tail token each): every LSH family puts most of them in the same
     # buckets, far over a max_bucket_size of 8
     body = " ".join(f"w{i % 23}x{i}" for i in range(40))
-    rows = [(1000 + 7 * i, f"{body} tail{i}") for i in range(60)]
+    rows = [(1000 + 7 * i, f"{body} tail{t}") for i, t in enumerate(tails)]
     return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def _hot_clone_docs(spark):
+    # three of those texts with 4 exact copies each: 12 docs in one
+    # bucket, over a max_bucket_size of 8, though only 3 distinct texts
+    # share it
+    return _hot_family_docs(spark, tails=[t for t in range(3) for _ in range(4)])
 
 
 def _hot_family_embeddings(spark):
@@ -324,6 +318,8 @@ def _hot_family_embeddings(spark):
 
 _HOT_BUCKET_OPS = {
     "minhash": (_hot_family_docs, lambda d, m, c: DD.minhash_verified_near_duplicates(
+        d, min_jaccard=0.8, max_bucket_size=m, caches=c)),
+    "minhash_clones": (_hot_clone_docs, lambda d, m, c: DD.minhash_verified_near_duplicates(
         d, min_jaccard=0.8, max_bucket_size=m, caches=c)),
     "simhash": (_hot_family_docs, lambda d, m, c: DD.simhash_near_duplicates(
         d, max_hamming=3, max_bucket_size=m, caches=c)),

@@ -18,9 +18,10 @@ from entity_resolution_engine_spark.operators.router import (
 CFG = ScoringConfig()
 
 
-def _routed(spark, n_gray=30):
+def _routed(spark, n_gray=30, width=1):
     rows = [
-        (f"a{i}", f"b{i}", 0.5, "en", "en") for i in range(n_gray)
+        (f"a{i:0{width}d}", f"b{i:0{width}d}", 0.5, "en", "en")
+        for i in range(n_gray)
     ]  # all in the gray zone (0.45 <= s < 0.62)
     df = spark.createDataFrame(rows, ["url_a", "url_b", "score", "lang_a", "lang_b"])
     df = df.select(
@@ -65,6 +66,32 @@ def test_call_budget_caps_sample(spark):
     out = llm_validate_sample(routed, cfg, transport=transport)
     assert len(calls) == 10  # budget, not all 30 gray pairs
     assert len(out) == 10 and all(o["decision"] == "MATCH" for o in out)
+
+
+def test_sample_order_ignores_partitioning(spark):
+    """30 gray pairs tied at 0.5 and a budget of 10: the pairs sent to
+    the LLM are the first 10 by (url_a, url_b), whether the routed rows
+    come from 1 or 7 partitions."""
+    cfg = replace(CFG, llm_enabled=True, max_llm_calls_per_run=10)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    sent = []
+    try:
+        for n in (1, 7):
+            spark.conf.set(key, str(n))
+            routed = _routed(spark, n_gray=30, width=2).repartition(n, "url_b")
+            calls = []
+
+            def transport(system, user):
+                calls.append(_url_a(user))
+                return _MATCH
+
+            llm_validate_sample(routed, cfg, transport=transport)
+            sent.append(calls)
+    finally:
+        spark.conf.set(key, prev)
+    want = [f"a{i:02d}" for i in range(10)]
+    assert sent == [want, want]
 
 
 def test_circuit_breaker_opens_after_full_window(spark):

@@ -102,7 +102,6 @@ def test_pair_features_udf_matches_scalars(spark):
         assert math.isclose(
             r.levenshtein_sim, levenshtein_similarity(ta, tb), abs_tol=1e-12
         )
-        assert math.isclose(r.length_ratio, length_ratio(r.a, r.b), abs_tol=1e-12)
         assert 0.0 <= r.jaro_winkler <= 1.0
 
 

@@ -8,6 +8,13 @@ reps) and optionally:
 - times with the noop sink instead of count() (``--noop``) so the
   computation is measured with every column materialized (§1.4)
 
+All queries run in one Spark session, in the order given, and a
+query's time depends on which queries ran before it (JIT, caches and
+Python workers warmed by the earlier ones): the same leaf timed alone,
+after another leaf, or in bench.py's order can differ by more than its
+spread.  The summary line records that order as ``"order"``; compare
+two checkouts only on runs with the same order.
+
 Usage:
     python bench_extra.py --queries ngram_jaccard,minhash_near_dup \
         --sf /root/testdata/sf1.0 --reps 3 --plans before
@@ -82,6 +89,7 @@ def main() -> None:
         print(json.dumps({"query": name, "min": timings[name],
                           "samples": [round(r, 3) for r in reps]}), flush=True)
     print(json.dumps({"sf": args.sf, "mode": "noop" if args.noop else "count",
+                      "order": names,
                       "total": round(sum(timings.values()), 3),
                       "queries": timings, "spread": spreads}))
     spark.stop()

@@ -6,8 +6,14 @@ JVM-side (ONE flat ``F.transform`` + ``xxhash64`` pass — per-shingle
 string slicing in interpreted higher-order expressions was the
 dominant CPU cost of the blocking stage and is gone), while shingle
 folding, the MinHash signature, and LSH banding are fused into one
-pandas UDF, fully vectorized in numpy (``shingle_flat`` +
-``np.minimum.reduceat`` segment reductions) — no per-row Python loops.
+pandas UDF whose folds, signature and banding are numpy-vectorized over
+the batch (``shingle_flat`` + segment reductions).  Some per-row Python
+remains: ``_flatten_ragged`` copies each row's array into the flat
+buffer one row at a time, ``shingle_flat`` folds each non-empty row
+shorter than the shingle size in a Python loop, and ``_row_lists`` and
+the grams output turn each row back into a Python list with
+``.tolist()``.  On the ~7.1k-doc ``near_dup`` benchmark corpus those
+conversions were about 0.06 s of the MinHash kernel's 0.3 s CPU.
 
 One MinHash kernel family: ``_band_keys`` (the cache-blocked
 ``_chunked_min_fold`` signature, then the FNV ``_band_fold``) sits

@@ -45,7 +45,8 @@ def stage_metrics_rows(
     ``partition_row_count`` row per file, ``partition_id`` = the file's
     ordinal.  Each file is one write task's output, so the rows are the
     stage's output-skew profile at zero scan cost.
-    ``RUN_METRICS_SCHEMA`` is the matching ``session.local_frame`` schema."""
+    ``RUN_METRICS_SCHEMA`` is the matching ``TableCatalog.write_rows``
+    schema."""
     rows: list[tuple] = [(run_id, stage, "row_count", float(sum(counts)), None, seq)]
     rows += [
         (run_id, stage, "partition_row_count", float(c), i, seq)

@@ -5,9 +5,13 @@ Analog of the reference's weighted matcher score
 re-expressed as: candidate pairs ⨝ normalized pages (twice, to fetch
 both sides' match keys) → ONE Arrow-batched feature UDF producing
 three similarity features, plus the full-length ratio as a JVM column
-→ logistic match score as a pure-JVM column expression.  No per-row
-Python anywhere: the UDF is numpy-vectorized over each Arrow batch
-(functions/similarity.py).
+→ logistic match score as a pure-JVM column expression.  The UDF's
+Levenshtein DP and Jaro-Winkler match scan are numpy-vectorized over
+each Arrow batch, but it still runs per-row Python around them
+(functions/similarity.py): it splits each side into tokens, computes
+token-Jaccard with two Python sets per pair, and fills the Levenshtein
+token-id matrix and ``batch_jaro_winkler``'s ``encode`` code-point
+matrix one row at a time.
 
 Scale notes: the two enrichment joins shuffle on the 8-byte uid
 surrogate — the same key the blocking stage already grouped by, so

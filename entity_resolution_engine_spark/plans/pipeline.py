@@ -27,9 +27,10 @@ report, the quality gates and the quality report.  Only the row counts
 (snapshot footers), the router counters (which also give the review
 counts), one bounded run-history query, the review samples and the LLM
 verdicts come from Spark; the run rates, z-score anomalies, the four
-gates and both reports are computed on the driver from those rows, and
-every table enters Spark as an Arrow local frame
-(``session.local_frame``).
+gates and both reports are computed on the driver from those rows.
+Those five tables, and the route stage's LLM verdicts, are committed
+from the driver with ``TableCatalog.write_rows``: the parquet catalog
+writes each as one Arrow file and runs no Spark job for it.
 """
 
 from __future__ import annotations
@@ -56,7 +57,6 @@ from ..operators.router import (
     router_metrics,
 )
 from ..operators.scoring import score_pairs
-from ..session import local_frame
 from ..sources.catalog import ParquetSnapshotCatalog, TableCatalog
 
 STAGES = ("normalize", "block", "score", "route", "cluster", "merge", "observe")
@@ -269,20 +269,16 @@ class Pipeline:
             first_seq = min([fs for rid, fs, _ in history if rid == run_id] + [seq_base])
             runs = [h for h in history if h[0] != run_id] + [(run_id, first_seq, rates)]
 
-            cat.write(
-                "run_metrics",
-                local_frame(self.spark, local_rows + router_rows, M.RUN_METRICS_SCHEMA),
-                mode="append",
+            cat.write_rows(
+                "run_metrics", local_rows + router_rows, M.RUN_METRICS_SCHEMA, mode="append"
             )
 
             # ≤ 3 rows by construction (one per tracked rate); the event
             # write, triage report, HIGH-severity gate, and quality
             # report all feed from these rows
             anoms_rows = M.anomaly_rows(runs, run_id, self.cfg.anomaly)
-            cat.write(
-                "anomaly_events",
-                local_frame(self.spark, anoms_rows, M.ANOMALY_EVENTS_SCHEMA),
-                mode="append",
+            cat.write_rows(
+                "anomaly_events", anoms_rows, M.ANOMALY_EVENTS_SCHEMA, mode="append"
             )
             # reviews_query's order: ties on score break by url, so the
             # report does not depend on partitioning
@@ -293,20 +289,17 @@ class Pipeline:
                 .collect()
             )
             report = M.triage_report_rows(anoms_rows, samples, run_id)
-            cat.write(
+            cat.write_rows(
                 "anomaly_triage_reports",
-                local_frame(
-                    self.spark,
-                    [
-                        (
-                            run_id,
-                            report["max_severity"],
-                            report["n_anomalies"],
-                            report["report"],
-                        )
-                    ],
-                    M.TRIAGE_REPORTS_SCHEMA,
-                ),
+                [
+                    (
+                        run_id,
+                        report["max_severity"],
+                        report["n_anomalies"],
+                        report["report"],
+                    )
+                ],
+                M.TRIAGE_REPORTS_SCHEMA,
                 mode="append",
             )
             # the max_llm_error_rate gate is fed from the COMMITTED
@@ -327,10 +320,8 @@ class Pipeline:
                 high_anomaly_count=sum(1 for a in anoms_rows if a.severity == "HIGH"),
                 llm_stats=llm_stats,
             )
-            cat.write(
-                "quality_gate_results",
-                local_frame(self.spark, gate_rows, M.QUALITY_GATE_RESULTS_SCHEMA),
-                mode="append",
+            cat.write_rows(
+                "quality_gate_results", gate_rows, M.QUALITY_GATE_RESULTS_SCHEMA, mode="append"
             )
 
             # O4: the combined quality report (reference
@@ -353,13 +344,10 @@ class Pipeline:
                 ],
                 "review_counts": {"PENDING": n_gray} if n_gray else {},
             }
-            cat.write(
+            cat.write_rows(
                 "quality_reports",
-                local_frame(
-                    self.spark,
-                    [(run_id, json.dumps(qr, default=str))],
-                    M.QUALITY_REPORTS_SCHEMA,
-                ),
+                [(run_id, json.dumps(qr, default=str))],
+                M.QUALITY_REPORTS_SCHEMA,
                 mode="append",
             )
 
@@ -402,16 +390,13 @@ class Pipeline:
             )
             for r in results
         ]
-        self.catalog.write(
+        self.catalog.write_rows(
             self._t(run_id, "llm_validations"),
-            local_frame(
-                self.spark,
-                rows,
-                "run_id string, url_a string, url_b string, "
-                "decision string, confidence double, "
-                "reasons array<string>, risk_flags array<string>, "
-                "error string",
-            ),
+            rows,
+            "run_id string, url_a string, url_b string, "
+            "decision string, confidence double, "
+            "reasons array<string>, risk_flags array<string>, "
+            "error string",
         )
 
     def _rate_history(self, run_id: str, n_runs: int) -> list[tuple[str, int, dict]]:

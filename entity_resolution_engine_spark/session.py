@@ -97,17 +97,14 @@ def stop_spark() -> None:
         SparkSession._activeSession = None  # noqa: SLF001
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """Driver rows (tuples in ``schema``'s DDL column order) → a
-    DataFrame that plans as an Arrow-backed ``LocalRelation``.
-
-    ``createDataFrame(list_of_tuples, ddl)`` plans as a pickled-Python
-    ``LogicalRDD``: every job that reads it starts Python workers to
-    unpickle the rows: on a 4-core host, counting or writing 46 rows
-    took 0.41–0.50 s, against 0.10–0.16 s as an Arrow table.  The
-    columns are built straight from the Python values, so ``None``
-    stays null in every column type (a pandas detour would turn it into
-    NaN in double columns and widen int columns to double)."""
+def arrow_rows(rows: list[tuple], schema: str):
+    """Driver rows (tuples in ``schema``'s DDL column order) → ``(table,
+    struct)``: a ``pyarrow.Table`` in the Arrow form of ``schema`` and
+    the parsed ``StructType``.  The one conversion behind
+    ``local_frame`` and the catalog's ``write_rows``.  The columns are
+    built straight from the Python values, so ``None`` stays null in
+    every column type (a pandas detour would turn it into NaN in double
+    columns and widen int columns to double)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
@@ -119,4 +116,21 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
         schema=arrow_schema,
     )
+    return table, struct
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver rows (tuples in ``schema``'s DDL column order) → a
+    DataFrame that plans as an Arrow-backed ``LocalRelation`` over
+    ``arrow_rows``' table.
+
+    ``createDataFrame(list_of_tuples, ddl)`` plans as a pickled-Python
+    ``LogicalRDD``: every job that reads it starts Python workers to
+    unpickle the rows: on a 4-core host, counting or writing 46 rows
+    took 0.41–0.50 s, against 0.10–0.16 s as an Arrow table.  Use it
+    for rows Spark goes on to compute with (a join, a filter); rows
+    that only need committing to a catalog table go through
+    ``TableCatalog.write_rows``, which the parquet catalog writes
+    without a Spark job."""
+    table, struct = arrow_rows(rows, schema)
     return spark.createDataFrame(table, schema=struct)

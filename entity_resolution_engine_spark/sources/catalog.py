@@ -13,7 +13,10 @@ facts), so the catalog is an interface with two implementations:
   a fast append: it adds files and rewrites none.  This gives the same
   contract Iceberg does at the granularity the pipeline needs: atomic
   overwrite and append, time-travel by snapshot id, rollback, and
-  stage-level resume.
+  stage-level resume.  A frame is written by Spark; driver-held rows
+  (``write_rows``: observe's run tables, the LLM verdicts) are written
+  by ``pyarrow.parquet`` as one ``part-00000.parquet``, with no Spark
+  job.  Either way the manifest rename is the only commit point.
 - ``IcebergCatalog`` — the same interface over ``writeTo(...)`` /
   ``spark.read.table(...)``; selected automatically when a Spark
   Iceberg catalog is configured (``spark.sql.catalog.<name>`` conf),
@@ -38,10 +41,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import arrow_rows, local_frame
+
 
 class TableCatalog(ABC):
     @abstractmethod
     def write(self, name: str, df: DataFrame, mode: str = "overwrite") -> None: ...
+
+    def write_rows(
+        self, name: str, rows: list[tuple], schema: str, mode: str = "overwrite"
+    ) -> None:
+        """Commit driver-held ``rows`` (tuples in the DDL ``schema``'s
+        column order) as ``write`` commits ``local_frame(spark, rows,
+        schema)``: same rows, same recorded schema, same append check.
+        This default is that call; a backend that can commit a few rows
+        without a Spark job overrides it."""
+        self.write(name, local_frame(self.spark, rows, schema), mode)
 
     @abstractmethod
     def read(self, name: str) -> DataFrame: ...
@@ -101,15 +116,22 @@ class ParquetSnapshotCatalog(TableCatalog):
     raises ``ValueError`` before anything is written. An append after
     a rollback extends the rolled-back snapshot.
 
+    ``write_rows`` commits driver-held rows the same way without Spark:
+    it builds the Arrow table ``session.local_frame`` would
+    (``session.arrow_rows``), applies the same append check, and writes
+    ``snap-<id>/part-00000.parquet`` with ``pyarrow.parquet``.  Its
+    snapshots chain, read, roll back and report footer counts like any
+    other; a chain may mix the two kinds.
+
     No compaction is done. Once a chain holds more than 32 directories
     (``spark.sql.sources.parallelPartitionDiscovery.threshold``), Spark
     lists their files in one job per read; the inferring read it
     replaces ran one job on every call.
 
     The manifest write is staged to a temp file then ``os.replace``d:
-    atomic on POSIX, and the only commit point. A crash mid-write never
-    corrupts the table: readers keep seeing the previous snapshot (the
-    property resume relies on).
+    atomic on POSIX, and the only commit point of both write paths. A
+    crash mid-write never corrupts the table: readers keep seeing the
+    previous snapshot (the property resume relies on).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -168,29 +190,58 @@ class ParquetSnapshotCatalog(TableCatalog):
         schema = StructType.fromJson(entry["schema"])
         return self.spark.read.schema(schema).parquet(*dirs)
 
-    # -- TableCatalog -------------------------------------------------------
-    def write(self, name: str, df: DataFrame, mode: str = "overwrite") -> None:
+    def _begin(self, name: str, mode: str) -> tuple[dict, str | None, str]:
+        """The table's manifest (a new one for a new table), the
+        snapshot a ``mode`` write extends (the current one for an
+        append, ``None`` for an overwrite or a first append) and a new
+        snapshot id."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"unsupported mode {mode!r}")
         manifest = self._load_manifest(name) or {"current": None, "history": []}
         parent = manifest["current"] if mode == "append" else None
-        if parent is not None:
-            df = _align(df, self._entry(name, manifest, parent)["schema"], name)
-        snap_id = uuid.uuid4().hex[:12]
-        snap_dir = f"snap-{snap_id}"
-        df.write.mode("overwrite").parquet(os.path.join(self._tdir(name), snap_dir))
+        return manifest, parent, uuid.uuid4().hex[:12]
+
+    def _commit(
+        self, name: str, manifest: dict, mode: str, parent: str | None,
+        snap_id: str, schema: StructType,
+    ) -> None:
         manifest["history"].append(
             {
                 "id": snap_id,
                 "ts": time.time(),
                 "mode": mode,
-                "dir": snap_dir,
-                "schema": df.schema.jsonValue(),
+                "dir": f"snap-{snap_id}",
+                "schema": schema.jsonValue(),
                 "parent": parent,
             }
         )
         manifest["current"] = snap_id
         self._commit_manifest(name, manifest)
+
+    # -- TableCatalog -------------------------------------------------------
+    def write(self, name: str, df: DataFrame, mode: str = "overwrite") -> None:
+        manifest, parent, snap_id = self._begin(name, mode)
+        if parent is not None:
+            names = _align(df.schema, self._entry(name, manifest, parent)["schema"], name)
+            df = df.select(*[F.col(f"`{n}`") for n in names])
+        df.write.mode("overwrite").parquet(os.path.join(self._tdir(name), f"snap-{snap_id}"))
+        self._commit(name, manifest, mode, parent, snap_id, df.schema)
+
+    def write_rows(
+        self, name: str, rows: list[tuple], schema: str, mode: str = "overwrite"
+    ) -> None:
+        import pyarrow.parquet as pq
+
+        manifest, parent, snap_id = self._begin(name, mode)
+        table, struct = arrow_rows(rows, schema)
+        if parent is not None:
+            names = _align(struct, self._entry(name, manifest, parent)["schema"], name)
+            table = table.select(names)
+            struct = StructType([struct[n] for n in names])
+        snap_dir = os.path.join(self._tdir(name), f"snap-{snap_id}")
+        os.makedirs(snap_dir)
+        pq.write_table(table, os.path.join(snap_dir, "part-00000.parquet"))
+        self._commit(name, manifest, mode, parent, snap_id, struct)
 
     def read(self, name: str) -> DataFrame:
         m = self._current_manifest(name)
@@ -233,20 +284,20 @@ class ParquetSnapshotCatalog(TableCatalog):
         ]
 
 
-def _align(df: DataFrame, schema_json: dict, name: str) -> DataFrame:
-    """``df`` with its columns in the order of the table's recorded
-    schema; ``ValueError`` unless the names match and each type matches
-    (nullability aside)."""
+def _align(have: StructType, schema_json: dict, name: str) -> list[str]:
+    """The column names of ``have`` (the schema an append brings) in
+    the order of the table's recorded schema; ``ValueError`` unless the
+    names match and each type matches (nullability aside)."""
     want = StructType.fromJson(schema_json)
-    have = {f.name: f.dataType.simpleString() for f in df.schema}
-    if sorted(df.columns) != sorted(want.names) or any(
-        have[f.name] != f.dataType.simpleString() for f in want
+    types = {f.name: f.dataType.simpleString() for f in have}
+    if sorted(have.names) != sorted(want.names) or any(
+        types[f.name] != f.dataType.simpleString() for f in want
     ):
         raise ValueError(
-            f"append to {name!r}: {df.schema.simpleString()} does not match "
+            f"append to {name!r}: {have.simpleString()} does not match "
             f"the table's {want.simpleString()}"
         )
-    return df.select(*[F.col(f"`{n}`") for n in want.names])
+    return want.names
 
 
 class IcebergCatalog(TableCatalog):

@@ -6,6 +6,8 @@ and parent in its manifest, so reads take no Spark job and an append
 writes only its new rows.  These tests pin both halves: reads equal
 Spark's own inference over the same directories, the metadata calls run
 no job, and appends leave earlier snapshots byte-unchanged.
+``write_rows`` commits driver-held rows with no Spark job at all and
+must be indistinguishable from ``write(local_frame(...))``.
 """
 
 from __future__ import annotations
@@ -225,6 +227,111 @@ def test_stream_tables_read_as_inferred(spark, cat):
 
 
 # ---------------------------------------------------------------------------
+# write_rows: driver-held rows committed by pyarrow, without a Spark job
+# ---------------------------------------------------------------------------
+
+_LLM_DDL = (
+    "run_id string, url_a string, url_b string, decision string, "
+    "confidence double, reasons array<string>, risk_flags array<string>, "
+    "error string"
+)
+
+
+@pytest.mark.parametrize(
+    "ddl, rows",
+    [
+        (
+            "k string, n int, m bigint, x double, ok boolean",
+            [("a", 1, 2**40, 0.5, True), ("b", None, None, None, None), ("c", -3, 7, 1e300, False)],
+        ),
+        (
+            _LLM_DDL,
+            [
+                ("r", "u1", "u2", "MATCH", 0.9, ["t"], [], None),
+                ("r", "u3", "u4", None, None, [], ["x", "y"], "timeout"),
+            ],
+        ),
+        ("k string, n int", []),
+    ],
+)
+def test_write_rows_equals_local_frame_write(spark, cat, ddl, rows):
+    from entity_resolution_engine_spark.session import local_frame
+
+    cat.write_rows("rows", rows, ddl)
+    cat.write("frame", local_frame(spark, rows, ddl))
+    got, want = cat.snapshots("rows")[0], cat.snapshots("frame")[0]
+    assert got["schema"] == want["schema"]
+    assert (got["mode"], got["parent"]) == ("overwrite", None)
+    assert os.listdir(os.path.join(cat.root, "rows", got["dir"])) == ["part-00000.parquet"]
+    assert sorted(map(repr, cat.read("rows").collect())) == sorted(
+        map(repr, cat.read("frame").collect())
+    )
+    _assert_read_matches_inference(spark, cat, "rows")
+
+
+def test_write_rows_runs_no_spark_job(cat, jobs_run_by):
+    def calls():
+        cat.write_rows("t", [("a", 1.0)], "k string, v double")
+        cat.write_rows("t", [("b", None), ("c", 2.0)], "k string, v double", mode="append")
+
+    assert jobs_run_by(calls) == 0
+    assert cat.file_row_counts("t") == [1, 2]
+
+
+@pytest.mark.parametrize(
+    "ddl, row",
+    [
+        ("k bigint", (2,)),  # missing column
+        ("k bigint, v string, w string", (2, "b", "x")),  # extra column
+        ("k int, v string", (2, "b")),  # changed type
+    ],
+)
+def test_write_rows_schema_mismatch_raises_and_leaves_table(spark, cat, ddl, row):
+    cat.write("t", spark.createDataFrame([(1, "a")], "k long, v string"))
+    snaps = cat.snapshots("t")
+    entries = sorted(os.listdir(os.path.join(cat.root, "t")))
+    manifest = pathlib.Path(cat.root, "t", "manifest.json").read_bytes()
+    with pytest.raises(ValueError, match="does not match"):
+        cat.write_rows("t", [row], ddl, mode="append")
+    assert cat.snapshots("t") == snaps
+    assert sorted(os.listdir(os.path.join(cat.root, "t"))) == entries
+    assert pathlib.Path(cat.root, "t", "manifest.json").read_bytes() == manifest
+    assert [tuple(r) for r in cat.read("t").collect()] == [(1, "a")]
+
+
+def test_write_rows_rejects_unknown_mode(cat):
+    with pytest.raises(ValueError, match="unsupported mode"):
+        cat.write_rows("t", [(1,)], "k int", mode="merge")
+    assert not os.path.exists(os.path.join(cat.root, "t"))
+
+
+def test_mixed_chain_commit_order_and_rollback(spark, cat):
+    """A Spark overwrite, then row appends (one naming the columns in
+    another order): reads, footer counts and rollback follow the chain
+    in commit order across both write paths."""
+    cat.write("t", spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").coalesce(1))
+    cat.write_rows("t", [(3, "c")], "k bigint, v string", mode="append")
+    cat.write_rows("t", [("d", 4), ("e", 5), ("f", 6)], "v string, k bigint", mode="append")
+    snaps = cat.snapshots("t")
+    assert [s["parent"] for s in snaps] == [None, snaps[0]["id"], snaps[1]["id"]]
+    assert cat.file_row_counts("t") == [2, 1, 3]
+    assert cat.read("t").columns == ["k", "v"]
+    for snap, n in zip(snaps, (2, 3, 6)):
+        rows = sorted(tuple(r) for r in cat.read_snapshot("t", snap["id"]).collect())
+        assert rows == [(i, "abcdef"[i - 1]) for i in range(1, n + 1)]
+    _assert_read_matches_inference(spark, cat, "t")
+
+    cat.rollback("t", snaps[1]["id"])
+    assert cat.file_row_counts("t") == [2, 1]
+    cat.write_rows("t", [(9, "z")], "k bigint, v string", mode="append")
+    assert cat.snapshots("t")[-1]["parent"] == snaps[1]["id"]
+    assert cat.file_row_counts("t") == [2, 1, 1]
+    assert sorted(tuple(r) for r in cat.read("t").collect()) == [
+        (1, "a"), (2, "b"), (3, "c"), (9, "z")
+    ]
+
+
+# ---------------------------------------------------------------------------
 # IcebergCatalog logic without jars: a recording fake SparkSession pins
 # the SQL/DataFrameWriterV2 calls the catalog would issue on a real
 # Iceberg deployment (VERDICT round-1 item 10 — removes the blind spot
@@ -284,6 +391,10 @@ class _FakeSpark:
         self.catalog = _FakeCatalogAPI(set(existing))
         self.read = _FakeRead(self.call_log)
 
+    def createDataFrame(self, data, schema=None):
+        self.call_log.append(("createDataFrame", data.to_pylist(), schema.simpleString()))
+        return _FakeDF(self.call_log)
+
     def sql(self, q):
         self.sql_log.append(q)
         class _R:
@@ -330,3 +441,20 @@ def test_iceberg_catalog_sql_surface():
     )
     cat.drop("entities")
     assert "DROP TABLE IF EXISTS ice.er.entities" in fake.sql_log
+
+
+def test_iceberg_write_rows_goes_through_writeTo():
+    """The ABC default: rows become ``local_frame``'s Arrow-backed frame
+    and go through ``write``, so Iceberg commits them with ``writeTo``."""
+    from entity_resolution_engine_spark.sources.catalog import IcebergCatalog
+
+    fake = _FakeSpark({"spark.sql.catalog.ice": "org.apache.iceberg.spark.SparkCatalog"})
+    cat = IcebergCatalog(fake, "ice", namespace="er")
+    cat.write_rows("gates", [("r", None)], "run_id string, value double", mode="append")
+    cat.write_rows("gates", [], "run_id string, value double")
+    assert fake.call_log == [
+        ("createDataFrame", [{"run_id": "r", "value": None}], "struct<run_id:string,value:double>"),
+        ("append", "ice.er.gates"),
+        ("createDataFrame", [], "struct<run_id:string,value:double>"),
+        ("createOrReplace", "ice.er.gates"),
+    ]

@@ -386,6 +386,46 @@ def test_llm_error_rate_fails_gate(spark, synth_corpus, tmp_path_factory):
     assert vals and all(r.error is not None for r in vals)
 
 
+_OBSERVE_TABLES = (
+    "run_metrics",
+    "anomaly_events",
+    "anomaly_triage_reports",
+    "quality_gate_results",
+    "quality_reports",
+)
+
+
+def test_observe_commits_through_write_rows(spark, tmp_path_factory):
+    """Observe commits its five run tables with ``write_rows``, not as
+    Spark frames: a catalog whose ``write`` refuses them still completes
+    a fresh run and a resume of cluster, merge and observe, and each
+    table holds one snapshot per observe."""
+    from entity_resolution_engine_spark.sources.catalog import ParquetSnapshotCatalog
+    from entity_resolution_engine_spark.sources.synth import generate_web_pages
+
+    class RowsOnlyForObserve(ParquetSnapshotCatalog):
+        def write(self, name, df, mode="overwrite"):
+            if name in _OBSERVE_TABLES:
+                raise AssertionError(f"{name} committed through write")
+            super().write(name, df, mode)
+
+    root = str(tmp_path_factory.mktemp("rows"))
+    pipe = Pipeline(spark, root, catalog=RowsOnlyForObserve(spark, root))
+    pages, _ = generate_web_pages(spark, 120, seed=3)
+    assert pipe.run(pages, run_id="w").stages_run == list(STAGES)
+    state = RunState(root, "w")
+    with open(state.path, "w") as f:
+        json.dump({"run_id": "w", "completed": list(STAGES[:4])}, f)
+    resumed = pipe.run(pages, run_id="w")
+    assert resumed.stages_run == ["cluster", "merge", "observe"]
+    assert resumed.gate_passed
+    for t in _OBSERVE_TABLES:
+        assert len(pipe.catalog.snapshots(t)) == 2, t
+    reports = pipe.catalog.read("quality_reports").collect()
+    assert [r.run_id for r in reports] == ["w", "w"]
+    assert reports[0].report_json == reports[1].report_json
+
+
 # anomaly_events and quality_gate_results of the 4-run history below, as
 # the DataFrame implementation of observe wrote them
 _GOLDEN_ANOMALIES = [

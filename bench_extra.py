@@ -47,8 +47,7 @@ def main() -> None:
 
     import __spark_entry__ as E
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="er_bench_extra", master=f"local[{cpus}]")
+    spark = get_spark(app_name="er_bench_extra")
     qs = E.queries()
     headline = [
         "revenue_by_nation", "argmax_best_match", "zscore_anomaly",

@@ -35,7 +35,8 @@ class BlockingConfig:
     lsh_bands: int = 48
     lsh_rows: int = 4               # bands * rows == num_hashes
     # Hot-key salting is realized as deterministic sub-block splitting
-    # (blocking.split_oversized_blocks): a block above max_block_size is
+    # in the one candidate phase (blocking.bucket_pairs, through
+    # bounded_block_pairs): a block above max_block_size is
     # split into ceil(size/max_block_size) sub-blocks by pmod(uid,
     # n_sub) and re-linked through a star of sub-block representatives,
     # so connectivity survives while per-block pair count stays

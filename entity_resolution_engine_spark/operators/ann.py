@@ -75,8 +75,10 @@ def centroid_sample(
 ) -> DataFrame:
     """The deterministic training sample as a DataFrame (~sample rows):
     hash FILTER at the scan, then a sort of only the survivors for a
-    stable pick.  Exposed separately so the plan is dumpable
-    (PLANS.md pins that no full-corpus sort exists here)."""
+    stable pick.  Exposed separately so its plan can be checked:
+    ``tests/test_plans.py::test_centroid_sample_sorts_only_the_survivors``
+    pins that the hash filter runs below the top-k pick and that no
+    full-corpus sort or range exchange exists here."""
     h = F.xxhash64(F.col(vec_col).cast("string"))
     n_total = corpus.count()  # columnar count — no shuffle, no sort
     modulus = max(1, n_total // sample)

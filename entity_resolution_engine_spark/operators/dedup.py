@@ -20,21 +20,22 @@ exposed as a driver-contract query (__spark_entry__.py):
                      brute-force baseline lives in operators/ann.py).
 
 The five LSH-style joins (MinHash, SimHash, both n-gram paths,
-embedding) share one candidate phase and one join-back.  Each family's
-signature UDF emits (id, buckets array<long>, payload…) rows, and
-``_bucket_pairs`` checks the cap, persists those rows, explodes the
-buckets and runs the ER pipeline's bucket self-join,
-``blocking.bounded_block_pairs``: hot buckets are split into
+embedding) share the engine's one candidate phase with ER blocking, and
+one join-back.  Each family's signature UDF emits (id, buckets
+array<long>, payload…) rows, and ``blocking.bucket_pairs`` checks the
+cap, persists those rows, explodes the buckets and runs the bucket
+self-join, ``blocking.bounded_block_pairs``: hot buckets are split into
 ceil(size/max_bucket_size) sub-buckets and star-linked, so there is
 never an unblocked self-join and never an unbounded bucket; pairs
-always satisfy id_a < id_b.  ``_attach`` joins the payload columns back
-onto both sides as ``<col>_a``/``<col>_b``, and the family's exact
-predicate decides each pair.  What differs per family is the signature
-UDF, the predicate and where the candidates are deduped.  MinHash and
-the fast n-gram path share one signature phase too, ``_minhash_rows``
-(the fused MinHash kernel over every non-empty document), and differ
-only in their band shape and dedup placement.  Ids must be integral
-(the sub-bucket assignment is ``pmod(id, n_sub)``).
+always satisfy id_a < id_b (the split ledger is not used here).
+``_attach`` joins the payload columns back onto both sides as
+``<col>_a``/``<col>_b``, and the family's exact predicate decides each
+pair.  What differs per family is the signature UDF, the predicate
+and where the candidates are deduped.  MinHash and the fast n-gram
+path share one signature phase too, ``_minhash_rows`` (the fused
+MinHash kernel over every non-empty document), and differ only in
+their band shape and dedup placement.  Ids must be integral (the
+sub-bucket assignment is ``pmod(id, n_sub)``).
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ from pyspark.sql import Window
 
 from ..functions import hashing as H
 from ..sources.readers import fan_out
-from .blocking import bounded_block_pairs, check_block_cap
+from .blocking import bucket_pairs
 
 # ---------------------------------------------------------------------------
 # exact
@@ -80,38 +81,11 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# candidate phase, join-back and Jaccard verify (the five LSH-style joins)
+# join-back and Jaccard verify (the five LSH-style joins)
 # ---------------------------------------------------------------------------
 
-def _bucket_pairs(
-    rows: DataFrame, max_bucket_size: int, caches: list | None
-) -> DataFrame:
-    """(id, buckets array<long>, payload…) rows → (id_a < id_b)
-    candidate pairs, hot buckets split and star-linked by
-    ``bounded_block_pairs``.  NOT deduped: a pair sharing k buckets
-    appears k times, so each caller dedups before or after its verify
-    (the split ledger is not used).
-
-    A ``max_bucket_size`` below 1 raises ``ValueError`` before anything
-    is persisted or any job runs.  Otherwise ``rows`` is persisted in
-    place and appended to ``caches``: the split ledger's eager collect
-    fills the cache, and the bucket explode and both ``_attach`` joins
-    read it instead of re-running the family's UDF.  With no bucket
-    over the cap the pairs are one equi-join; a hot bucket also adds
-    the persisted bounded membership to ``caches``."""
-    check_block_cap(max_bucket_size)
-    rows.persist()  # returns ``rows`` itself: the caller's frame is cached
-    if caches is not None:
-        caches.append(rows)
-    members = rows.select(
-        F.explode("buckets").alias("block_key"), F.col("id").alias("uid")
-    )
-    pairs, _ = bounded_block_pairs(members, max_bucket_size, caches)
-    return pairs.select(F.col("uid_a").alias("id_a"), F.col("uid_b").alias("id_b"))
-
-
 def _attach(pairs: DataFrame, rows: DataFrame) -> DataFrame:
-    """(id_a, id_b, …) pairs with the payload of ``_bucket_pairs``' rows
+    """(id_a, id_b, …) pairs with the payload of ``bucket_pairs``' rows
     joined back on both sides: every column but ``id`` and ``buckets``
     arrives as ``<col>_a`` and ``<col>_b``."""
     payload = [c for c in rows.columns if c not in ("id", "buckets")]
@@ -170,7 +144,7 @@ def _minhash_rows(
     bands: int,
     shingle_size: int,
 ) -> DataFrame:
-    """``_bucket_pairs`` rows for the two joins on the shared MinHash
+    """``bucket_pairs`` rows for the two joins on the shared MinHash
     kernel: (id, buckets, grams, ng) per document with at least one
     token.  ``lower(text)`` is tokenized and hashed in the JVM, then ONE
     fused Arrow pass (``make_minhash_band_gram_udf``) emits the band
@@ -245,9 +219,8 @@ def minhash_verified_near_duplicates(
     change").  A ``max_bucket_size`` below 1 raises ``ValueError``
     before anything is persisted or any job runs."""
     docs = _minhash_rows(documents, id_col, text_col, num_hashes, bands, shingle_size)
-    pair_ids = _bucket_pairs(docs, max_bucket_size, caches).dropDuplicates(
-        ["id_a", "id_b"]
-    )
+    pair_ids, _ = bucket_pairs(docs, max_bucket_size, caches)
+    pair_ids = pair_ids.dropDuplicates(["id_a", "id_b"])
     return _jaccard_at_least(_attach(pair_ids, docs), min_jaccard)
 
 
@@ -339,9 +312,8 @@ def simhash_near_duplicates(
         ]
     )
     rows = sigs.select("id", buckets.alias("buckets"), "simhash")
-    pair_ids = _bucket_pairs(rows, max_bucket_size, caches).dropDuplicates(
-        ["id_a", "id_b"]
-    )
+    pair_ids, _ = bucket_pairs(rows, max_bucket_size, caches)
+    pair_ids = pair_ids.dropDuplicates(["id_a", "id_b"])
     hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         _attach(pair_ids, rows)
@@ -417,7 +389,7 @@ def ngram_jaccard_pairs(
     # erbench near_dup seed-1 corpus (109k raw candidates, 17k
     # distinct, 17k survivors) took 2.38 s, and 2.26 s with dedup
     # first.  Both n-gram paths keep dedup-after-verify.
-    pair_ids = _bucket_pairs(docs, max_bucket_size, caches)
+    pair_ids, _ = bucket_pairs(docs, max_bucket_size, caches)
     return _jaccard_at_least(_attach(pair_ids, docs), min_jaccard).dropDuplicates(
         ["id_a", "id_b"]
     )
@@ -462,7 +434,7 @@ def ngram_jaccard_pairs_fast(
     # same verify economies and post-verify pair dedup as
     # ngram_jaccard_pairs (see the measurement there) — grams here are
     # already distinct int64 hashes, so jaccard values are unchanged
-    pair_ids = _bucket_pairs(docs, max_bucket_size, caches)
+    pair_ids, _ = bucket_pairs(docs, max_bucket_size, caches)
     return _jaccard_at_least(_attach(pair_ids, docs), min_jaccard).dropDuplicates(
         ["id_a", "id_b"]
     )
@@ -587,9 +559,8 @@ def embedding_near_duplicates(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     ).withColumn("buckets", srp(F.col("v")))
-    pair_ids = _bucket_pairs(vecs, max_bucket_size, caches).dropDuplicates(
-        ["id_a", "id_b"]
-    )
+    pair_ids, _ = bucket_pairs(vecs, max_bucket_size, caches)
+    pair_ids = pair_ids.dropDuplicates(["id_a", "id_b"])
     return (
         _attach(pair_ids, vecs)
         .withColumn("cosine", cosine_sim_col(F.col("v_a"), F.col("v_b"), dim))

@@ -40,7 +40,7 @@ def logistic_score(raw: F.Column, cfg: ScoringConfig) -> F.Column:
 def score_pairs(
     candidates: DataFrame, normalized: DataFrame, cfg: ScoringConfig
 ) -> DataFrame:
-    """(uid_a, uid_b, block_key, strategy) → (url_a, url_b, strategy,
+    """(uid_a, uid_b, strategy) → (url_a, url_b, strategy,
     lang_a, lang_b, ts_a, ts_b, the four features, score): the select
     and the ``score`` column below (langs and timestamps carried for
     the router's conflict flags).  url_a/url_b re-attach here from

@@ -22,6 +22,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical RAM (``os.sysconf``), in whole GiB and
+    at least 1g: the heap is only a cap, but one at or above physical
+    RAM (the old fixed 48g on a 15 GB host) lets the driver grow until
+    the machine, not the JVM, runs out."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2**31)}g"
+
+
 def get_spark(
     app_name: str = "entity_resolution_engine_spark",
     master: str | None = None,
@@ -30,12 +39,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    in the sandbox; on a real cluster it is supplied by spark-submit and
-    this argument is left ``None`` while ``SparkSession.builder`` picks
-    up the cluster config.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
+    the host's core count, ``os.cpu_count()``) on one machine; on a real
+    cluster it is supplied by spark-submit and this argument is left
+    ``None`` while ``SparkSession.builder`` picks up the cluster config.
+    The driver heap is ``$SPARK_GRAFT_DRIVER_MEM``, by default half the
+    host's physical RAM (``_default_driver_mem``).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -52,7 +63,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

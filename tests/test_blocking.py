@@ -69,7 +69,7 @@ def test_split_bounds_block_size(spark):
         [(1001, i) for i in range(50)] + [(2002, 900), (2002, 901)],
         "block_key long, uid long",
     )
-    bounded, stats = split_oversized_blocks(members, cfg.max_block_size)
+    bounded, stats, _ = split_oversized_blocks(members, cfg.max_block_size)
     sizes = {
         (r.block_key, r.sub): r["count"]
         for r in bounded.groupBy("block_key", "sub").count().collect()
@@ -104,7 +104,7 @@ def test_split_ledger_carries_no_hint(spark):
         [(1001, i) for i in range(50)] + [(2002, 900), (2002, 901)],
         "block_key long, uid long",
     )
-    bounded, stats = split_oversized_blocks(members, 8)
+    bounded, stats, _ = split_oversized_blocks(members, 8)
     assert "ResolvedHint" not in stats._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" in bounded._jdf.queryExecution().analyzed().toString()
     assert [tuple(r) for r in stats.collect()] == [(1001, 50, 7)]
@@ -204,7 +204,7 @@ def test_splitter_matches_lazy_reference(spark, case, seed):
     assert {r[0] for r in got_ledger} == hot
     assert len(caches) == (2 if hot else 1)  # the reference always persists
     # the bounded membership agrees too (split_oversized_blocks itself)
-    bounded, stats = split_oversized_blocks(members, _CAP)
+    bounded, stats, _ = split_oversized_blocks(members, _CAP)
     ref_bounded, _ = _ref_split_oversized_blocks(members, _CAP)
     assert Counter(map(tuple, bounded.collect())) == Counter(map(tuple, ref_bounded.collect()))
     assert sorted(tuple(r) for r in stats.collect()) == want_ledger
@@ -247,10 +247,10 @@ def test_unsplit_pairs_are_one_equi_join(spark, jobs_run_by):
 @pytest.mark.parametrize("cap", [0, -1])
 def test_cap_below_one_raises_before_any_job(spark, jobs_run_by, cap):
     """A cap below 1 has no meaning (0 divides by zero, a negative one
-    used to drop pairs silently): both splitter entry points and all
-    five dedup joins that pass ``max_bucket_size`` through raise at
-    once — no Spark job, nothing added to ``caches``, no new
-    persistent RDD."""
+    used to drop pairs silently): both splitter entry points, ER's
+    ``candidate_pairs`` and all five dedup joins that pass
+    ``max_bucket_size`` through raise at once — no Spark job, nothing
+    added to ``caches``, no new persistent RDD."""
     members = spark.createDataFrame(
         [(1, i) for i in range(6)], "block_key long, uid long"
     )
@@ -260,10 +260,15 @@ def test_cap_below_one_raises_before_any_job(spark, jobs_run_by, cap):
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [1.0, 0.1])], ["vec_id", "embedding"]
     )
+    pages = spark.createDataFrame(
+        [("u1", "alpha beta gamma", "9e107d9d372bb6826bd81d3542a419d6")],
+        ["url", "norm_text", "text_md5"],
+    )
     caches: list = []
     calls = [
         lambda: split_oversized_blocks(members, cap),
         lambda: bounded_block_pairs(members, cap, caches),
+        lambda: candidate_pairs(pages, BlockingConfig(max_block_size=cap), caches),
         lambda: DD.minhash_verified_near_duplicates(
             docs, max_bucket_size=cap, caches=caches
         ),
@@ -290,7 +295,7 @@ def test_blocking_recall_on_planted_clusters(spark, synth_corpus, normalized):
     """Candidate connectivity must cover ≥99% of intra-cluster pairs
     (BASELINE.json F1 target is downstream-capped by this).  Measured
     TRANSITIVELY — exact clones reach near-dup neighbors through their
-    md5 champion (lsh_blocks bands one champion per distinct text), so
+    md5 champion (candidate_pairs bands one champion per distinct text), so
     direct-pair recall is not the semantics the clustering stage needs."""
     from entity_resolution_engine_spark.operators.cluster import (
         connected_components,
@@ -330,8 +335,8 @@ def test_attach_urls_roundtrip(normalized):
     assert withu.filter(
         F.col("url_a").isNull() | F.col("url_b").isNull()
     ).count() == 0
-    # strategy/block_key pass through
-    assert set(withu.columns) == {"url_a", "url_b", "block_key", "strategy"}
+    # strategy passes through
+    assert set(withu.columns) == {"url_a", "url_b", "strategy"}
 
 
 def test_compose_domain_mode(spark, synth_corpus, normalized):
@@ -512,7 +517,6 @@ def test_length_ratio_uses_full_norm_text(spark):
     candidates = spark.range(1).select(
         uid_col(F.lit("https://a.org/p")).alias("uid_a"),
         uid_col(F.lit("https://b.org/p")).alias("uid_b"),
-        F.lit(0).cast("long").alias("block_key"),
         F.lit("lsh").alias("strategy"),
     )
     (row,) = score_pairs(candidates, normalized, cfg).select("length_ratio").collect()
